@@ -19,6 +19,12 @@ metric's bound from BENCHMARK.json and a verdict:
               do not separate, or a side has fewer than two runs
   unchanged   otherwise
 
+Failed operations (threw or wrong answer, timed or warm-up) override the
+timings: failures are never timed, so a change that makes operations fail
+can look faster. Each workload gets a failed_ops row, and when the after
+side has more failed operations per record than the before side, every
+metric of that workload reads "worse (failures)".
+
 Per-layer metrics have no bound; their rows show the change only. A last
 block reports the tracing overhead per workload and side: the median
 wall_s of traced runs over that of untraced runs.
@@ -52,6 +58,12 @@ def values(recs, workload, metric, traced):
                 if r["workload"] == workload and bool(r["trace"]) == t
                 and metric in r["metrics"] and r["metrics"][metric]["value"] is not None]
     return pick(False) if not traced else (pick(False) or pick(True))
+
+
+def failed_ops(recs, workload):
+    """(failed operations, records) of a workload, warm-up included."""
+    rs = [r for r in recs if r["workload"] == workload]
+    return sum(r["failed"] + len(r["warmup_failures"]) for r in rs), len(rs)
 
 
 def quartiles(xs):
@@ -97,6 +109,13 @@ def main():
             "change", "bound", "verdict")
     rows = [head]
     for w in workloads:
+        fa, na = failed_ops(before, w)
+        fb, nb = failed_ops(after, w)
+        if not na and not nb:
+            continue
+        regressed = nb > 0 and fb / nb > (fa / na if na else 0.0)
+        rows.append((w, "failed_ops", "count", f"{fa} (n={na})", f"{fb} (n={nb})", "-", "0",
+                     "worse" if regressed else ("ok" if fb == 0 else "unchanged")))
         for traced, metrics in ((False, spec["end_to_end"]), (True, spec["per_layer"])):
             for m in metrics:
                 a = values(before, w, m["name"], traced)
@@ -112,6 +131,8 @@ def main():
                     bound = f"{100 * m['bound']:.0f}%"
                 else:
                     v, bound = "-", "-"
+                if regressed:
+                    v = "worse (failures)"
                 rows.append((w, m["name"], m["unit"],
                              "/".join(fmt(x) for x in qa) + f" (n={len(a)})",
                              "/".join(fmt(x) for x in qb) + f" (n={len(b)})",

@@ -30,19 +30,13 @@ object Gates {
       Seq("rows" -> rows, "schema" -> schema, "hash" -> hash)
   }
 
-  /** Expected outcome of a gate: its digest, or why none exists. */
-  type Golden = Either[String, Digest]
-
-  def loadGolden(file: java.io.File): Map[String, Golden] = {
+  def loadGolden(file: java.io.File): Map[String, Digest] = {
     import org.json4s._
     implicit val formats: Formats = DefaultFormats
     val root = org.json4s.jackson.JsonMethods.parse(file)
     (root \ "gates").asInstanceOf[JObject].obj.map { case (name, v) =>
-      name -> ((v \ "not_capturable") match {
-        case JString(why) => Left(why)
-        case _ => Right(Digest((v \ "rows").extract[Long],
-          (v \ "schema").extract[String], (v \ "hash").extract[String]))
-      })
+      name -> Digest((v \ "rows").extract[Long],
+        (v \ "schema").extract[String], (v \ "hash").extract[String])
     }.toMap
   }
 
@@ -88,36 +82,28 @@ object Gates {
   }
 
   def run(spark: SparkSession, ops: Ops, names: Seq[String],
-      dataDir: String, golden: Map[String, Golden], afterOp: () => Unit): Unit = {
+      dataDir: String, golden: Map[String, Digest], afterOp: () => Unit): Unit = {
     ops.nextRound()
     names.foreach { name =>
-      val expected = golden.get(name)
-      ops.run(name, "query", expected.flatMap(_.left.toOption))(
-        execute(spark, name, dataDir)) { case (schema, rows) =>
+      ops.run(name, "query")(execute(spark, name, dataDir)) { case (schema, rows) =>
         val got = digest(schema, rows)
-        expected match {
-          case Some(Right(want)) if want == got => None
-          case Some(Right(want)) => Some(s"digest $got != golden $want")
-          case _ => Some("no golden digest for this gate")
+        golden.get(name) match {
+          case Some(want) if want == got => None
+          case Some(want) => Some(s"digest $got != golden $want")
+          case None => Some("no golden digest for this gate")
         }
       }
       afterOp()
     }
   }
 
-  /** Captures the golden digest of every gate the program defines. */
+  /** Captures the golden digest of every gate a workload runs. */
   def capture(spark: SparkSession, dataDir: String, out: java.io.File): Unit = {
-    val entries = SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      val v = try {
-        val (schema, rows) = execute(spark, name, dataDir)
-        digest(schema, rows).json
-      } catch {
-        case e: Throwable =>
-          Seq("not_capturable" -> s"${e.getClass.getName}: ${
-            Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString.take(200)}")
-      }
-      System.err.println(s"[capture] $name ${Json.obj(v)}")
-      name -> v
+    val entries = streaming.map { name =>
+      val (schema, rows) = execute(spark, name, dataDir)
+      val d = digest(schema, rows)
+      System.err.println(s"[capture] $name ${Json.obj(d.json)}")
+      name -> d.json
     }
     val body = entries.map { case (n, v) => s"    ${Json.str(n)}: ${Json.obj(v)}" }
       .mkString("{\n  \"data\": \"sf0.1\",\n  \"gates\": {\n", ",\n", "\n  }\n}\n")

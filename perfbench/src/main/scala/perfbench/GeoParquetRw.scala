@@ -16,8 +16,13 @@ object GeoParquetRw {
   val FilesPerDataset = 16
   val Selectivities = Seq(0.001, 0.01, 0.1)
 
-  /** Windows read in a run of `seconds`, warm-up included: 8 timed per 6 s. */
-  def windowsFor(seconds: Int): Int = WarmWindows + 8 * math.max(1, seconds / 6)
+  /** Windows read per timed round, and the number of distinct batches of
+    * them the timed rounds cycle through. */
+  val WindowsPerRound = 16
+  val WindowBatches = 16
+
+  /** Timed rounds for a run of `seconds`: about 2.9 s each on 4 vCPUs. */
+  def roundsFor(seconds: Int): Int = math.max(1, seconds / 3)
 
   final case class Window(i: Int, dataset: String, sel: Double,
       x0: Double, y0: Double, x1: Double, y1: Double) {
@@ -95,7 +100,8 @@ object GeoParquetRw {
     }.sum
   }
 
-  /** Per-run write/read accounting reported as per-layer metrics. */
+  /** Per-run write/read accounting reported as per-layer metrics; the
+    * times are those of successful operations only. */
   final class Stats {
     var writeSeconds = 0.0
     var openSeconds = 0.0
@@ -106,34 +112,52 @@ object GeoParquetRw {
   }
 
   /** Windows read untimed, after an untimed write, before the timed
-    * round: until then the JIT is still compiling the read path and read
+    * rounds: until then the JIT is still compiling the read path and read
     * times fall by a third over the run. */
   val WarmWindows = 12
 
-  /** One round: both datasets written under `out`, then `windows` read
-    * back in a seed-permuted order. */
-  def run(spark: SparkSession, ops: Ops, in: Inputs, out: String, windows: Seq[Window],
-      seed: Long, tracer: Tracer, stats: Stats, onWritten: Map[String, Int] => Unit,
-      afterOp: () => Unit): Unit = {
-    val sc = spark.sparkContext
-    ops.nextRound()
+  /** Windows generated per run: the warm-up's, then the timed batches. */
+  val WindowCount: Int = WarmWindows + WindowsPerRound * WindowBatches
+
+  /** Rounds while `more(rounds done)` holds, at least one. Round n writes
+    * both datasets under `out`/rn, then reads the windows of batch
+    * n mod batches.size back in a seed-permuted order. */
+  def run(spark: SparkSession, ops: Ops, in: Inputs, out: String, batches: Seq[Seq[Window]],
+      seed: Long, more: Int => Boolean, tracer: Tracer, stats: Stats,
+      onWritten: Map[String, Int] => Unit, afterOp: () => Unit): Unit = {
+    val rnd = new scala.util.Random(seed)
     val sources = Seq(
       "points" -> (NPoints.toLong, spark.read.parquet(s"${in.dir}/plain_points")
         .select(col("id"), expr("st_point(x, y)").as("geom"))),
       "boxes" -> (NBoxes.toLong, spark.read.parquet(s"${in.dir}/plain_boxes")
         .select(col("id"), expr("st_makeenvelope(x0, y0, x1, y1)").as("geom"))))
+    Ops.loop(more) { n =>
+      round(spark, ops, in, s"$out/r$n", sources, rnd.shuffle(batches(n % batches.size)),
+        tracer, stats, onWritten, afterOp)
+    }
+  }
+
+  private def round(spark: SparkSession, ops: Ops, in: Inputs, out: String,
+      sources: Seq[(String, (Long, org.apache.spark.sql.DataFrame))], windows: Seq[Window],
+      tracer: Tracer, stats: Stats, onWritten: Map[String, Int] => Unit,
+      afterOp: () => Unit): Unit = {
+    val sc = spark.sparkContext
+    ops.nextRound()
     sources.foreach { case (ds, (rows, df)) =>
       val path = s"$out/gp_$ds"
       sc.setLocalProperty(Probe.KindProp, "write")
-      val t0 = System.nanoTime()
-      ops.run(s"gp.write.$ds", "write")(tracer.span("sources.write", ds) {
-        GeoParquet.write(df, path, "geom", crs = "EPSG:3857",
-          clusterPartitions = FilesPerDataset)
-      }) { _ =>
+      ops.run(s"gp.write.$ds", "write")({
+        val t0 = System.nanoTime()
+        tracer.span("sources.write", ds) {
+          GeoParquet.write(df, path, "geom", crs = "EPSG:3857",
+            clusterPartitions = FilesPerDataset)
+        }
+        (System.nanoTime() - t0) / 1e9
+      }) { seconds =>
         val n = footerRows(spark, path)
-        if (n == rows) None else Some(s"$n rows written, expected $rows")
+        if (n != rows) Some(s"$n rows written, expected $rows")
+        else { stats.writeSeconds += seconds; None }
       }
-      stats.writeSeconds += (System.nanoTime() - t0) / 1e9
       sc.setLocalProperty(Probe.KindProp, null)
       val files = dataFiles(path)
       stats.rowsWritten += rows
@@ -145,19 +169,23 @@ object GeoParquetRw {
       val path = new java.io.File(s"$out/gp_$ds").getAbsolutePath
       path -> dataFiles(path).size
     }.toMap)
-    new scala.util.Random(seed).shuffle(windows).foreach { w =>
+    windows.foreach { w =>
       ops.run(w.name, "query")({
         val t0 = System.nanoTime()
         val df = tracer.span("sources.read", w.name)(
           GeoParquet.read(spark, s"$out/gp_${w.dataset}"))
-        stats.openSeconds += (System.nanoTime() - t0) / 1e9
-        df.where(expr(s"st_intersects(geom, st_geomfromtext('${w.wkt}'))"))
-          .select("id").collect().map(_.getLong(0))
-      }) { ids =>
-        stats.resultRows += ids.length
+        val openSeconds = (System.nanoTime() - t0) / 1e9
+        (openSeconds, df.where(expr(s"st_intersects(geom, st_geomfromtext('${w.wkt}'))"))
+          .select("id").collect().map(_.getLong(0)))
+      }) { case (openSeconds, ids) =>
         val got = answer(ids.iterator)
         val want = in.answers(w.i)
-        if (got == want) None else Some(s"$got != expected $want")
+        if (got != want) Some(s"$got != expected $want")
+        else {
+          stats.openSeconds += openSeconds
+          stats.resultRows += ids.length
+          None
+        }
       }
       afterOp()
     }

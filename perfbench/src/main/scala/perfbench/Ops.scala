@@ -8,9 +8,7 @@ import scala.collection.mutable.ArrayBuffer
   * An operation is timed around its action only; its answer is checked
   * afterwards, outside the timing. An operation that throws, or whose
   * answer fails its check, counts as failed and contributes no time to
-  * any sample or round. An operation whose expected answer cannot be
-  * known (a gate whose fixture is absent) is `unverifiable`: it is still
-  * attempted every run, but it is kept apart from the verifiable counts.
+  * any sample or round.
   */
 final class Ops(tracer: Tracer) {
   /** A successful operation: its wall time and the CPU time the whole
@@ -20,7 +18,6 @@ final class Ops(tracer: Tracer) {
 
   val samples = ArrayBuffer.empty[Sample]
   val failures = ArrayBuffer.empty[(String, String)]
-  val unverifiable = ArrayBuffer.empty[(String, String)]
   var attempted = 0
   var failed = 0
   var wrong = 0
@@ -32,11 +29,8 @@ final class Ops(tracer: Tracer) {
 
   /** Runs one operation. `action` is timed; `check` runs after the
     * timing and returns None when the answer is right, or the reason it
-    * is wrong. `expectUnverifiable` is Some(reason) when no expected
-    * answer exists for this operation. */
-  def run[T](name: String, kind: String,
-      expectUnverifiable: Option[String] = None)(action: => T)(
-      check: T => Option[String]): Unit = {
+    * is wrong. */
+  def run[T](name: String, kind: String)(action: => T)(check: T => Option[String]): Unit = {
     opSeq += 1
     val span = tracer.open(s"op.$kind", name, opId = opSeq)
     val c0 = Ops.processCpuNanos()
@@ -45,30 +39,21 @@ final class Ops(tracer: Tracer) {
     val seconds = (System.nanoTime() - t0) / 1e9
     val cpuSeconds = (Ops.processCpuNanos() - c0) / 1e9
     tracer.close(span)
-    expectUnverifiable match {
-      case Some(why) =>
-        val outcome = result match {
-          case Left(e) => s"threw ${describe(e)}"
-          case Right(_) => "returned an answer that cannot be checked"
+    attempted += 1
+    result match {
+      case Left(e) =>
+        failed += 1
+        failures += name -> s"threw ${describe(e)}"
+      case Right(v) =>
+        val verdict = try check(v) catch {
+          case e: Throwable => Some(s"check threw ${describe(e)}")
         }
-        unverifiable += name -> s"$why; $outcome"
-      case None =>
-        attempted += 1
-        result match {
-          case Left(e) =>
+        verdict match {
+          case None => samples += Sample(name, kind, round, seconds, cpuSeconds)
+          case Some(why) =>
             failed += 1
-            failures += name -> s"threw ${describe(e)}"
-          case Right(v) =>
-            val verdict = try check(v) catch {
-              case e: Throwable => Some(s"check threw ${describe(e)}")
-            }
-            verdict match {
-              case None => samples += Sample(name, kind, round, seconds, cpuSeconds)
-              case Some(why) =>
-                failed += 1
-                wrong += 1
-                failures += name -> s"wrong answer: $why"
-            }
+            wrong += 1
+            failures += name -> s"wrong answer: $why"
         }
     }
   }
@@ -90,13 +75,28 @@ final class Ops(tracer: Tracer) {
 
   def querySeconds: Seq[Double] =
     samples.filter(_.kind == "query").map(_.seconds).toSeq
-
-
 }
 
 object Ops {
   private val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** Runs `round(n)` for n = 0, 1, ... while `more(rounds done)` holds;
+    * runs at least one round. */
+  def loop(more: Int => Boolean)(round: Int => Unit): Unit = {
+    var n = 0
+    do { round(n); n += 1 } while (more(n))
+  }
+
+  /** A `more` for `loop`: at most `rounds` rounds, and none started once
+    * `seconds` have passed since this call. The round count fixes the
+    * work of a run, so that the retained heap, which grows with every
+    * query run, compares across runs; the deadline bounds a run on a slow
+    * host. */
+  def upTo(rounds: Int, seconds: Int): Int => Boolean = {
+    val deadline = System.nanoTime() + seconds * 1000000000L
+    n => n < rounds && System.nanoTime() < deadline
+  }
 
   /** CPU time used by this process so far (10 ms resolution on Linux). */
   def processCpuNanos(): Long = os.getProcessCpuTime

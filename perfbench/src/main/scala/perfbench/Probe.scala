@@ -160,7 +160,6 @@ final class Probe(spark: SparkSession, tracer: Tracer) {
         val roots = s.relation.location.rootPaths.map(_.toUri.getPath)
         datasets.find { case (dir, _) => roots.nonEmpty &&
           roots.forall(_.startsWith(dir)) }.foreach { case (_, total) =>
-          add("sources.scans", 1)
           add("sources.files_total", total.toDouble)
           s.metrics.get("numFiles").foreach(m => add("sources.files_read", m.value.toDouble))
           s.metrics.get("filesSize").foreach(m => add("sources.bytes_read_mb", m.value / 1048576.0))
@@ -221,8 +220,6 @@ final class Probe(spark: SparkSession, tracer: Tracer) {
 
   private var gc0 = 0L
   private var codegen0 = 0L
-  private def gcMillis: Long = java.lang.management.ManagementFactory
-    .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum
   private def codegenCount: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
@@ -231,7 +228,7 @@ final class Probe(spark: SparkSession, tracer: Tracer) {
     counters.synchronized {
       counters.clear(); maxima.clear(); lastStateRows.clear()
     }
-    gc0 = gcMillis
+    gc0 = Probe.gcMillis
     codegen0 = codegenCount
     jobCounting = true; qeCounting = true; streamCounting = true
   }
@@ -239,7 +236,7 @@ final class Probe(spark: SparkSession, tracer: Tracer) {
   def end(): Unit = {
     sync()
     streamCounting = false
-    add("jvm.gc_s", (gcMillis - gc0) / 1e3)
+    add("jvm.gc_s", (Probe.gcMillis - gc0) / 1e3)
     add("catalyst.codegen_compiles", (codegenCount - codegen0).toDouble)
   }
 
@@ -247,15 +244,13 @@ final class Probe(spark: SparkSession, tracer: Tracer) {
     if (k == "streaming.state_rows") lastStateRows.values.sum.toDouble
     else if (maxima.contains(k)) maxima(k) else counters(k)
   }
-
-  def close(): Unit = {
-    spark.sparkContext.removeSparkListener(sparkListener)
-    spark.listenerManager.unregister(qeListener)
-    spark.streams.removeListener(streamListener)
-  }
 }
 
 object Probe {
+  /** GC time of the whole JVM so far, from the collectors' MXBeans. */
+  def gcMillis: Long = java.lang.management.ManagementFactory
+    .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum
+
   /** Local property naming the kind of operation a job belongs to. */
   val KindProp = "perfbench.kind"
 

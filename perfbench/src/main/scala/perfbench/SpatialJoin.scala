@@ -23,8 +23,8 @@ object SpatialJoin {
     * a fifth faster than the first while the JIT caught up. */
   val WarmRounds = 2
 
-  /** Timed rounds for a run of `seconds`. */
-  def roundsFor(seconds: Int): Int = math.max(1, seconds / 6)
+  /** Timed rounds for a run of `seconds`: about 1.3 s each on 4 vCPUs. */
+  def roundsFor(seconds: Int): Int = math.max(1, seconds * 3 / 5)
 
   private val IdShift = 131072L // > NBoxes: (a.id, b.id) -> a.id * IdShift + b.id
 
@@ -171,11 +171,12 @@ object SpatialJoin {
     2 * 6371008.8 * math.asin(math.sqrt(a))
   }
 
-  /** `rounds` rounds; each runs every query once in a seed-permuted order. */
+  /** Rounds while `more(rounds done)` holds, at least one; each runs
+    * every query once in a seed-permuted order. */
   def run(spark: SparkSession, ops: Ops, answers: Map[String, Answer], seed: Long,
-      rounds: Int, afterOp: () => Unit): Unit = {
+      more: Int => Boolean, afterOp: () => Unit): Unit = {
     val rnd = new scala.util.Random(seed)
-    (1 to rounds).foreach { _ =>
+    Ops.loop(more) { _ =>
       ops.nextRound()
       rnd.shuffle(queries).foreach { case (name, sql) =>
         ops.run(name, "query")(spark.sql(sql).collect()) { rows =>
