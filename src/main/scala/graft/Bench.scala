@@ -1,17 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftSparkSessionExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val spark = GraftExtensions.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "WARN")
     // Session warm-up: exercise parquet scan, shuffle, whole-stage
     // codegen, HOF interpretation and the extension registry once, so the
     // first timed query doesn't absorb JVM/Tungsten/janino session init
@@ -40,47 +32,53 @@ object Bench {
     // materializes every output row (no count()-induced column pruning) —
     // the honesty check that projections aren't being optimized away.
     val full = sys.env.get("SPARK_GRAFT_BENCH_FULL").contains("1")
-    val results = selected.map { case (name, fn) =>
-      var best = Double.MaxValue
-      var bestFull = Double.MaxValue
-      (0 until reps).foreach { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        if (full) {
-          val t1 = System.nanoTime()
-          try {
-            fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
-          } catch { case _: Throwable => () }
-          bestFull = math.min(bestFull, (System.nanoTime() - t1) / 1e9)
+    // A gate that throws in any rep is failed: it is reported by name with
+    // its error class and has no time, so it never counts toward `total`.
+    val outcomes: Map[String, Either[String, (Double, Double)]] =
+      selected.map { case (name, fn) =>
+        var best = Double.MaxValue
+        var bestFull = Double.MaxValue
+        def timed(body: => Unit): Double = {
+          val t0 = System.nanoTime()
+          body
+          (System.nanoTime() - t0) / 1e9
         }
+        val outcome =
+          try {
+            (0 until reps).foreach { _ =>
+              best = math.min(best, timed(fn(spark, sfDir).count()))
+              if (full) bestFull = math.min(bestFull,
+                timed(fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())))
+            }
+            Right((best, bestFull))
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+            Left(e.getClass.getName)
+          }
+        name -> outcome
       }
-      name -> (best, bestFull)
+    val times = outcomes.collect { case (k, Right(v)) => k -> v }
+    val failed = outcomes.collect { case (k, Left(cls)) => k -> cls }
+    def jsonMap(m: Iterable[(String, Any)]): String =
+      m.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+    val total = times.values.map(_._1).sum
+    val head = s""""metric":"total","value":$total,"unit":"sec","failed":${
+      jsonMap(failed.map { case (k, cls) => k -> s"\"$cls\"" })}"""
+    val fullPart =
+      if (full) s""","full_total":${times.values.map(_._2).sum},"queries_full":${
+        jsonMap(times.map { case (k, v) => k -> v._2 })}"""
+      else ""
+    // The per-query map goes only to the sidecar: the driver keeps a short
+    // tail of stdout, so stdout carries exactly one short total line.
+    val side = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_SIDECAR", "bench_queries.json"))
+    try java.nio.file.Files.write(side,
+      s"""{$head,"queries":${jsonMap(times.map { case (k, v) => k -> v._1 })}$fullPart,"sf":"$sfDir"}"""
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] WARN: sidecar $side not written: $e")
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v._1 }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
-    val fullPart = if (full) {
-      val fq = results.map { case (k, v) => s"\"" + k + "\":" + v._2 }
-        .mkString("{", ",", "}")
-      s""","full_total":${results.values.map(_._2).sum},"queries_full":$fq"""
-    } else ""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$fullPart,"sf":"$sfDir"}""")
-    // Driver-contract repair (opt r18, VERDICT r17 #1): the line above is
-    // ~5 KB with 158 per-query entries and the driver keeps only a
-    // 2000-char TAIL of the output, which truncates the leading
-    // `"value"` — PERF has had `parsed: null` since r13. Additive fix,
-    // old numbers stay comparable: (a) the full per-query map also goes
-    // to a sidecar file next to the cwd, (b) the LAST line printed is a
-    // SHORT total-only JSON that fits any tail capture.
-    try {
-      val side = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_SIDECAR", "bench_queries.json"))
-      java.nio.file.Files.write(side,
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$fullPart,"sf":"$sfDir"}"""
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir"}""")
+    println(s"""{$head,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -46,10 +46,21 @@ object CacheRegistry {
   /** Sample the monotone QueryExecution id counter: a fresh trivial
     * Dataset's QueryExecution carries the next id — nothing executes. */
   private def qeBarrier(spark: SparkSession, afterCurrent: Boolean): Long =
-    if (afterCurrent)
-      try spark.range(0).queryExecution.id
-      catch { case _: Throwable => Long.MinValue }
+    if (afterCurrent) sampleBarrier(spark.range(0).queryExecution.id)
     else Long.MinValue
+
+  /** Fails closed: when `sample` throws, the barrier is Long.MaxValue, so
+    * no sweep ever releases the cache and only `releaseAll` does.
+    * Long.MinValue would let the caller's own stats action release the
+    * cache under its consumers. */
+  private[graft] def sampleBarrier(sample: => Long): Long =
+    try sample
+    catch { case t: Throwable =>
+      org.apache.log4j.Logger.getLogger(getClass.getName).warn(
+        "graft: could not sample the QueryExecution id; the cache stays " +
+          "pinned until CacheRegistry.releaseAll()", t)
+      Long.MaxValue
+    }
 
   /** Register a df that the caller has just persisted; returns it.
     *

@@ -1,30 +1,112 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.internal.StaticSQLConf
 
-/** Central registration point for everything the engine adds to a stock
-  * SparkSession: spatial functions, spatial-join strategy, optimizer rules.
-  * Idempotent — safe to call on every entry point.
+/** Central registration point for everything the engine adds to a
+  * SparkSession: spatial functions, the spatial-join strategy and the
+  * optimizer rules, listed once in the rule table below.
   */
 object GraftExtensions {
-  def install(spark: SparkSession): Unit = {
-    // default the streaming state store to RocksDB (spilled to local
-    // disk, bounded executor heap) unless the user chose a provider.
-    // Measured (ScaleBench r12, m=1 vs m=10): RocksDB costs a constant
-    // at toy scale (st03 10.9s vs heap 5.6s at m=1) but is the only
-    // provider that stays near-linear as state grows — st03 at 10x
-    // events: RocksDB 51.6s (4.8x) vs heap 89.7s (15.9x, super-linear);
-    // st08 a wash. The at-scale provider is the right default; gate-
-    // scale microbenchmarks should pin the heap store explicitly.
+
+  type RuleBuilder = SparkSession => Rule[LogicalPlan]
+
+  // ---- the rule table ----
+
+  /** Operator rules. `GraftSparkSessionExtensions` injects them into
+    * Catalyst's operator-optimization batches, where they interleave with
+    * predicate pushdown and column pruning. */
+  val operatorRules: Seq[RuleBuilder] = Seq(
+    _ => graft.plans.GeoPruneRule,
+    _ => graft.plans.RasterJoinRule,
+    graft.plans.GridSpatialJoinRule(_),
+    graft.joins.KnnGridJoinRule(_),
+    _ => graft.plans.RasterLoadRule)
+
+  /** The physical strategy that goes with the operator rules. */
+  val operatorStrategy: SparkSession => SparkStrategy = graft.joins.SpatialJoinStrategy(_)
+
+  /** Post-hoc rules. `install` appends them to `spark.experimental`, so
+    * they run once, in this order, in the "User Provided Optimizers"
+    * batch after operator optimization has settled the plan. */
+  val postHocRules: Seq[RuleBuilder] = Seq(
+    graft.plans.BandedRangeJoinRule(_),
+    graft.plans.SemiUnderDistinctRule(_),
+    // the rotation must precede AsOfAggregateRule: it creates the
+    // Join(probe, agg) shape the probe rewrite matches, and the
+    // bare-aggregate rewrite would otherwise consume the Aggregate
+    graft.plans.AggregateJoinReorderRule(_),
+    graft.plans.AsOfProbeJoinRule(_),
+    graft.plans.AsOfAggregateRule(_),
+    graft.plans.SphereJoinRule(_))
+
+  // Sessions already installed. Weak keys: a stopped session is dropped
+  // with its last reference, and a new one gets a full install.
+  private val installed = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+
+  /** True when `spark` was built with `GraftSparkSessionExtensions` in the
+    * static `spark.sql.extensions` conf, which Spark applies to every
+    * session of the context. */
+  private def builtWithExtension(spark: SparkSession): Boolean =
+    spark.sparkContext.getConf.get(StaticSQLConf.SPARK_SESSION_EXTENSIONS.key, "")
+      .split(",").map(_.trim).contains(classOf[GraftSparkSessionExtensions].getName)
+
+  /** Registers the functions, the streaming state-store default and the
+    * rules the session does not already have: the post-hoc rules always,
+    * the operator rules and strategy only when the session was built
+    * without the extension. Idempotent per session: a repeat call returns
+    * at once. */
+  def install(spark: SparkSession): Unit = installed.synchronized {
+    if (!installed.contains(spark)) {
+      defaultStateStore(spark)
+      graft.functions.GraftFunctions.register(spark)
+      graft.sources.RandomGeometry.registerTable(spark)
+      if (!builtWithExtension(spark)) {
+        spark.experimental.extraStrategies :+= operatorStrategy(spark)
+        spark.experimental.extraOptimizations ++= operatorRules.map(_(spark))
+      }
+      spark.experimental.extraOptimizations ++= postHocRules.map(_(spark))
+      installed.add(spark)
+    }
+  }
+
+  /** Local session with the extension, `cpus` cores and shuffle
+    * partitions, the UI off and graft installed. `confs` are the
+    * caller's own builder confs. */
+  def localSession(cpus: String, logLevel: String,
+      confs: (String, String)*): SparkSession = {
+    val spark = confs.foldLeft(SparkSession.builder()
+        .config("spark.sql.extensions", classOf[GraftSparkSessionExtensions].getName)
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    install(spark)
+    spark
+  }
+
+  /** Defaults the streaming state store to RocksDB (spilled to local
+    * disk, bounded executor heap) unless the user chose a provider.
+    * Measured (ScaleBench r12, m=1 vs m=10): RocksDB costs a constant at
+    * toy scale (st03 10.9s vs heap 5.6s at m=1) but is the only provider
+    * that stays near-linear as state grows — st03 at 10x events: RocksDB
+    * 51.6s (4.8x) vs heap 89.7s (15.9x, super-linear); st08 a wash. The
+    * at-scale provider is the right default; gate-scale microbenchmarks
+    * should pin the heap store explicitly. */
+  private def defaultStateStore(spark: SparkSession): Unit = {
     // NB: conf.getOption is the wrong probe here — the key has a
     // built-in default (HDFSBackedStateStoreProvider), so getOption is
     // always Some(...). Only the explicitly-set maps (session settings
     // + SparkConf from spark-submit) tell us whether the USER chose one.
+    def userSet(key: String): Boolean =
+      spark.sessionState.conf.contains(key) || spark.sparkContext.getConf.contains(key)
     val ssProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val userChoseProvider =
-      spark.sessionState.conf.contains(ssProviderKey) ||
-        spark.sparkContext.getConf.contains(ssProviderKey)
-    if (!userChoseProvider) {
+    if (!userSet(ssProviderKey)) {
       // CAVEAT: Spark cannot change state-store providers across restarts
       // of the SAME checkpoint. A streaming query resuming from a
       // checkpoint written under the default HDFSBackedStateStoreProvider
@@ -45,60 +127,7 @@ object GraftExtensions {
       // vs 54.0s off). Same explicitly-set-only guard.
       val clKey =
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      if (!spark.sessionState.conf.contains(clKey) &&
-          !spark.sparkContext.getConf.contains(clKey))
-        spark.conf.set(clKey, "true")
+      if (!userSet(clKey)) spark.conf.set(clKey, "true")
     }
-    graft.functions.GraftFunctions.register(spark)
-    graft.sources.RandomGeometry.registerTable(spark)
-    val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[graft.joins.SpatialJoinStrategy]))
-      spark.experimental.extraStrategies =
-        cur :+ graft.joins.SpatialJoinStrategy(spark)
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(graft.plans.GeoPruneRule))
-      spark.experimental.extraOptimizations = opts :+ graft.plans.GeoPruneRule
-    val optsR = spark.experimental.extraOptimizations
-    if (!optsR.contains(graft.plans.RasterJoinRule))
-      spark.experimental.extraOptimizations = optsR :+ graft.plans.RasterJoinRule
-    val opts2 = spark.experimental.extraOptimizations
-    if (!opts2.exists(_.isInstanceOf[graft.plans.GridSpatialJoinRule]))
-      spark.experimental.extraOptimizations =
-        opts2 :+ graft.plans.GridSpatialJoinRule(spark)
-    val opts3 = spark.experimental.extraOptimizations
-    if (!opts3.exists(_.isInstanceOf[graft.joins.KnnGridJoinRule]))
-      spark.experimental.extraOptimizations =
-        opts3 :+ graft.joins.KnnGridJoinRule(spark)
-    val opts4 = spark.experimental.extraOptimizations
-    if (!opts4.contains(graft.plans.RasterLoadRule))
-      spark.experimental.extraOptimizations = opts4 :+ graft.plans.RasterLoadRule
-    val opts5 = spark.experimental.extraOptimizations
-    if (!opts5.exists(_.isInstanceOf[graft.plans.BandedRangeJoinRule]))
-      spark.experimental.extraOptimizations =
-        opts5 :+ graft.plans.BandedRangeJoinRule(spark)
-    val opts5a = spark.experimental.extraOptimizations
-    if (!opts5a.exists(_.isInstanceOf[graft.plans.SemiUnderDistinctRule]))
-      spark.experimental.extraOptimizations =
-        opts5a :+ graft.plans.SemiUnderDistinctRule(spark)
-    // must precede AsOfAggregateRule within the batch: the rotation
-    // matches the Aggregate node the as-of rewrite then replaces
-    val opts5b = spark.experimental.extraOptimizations
-    if (!opts5b.exists(_.isInstanceOf[graft.plans.AggregateJoinReorderRule]))
-      spark.experimental.extraOptimizations =
-        opts5b :+ graft.plans.AggregateJoinReorderRule(spark)
-    // between the rotation (which creates the Join(probe, agg) shape)
-    // and the bare-aggregate rewrite (which would consume the Aggregate)
-    val opts5c = spark.experimental.extraOptimizations
-    if (!opts5c.exists(_.isInstanceOf[graft.plans.AsOfProbeJoinRule]))
-      spark.experimental.extraOptimizations =
-        opts5c :+ graft.plans.AsOfProbeJoinRule(spark)
-    val opts6 = spark.experimental.extraOptimizations
-    if (!opts6.exists(_.isInstanceOf[graft.plans.AsOfAggregateRule]))
-      spark.experimental.extraOptimizations =
-        opts6 :+ graft.plans.AsOfAggregateRule(spark)
-    val opts7 = spark.experimental.extraOptimizations
-    if (!opts7.exists(_.isInstanceOf[graft.plans.SphereJoinRule]))
-      spark.experimental.extraOptimizations =
-        opts7 :+ graft.plans.SphereJoinRule(spark)
   }
 }

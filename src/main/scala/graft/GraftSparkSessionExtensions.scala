@@ -6,24 +6,26 @@ import org.apache.spark.sql.SparkSessionExtensions
   * SedonaContext::new_local_interactive wiring the planner chain,
   * rust/sedona/src/context.rs:110-269).
   *
-  * Builds on what `GraftExtensions.install` cannot do post-session: the
-  * KNN capture runs at ANALYSIS time, before predicate pushdown — the
-  * pushdown barrier of SURVEY §2.4. Use:
+  * The rules come from the one table in `GraftExtensions`, split between
+  * the two installers:
+  *  - this extension injects `KnnJoinCaptureRule` and the operator rules
+  *    (`GraftExtensions.operatorRules`) with their strategy
+  *    (`GraftExtensions.operatorStrategy`);
+  *  - `GraftExtensions.install` appends the post-hoc rules
+  *    (`GraftExtensions.postHocRules`) to `spark.experimental`, registers
+  *    the functions, and adds the operator rules and strategy itself only
+  *    for a session built without this extension.
   *
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftSparkSessionExtensions")
-  *
-  * Function registration still happens via GraftExtensions.install (the
-  * registry is session-state-scoped either way).
+  * Only the extension can run the KNN capture at ANALYSIS time, before
+  * predicate pushdown — the pushdown barrier of SURVEY §2.4.
+  * `GraftExtensions.localSession` builds a session with both. By hand,
+  * name this class in `spark.sql.extensions` when building the session,
+  * then call `GraftExtensions.install(spark)`.
   */
 class GraftSparkSessionExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPostHocResolutionRule(_ => graft.plans.KnnJoinCaptureRule)
-    ext.injectOptimizerRule(_ => graft.plans.GeoPruneRule)
-    ext.injectOptimizerRule(_ => graft.plans.RasterJoinRule)
-    ext.injectOptimizerRule(spark => graft.plans.GridSpatialJoinRule(spark))
-    ext.injectOptimizerRule(spark => graft.joins.KnnGridJoinRule(spark))
-    ext.injectOptimizerRule(_ => graft.plans.RasterLoadRule)
-    ext.injectPlannerStrategy(spark => graft.joins.SpatialJoinStrategy(spark))
+    GraftExtensions.operatorRules.foreach(ext.injectOptimizerRule)
+    ext.injectPlannerStrategy(GraftExtensions.operatorStrategy)
   }
 }

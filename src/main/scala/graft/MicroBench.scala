@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.st
 import graft.operators.SpatialJoins
@@ -15,14 +15,8 @@ import graft.sources.RandomGeometry
 object MicroBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_MICRO_N", "200000").toLong
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftSparkSessionExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.install(spark)
+    val spark = GraftExtensions.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "ERROR")
 
     def cached(df: DataFrame): DataFrame = { val c = df.cache(); c.count(); c }
     val polySimple = cached(RandomGeometry.polygons(spark, n, seed = 1, nVertices = 8)

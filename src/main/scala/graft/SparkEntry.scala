@@ -36,14 +36,20 @@ object SparkEntry {
         round(sum(col("o_totalprice")), 2).as("total_price"))
   }
 
+  /** Every gate query. Each one installs graft on the session it is
+    * handed (a no-op once installed), so the gate builders need not. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map[String, (SparkSession, String) => DataFrame]() ++
-      graft.queries.RelationalQueries.queries ++
+    (graft.queries.RelationalQueries.queries ++
       graft.queries.SpatialQueries.queries ++
       graft.queries.JoinQueries.queries ++
       graft.queries.PipelineQueries.queries ++
       graft.queries.IoQueries.queries ++
-      graft.queries.StreamingQueries.queries
+      graft.queries.StreamingQueries.queries).map { case (name, gate) =>
+      name -> ((s: SparkSession, dir: String) => {
+        GraftExtensions.install(s)
+        gate(s, dir)
+      })
+    }
 
   def oracleSql: Map[String, String] =
     Map[String, String]() ++

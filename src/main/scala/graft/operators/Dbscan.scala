@@ -57,25 +57,23 @@ object Dbscan {
     // count, CC materialization) cannot sweep them early. Before r18
     // these barrier caches were never released at all (their consumers
     // carry only the RDD leaf, which the IMR-matching sweep never saw).
-    val barriers = scala.collection.mutable.ArrayBuffer
-      .empty[(DataFrame, org.apache.spark.rdd.RDD[_])]
-    def barrier(d: DataFrame): DataFrame = {
+    final class Barrier(d: DataFrame) {
       val cached = d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val leaf = cached.queryExecution.toRdd
-      barriers += ((cached, leaf))
-      DatasetBridge.internalDf(spark, leaf, d.schema)
+      val df = DatasetBridge.internalDf(spark, leaf, d.schema)
+      def register(): Unit =
+        graft.CacheRegistry.registerForRdd(cached, leaf, afterCurrent = true)
     }
-    def registerBarriers(): Unit = barriers.foreach { case (c, leaf) =>
-      graft.CacheRegistry.registerForRdd(c, leaf, afterCurrent = true)
-    }
-    val pts = barrier(df.select(id.cast("long").as("__pid"), geom.as("__pg")))
+    val ptsBarrier = new Barrier(df.select(id.cast("long").as("__pid"), geom.as("__pg")))
+    val pts = ptsBarrier.df
     val l = pts.select(col("__pid").as("__ida"), col("__pg").as("__ga"))
     val r = pts.select(col("__pid").as("__idb"), col("__pg").as("__gb"))
-    val pairs = barrier(
+    val pairsBarrier = new Barrier(
       SpatialJoins.gridJoin(l, r, col("__ga"), col("__gb"), "st_dwithin",
           bounds, nx, ny, distance = Some(lit(eps)))
         .filter(col("__ida") =!= col("__idb"))
         .select(col("__ida"), col("__idb")))
+    val pairs = pairsBarrier.df
     // local-finish probe: pair rows at ~16 B packed + ids/degree/parent
     // arrays — the same ~48 B/row budget and [4M, 16M] clamp as the CC
     // local cap, overridable via spark.graft.dbscan.localLimit
@@ -88,10 +86,8 @@ object Dbscan {
       val assign = localFinish(pairs, minPts)
       // the pair cache has been consumed into the local arrays; only
       // `pts` is referenced by the returned plan
-      val Seq((ptsCached, ptsLeaf), (pairsCached, _)) = barriers.toSeq
-      graft.CacheRegistry.release(pairsCached)
-      graft.CacheRegistry.registerForRdd(ptsCached, ptsLeaf,
-        afterCurrent = true)
+      graft.CacheRegistry.release(pairsBarrier.cached)
+      ptsBarrier.register()
       return pts
         .join(broadcast(assign), pts("__pid") === assign("__aid"), "left_outer")
         .select(col("__pid").as("id"),
@@ -117,7 +113,8 @@ object Dbscan {
       .groupBy(col("__ida"))
       .agg(min(col("__ccl")).as("__bcl"))
       .select(col("__ida").as("__pid"), col("__bcl"))
-    registerBarriers()
+    ptsBarrier.register()
+    pairsBarrier.register()
     pts
       .join(coreCl, Seq("__pid"), "left_outer")
       .join(bAssign, Seq("__pid"), "left_outer")

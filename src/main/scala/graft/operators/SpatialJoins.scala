@@ -502,16 +502,6 @@ object SpatialJoins {
         .otherwise(st.distance(col("__qg"), col("__og"))))
       .filter(col("__d") <= rEff)
       .select(col("__qid"), col("__oid"), col("__otb"), col("__d"))
-    if (sys.env.contains("SPARK_GRAFT_KNN_PROF")) {
-      def t(name: String)(df: DataFrame): Unit = {
-        val t0 = System.nanoTime()
-        val n = df.count()
-        println(f"[knn-prof] $name n=$n sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-      }
-      t("cover-rows")(q2)
-      t("join-pairs")(pairs)
-      t("refined")(refined)
-    }
     val result = knnTopKFinish(refined, q, o, qCols, oCols, k)
     graft.CacheRegistry.register(q)
     graft.CacheRegistry.register(o)
@@ -541,16 +531,6 @@ object SpatialJoins {
     // ids the candidates carry
     val oRows = o.select(col("__oid") +: oCols.map(c => o(c).as(s"__o_$c")): _*)
       .dropDuplicates("__oid")
-    if (sys.env.contains("SPARK_GRAFT_KNN_PROF")) {
-      def t(name: String)(df: DataFrame): Unit = {
-        val t0 = System.nanoTime()
-        val n = df.count()
-        println(f"[knn-prof] $name n=$n sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-      }
-      t("topk-exploded")(topk)
-      t("join-q")(topk.join(q.select(col("__qid") +: qCols.map(col): _*), Seq("__qid")))
-      t("join-o")(topk.join(oRows, col("__woid") === col("__oid")))
-    }
     topk.join(q.select(col("__qid") +: qCols.map(col): _*), Seq("__qid"))
       .join(oRows, col("__woid") === col("__oid"))
       .select((qCols.map(col) ++ oCols.map(c => col(s"__o_$c").as(c)) ++

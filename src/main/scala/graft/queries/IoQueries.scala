@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.GraftExtensions
 import graft.functions.GraftFunctions.st
 import graft.sources.{FlatGeobuf, GeoJsonIO, GeoPackage, GeoParquet, GeoTextIO, LasIO, Shapefile}
 
@@ -16,7 +15,6 @@ object IoQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "gp01_geoparquet_prune" -> ((s, dir) => {
-      GraftExtensions.install(s)
       val boxes = t(s, dir, "part")
         .withColumn("bxmin", (col("p_partkey") % 100).cast("double") * 20.0)
         .withColumn("bymin", (col("p_size") % 50).cast("double") * 20.0)
@@ -38,7 +36,6 @@ object IoQueries {
     // (sd_fromgeoarrow_*), then projected to numerics the oracle
     // recomputes from the generator formulas.
     "gp02_geoarrow_roundtrip" -> ((s, dir) => {
-      GraftExtensions.install(s)
       val base = s"/tmp/graft_geoarrow/${math.abs(dir.hashCode)}"
       val boxes = t(s, dir, "part")
         .withColumn("bxmin", (col("p_partkey") % 100).cast("double") * 20.0)
@@ -73,7 +70,6 @@ object IoQueries {
     // the run is deterministic; the SQL table-function surface itself is
     // what's exercised.
     "io07_random_geometry" -> ((s, _) => {
-      GraftExtensions.install(s)
       s.sql(
         """SELECT id,
           |  st_geometrytype(geometry) AS gtype,
@@ -98,7 +94,6 @@ object IoQueries {
     // with the annotated schema, read back via GeoParquet.read, CRS
     // carried from the logical type.
     "io08_native_geometry" -> ((s, dir) => {
-      GraftExtensions.install(s)
       val base = s"/tmp/graft_native_geom/${math.abs(dir.hashCode)}"
       // clean slate: partition->file grouping is not stable across runs,
       // so stale files from a previous run would duplicate rows
@@ -150,7 +145,6 @@ object IoQueries {
 
     // CSV + JSON round trip with WKT geometry transcoding
     "io02_csv_json_roundtrip" -> ((s, dir) => {
-      GraftExtensions.install(s)
       val boxes = t(s, dir, "part")
         .withColumn("bxmin", (col("p_partkey") % 100).cast("double") * 20.0)
         .withColumn("bymin", (col("p_size") % 50).cast("double") * 20.0)
@@ -172,7 +166,6 @@ object IoQueries {
     // newline-delimited GeoJSON feature roundtrip (mixed point/box
     // geometries in one file — per-row geometry parse, no inference)
     "io03_geojson_roundtrip" -> ((s, dir) => {
-      GraftExtensions.install(s)
       val feats = t(s, dir, "part")
         .withColumn("bxmin", (col("p_partkey") % 100).cast("double") * 20.0)
         .withColumn("bymin", (col("p_size") % 50).cast("double") * 20.0)
@@ -194,7 +187,6 @@ object IoQueries {
     // FlatGeobuf roundtrip (hand-implemented spec: flatbuffers framing,
     // mixed geometry types, typed properties)
     "io04_flatgeobuf_roundtrip" -> ((s, dir) => {
-      GraftExtensions.install(s)
       val feats = t(s, dir, "supplier")
         .withColumn("sx", (col("s_suppkey") % 90).cast("double") * 10.0)
         .withColumn("sy", (col("s_suppkey") % 70).cast("double") * 10.0)
@@ -217,7 +209,6 @@ object IoQueries {
     // One geometry family per file (spec), so this writes polygons; DBF F
     // fields carry doubles at %.17G for bit-exact roundtrip.
     "io05_shapefile_roundtrip" -> ((s, dir) => {
-      GraftExtensions.install(s)
       val feats = t(s, dir, "supplier")
         .withColumn("sx", (col("s_suppkey") % 90).cast("double") * 10.0)
         .withColumn("sy", (col("s_suppkey") % 70).cast("double") * 10.0)
@@ -238,7 +229,6 @@ object IoQueries {
     // 12-128r19 GPB blobs / gpkg_* metadata; mixed geometry types OK in
     // one GEOMETRY column, unlike shapefile)
     "io06_geopackage_roundtrip" -> ((s, dir) => {
-      GraftExtensions.install(s)
       val feats = t(s, dir, "supplier")
         .withColumn("sx", (col("s_suppkey") % 90).cast("double") * 10.0)
         .withColumn("sy", (col("s_suppkey") % 70).cast("double") * 10.0)
@@ -274,7 +264,6 @@ object IoQueries {
     // then per-file octree nodes by the hierarchy — two pruning levels
     // before any point decodes.
     "pc07_copc_tiled" -> ((s, dir) => {
-      GraftExtensions.install(s)
       val base = s"/tmp/graft_copc_tiled_gate/${math.abs(dir.hashCode)}"
       val src = s.range(60000).select(
         ((col("id") * 41) % 9600).cast("double")./(8.0).as("x"),
@@ -323,7 +312,6 @@ object IoQueries {
     }),
 
     "pc06_copc_bbox" -> ((s, dir) => {
-      GraftExtensions.install(s)
       val base = s"/tmp/graft_copc_gate/${math.abs(dir.hashCode)}"
       new java.io.File(base).mkdirs()
       val path = s"$base/cloud.copc.laz"
@@ -366,7 +354,6 @@ object IoQueries {
     }),
 
     "pc01_las_roundtrip" -> ((s, dir) => {
-      GraftExtensions.install(s)
       val pts = t(s, dir, "customer")
         .select(
           (col("c_custkey") % 1000).cast("double") * 0.25 as "x",

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.GraftExtensions
 import graft.functions.GraftFunctions.st
 import graft.operators.SpatialJoins
 
@@ -12,8 +11,6 @@ import graft.operators.SpatialJoins
   * join. Oracles are interval-logic SQL joins in plain DuckDB.
   */
 object JoinQueries {
-
-  private def prep(s: SparkSession): Unit = GraftExtensions.install(s)
 
   // orders → integer-coordinate points in the part-box grid plane
   private def orderPoints(s: SparkSession, dir: String): DataFrame =
@@ -48,7 +45,6 @@ object JoinQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // broadcast index join, boundary-inclusive predicate
     "sj01_intersects_join" -> ((s, dir) => {
-      prep(s)
       val pts = orderPoints(s, dir)
       val boxes = partBoxes(s, dir)
       pts.join(boxes, st.intersects(col("pt"), col("box")))
@@ -57,7 +53,6 @@ object JoinQueries {
 
     // strict containment, geometry args in box-first order (build=left path)
     "sj02_contains_join" -> ((s, dir) => {
-      prep(s)
       val pts = orderPoints(s, dir)
       val boxes = partBoxes(s, dir)
       boxes.join(pts, st.contains(col("box"), col("pt")))
@@ -66,7 +61,6 @@ object JoinQueries {
 
     // left-outer distance join
     "sj03_dwithin_join" -> ((s, dir) => {
-      prep(s)
       val cpts = t(s, dir, "customer")
         .withColumn("cx", (col("c_custkey") % 80).cast("double"))
         .withColumn("cy", (col("c_custkey") % 61).cast("double"))
@@ -81,7 +75,6 @@ object JoinQueries {
 
     // KNN join with deterministic tie-break
     "sj04_knn_join" -> ((s, dir) => {
-      prep(s)
       val q = t(s, dir, "customer")
         .filter(col("c_custkey") % 10 === 0)
         .withColumn("qx", (col("c_custkey") % 97).cast("double") * 10.0 + 0.25)
@@ -102,7 +95,6 @@ object JoinQueries {
     // filtered. Unique object coordinates + irrational query offsets make
     // distances tie-free.
     "sj06_knn_filter_barrier" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "customer")
         .filter(col("c_custkey") % 10 === 0)
         .withColumn("qpt", st.point(
@@ -125,7 +117,6 @@ object JoinQueries {
     // out-of-core KNN: the two-round grid algorithm (nothing broadcast,
     // nothing quadratic) on the same data as sj04 — identical result set
     "sj10_knn_grid_join" -> ((s, dir) => {
-      prep(s)
       val q = t(s, dir, "customer")
         .filter(col("c_custkey") % 10 === 0)
         .withColumn("qpt", st.point(
@@ -145,7 +136,6 @@ object JoinQueries {
     // per-key epsilons so great-circle distances are tie-free; the
     // projected distance pins the haversine metric itself.
     "sj11_knn_spheroid" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "customer")
         .filter(col("c_custkey") % 10 === 0)
         .withColumn("qpt", st.point(
@@ -172,7 +162,6 @@ object JoinQueries {
     // sj11 — identical result set to the broadcast chord-kd path. The
     // per-key epsilons make distances tie-free, so the tie rule is moot.
     "sj16_knn_spheroid_grid" -> ((s, dir) => {
-      prep(s)
       val q = t(s, dir, "customer")
         .filter(col("c_custkey") % 10 === 0)
         .withColumn("qpt", st.point(
@@ -201,7 +190,6 @@ object JoinQueries {
     // test_spatial_mark_join_via_correlated_exists). One tagged union so
     // each set's membership is oracle-checked exactly.
     "sj12_semi_anti_join" -> ((s, dir) => {
-      prep(s)
       val pts = orderPoints(s, dir).select(col("o_orderkey"), col("pt"))
       val boxes = partBoxes(s, dir).select(col("p_partkey"), col("box"))
       pts.createOrReplaceTempView("sj12_pts")
@@ -227,7 +215,6 @@ object JoinQueries {
     // at gate scale (the large-large grid path is pinned in
     // SpatialJoinSpec with set+collect inside one conf window)
     "sj17_full_outer_join" -> ((s, dir) => {
-      prep(s)
       val pts = orderPoints(s, dir).select(col("o_orderkey"), col("pt"))
       val boxes = partBoxes(s, dir).select(col("p_partkey"), col("box"))
       pts.join(boxes, st.intersects(col("pt"), col("box")), "full_outer")
@@ -239,7 +226,6 @@ object JoinQueries {
     // containment branch of the spherical distance kernel, so the
     // oracle's interval logic states the identical predicate.
     "sj13_sphere_intersects_join" -> ((s, dir) => {
-      prep(s)
       val quads = t(s, dir, "part")
         .withColumn("qxmin", (col("p_partkey") % 60).cast("double") * 6.0 - 180.0)
         .withColumn("qymin", (col("p_size") % 28).cast("double") * 6.0 - 84.0)
@@ -285,7 +271,6 @@ object JoinQueries {
     // the core-core subgraph, borders to the min neighboring cluster —
     // the whole clusterer composed from scale primitives (no all-pairs)
     "gs01_dbscan" -> ((s, dir) => {
-      prep(s)
       // fixed key cap: the SAME point set at every SF >= 0.01, so the
       // oracle's recursive component closure stays tractable (ScaleBench
       // covers the operator's scaling separately)
@@ -302,7 +287,6 @@ object JoinQueries {
     }),
 
     "sj14_sphere_sql_join" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "customer")
         .withColumn("clon", (col("c_custkey") % 720).cast("double") / 2.0 - 180.0)
         .withColumn("clat", (col("c_custkey") % 356).cast("double") / 2.0 - 89.0)
@@ -346,7 +330,6 @@ object JoinQueries {
     // NAMES (the rewrite assembles positionally, so name collisions are
     // legal exactly as they are for stock Spark joins)
     "sj15_sphere_sql_semi_anti" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "customer")
         .withColumn("apt", st.point(
           (col("c_custkey") % 720).cast("double") / 2.0 - 180.0,
@@ -381,7 +364,6 @@ object JoinQueries {
     }),
 
     "sj07_planner_grid_join" -> ((s, dir) => {
-      prep(s)
       orderPoints(s, dir).select(col("o_orderkey"), col("pt"))
         .createOrReplaceTempView("pg_pts")
       partBoxes(s, dir).select(col("p_partkey"), col("box"))
@@ -398,7 +380,6 @@ object JoinQueries {
     // geography join: great-circle dwithin via wrap-safe lat-lon grid —
     // full lon ring incl. antimeridian pairs and ±89 latitudes
     "sj08_sphere_join" -> ((s, dir) => {
-      prep(s)
       val c = t(s, dir, "customer")
         .withColumn("clon", (col("c_custkey") % 720).cast("double") / 2.0 - 180.0)
         .withColumn("clat", (col("c_custkey") % 356).cast("double") / 2.0 - 89.0)
@@ -419,7 +400,6 @@ object JoinQueries {
     // and planned through the ordinary spatial-join machinery (reference:
     // rust/sedona-spatial-join-raster/src/physical_planner.rs)
     "sj09_raster_join" -> ((s, dir) => {
-      prep(s)
       val rasters = t(s, dir, "part").filter(col("p_partkey") < 500)
         .withColumn("ulx", (col("p_partkey") % 100).cast("double") * 10.0)
         .withColumn("uly", (col("p_size") % 50).cast("double") * 10.0)
@@ -438,7 +418,6 @@ object JoinQueries {
 
     // shuffle-partitioned grid join — same semantics as sj01
     "sj05_grid_join" -> ((s, dir) => {
-      prep(s)
       val pts = orderPoints(s, dir).select(col("o_orderkey"), col("pt"))
       val boxes = partBoxes(s, dir).select(col("p_partkey"), col("box"))
       SpatialJoins.gridJoin(pts, boxes, col("pt"), col("box"), "st_intersects",

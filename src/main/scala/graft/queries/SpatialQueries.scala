@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.GraftExtensions
 import graft.functions.GraftFunctions.st
 
 /** Spatial operator coverage (SURVEY.md §2.5/§2.6) over the driver testdata.
@@ -14,8 +13,6 @@ import graft.functions.GraftFunctions.st
   * hash-match bit-for-bit.
   */
 object SpatialQueries {
-
-  private def prep(s: SparkSession): Unit = GraftExtensions.install(s)
 
   /** Densified 60-vertex small circle of angular radius 20 deg around
     * (10, 45), authored CCW (the cap) or CW (its complement) — the
@@ -59,7 +56,6 @@ object SpatialQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // point constructors + accessors + distance + azimuth
     "sp01_point_ops" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "lineitem")
         .filter(col("l_orderkey") % 7 === 0)
         .withColumn("p1", st.point((col("l_partkey") % 997).cast("double") * 0.1,
@@ -74,7 +70,6 @@ object SpatialQueries {
 
     // envelope constructor, area, centroid, bounds accessors, type, npoints
     "sp02_envelope_box" -> ((s, dir) => {
-      prep(s)
       withBox(t(s, dir, "part"))
         .select(col("p_partkey"),
           st.area(col("box")).as("area"),
@@ -87,7 +82,6 @@ object SpatialQueries {
 
     // binary predicates on parity-controlled box pairs + affine translate
     "sp03_predicates" -> ((s, dir) => {
-      prep(s)
       withBox(t(s, dir, "part"))
         .withColumn("off", when(col("p_partkey") % 3 === 0, col("bw") / 2)
           .when(col("p_partkey") % 3 === 1, col("bw"))
@@ -106,7 +100,6 @@ object SpatialQueries {
 
     // buffer: 32-gon area + vertex count
     "sp04_buffer" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "part")
         .withColumn("r", (col("p_size") % 4).cast("double") + 0.5)
         .withColumn("len", (col("p_partkey") % 50 + 1).cast("double"))
@@ -135,7 +128,6 @@ object SpatialQueries {
 
     // WKT parse/print round trip incl. EMPTY
     "sp05_wkt_roundtrip" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "part")
         .withColumn("xi", (col("p_partkey") % 1000).cast("int"))
         .withColumn("yi", (col("p_size") % 100).cast("int"))
@@ -153,7 +145,6 @@ object SpatialQueries {
 
     // aggregates: envelope_agg + analyze_agg per brand
     "sp06_agg_envelope" -> ((s, dir) => {
-      prep(s)
       withBox(t(s, dir, "part"))
         .groupBy(col("p_brand"))
         .agg(
@@ -168,7 +159,6 @@ object SpatialQueries {
 
     // union_agg of disjoint grid boxes: area + part count survive the union
     "sp07_union_agg" -> ((s, dir) => {
-      prep(s)
       // 200x200 grid keeps every partkey's box disjoint up to 40k parts
       // (sf0.1), so per-brand union area stays exactly additive
       withBox(t(s, dir, "part"))
@@ -185,7 +175,6 @@ object SpatialQueries {
 
     // CRS transforms: web mercator + exact inverse round trip
     "sp08_transform" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "customer")
         .filter(col("c_custkey") % 10 === 0)
         .withColumn("lon", (col("c_custkey") % 360).cast("double") - 180.0 + 0.25)
@@ -206,7 +195,6 @@ object SpatialQueries {
     // inverse must return the synthesized lon/lat to 5 decimals, each
     // exercised inside its projection's home domain
     "sp14_crs_roundtrip" -> ((s, dir) => {
-      prep(s)
       def rt(lon: Column, lat: Column, code: String, tag: String): Seq[Column] = {
         val back = st.transform(
           st.transform(st.point(lon, lat), lit("EPSG:4326"), lit(code)),
@@ -284,7 +272,6 @@ object SpatialQueries {
 
     // spatial sort key: Z-order (Hilbert variant covered in unit spec)
     "sp09_zorder" -> ((s, dir) => {
-      prep(s)
       withBox(t(s, dir, "part"))
         .select(col("p_partkey"),
           st.f("sd_zorder", col("box"), lit(0.0), lit(0.0), lit(2048.0), lit(1024.0))
@@ -294,7 +281,6 @@ object SpatialQueries {
     // spherical geography subset: haversine distance, spherical box area,
     // segment-summed spherical length
     "sp11_sphere" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "customer")
         .withColumn("lon1", (col("c_custkey") % 340).cast("double") / 2.0 - 85.0)
         .withColumn("lat1", (col("c_custkey") % 160).cast("double") / 2.0 - 40.0)
@@ -319,7 +305,6 @@ object SpatialQueries {
     // direction) are exact closed forms; the geodesic bulge (geom
     // direction) is a constant pinned by the reference's own test table.
     "sp15_tessellate" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "customer").filter(col("c_custkey") % 7 === 0)
         .withColumn("off", (col("c_custkey") % 80).cast("double") + 1.0)
         .withColumn("tol", when(col("c_custkey") % 2 === 0, 10000.0)
@@ -349,7 +334,6 @@ object SpatialQueries {
     // chart-exact (no bulge on the x axis), giving a closed-form oracle:
     // span = a - b; wrapped iff span > 180 (then min/max swap sides)
     "sp17_sphere_bounds" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "customer")
         .withColumn("a", (col("c_custkey") % 80).cast("double") + 100.0) // east lon
         .withColumn("b", -((col("c_custkey") % 75).cast("double") + 20.0)) // west lon
@@ -372,7 +356,6 @@ object SpatialQueries {
     // logic is an exact oracle. Bounds columns prove the cap's grid
     // cover reaches the pole (full lon ring, ymax 90).
     "sp18_sphere_containment" -> ((s, dir) => {
-      prep(s)
       val ncap = "POLYGON ((0 72, 30 72, 60 72, 90 72, 120 72, 150 72, 180 72, " +
         "-150 72, -120 72, -90 72, -60 72, -30 72, 0 72))"
       val scap = "POLYGON ((0 -72, 30 -72, 60 -72, 90 -72, 120 -72, 150 -72, 180 -72, " +
@@ -417,7 +400,6 @@ object SpatialQueries {
     // boundaries; longest line between two points returns the points
     // themselves.
     "sp19_sphere_linref" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "customer")
         .withColumn("x0", (col("c_custkey") % 300).cast("double") - 150.0)
         .withColumn("o", (col("c_custkey") % 11).cast("double"))
@@ -440,7 +422,6 @@ object SpatialQueries {
     }),
 
     "sp16_itemcrs" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "customer")
         .withColumn("x0", (col("c_custkey") % 500).cast("double") * 0.5)
         .withColumn("y0", (col("c_custkey") % 300).cast("double") * 0.25)
@@ -465,7 +446,6 @@ object SpatialQueries {
     // area); the hole is discriminated by center containment. Plus exact
     // great-circle line interpolation (slerp).
     "sp13_sphere_overlay" -> ((s, dir) => {
-      prep(s)
       def envQuadKm2(g: Column): Column =
         round(st.f("st_areasphere", st.makeEnvelope(
           st.xmin(g), st.ymin(g), st.xmax(g), st.ymax(g))) / 1e6, 3)
@@ -498,7 +478,6 @@ object SpatialQueries {
 
     // decomposition + proximity + GeoJSON round trip
     "sp12_misc" -> ((s, dir) => {
-      prep(s)
       withBox(t(s, dir, "part"))
         .withColumn("blade", st.geomFromWkt(concat(
           lit("LINESTRING ("), col("bxmin") + col("bw") / 2, lit(" "),
@@ -521,7 +500,6 @@ object SpatialQueries {
 
     // in-db raster: constructor, geotransform math, pixel access, stats
     "rs01_raster_core" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "part")
         .withColumn("ulx", (col("p_partkey") % 100).cast("double") * 10.0)
         .withColumn("uly", (col("p_size") % 50).cast("double") * 10.0)
@@ -550,7 +528,6 @@ object SpatialQueries {
     // zonal statistics: pixel-center-in-zone aggregation over in-db
     // rasters, window-clipped to the zone envelope
     "rs02_zonal_stats" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "part")
         .withColumn("ulx", (col("p_partkey") % 100).cast("double") * 10.0)
         .withColumn("uly", (col("p_size") % 50).cast("double") * 10.0)
@@ -575,7 +552,6 @@ object SpatialQueries {
     // from disk. w/h/crs/ulx come from the unloaded header ref; value/
     // avg/max from the materialized bands.
     "rs03_outdb_load" -> ((s, dir) => {
-      prep(s)
       val base = s"/tmp/graft_outdb_gate/${math.abs(dir.hashCode)}"
       new java.io.File(base).mkdirs()
       t(s, dir, "nation").select(col("n_nationkey").cast("int"))
@@ -615,7 +591,6 @@ object SpatialQueries {
     // the fetch counters in RasterWindowSpec; this gate proves the
     // VALUES match a DuckDB recomputation of the generating formula).
     "rs09_outdb_window" -> ((s, dir) => {
-      prep(s)
       val base = s"/tmp/graft_outdb_window/${math.abs(dir.hashCode)}"
       new java.io.File(base).mkdirs()
       val scenePath = s"$base/scene.tif"
@@ -667,7 +642,6 @@ object SpatialQueries {
     // loader that serves v2 stores (rs05/rs10); windowed point samples
     // fetch only the chunks under each probe.
     "rs14_zarr_v3" -> ((s, dir) => {
-      prep(s)
       val base = s"/tmp/graft_outdb_zarrv3/${math.abs(dir.hashCode)}"
       val store = new java.io.File(s"$base/cube.zarr/c")
       store.mkdirs()
@@ -718,7 +692,6 @@ object SpatialQueries {
     // object-store-optimized layout): windowed point samples fetch the
     // shard index + only the inner chunks under each probe.
     "rs16_zarr_sharded" -> ((s, dir) => {
-      prep(s)
       val base = s"/tmp/graft_outdb_zarrshard/${math.abs(dir.hashCode)}"
       new java.io.File(s"$base/cube.zarr/c").mkdirs()
       val W = 512; val H = 384
@@ -784,7 +757,6 @@ object SpatialQueries {
     }),
 
     "rs10_outdb_zarr" -> ((s, dir) => {
-      prep(s)
       val base = s"/tmp/graft_outdb_zarr/${math.abs(dir.hashCode)}"
       val store = new java.io.File(s"$base/cube.zarr")
       store.mkdirs()
@@ -848,7 +820,6 @@ object SpatialQueries {
     // RasterWindowSpec counter-asserts the byte economics; this gate
     // proves the VALUES.
     "rs11_cog_overview" -> ((s, dir) => {
-      prep(s)
       val base = s"/tmp/graft_outdb_cog/${math.abs(dir.hashCode)}"
       new java.io.File(base).mkdirs()
       val scenePath = s"$base/scene_cog.tif"
@@ -898,7 +869,6 @@ object SpatialQueries {
     // boundary, far beyond the inscribed-60-gon sag of ~0.027 deg and
     // cross-engine trig noise).
     "sp21_oriented_cap" -> ((s, dir) => {
-      prep(s)
       val cw = orientedCapWkt(clockwise = true)
       val ccw = orientedCapWkt(clockwise = false)
       s.range(2000).select(col("id"),
@@ -918,7 +888,6 @@ object SpatialQueries {
     // ~55.9°; boxes in the margin band are excluded on both engines by
     // the same integer filter), so the oracle needs no spherical math.
     "sp22_oriented_relate" -> ((s, dir) => {
-      prep(s)
       val quad = "POLYGON ((10 30, 40 30, 40 55, 10 55, 10 30))"
       val comp = "POLYGON ((10 30, 10 55, 40 55, 40 30, 10 30))"
       t(s, dir, "part").filter(col("p_partkey") % 13 === 0)
@@ -954,7 +923,6 @@ object SpatialQueries {
     // (plus their crossings), so the same 3° integer-chart margins that
     // swallow geodesic bulge make the oracle pure interval logic
     "sp23_oriented_overlay" -> ((s, dir) => {
-      prep(s)
       val q1 = "POLYGON ((10 30, 40 30, 40 55, 10 55, 10 30))"
       val q2c = "POLYGON ((20 20, 20 45, 50 45, 50 20, 20 20))" // CW = complement
       val interE = s"st_intersectionsphereoriented(" +
@@ -991,7 +959,6 @@ object SpatialQueries {
     // into a single bridged region. Same margin-filtered integer-chart
     // oracle discipline as sp22/sp23.
     "sp24_oriented_multicomponent" -> ((s, dir) => {
-      prep(s)
       val frame = "POLYGON ((0 0, 40 0, 40 40, 0 40, 0 0), " +
         "(10 10, 10 30, 30 30, 30 10, 10 10))"
       val strip = "POLYGON ((15 -10, 25 -10, 25 50, 15 50, 15 -10))"
@@ -1035,7 +1002,6 @@ object SpatialQueries {
     // (full part table, multipliers chosen so every class combo has
     // rows at sf0.001) keeps all four membership combinations gated.
     "sp25_oriented_difference" -> ((s, dir) => {
-      prep(s)
       val frame = "POLYGON ((0 0, 40 0, 40 40, 0 40, 0 0), " +
         "(10 10, 10 30, 30 30, 30 10, 10 10))"
       val strip = "POLYGON ((15 -10, 25 -10, 25 50, 15 50, 15 -10))"
@@ -1079,7 +1045,6 @@ object SpatialQueries {
     // margin-filtered lattice against pure boolean interval logic.
     // All contact is coordinate-exact (equator + meridian edges).
     "sp26_oriented_tangent" -> ((s, dir) => {
-      prep(s)
       val qa = "POLYGON ((0 0, 40 0, 40 30, 0 30, 0 0))"
       val qb = "POLYGON ((10 0, 50 0, 50 15, 10 15, 10 0))"
       val iE = s"st_intersectionsphereoriented(" +
@@ -1115,7 +1080,6 @@ object SpatialQueries {
     }),
 
     "sp20_ntv2_gridshift" -> ((s, dir) => {
-      prep(s)
       val base = s"/tmp/graft_ntv2_gate/${math.abs(dir.hashCode)}"
       new java.io.File(base).mkdirs()
       val gsb = s"$base/test.gsb"
@@ -1144,7 +1108,6 @@ object SpatialQueries {
     // format for >4 GB variables), read through the same rs_frompath
     // loader as CDF-1/2.
     "rs15_netcdf5" -> ((s, dir) => {
-      prep(s)
       val base = s"/tmp/graft_outdb_netcdf5/${math.abs(dir.hashCode)}"
       new java.io.File(base).mkdirs()
       t(s, dir, "nation").select(col("n_nationkey").cast("int"))
@@ -1182,7 +1145,6 @@ object SpatialQueries {
     // 16x16 tiling over a 40x24 image exercises ragged-edge tiles and
     // a pixel probe across a tile boundary.
     "rs13_bigtiff_outdb" -> ((s, dir) => {
-      prep(s)
       val base = s"/tmp/graft_outdb_bigtiff/${math.abs(dir.hashCode)}"
       new java.io.File(base).mkdirs()
       t(s, dir, "nation").select(col("n_nationkey").cast("int"))
@@ -1223,7 +1185,6 @@ object SpatialQueries {
     // forces the full decode. Same contract shape as rs13's BigTIFF
     // out-db gate, over the lossless wavelet codec instead
     "rs19_jp2_outdb" -> ((s, dir) => {
-      prep(s)
       val base = s"/tmp/graft_outdb_jp2/${math.abs(dir.hashCode)}"
       new java.io.File(base).mkdirs()
       t(s, dir, "nation").select(col("n_nationkey").cast("int"))
@@ -1264,7 +1225,6 @@ object SpatialQueries {
     // bandmin == bandmax == the source value proves every pixel decoded
     // right, while octet_length shows the stream really is entropy-coded
     "rs17_jpeg_geotiff" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "nation")
         .withColumn("val", (col("n_nationkey") * 9 % 200 + 10).cast("double"))
         .withColumn("ulx", (col("n_nationkey") % 10).cast("double") * 8.0)
@@ -1295,7 +1255,6 @@ object SpatialQueries {
     // geotransform survive the GeoJP2 uuid box, and octet_length proves
     // the stream is genuinely wavelet-entropy-coded, not stored
     "rs18_jpeg2000_roundtrip" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "nation")
         .withColumn("vals", expr(
           "transform(sequence(0, 40*28 - 1), i -> " +
@@ -1331,7 +1290,6 @@ object SpatialQueries {
     // seam (col 33, row 33 crosses both seams), and octet_length proves
     // genuine entropy coding
     "rs20_jp2_multitile" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "nation")
         .withColumn("vals", expr(
           "transform(sequence(0, 96*64 - 1), i -> " +
@@ -1365,7 +1323,6 @@ object SpatialQueries {
     // contract as rs20; the per-resolution split must not change one
     // output sample, and the stream still roundtrips via the JP2 sniff
     "rs22_jp2_tileparts" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "nation")
         .withColumn("vals", expr(
           "transform(sequence(0, 96*64 - 1), i -> " +
@@ -1410,7 +1367,6 @@ object SpatialQueries {
     // plain lossy writer doesn't emit. Tolerances follow rs21's; the
     // derived top band quantizes ~2^(levels-1) coarser than qstep.
     "rs23_jp2_coc_derived" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "nation")
         .withColumn("vals", expr(
           "transform(sequence(0, 64*48 - 1), i -> " +
@@ -1450,7 +1406,6 @@ object SpatialQueries {
     // band rides a 2-level pyramid under the COD's 3. Reference reaches
     // this surface via GDAL openjpeg (sedona-raster-gdal/register.rs).
     "rs24_jp2_mixed" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "nation")
         .withColumn("vals", expr(
           "transform(sequence(0, 64*48*2 - 1), i -> CAST(CASE " +
@@ -1497,7 +1452,6 @@ object SpatialQueries {
     // Reference reaches POC/PPM/RGN via GDAL openjpeg
     // (rust/sedona-raster-gdal/src/register.rs:23-34).
     "rs25_jp2_poc_ppm_roi" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "nation")
         .withColumn("vals", expr(
           "transform(sequence(0, 64*48 - 1), i -> " +
@@ -1545,7 +1499,6 @@ object SpatialQueries {
     // Reference reaches subsampled JP2 via GDAL openjpeg
     // (rust/sedona-raster-gdal/src/register.rs:23-34).
     "rs26_jp2_subsampled" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "nation")
         .withColumn("vals", expr(
           "transform(sequence(0, 65*47*2 - 1), i -> CAST(CASE " +
@@ -1581,7 +1534,6 @@ object SpatialQueries {
     }),
 
     "rs21_jp2_lossy" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "nation")
         // ramp + deterministic pseudo-noise: pure ramps compress to
         // nothing losslessly (the 5/3 annihilates them), which would
@@ -1624,7 +1576,6 @@ object SpatialQueries {
     // format is decoded natively), then rs_frompath header metadata +
     // windowed/ensureloaded pixel access like any other registry format.
     "rs12_netcdf_roundtrip" -> ((s, dir) => {
-      prep(s)
       val base = s"/tmp/graft_outdb_netcdf/${math.abs(dir.hashCode)}"
       new java.io.File(base).mkdirs()
       t(s, dir, "nation").select(col("n_nationkey").cast("int"))
@@ -1659,7 +1610,6 @@ object SpatialQueries {
     // plumbing, setters (nodata/georeference incl. ESRI pixel-center
     // shift), point sampling, combined coord mapping, skewed convex hull
     "rs04_raster_meta" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "part")
         .withColumn("ulx", (col("p_partkey") % 100).cast("double") * 10.0)
         .withColumn("uly", (col("p_size") % 50).cast("double") * 10.0)
@@ -1707,7 +1657,6 @@ object SpatialQueries {
     // Write a zlib-chunked Zarr array, read back one row per chunk,
     // verify pixel values and per-chunk geotransform origins.
     "rs05_zarr_roundtrip" -> ((s, dir) => {
-      prep(s)
       val grid = t(s, dir, "nation")
         .withColumn("cy", (col("n_nationkey") / 5).cast("long"))
         .withColumn("cx", (col("n_nationkey") % 5).cast("long"))
@@ -1731,7 +1680,6 @@ object SpatialQueries {
     // accessors, flat metadata struct (reference rs_slice.rs /
     // rs_dim_band.rs / rs_metadata.rs)
     "rs06_nd_slice" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "part")
         .withColumn("ulx", (col("p_partkey") % 100).cast("double") * 10.0)
         .withColumn("uly", (col("p_size") % 50).cast("double") * 10.0)
@@ -1766,7 +1714,6 @@ object SpatialQueries {
     // bilinear resampling, reproject-match, rasterize, polygonize,
     // full zonal statistics (reference rust/sedona-raster-gdal)
     "rs07_raster_ops" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "part")
         .withColumn("ulx", (col("p_partkey") % 100).cast("double") * 10.0)
         .withColumn("uly", (col("p_size") % 50).cast("double") * 10.0)
@@ -1830,7 +1777,6 @@ object SpatialQueries {
     // codec hand-implemented, sources.GeoTiff). Byte length pins the wire
     // layout; metadata and pixels must survive the trip.
     "rs08_geotiff_roundtrip" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "nation")
         .withColumn("ulx", (col("n_nationkey") % 10).cast("double") * 8.0)
         .withColumn("uly", (col("n_nationkey") % 5).cast("double") * 6.0)
@@ -1856,7 +1802,6 @@ object SpatialQueries {
 
     // geometry element access: dump/geometryn/makeline/boundary
     "sp10_elements" -> ((s, dir) => {
-      prep(s)
       t(s, dir, "part")
         .withColumn("xi", (col("p_partkey") % 500).cast("int"))
         .withColumn("yi", (col("p_size") % 60).cast("int"))

@@ -240,8 +240,11 @@ object GeoParquet {
     * min of the xmin/ymin minima and max of the xmax/ymax maxima across
     * row groups — exactly the per-file bbox the manifest needs, with no
     * data read. None when any row group lacks the statistic (the
-    * manifest then simply omits the file — never wrongly pruned). */
-  private def statsBbox(md: org.apache.parquet.format.FileMetaData,
+    * manifest then simply omits the file — never wrongly pruned). Only
+    * the typed `min_value`/`max_value` count: the legacy `min`/`max`
+    * fields use an undefined order for DOUBLE (PARQUET-1222, e.g. NaN),
+    * so a bbox read from them could prune rows that match. */
+  private[graft] def statsBbox(md: org.apache.parquet.format.FileMetaData,
       bb: String): Option[Seq[Double]] = {
     import scala.jdk.CollectionConverters._
     if (md.getRow_groups == null || md.getRow_groups.isEmpty) return None
@@ -255,8 +258,8 @@ object GeoParquet {
           if (st == null) None
           else {
             val bytes =
-              if (wantMin) { if (st.isSetMin_value) st.getMin_value else if (st.isSetMin) st.getMin else null }
-              else { if (st.isSetMax_value) st.getMax_value else if (st.isSetMax) st.getMax else null }
+              if (wantMin) { if (st.isSetMin_value) st.getMin_value else null }
+              else { if (st.isSetMax_value) st.getMax_value else null }
             if (bytes == null || bytes.length != 8) None
             else Some(java.lang.Double.longBitsToDouble(java.nio.ByteBuffer
               .wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong))

@@ -281,6 +281,29 @@ class GeoParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after.size == fresh.size - 1)
   }
 
+  test("footer bbox trusts only typed min_value/max_value: legacy min/max never prunes") {
+    import org.apache.parquet.format.{ColumnChunk, ColumnMetaData, FileMetaData, RowGroup,
+      Statistics}
+    def le(d: Double): Array[Byte] = java.nio.ByteBuffer.allocate(8)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putDouble(d).array()
+    def footer(typed: Boolean): FileMetaData = {
+      val cols = Seq("xmin" -> 1.0, "ymin" -> 2.0, "xmax" -> 3.0, "ymax" -> 4.0).map {
+        case (leaf, v) =>
+          val st = new Statistics()
+          if (typed) st.setMin_value(le(v)).setMax_value(le(v))
+          else st.setMin(le(v)).setMax(le(v))
+          new ColumnChunk().setMeta_data(new ColumnMetaData()
+            .setPath_in_schema(java.util.Arrays.asList("geom_bbox", leaf))
+            .setStatistics(st))
+      }
+      new FileMetaData().setRow_groups(java.util.Arrays.asList(
+        new RowGroup().setColumns(java.util.Arrays.asList(cols: _*))))
+    }
+    assert(GeoParquet.statsBbox(footer(typed = true), "geom_bbox")
+      .contains(Seq(1.0, 2.0, 3.0, 4.0)))
+    assert(GeoParquet.statsBbox(footer(typed = false), "geom_bbox").isEmpty)
+  }
+
   test("spatial filter is rewritten to bbox ranges and pushed to parquet") {
     val dir = Files.createTempDirectory("gp").toString + "/t2"
     GeoParquet.write(sample, dir, "geom")

@@ -407,6 +407,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(CacheRegistry.pinnedCount == 0, "internal cache not released after action")
   }
 
+  test("CacheRegistry: a failed QueryExecution-id sample fails closed") {
+    assert(CacheRegistry.sampleBarrier(42L) == 42L)
+    // the never-release barrier: no sweep passes `qe.id > barrier`
+    assert(CacheRegistry.sampleBarrier(
+      throw new IllegalStateException("injected sampling fault")) == Long.MaxValue)
+  }
+
   test("ivf ann: high recall vs brute force on clustered vectors") {
     import graft.pipeline.IvfAnn
     // 8 well-separated clusters of 25 vectors each
