@@ -49,7 +49,6 @@ object ScaleBench {
     val changelog = sys.env.get("SPARK_GRAFT_SS_CHANGELOG").map(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> _)
     // generic A/B hook: ';'-separated key=value session confs (e.g.
-    // spark.graft.cc.localLimit=4194304 to re-measure the old CC cap, or
     // spark.graft.knn.occCover=false for the legacy cover path)
     val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(_.split(";")).map { kv =>
       val i = kv.indexOf('=')
@@ -195,8 +194,8 @@ object ScaleBench {
       // uniform workload has, but 30% of probes find NOTHING in their
       // one-cell ring. The former π·R fallback joined every such query
       // against the ENTIRE object side (30% of probes x all objects —
-      // quadratic in m); geometric ring escalation must keep wall ~ m by
-      // resolving them at a few-ring cover instead.
+      // quadratic in m); the per-query histogram bound must keep wall ~ m
+      // by resolving them at a few-ring cover instead.
       "sj16_knn_sphere_sparse" -> { m =>
         val ny = math.max(24, (24 * sqrtM(m)).toInt)
         // objects: uniform outside the ocean [-135,-45]x[-30,30]

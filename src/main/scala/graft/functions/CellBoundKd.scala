@@ -6,14 +6,14 @@ package graft.functions
   *
   *   ub_c = dist(anchor, center_c) + pad_c      (weight = cell count)
   *
-  * by best-first traversal — the same per-query radius bound the
-  * whole-histogram count-probe join computes, but in O(visited cells)
-  * per query with NO join, no escalation rounds, and no per-round
-  * actions (the terminal whole-histogram round was measured at 57s of a
-  * sparse m=100 run: |unresolved| x |histogram| = 1.85G probe pairs).
-  * Because it consumes ALL histogram cells, the returned bound is the
-  * minimum over every possible probe cover — never looser than any
-  * escalation round's, so final-probe covers can only shrink.
+  * by best-first traversal — the per-query radius bound a join of every
+  * query against the whole histogram would compute, but in O(visited
+  * cells) per query with NO join and no per-round actions (such a
+  * whole-histogram join was measured at 57s of a sparse m=100 run:
+  * |queries| x |histogram| = 1.85G probe pairs). Because it consumes ALL
+  * histogram cells, the returned bound is the minimum over every
+  * possible probe cover, so final-probe covers are as small as the
+  * histogram allows.
   *
   * Planar mode searches 2D euclidean space. Sphere mode embeds centers
   * (and the query) on the unit sphere and prunes in CHORD space —

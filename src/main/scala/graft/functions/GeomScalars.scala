@@ -1920,14 +1920,6 @@ object GeomScalars {
       if (e.isNull) null
       else new GenericArrayData(Array(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY))
     }),
-    fn("sd_gridcells_sphere4", ArrayType(LongType, containsNull = false),
-        Seq(ArgKind.Raw, Dbl, Int_, Int_))(a => {
-      val e = a(0).asInstanceOf[ArrayData]
-      new GenericArrayData(Spherical.gridCells(
-        new org.locationtech.jts.geom.Envelope(
-          e.getDouble(0), e.getDouble(2), e.getDouble(1), e.getDouble(3)),
-        d(a, 1), i(a, 2), i(a, 3)))
-    }),
     // two-level covers: wide geometries (polar caps) emit coarse cells
     // past maxCells instead of thousands of fine ones; the probe side
     // emits both levels (Spherical two-level cover notes)
@@ -2060,15 +2052,6 @@ object GeomScalars {
     // arg is a bitmap over cell ids (fine ids 0..nx*ny-1, nested-coarse
     // ids past nx*ny) of cells that hold >= 1 object — emitted set =
     // cover ∩ occupied, pair-set identical, no empty-cell explode rows
-    fn("st_gridcells_occ", ArrayType(LongType, containsNull = false),
-        Seq(Geom, Dbl, Dbl, Dbl, Dbl, Int_, Int_, Bin))(a => {
-      val e = g0(a).getEnvelopeInternal
-      if (e.isNull) null
-      else new GenericArrayData(Grid.cellsOfOcc(
-        e.getMinX, e.getMinY, e.getMaxX, e.getMaxY,
-        d(a, 1), d(a, 2), d(a, 3), d(a, 4), i(a, 5), i(a, 6),
-        a(7).asInstanceOf[Array[Byte]]))
-    }),
     fn("st_gridcells_knncover_occ", ArrayType(LongType, containsNull = false),
         Seq(Geom, Dbl, Dbl, Dbl, Dbl, Int_, Int_, Int_, Bin))(a => {
       val e = g0(a).getEnvelopeInternal

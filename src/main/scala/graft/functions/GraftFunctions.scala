@@ -20,8 +20,6 @@ object GraftFunctions {
     "st_convexhull_agg" -> (es => StConvexHullAgg(es.head)),
     "st_analyze_agg" -> (es => StAnalyzeAgg(es.head)),
     "st_polygonize_agg" -> (es => StPolygonizeAgg(es.head)),
-    "sd_knn_bound_agg" -> (es => SdKnnBoundAgg(es(0), es(1), es(2), es(3))),
-    "sd_knn_wbound_agg" -> (es => SdKnnWeightedBoundAgg(es(0), es(1), es(2))),
     "sd_knn_topk_agg" -> (es => SdKnnTopKAgg(es(0), es(1), es(2), es(3))))
 
   private val sketches: Map[String, Seq[Expression] => Expression] = Map(

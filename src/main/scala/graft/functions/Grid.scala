@@ -95,30 +95,6 @@ object Grid {
     b < occ.length && (occ(b) & (1 << (i & 7))) != 0
   }
 
-  /** [[cellsOf]] filtered by an occupancy bitmap (bit index = cell id):
-    * a cell with no objects can never produce a candidate pair, so the
-    * KNN probe explodes occupied cells ONLY — the former explode-then-
-    * broadcast-semi-filter generated (and copied the query row into)
-    * every empty cell of a sparse query's cover before dropping it. */
-  def cellsOfOcc(gxmin: Double, gymin: Double, gxmax: Double, gymax: Double,
-      xmin: Double, ymin: Double, xmax: Double, ymax: Double,
-      nx: Int, ny: Int, occ: Array[Byte]): Array[Long] = {
-    val cx0 = cellX(gxmin, xmin, xmax, nx); val cx1 = cellX(gxmax, xmin, xmax, nx)
-    val cy0 = cellX(gymin, ymin, ymax, ny); val cy1 = cellX(gymax, ymin, ymax, ny)
-    val out = new scala.collection.mutable.ArrayBuffer[Long](64)
-    var cy = cy0
-    while (cy <= cy1) {
-      var cx = cx0
-      while (cx <= cx1) {
-        val id = cy.toLong * nx + cx
-        if (occHit(occ, id)) out += id
-        cx += 1
-      }
-      cy += 1
-    }
-    out.toArray
-  }
-
   /** [[cellsKnnCover]] filtered by the occupancy bitmap (fine AND nested-
     * coarse ids share one bit space — coarse bits sit past nx*ny, exactly
     * the ids [[cellsKnnDual]] assigns). Emitted set = mixed cover ∩

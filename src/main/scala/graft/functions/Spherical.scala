@@ -1475,7 +1475,7 @@ object Spherical {
     * the object side, the admitted candidate-pair set is IDENTICAL to
     * the all-fine cover's (interior coarse cells match exactly the
     * objects whose fine cells they contain; the boundary stays fine), so
-    * an escalated-radius query enumerates ~fx*fy fewer cover rows with
+    * a wide-radius query enumerates ~fx*fy fewer cover rows with
     * zero extra exact-distance work. */
   def gridCellsKnnCover(env: org.locationtech.jts.geom.Envelope,
       radiusM: Double, nx: Int, ny: Int, maxCells: Int): Array[Long] = {

@@ -37,6 +37,16 @@ import org.apache.spark.sql.functions._
   */
 object Dbscan {
 
+  /** DBSCAN over `df` (see the object doc for the algorithm).
+    *
+    * Eager: this runs Spark actions while the result plan is being
+    * built — the grid join's envelope pre-pass when `bounds` is None, a
+    * `pairs.count()` that picks the local or distributed finish by size
+    * (and warms the persisted point and pair caches), the local finish's
+    * collect, or on the distributed path the connected-components
+    * actions (see `PipelineOps.connectedComponents`). The caches register
+    * with `CacheRegistry` `afterCurrent`, so these construction-time
+    * actions cannot release them before the caller's query runs. */
   def dbscan(df: DataFrame, id: Column, geom: Column, eps: Double,
       minPts: Int, bounds: Option[(Double, Double, Double, Double)] = None,
       nx: Int = 64, ny: Int = 64): DataFrame = {

@@ -179,6 +179,13 @@ object SpatialJoins {
     * cells (two-level spherical grid — Spherical.gridCellsAdaptive). */
   val MaxFineCells = 256
 
+  /** Micro-join floor of [[cellRepartitionLarger]]: when even the larger
+    * input is under this many bytes, the whole candidate set is one
+    * cheap task and the extra exchange is pure overhead. Any
+    * production-scale side clears 1 MB by many orders of magnitude, so
+    * the floor only exempts toy inputs. */
+  private val RepartitionMinBytes: Long = 1L << 20
+
   /** Cell-keyed pre-shuffle of the larger join input (its exploded
     * frame), leaving the smaller input on the broadcast fast path.
     * "Larger" by the optimizer's size estimate of the un-exploded
@@ -190,13 +197,7 @@ object SpatialJoins {
     val parts = spark.sessionState.conf.numShufflePartitions
     val lBytes = left.queryExecution.optimizedPlan.stats.sizeInBytes
     val rBytes = right.queryExecution.optimizedPlan.stats.sizeInBytes
-    // Micro-join floor: when even the larger input is this small the
-    // whole candidate set is a single cheap task and the extra exchange
-    // is pure overhead; any production-scale side clears 1 MB by many
-    // orders of magnitude, so the knob only exempts toy inputs.
-    val minBytes = spark.conf.getOption("spark.graft.sphere.repartitionMinBytes")
-      .map(_.toLong).getOrElse(1L << 20)
-    if (lBytes.max(rBytes) < minBytes) return (l, r)
+    if (lBytes.max(rBytes) < RepartitionMinBytes) return (l, r)
     // Redistribute ONLY when the candidate side is actually
     // under-parallelized (e.g. one task per small single-row-group
     // file): a source that already scans wide — a big cluster input, a
@@ -304,14 +305,15 @@ object SpatialJoins {
     * broadcast (the reference's out-of-core kNN territory:
     * probe/knn_results_merger.rs). Exact two-round grid algorithm:
     *
-    * 1. Probe each query's 3x3 cell neighbourhood, rank candidates, and
-    *    take the kth-candidate distance as the query's radius bound; a
-    *    query with fewer than k candidates in the neighbourhood falls back
-    *    to the full-extent diagonal (correct, rare when the grid is sized
-    *    so a cell holds >= k objects).
+    * 1. Aggregate the objects into a per-cell histogram (count + sound
+    *    distance pad, <= nx*ny rows), build a [[graft.functions.CellBoundKd]]
+    *    over it on the driver, and give each query the weighted kth
+    *    smallest cell upper bound as its radius — a map-side projection,
+    *    no probe join. A query whose histogram holds fewer than k objects
+    *    gets the full-extent diagonal (only possible when the object side
+    *    itself has fewer than k rows).
     * 2. Re-probe every cell intersecting the radius-bound envelope and
-    *    rank by (distance, tieBreak) — exact top-k, three shuffles total,
-    *    nothing broadcast, nothing quadratic.
+    *    rank by (distance, tieBreak) — exact top-k, nothing quadratic.
     */
   def knnJoinGrid(
       query: DataFrame, objects: DataFrame,
@@ -337,7 +339,7 @@ object SpatialJoins {
     val oCols = objects.columns
     // persisted NOW, registered with the CacheRegistry only at the END of
     // construction: the construction-time collects below (occ bitmap,
-    // histogram, escalation counts) are completing queries that reference
+    // histogram) are completing queries that reference
     // these caches, and an early registration lets the sweep listener
     // unpersist them mid-build — every later stage then recomputes the
     // sources AND re-draws monotonically_increasing_id, a correctness
@@ -373,9 +375,6 @@ object SpatialJoins {
       (if (fxN * fyN > 1) (nx.toLong / fxN) * (ny.toLong / fyN) else 0L)
     val occOn = nBitsL <= Int.MaxValue.toLong && query.sparkSession.conf
       .getOption("spark.graft.knn.occCover").forall(_ == "true")
-    if (sys.env.contains("SPARK_GRAFT_KNN_DEBUG"))
-      println(s"[knn-occ] planar nBits=$nBitsL occOn=$occOn " +
-        s"(guard=${nBitsL > Int.MaxValue.toLong})")
     val occBitmap: Array[Byte] = if (!occOn) null else {
       val nBits = nBitsL.toInt
       val bm = new Array[Byte]((nBits + 7) / 8)
@@ -385,16 +384,9 @@ object SpatialJoins {
       }
       bm
     }
-    def cells(g: Column, expand: Column): Column =
-      if (occOn) st.f("st_gridcells_occ", st.f("st_expandenvelope", g, expand),
-        lit(xmin), lit(ymin), lit(xmax), lit(ymax), lit(nx), lit(ny),
-        lit(occBitmap))
-      else st.f("st_gridcells", st.f("st_expandenvelope", g, expand),
-        lit(xmin), lit(ymin), lit(xmax), lit(ymax), lit(nx), lit(ny))
 
     // final-probe cover: object cells exist at BOTH nested levels (fine
-    // + coarse image) so the MIXED cover matches at either level (bound
-    // probes stay fine; only the final enumeration goes hierarchical)
+    // + coarse image) so the MIXED cover matches at either level
     def cellsMixed(g: Column, expand: Column): Column =
       if (occOn) st.f("st_gridcells_knncover_occ",
         st.f("st_expandenvelope", g, expand),
@@ -404,12 +396,9 @@ object SpatialJoins {
         lit(xmin), lit(ymin), lit(xmax), lit(ymax), lit(nx), lit(ny),
         lit(MaxFineCells))
 
-    // round 1: geometric radius escalation over the per-cell COUNT
-    // histogram -> per-query bound (one-ring probe first, 4x per round
-    // for still-unresolved queries; see escalateKnnBounds — a sparse
-    // query never re-probes the full extent, and no escalation round
-    // touches an object row)
-    val ring = math.max(cellW, cellH) + 1e-12
+    // round 1: per-query kth-bound radius from the per-cell COUNT
+    // histogram via CellBoundKd (cellBoundRadius) — no round-1 step
+    // touches an object row
     def clampIdx(v: Column, n: Int): Column =
       least(greatest(v.cast("long"), lit(0L)), lit((n - 1).toLong))
     def oe(i: Int) = element_at(st.f("sd_envelope4", col("__og")), i)
@@ -421,42 +410,24 @@ object SpatialJoins {
     val reachLit = lit(math.sqrt(cellW * cellW / 4 + cellH * cellH / 4))
     val diagCol = sqrt((oe(3) - oe(1)) * (oe(3) - oe(1)) +
       (oe(4) - oe(2)) * (oe(4) - oe(2)))
-    // the escalation's per-pair ub is codegen'd double arithmetic: raw
-    // cell centers in the fine-only histogram,
-    // euclidean ubDist, and the query anchored at its envelope min
-    // corner (exact for point queries)
-    def ubDist(ax: Column, ay: Column, bx: Column, by: Column): Column =
-      sqrt((ax - bx) * (ax - bx) + (ay - by) * (ay - by))
-    // histogram stays FINE-ONLY: bound rounds probe fine covers and the
-    // whole-histogram probe must not double-count (see escalateKnnBounds)
+    // histogram stays FINE-ONLY (knnCellStats): a doubled fine+coarse
+    // multiset would shrink the weighted kth bound below the true kth
+    // distance
     val cellStats =
       knnCellStats(objects, objectGeom, canonCell, centerXY, _ => reachLit, diagCol)
+    // the query is anchored at its envelope min corner, padded by its
+    // envelope diagonal (exact for point queries)
     def qe(i: Int) = element_at(st.f("sd_envelope4", col("__qg")), i)
     val qAnchor = (qe(1), qe(2), sqrt((qe(3) - qe(1)) * (qe(3) - qe(1)) +
       (qe(4) - qe(2)) * (qe(4) - qe(2))))
-    // round 1, default path: per-query kth-bound via the driver-built
-    // CellBoundKd over the (grid-knob-bounded) histogram — a map-side
-    // projection, no joins, no escalation actions, and the bound is the
-    // global weighted-kth (never looser than any escalation round's).
-    // spark.graft.knn.kdBound=false falls back to the count-probe
-    // escalation (kept as the measured A/B reference).
-    val useKd = query.sparkSession.conf
-      .getOption("spark.graft.knn.kdBound").forall(_ == "true")
-    val withRadius =
-      if (useKd)
-        q.withColumn("__radius",
-          kdBoundColumn(cellStats, k, diag, sphereMode = false, qAnchor))
-      else
-        q.join(escalateKnnBounds(q, cellStats, k, cells, ubDist, qAnchor,
-            ring, diag), Seq("__qid"), "left")
-          .withColumn("__radius", coalesce(col("__radius"), lit(diag)))
+    val withRadius = q.withColumn("__radius",
+      cellBoundRadius(cellStats, k, diag, sphereMode = false, qAnchor))
 
-    // round 2: exact re-probe within the per-query radius (queries with an
-    // empty neighbourhood at every radius fall back to the full-extent
-    // diagonal — only possible when the object side holds fewer than k
-    // rows). With the occupancy bitmap the cover explode emits occupied
-    // cells only; the legacy path (occCover=false) keeps the broadcast
-    // semi filter instead.
+    // round 2: exact re-probe within the per-query radius (a radius of
+    // the full-extent diagonal is only possible when the object side
+    // holds fewer than k rows). With the occupancy bitmap the cover
+    // explode emits occupied cells only; the legacy path (occCover=false)
+    // keeps the broadcast semi filter instead.
     // Envelope doubles on BOTH sides (one WKB parse per query row / per
     // object row at persist time), so the per-pair refine below is pure
     // codegen'd double arithmetic: rect-gap lower bound first (drops the
@@ -488,7 +459,10 @@ object SpatialJoins {
         o4(1).as("__ox0"), o4(2).as("__oy0"), o4(3).as("__ox1"), o4(4).as("__oy1"),
         (o4(1) === o4(3) && o4(2) === o4(4)).as("__opt"),
         col("__otb"), col("__oid"))
-      .hint("shuffle_hash") // probe side is an explode: see escalateKnnBounds
+      // the probe side is a cover explode whose row estimate ignores the
+      // explode factor, so AQE could broadcast a side that is really
+      // 100M+ rows: pin shuffle-hash, the object side as the build
+      .hint("shuffle_hash")
     val pairs = q2.join(oSel, col("__pcell") === col("__ocell"))
     val gapX = greatest(lit(0.0), col("__ox0") - col("__qx1"),
       col("__qx0") - col("__ox1"))
@@ -537,45 +511,17 @@ object SpatialJoins {
         Seq(col("knn_distance"), col("knn_rank"))).toIndexedSeq: _*)
   }
 
-  /** Round-1 of the two-round grid KNN schemes: per-query kth-distance
-    * upper bound via GEOMETRIC RADIUS ESCALATION. Probe each query's
-    * ~one-cell ring first; queries still holding < k distinct candidates
-    * re-probe at 4x the radius (ring -> 4x -> 16x -> ... -> maxR) until
-    * they resolve. A query's kth candidate distance under ANY cover
-    * bounds its true kth distance from above (the cover contains every
-    * object within the probe radius), so resolved queries never
-    * re-probe, and a sparse query pays for its own escalated radius
-    * instead of being dragged straight to the full-extent cover (the
-    * former fallback joined every empty-ring query against the ENTIRE
-    * object side). Escalation rounds see only the shrinking unresolved
-    * set — on a dense workload rounds 2+ run on (near-)empty inputs and
-    * AQE's empty-relation propagation collapses them at runtime.
-    *
-    * The per-round bound is computed by `sd_knn_bound_agg`, a bounded
-    * TypedImperativeAggregate with MAP-SIDE partial aggregation: the
-    * probe join's candidate pairs are consumed where they are produced
-    * and only (qid, <=k entries) buffers shuffle — the former
-    * dropDuplicates + row_number pipeline shuffled every candidate pair
-    * twice, the dominant intermediate at scale. Per-round stats (one row
-    * per probing query) are persisted so later rounds and the final
-    * union never recompute earlier probe joins.
-    *
-    * `q` must carry __qid/__qg, `o` must carry __ocell/__og/__otb/__oid.
-    * Returns (__qid, __radius) for every query with >= 1 candidate at
-    * some radius; the terminal round hands cnt < k queries maxR (cover =
-    * the full extent, so < k candidates there means the object side
-    * itself holds fewer than k rows — taking everything is exact). */
-  /** Round-1 default for both grid KNN twins: driver-collect the fine
-    * per-cell histogram (<= nx*ny rows, the grid-resolution knob that
-    * already bounds the broadcast), build a [[graft.functions.CellBoundKd]]
-    * over it, and compute each query's kth-bound radius as a MAP-SIDE
-    * projection — no probe joins, no escalation rounds. Queries whose
-    * total histogram weight is below k (object side smaller than k) get
-    * `maxR`, matching the escalation's terminal-round semantics. */
-  private def kdBoundColumn(cellStats: DataFrame, k: Int, maxR: Double,
+  /** Round 1 of both grid KNN twins: driver-collect the fine per-cell
+    * histogram (<= nx*ny rows, bounded by the grid-resolution knob),
+    * build a [[graft.functions.CellBoundKd]] over it, and compute each
+    * query's kth-bound radius as a MAP-SIDE projection — no probe joins,
+    * no per-round actions. The bound consumes every histogram cell, so it
+    * is the tightest any cell cover could give. Queries whose total
+    * histogram weight is below k (object side smaller than k) get `maxR`,
+    * whose cover is the whole extent: taking everything is exact. */
+  private def cellBoundRadius(cellStats: DataFrame, k: Int, maxR: Double,
       sphereMode: Boolean, anchor: (Column, Column, Column)): Column = {
     import org.apache.spark.sql.graft.DatasetBridge
-    val t0 = System.nanoTime()
     val rows = cellStats
       .select(col("__ccx"), col("__ccy"), col("__ccnt"), col("__cpad")).collect()
     val m = rows.length
@@ -590,8 +536,6 @@ object SpatialJoins {
     }
     val kd = if (sphereMode) graft.functions.CellBoundKd.sphere(cx, cy, w, pd)
       else graft.functions.CellBoundKd.planar(cx, cy, w, pd)
-    if (sys.env.contains("SPARK_GRAFT_KNN_DEBUG"))
-      println(f"[knn-kdbound] cells=$m collect+buildSec=${(System.nanoTime() - t0) / 1e9}%.2f")
     val kk = k
     val mr = maxR
     val kern: Array[Any] => Any = a => {
@@ -606,141 +550,13 @@ object SpatialJoins {
         graft.functions.ArgKind.Dbl), kern))
   }
 
-  /** Non-foldable constant-0 join key: a join on a LITERAL constant key
-    * constant-folds away and the equi-join degenerates to the
-    * BroadcastNestedLoopJoin the plan audit forbids; pmod over a data
-    * column is semantically the same constant 0 but survives the
-    * optimizer, keeping the whole-histogram probe a BroadcastHashJoin
-    * (plan shape pinned in SpatialJoinSpec). */
-  private def constKey(dataCol: Column): Column = pmod(dataCol, lit(1L))
-
-  private[graft] def escalateKnnBounds(q: DataFrame, cellStats: DataFrame, k: Int,
-      cells: (Column, Column) => Column,
-      ubDist: (Column, Column, Column, Column) => Column,
-      anchor: (Column, Column, Column),
-      ring: Double, maxR: Double): DataFrame = {
-    val radii =
-      Iterator.iterate(ring)(_ * 4).takeWhile(_ < maxR).take(12).toList :+ maxR
-    // COUNT PROBES, not object probes: each round joins the query covers
-    // against the broadcast per-cell histogram (<= nx*ny rows — bounded
-    // by the same deployment knob that sizes the grid), so no escalation
-    // round ever touches an object row. A query resolves with radius
-    // rk = the weighted kth-smallest CELL upper bound (distance to cell
-    // center + cell reach + the cell's max object extent): >= k objects
-    // provably sit within rk, so the single exact join that follows
-    // probes ~the true kth distance — the former object-enumeration
-    // rounds scanned density x area(4 d_k) pairs on clustered data
-    // (observed: a 5B-pair sort fallback filling the disk at m=100).
-    // the histogram is persisted so the per-round broadcast exchanges
-    // (one per eager round action — exchange reuse does not span
-    // actions) re-read <= nx*ny cached rows instead of re-running the
-    // object aggregation every round. The histogram is FINE-ONLY by
-    // construction (knnCellStats): bound rounds must never see a coarse
-    // row — a doubled fine+coarse multiset would shrink the weighted
-    // kth bound below the true kth distance (observed: lost neighbours
-    // on the 3-object global-cover fixture), and coarse-cell pads
-    // inflate resolved radii (measured 1.6-3x worse end to end).
-    val probe = broadcast(cellStats
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // occupied-cell count, materialized once (also warms the persist):
-    // a round whose fine cover would ENUMERATE more cells than the
-    // histogram HOLDS probes the whole broadcast histogram directly
-    // instead — strictly cheaper (no empty-cell explode rows: a
-    // whole-extent round was measured at 92s of a 184s sparse m=100
-    // run, all cover generation) and strictly TIGHTER (every histogram
-    // row's ub is sound regardless of cover membership, and more
-    // entries only lower the weighted kth bound). The cover is a
-    // work-reduction device, never a correctness one.
-    // the whole-histogram probe is an equi-join on a CONSTANT key, not a
-    // crossJoin: semantically identical (every pair matches), but it
-    // plans as a BroadcastHashJoin — the operator keeps the no-BNLJ /
-    // no-Cartesian property the plan audit pins across every gate (see
-    // constKey for why the key must be non-foldable)
-    val probeAll = broadcast(cellStats.withColumn("__k1", constKey(col("__ccell"))))
-    val histRows = cellStats.count()
-    // the per-pair ub is PURE DOUBLE ARITHMETIC: the query contributes a
-    // fixed ANCHOR (its envelope min corner — a point of the envelope,
-    // so any point of the query is within the envelope "diag" of it;
-    // for point queries anchor == the point and diag == 0, exact) and
-    // the histogram row its center coords — no WKB parse per pair (the
-    // former st_distance(query_wkb, center_point) re-parsed the query
-    // per histogram row: measured 92s of one whole-extent round)
-    val (ax, ay, adiag) = anchor
-    var unresolved = q.select(col("__qid"), col("__qg"),
-      ax.as("__qax"), ay.as("__qay"), adiag.as("__qdiag"))
-    // Each round MATERIALIZES its stats (and the shrunk unresolved set)
-    // before the next round is even planned: rounds whose input is empty
-    // are never constructed, so a dense workload's final plan carries
-    // ONLY the rounds that actually probed (no full-extent branches),
-    // and each probe join runs exactly once — a lazily-composed
-    // escalation re-derived every round's subtree inside one action and
-    // measured 4-8x slower. Eager jobs at operator-construction time are
-    // this codebase's established pattern (knnJoinGrid's envelope
-    // pre-pass collect, IvfAnn's Lloyd rounds). The per-round persists
-    // join the CacheRegistry only AFTER construction completes — the
-    // sweep listener releases caches referenced by any finishing query,
-    // and the construction-time counts must not trigger it early.
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      pinned += df
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    val dbg = sys.env.contains("SPARK_GRAFT_KNN_DEBUG")
-    var remaining = -1L // unknown before the first round's count
-    val bounds = radii.zipWithIndex.flatMap { case (r, i) =>
-      val last = i == radii.size - 1
-      if (remaining == 0) None
-      else {
-        val t0 = if (dbg) System.nanoTime() else 0L
-        // the ub is PROJECTED to a narrow row before the aggregate: the
-        // typed aggregate's partial (ObjectHashAggregate) falls back to
-        // sort-based beyond the distinct-key threshold, and that sort
-        // touches the full input rows — 3 scalars per row here
-        val coverEst = { val c = 2.0 * r / ring + 1.0; c * c }
-        val cand =
-          if (coverEst >= histRows)
-            unresolved.withColumn("__k1", constKey(col("__qid")))
-              .join(probeAll, "__k1")
-          else unresolved
-            .select(col("__qid"), col("__qax"), col("__qay"), col("__qdiag"),
-              explode(cells(col("__qg"), lit(r))).as("__pcell"))
-            .join(probe, col("__pcell") === col("__ccell"))
-        val stats = pin(cand
-          .select(col("__qid"),
-            (ubDist(col("__qax"), col("__qay"), col("__ccx"), col("__ccy")) +
-              col("__qdiag") + col("__cpad")).as("__ub"),
-            col("__ccnt"))
-          .groupBy(col("__qid"))
-          .agg(st.f("sd_knn_wbound_agg", col("__ub"), col("__ccnt"), lit(k)).as("__b"))
-          .select(col("__qid"), col("__b").getField("rk").as("__dk"),
-            col("__b").getField("cnt").as("__cnt")))
-        if (!last) {
-          unresolved = pin(unresolved.join(
-            stats.filter(col("__cnt") >= k).select(col("__qid")), Seq("__qid"), "left_anti"))
-          remaining = unresolved.count() // also materializes stats
-        } else if (dbg) stats.count()
-        if (dbg) println(f"[knn-bound] round=$i radius=$r%.1f " +
-          f"unresolved_after=$remaining sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-        Some(
-          if (last)
-            stats.select(col("__qid"),
-              when(col("__cnt") >= k, col("__dk")).otherwise(lit(maxR)).as("__radius"))
-          else
-            stats.filter(col("__cnt") >= k).select(col("__qid"), col("__dk").as("__radius")))
-      }
-    }
-    pinned.foreach(graft.CacheRegistry.register(_))
-    graft.CacheRegistry.register(cellStats)
-    bounds.reduce(_ unionByName _)
-  }
-
-  /** Per-cell object histogram for the count-probe escalation: one row
+  /** Per-cell object histogram for the round-1 KNN bound: one row
     * per OCCUPIED canonical cell (the cell of each object's envelope
     * min corner — pure column arithmetic, counted once per object) with
     * the object count, the cell center geometry, and a SOUND distance
     * pad: distance(q, object) <= dist(q, center) + reach(center ->
     * farthest corner) + the cell's max object-envelope diagonal. At most
-    * nx*ny rows — broadcastable by construction (the grid resolution is
+    * nx*ny rows — driver-collectable by construction (the grid resolution is
     * the deployment knob that already bounds it). */
   private def knnCellStats(objects: DataFrame, objectGeom: Column,
       canonCell: Column, centerXY: Column => (Column, Column),
@@ -762,22 +578,22 @@ object SpatialJoins {
     * driver-collected. Same exact two-round scheme as `knnJoinGrid`, with
     * every planar ingredient swapped for its wrap-safe spherical analog:
     *
-    *   - cells: `st_gridcells_sphere` — the lat/lon cover of the
-    *     geometry's SPHERICAL envelope (S2 RectBounder latitude bulges)
-    *     expanded by a geodesic radius in METERS, full-ring/pole-touch
-    *     fallbacks included (the same kernel the sphere dwithin join's
-    *     candidate cover is gate-proven on);
+    *   - cells: `sd_gridcells_sphere4_knncover` — the lat/lon cover of
+    *     the geometry's SPHERICAL envelope (S2 RectBounder latitude
+    *     bulges) expanded by a geodesic radius in METERS, full-ring/
+    *     pole-touch fallbacks included (the cover kernel the sphere
+    *     dwithin join's candidate cover is gate-proven on, two-level);
     *   - distance: `st_distancesphere` (haversine meters);
     *   - the "no candidates" fallback radius: half the circumference
     *     (π·R — the antipodal maximum), the spherical analog of the
     *     planar full-extent diagonal.
     *
-    * Round 1 probes each query's ~one-cell-ring geodesic neighbourhood
-    * and takes its kth candidate distance as a per-query upper bound
-    * (the kth smallest over any subset bounds the true kth from above);
-    * round 2 re-probes the radius-expanded spherical cover and ranks by
-    * (distance, tieBreak, object id) — exact top-k, three shuffles,
-    * nothing broadcast, no O(|q|·|o|) rank. Reference semantics:
+    * Round 1 gives each query the weighted kth smallest great-circle
+    * upper bound over the per-cell histogram ([[graft.functions.CellBoundKd]]
+    * in sphere mode: ub = haversine to the cell center + cell reach + the
+    * cell's max object extent) as its radius; round 2 re-probes the
+    * radius-expanded spherical cover and ranks by (distance, tieBreak,
+    * object id) — exact top-k, no O(|q|·|o|) rank. Reference semantics:
     * rust/sedona-spatial-join/src/index/default_spatial_index.rs:359-430
     * with the spheroid option of option.rs:98. */
   def knnJoinGridSphere(
@@ -787,15 +603,6 @@ object SpatialJoins {
       nx: Int = 90, ny: Int = 45): DataFrame = {
 
     val maxGeo = math.Pi * graft.functions.Spherical.R // antipodal meters
-    // BOUND probes stay on the FINE grid (tight per-query radii — a
-    // coarse-cell bound pads the resolved radius by the coarse reach,
-    // which measured 3x the exact-probe pairs on the sparse workload);
-    // only the FINAL probe's cover enumeration goes hierarchical, via
-    // the MIXED nested cover whose candidate-pair set is provably
-    // identical to all-fine (sd_gridcells_sphere4_knncover notes).
-    def cells(g: Column, expandM: Column): Column =
-      st.f("sd_gridcells_sphere4", st.f("sd_envelopesphere4", g),
-        expandM, lit(nx), lit(ny))
 
     val qCols = query.columns
     val oCols = objects.columns
@@ -827,9 +634,6 @@ object SpatialJoins {
       (if (fxN * fyN > 1) (nx.toLong / fxN) * (ny.toLong / fyN) else 0L)
     val occOn = nBitsL <= Int.MaxValue.toLong && query.sparkSession.conf
       .getOption("spark.graft.knn.occCover").forall(_ == "true")
-    if (sys.env.contains("SPARK_GRAFT_KNN_DEBUG"))
-      println(s"[knn-occ] sphere nBits=$nBitsL occOn=$occOn " +
-        s"(guard=${nBitsL > Int.MaxValue.toLong})")
     val occBitmap: Array[Byte] = if (!occOn) null else {
       val bm = new Array[Byte]((nBitsL.toInt + 7) / 8)
       o.select(col("__ocell")).distinct().collect().foreach { r =>
@@ -838,6 +642,8 @@ object SpatialJoins {
       }
       bm
     }
+    // final-probe cover: the MIXED nested cover, whose candidate-pair set
+    // is provably identical to all-fine (sd_gridcells_sphere4_knncover)
     def cellsMixed(g: Column, expandM: Column): Column =
       if (occOn) st.f("sd_gridcells_sphere4_knncover_occ",
         st.f("sd_envelopesphere4", g),
@@ -845,14 +651,9 @@ object SpatialJoins {
       else st.f("sd_gridcells_sphere4_knncover", st.f("sd_envelopesphere4", g),
         expandM, lit(nx), lit(ny), lit(MaxFineCells))
 
-    // round 1: geometric radius escalation over the per-cell COUNT
-    // histogram -> per-query bound (one-ring geodesic probe first, 4x
-    // per round, globe only as the terminal radius — see
-    // escalateKnnBounds; the former π·R fallback joined every empty-ring
-    // query against the ENTIRE object side, a skew cliff on
-    // sparse/clustered workloads like ocean sensors vs coastal assets)
-    val ringM = math.Pi * graft.functions.Spherical.R / ny + 1e-6
-    val distSphere = (a: Column, b: Column) => st.f("st_distancesphere", a, b)
+    // round 1: per-query kth-bound radius from the per-cell COUNT
+    // histogram via CellBoundKd in sphere mode (see the planar twin); a
+    // sparse query pays for its own bound, never for a full-globe probe
     val cellW = 360.0 / nx
     val cellH = 180.0 / ny
     def clampIdx(v: Column, n: Int): Column =
@@ -886,28 +687,15 @@ object SpatialJoins {
     // deg) gets the antipodal maximum
     val diagCol = when(oe(1) > oe(3) || oe(3) - oe(1) >= 180.0, lit(maxGeo))
       .otherwise(least(rectBound(oe(3) - oe(1), oe(4) - oe(2)), lit(maxGeo)))
-    // per-pair ub = haversine on raw doubles (no WKB in the bound loop)
-    def ubDist(ax: Column, ay: Column, bx: Column, by: Column): Column =
-      st.f("sd_haversine", ax, ay, bx, by)
-    // histogram stays FINE-ONLY (see the planar twin / escalateKnnBounds)
+    // histogram stays FINE-ONLY (see the planar twin)
     val cellStats =
       knnCellStats(objects, objectGeom, canonCell, centerXY, reachOf, diagCol)
     def qe(i: Int) = element_at(st.f("sd_envelopesphere4", col("__qg")), i)
     val qAnchor = (qe(1), qe(2),
       when(qe(1) > qe(3) || qe(3) - qe(1) >= 180.0, lit(maxGeo))
         .otherwise(least(rectBound(qe(3) - qe(1), qe(4) - qe(2)), lit(maxGeo))))
-    // round 1 (see the planar twin): map-side CellBoundKd radius by
-    // default, count-probe escalation as the A/B fallback
-    val useKd = query.sparkSession.conf
-      .getOption("spark.graft.knn.kdBound").forall(_ == "true")
-    val withRadius =
-      if (useKd)
-        q.withColumn("__radius",
-          kdBoundColumn(cellStats, k, maxGeo, sphereMode = true, qAnchor))
-      else
-        q.join(escalateKnnBounds(q, cellStats, k, cells, ubDist, qAnchor,
-            ringM, maxGeo), Seq("__qid"), "left")
-          .withColumn("__radius", coalesce(col("__radius"), lit(maxGeo)))
+    val withRadius = q.withColumn("__radius",
+      cellBoundRadius(cellStats, k, maxGeo, sphereMode = true, qAnchor))
 
     // round 2: exact re-probe of the radius-expanded spherical cover
     // (a query bound of maxGeo can only mean an object side smaller than
@@ -935,7 +723,8 @@ object SpatialJoins {
           o4(1).as("__ox0"), o4(2).as("__oy0"),
           (o4(1) === o4(3) && o4(2) === o4(4)).as("__opt"),
           col("__otb"), col("__oid"))
-        .hint("shuffle_hash"), // probe side is an explode: see escalateKnnBounds
+        // explode probe side: pin shuffle-hash (see the planar twin)
+        .hint("shuffle_hash"),
       col("__pcell") === col("__ocell"))
     val refined = pairs
       .withColumn("__d", when(col("__qpt") && col("__opt"),

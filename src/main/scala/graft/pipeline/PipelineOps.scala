@@ -121,6 +121,14 @@ object PipelineOps {
       .drop("__stratum", "__sid", "__h")
   }
 
+  /** Diagnostic ONLY: LS/SS shuffle rounds executed by the most recent
+    * [[connectedComponents]] call on this JVM (0 = resolved on the
+    * local union-find path). Read by ScaleBench's campaign logging —
+    * a single-bench-at-a-time context. JVM-global by design: concurrent
+    * pipelines racing on it will read each other's round counts, so it
+    * must never feed product logic (results carry no dependence on it). */
+  val lastCcRounds = new java.util.concurrent.atomic.AtomicInteger(-1)
+
   /** Connected components over a near-duplicate pair list — the step a
     * training pipeline runs after MinHash/SimHash pair generation to turn
     * pairwise matches into dedup groups (keep one canonical doc per
@@ -135,18 +143,19 @@ object PipelineOps {
     * the whole graph. An InternalRow RDD lineage barrier keeps the plan
     * O(1) per round. Ids must be non-null (checked on the local path).
     *
+    * Eager: this runs Spark actions while the result plan is being
+    * built — an `edges.count()` that picks the local or distributed path
+    * by size (and warms the persisted edge cache), then, on the
+    * distributed path, a node-inventory count and one materializing
+    * aggregate per star round. The caches the returned plan still reads
+    * register with `CacheRegistry` `afterCurrent`, so these
+    * construction-time actions cannot release them before the caller's
+    * query runs.
+    *
     * @param pairs one row per undirected pair
     * @return (id, group_id) for every id that appears in `pairs`, where
     *   group_id is the minimum id in the component
     */
-  /** Diagnostic ONLY: LS/SS shuffle rounds executed by the most recent
-    * [[connectedComponents]] call on this JVM (0 = resolved on the
-    * local union-find path). Read by ScaleBench's campaign logging —
-    * a single-bench-at-a-time context. JVM-global by design: concurrent
-    * pipelines racing on it will read each other's round counts, so it
-    * must never feed product logic (results carry no dependence on it). */
-  val lastCcRounds = new java.util.concurrent.atomic.AtomicInteger(-1)
-
   def connectedComponents(pairs: DataFrame, aCol: Column, bCol: Column,
       maxIter: Int = 30, localThreshold: Long = 1L << 24): DataFrame = {
     // undirected pairs deduped ONCE in canonical (max, min) orientation —
@@ -167,23 +176,20 @@ object PipelineOps {
     // arrays per partition — 16 B/edge, and the union-find below is all
     // primitive arrays (no per-node boxing), so the 16M-edge default cap
     // peaks at ~800 MB of transient driver footprint — the same order as
-    // collecting a large broadcast side. Tunable via
-    // spark.graft.cc.localLimit: one distributed LS/SS round over a
-    // just-past-the-cap graph (the r15 DBSCAN profile: 11.9M edges vs
-    // the old 4.2M cap) cost 24 s where the collect path is seconds.
+    // collecting a large broadcast side. One distributed LS/SS round
+    // over a just-past-the-cap graph (the r15 DBSCAN profile: 11.9M edges
+    // vs the old 4.2M cap) cost 24 s where the collect path is seconds.
     val sparkS = pairs.sparkSession
     // Default cap derives from driver heap, not a fixed constant (ADVICE
     // r16: drivers sized for the old 4M cap could OOM at a fixed 16M).
     // All-in transient footprint is ~48 B/edge (packed collect + srcs
     // copy + ids + parents); budget 1/8th of maxMemory for it, clamped
-    // to [4M, 16M] edges. spark.graft.cc.localLimit overrides outright.
-    val heapDefault = {
+    // to [4M, 16M] edges; `localThreshold` can only lower it.
+    val heapCap = {
       val budget = Runtime.getRuntime.maxMemory / 8
       math.max(1L << 22, math.min(1L << 24, budget / 48))
     }
-    val probeLimit = math.min(localThreshold,
-      sparkS.conf.getOption("spark.graft.cc.localLimit")
-        .map(_.toLong).getOrElse(heapDefault))
+    val probeLimit = math.min(localThreshold, heapCap)
     if (edges.count() <= probeLimit) {
       val out = localUnionFind(edges)
       edges.unpersist()
@@ -732,7 +738,15 @@ object PipelineOps {
     *   prefix is nearly the whole set, so the inverted join degenerates to
     *   Σ freq² co-occurrence mass (common shingles dominate) and is far
     *   worse than the plain C(block,2) merge; the blocking key carries the
-    *   scale burden here, as it must for any exact low-threshold join. */
+    *   scale burden here, as it must for any exact low-threshold join.
+    *
+    * Eager on the low-threshold plan: it runs a block-count action
+    * (`sizes.count()`) while the result plan is being built, to size the
+    * chunk-pair redistribution to the session width. That action also
+    * warms the persisted shingle cache, which registers with
+    * `CacheRegistry` `afterCurrent` so the count's own completion cannot
+    * release it before the caller's query runs. The `minJaccard >= 0.4`
+    * plan is lazy. */
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column,
       block: Column, k: Int = 3, minJaccard: Double = 0.0,
       maxLocalBlock: Int = 8192): DataFrame = {

@@ -34,10 +34,9 @@ import graft.functions.GeomScalars
   * ST_DWithin / ST_Distance < d joins expand the left envelope by d for
   * cell assignment and dedup, so cross-cell pairs within d still co-locate.
   *
-  * Grid bounds come from `spark.graft.join.grid.bounds` ("xmin,ymin,
-  * xmax,ymax") when set; otherwise a bounds pre-pass (min/max of the two
-  * sides' envelopes — a partial-aggregated single-column scan, the Spark
-  * analog of the reference's bbox sampling, option.rs:110-120) runs once at
+  * Grid bounds come from a bounds pre-pass (min/max of the two sides'
+  * envelopes — a partial-aggregated single-column scan, the Spark analog
+  * of the reference's bbox sampling, option.rs:110-120) that runs once at
   * optimization time. Resolution from `spark.graft.join.grid.nx/ny`
   * (default 64x64; size so a cell holds O(10k) rows at your scale).
   * `spark.graft.join.grid.enabled=false` disables the rewrite (falls back
@@ -300,35 +299,28 @@ case class GridSpatialJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
     }
   }
 
-  /** Grid extent: pinned via conf, else a min/max envelope pre-pass over
-    * both (already filter-pushed, column-pruned) children. */
+  /** Grid extent: a min/max envelope pre-pass over both (already
+    * filter-pushed, column-pruned) children. */
   private def bounds(
       left: LogicalPlan, right: LogicalPlan,
       ex: SpatialPredicate.Extracted): Option[(Double, Double, Double, Double)] = {
-    conf("spark.graft.join.grid.bounds", "auto") match {
-      case "auto" =>
-        def side(plan: LogicalPlan, geom: Expression): Option[(Double, Double, Double, Double)] = {
-          // one envelope aggregate = one WKB parse per row (vs 4 min/max
-          // kernel aggregates), partial-merged map-side
-          val node = Aggregate(Nil, Seq(Alias(
-            graft.functions.StEnvelopeAgg(geom).toAggregateExpression(), "e")()), plan)
-          val rows = session.sessionState.executePlan(node).executedPlan.executeCollect()
-          if (rows.isEmpty || rows(0).isNullAt(0)) None
-          else {
-            val env = graft.geom.GeomIO.read(rows(0).getBinary(0)).getEnvelopeInternal
-            if (env.isNull) None
-            else Some((env.getMinX, env.getMinY, env.getMaxX, env.getMaxY))
-          }
-        }
-        for {
-          (lx0, ly0, lx1, ly1) <- side(left, ex.leftGeom)
-          (rx0, ry0, rx1, ry1) <- side(right, ex.rightGeom)
-        } yield (math.min(lx0, rx0), math.min(ly0, ry0),
-          math.max(lx1, rx1), math.max(ly1, ry1))
-      case s =>
-        val p = s.split(",").map(_.trim.toDouble)
-        require(p.length == 4, s"spark.graft.join.grid.bounds must be xmin,ymin,xmax,ymax, got: $s")
-        Some((p(0), p(1), p(2), p(3)))
+    def side(plan: LogicalPlan, geom: Expression): Option[(Double, Double, Double, Double)] = {
+      // one envelope aggregate = one WKB parse per row (vs 4 min/max
+      // kernel aggregates), partial-merged map-side
+      val node = Aggregate(Nil, Seq(Alias(
+        graft.functions.StEnvelopeAgg(geom).toAggregateExpression(), "e")()), plan)
+      val rows = session.sessionState.executePlan(node).executedPlan.executeCollect()
+      if (rows.isEmpty || rows(0).isNullAt(0)) None
+      else {
+        val env = graft.geom.GeomIO.read(rows(0).getBinary(0)).getEnvelopeInternal
+        if (env.isNull) None
+        else Some((env.getMinX, env.getMinY, env.getMaxX, env.getMaxY))
+      }
     }
+    for {
+      (lx0, ly0, lx1, ly1) <- side(left, ex.leftGeom)
+      (rx0, ry0, rx1, ry1) <- side(right, ex.rightGeom)
+    } yield (math.min(lx0, rx0), math.min(ly0, ry0),
+      math.max(lx1, rx1), math.max(ly1, ry1))
   }
 }

@@ -108,27 +108,29 @@ object RangeJoinShapes {
   * whose "interval" is inverted (lA > lD) keep raw theta-join semantics:
   * the pair is still caught in the cell of the reference point
   * max(lA, rC), which both spans provably cover whenever the two
-  * conjuncts hold. The cell width is `spark.graft.join.band.cellwidth`
-  * when set; otherwise a one-pass max-interval-length pre-pass over both
-  * (already pruned) children picks the smallest width that caps per-row
-  * fanout at 2 cells. The rewritten join has an equi-conjunct on the cell
-  * id, so Catalyst plans a shuffled hash/sort-merge join and AQE handles
-  * sizing and skew — the machinery a dedicated IEJoin/interval-join
-  * operator would otherwise reimplement.
+  * conjuncts hold. The cell width comes from a one-pass max-interval-
+  * length pre-pass over both (already pruned) children: the smallest
+  * width that caps per-row fanout at 2 cells. The rewritten join has an
+  * equi-conjunct on the cell id, so Catalyst plans a shuffled
+  * hash/sort-merge join and AQE handles sizing and skew — the machinery
+  * a dedicated IEJoin/interval-join operator would otherwise
+  * reimplement.
   *
   * `spark.graft.join.band.enabled=false` disables the rewrite. Inner,
   * cross, and left-outer joins (the outer form via a row-id-tagged
   * inner join + anti-join null pad). The rewrite fires unless the
-  * smaller side is under `spark.graft.join.band.minSideBytes` (~1k
-  * rows by default) — a broadcast BNLJ is quadratic in the pair count
-  * even when one side "fits broadcast", so broadcastability alone is
-  * not a reason to skip banding.
+  * smaller side is under 64 KB (~1k rows) — a broadcast BNLJ is
+  * quadratic in the pair count even when one side "fits broadcast", so
+  * broadcastability alone is not a reason to skip banding.
   */
 case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] {
   import RangeJoinShapes._
 
   private def conf(key: String, default: String): String =
     session.conf.getOption(key).getOrElse(default)
+
+  /** Smaller-side cutoff of `worthBanding`, ~1k rows. */
+  private val MinSideBytes = 65536L
 
   /** Band unless the SMALLER side is genuinely tiny. A broadcast BNLJ
     * evaluates the condition for every (left, right) pair — with the
@@ -139,8 +141,7 @@ case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
     * shuffling both sides, so Spark's broadcast plan stands. */
   private def worthBanding(left: LogicalPlan, right: LogicalPlan): Boolean = {
     if (session.sessionState.conf.autoBroadcastJoinThreshold < 0) return true
-    val cutoff = conf("spark.graft.join.band.minSideBytes", "65536").toLong
-    left.stats.sizeInBytes.min(right.stats.sizeInBytes) > cutoff
+    left.stats.sizeInBytes.min(right.stats.sizeInBytes) > MinSideBytes
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
@@ -239,28 +240,21 @@ case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
     * (lo > hi) theta semantics by exploding least..greatest of the
     * endpoint cells, so a strongly inverted row sized against only the
     * positive lengths would fan out |span|/width cells — abs keeps
-    * per-row fanout <= 2 for inverted rows too. Pin
-    * `spark.graft.join.band.cellwidth` to skip the pre-pass. */
-  private def cellWidth(left: LogicalPlan, right: LogicalPlan, b: Band): Long =
-    conf("spark.graft.join.band.cellwidth", "auto") match {
-      case "auto" =>
-        def maxLen(plan: LogicalPlan, lo: Expression, hi: Expression): Long = {
-          val m = Alias(Max(Abs(Subtract(toLong(hi), toLong(lo))))
-            .toAggregateExpression(), "m")()
-          val rows = session.sessionState
-            .executePlan(Aggregate(Nil, Seq(m), plan))
-            .executedPlan.executeCollect()
-          if (rows.isEmpty || rows(0).isNullAt(0)) 0L else rows(0).getLong(0)
-        }
-        math.max(1L, math.max(maxLen(left, b.lLow, b.lHigh),
-          maxLen(right, b.rLow, b.rHigh)))
-      case s => {
-        val w = s.toLong
-        require(w > 0, s"spark.graft.join.band.cellwidth must be positive, got $s")
-        w
-      }
+    * per-row fanout <= 2 for inverted rows too. */
+  private def cellWidth(left: LogicalPlan, right: LogicalPlan, b: Band): Long = {
+    def maxLen(plan: LogicalPlan, lo: Expression, hi: Expression): Long = {
+      val m = Alias(Max(Abs(Subtract(toLong(hi), toLong(lo))))
+        .toAggregateExpression(), "m")()
+      val rows = session.sessionState
+        .executePlan(Aggregate(Nil, Seq(m), plan))
+        .executedPlan.executeCollect()
+      if (rows.isEmpty || rows(0).isNullAt(0)) 0L else rows(0).getLong(0)
     }
+    math.max(1L, math.max(maxLen(left, b.lLow, b.lHigh),
+      maxLen(right, b.rLow, b.rHigh)))
+  }
 }
+
 
 /** Shape matching + long-embedding helpers shared by the as-of family
   * of rules (AsOfAggregateRule, AsOfProbeJoinRule). */

@@ -39,8 +39,8 @@ import graft.functions.GeomScalar
   * `spark.graft.join.sphere.enabled=false` disables;
   * `spark.graft.join.sphere.nx/ny` size the fine grid (default 360x180);
   * the rewrite is skipped when the smaller side is under
-  * `spark.graft.join.sphere.minSideBytes` (a broadcast BNLJ over a tiny
-  * side is cheaper than two grid explodes).
+  * 64 KB (a broadcast BNLJ over a tiny side is cheaper than two grid
+  * explodes).
   */
 case class SphereJoinRule(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -49,10 +49,12 @@ case class SphereJoinRule(session: SparkSession) extends Rule[LogicalPlan] {
   private def conf(key: String, default: String): String =
     session.conf.getOption(key).getOrElse(default)
 
+  /** Smaller-side cutoff of `worthGrid`, ~1k rows. */
+  private val MinSideBytes = 65536L
+
   private def worthGrid(left: LogicalPlan, right: LogicalPlan): Boolean = {
     if (session.sessionState.conf.autoBroadcastJoinThreshold < 0) return true
-    val cutoff = BigInt(
-      conf("spark.graft.join.sphere.minSideBytes", "65536").toLong)
+    val cutoff = BigInt(MinSideBytes)
     val lB = left.stats.sizeInBytes
     val rB = right.stats.sizeInBytes
     // A broadcast BNLJ runs the geodesic refine on EVERY pair, so its

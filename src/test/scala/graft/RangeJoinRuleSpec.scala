@@ -112,7 +112,7 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("banded rewrite fires under broadcast when no side is tiny") {
     // a broadcast BNLJ is quadratic in the pair count even when one side
     // "fits broadcast" — the rule bands unless the SMALLER side's stats
-    // are under spark.graft.join.band.minSideBytes
+    // are under the fixed 64 KB cutoff
     val big1 = events(20000)   // range stats ≈ 160 KB > 64 KB cutoff
     val big2 = windows(12000)
     val joined = big1.join(big2,

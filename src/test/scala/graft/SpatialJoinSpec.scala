@@ -612,7 +612,7 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("sphere grid KNN: occupancy-filtered covers ≡ legacy explode+semi path") {
     import spark.implicits._
     // spherical twin of the planar occ A/B: objects cluster on one
-    // "coast", queries include far-ocean strays (whose escalated covers
+    // "coast", queries include far-ocean strays (whose wide covers
     // cross mostly empty cells) and dateline-adjacent points — the
     // emitted pair set must be IDENTICAL with the occ-filtered cover
     // kernel on (default) and off (legacy broadcast-semi path)
@@ -668,8 +668,8 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("spheroid grid KNN: sparse neighbourhood falls back to the global cover") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    // 3 objects on the whole globe, k=2: round 1 finds < k candidates for
-    // every query, so round 2 must re-probe at the antipodal radius
+    // 3 objects on the whole globe, k=2: every query's round-1 bound
+    // spans most of the globe, so round 2 probes a near-global cover
     val o = Seq((1L, 10.0, 10.0), (2L, -120.0, 45.0), (3L, 100.0, -60.0))
       .toDF("oid", "olon", "olat")
       .select(col("oid"), st.point(col("olon"), col("olat")).as("opt"))
@@ -685,7 +685,7 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sortedRows(grid) == sortedRows(brute))
   }
 
-  test("sd_knn_bound_agg ≡ window oracle: distinct-oid kth distance + count") {
+  test("sd_knn_topk_agg ≡ window oracle: distinct-oid top-k oids and ranks") {
     import org.apache.spark.sql.expressions.Window
     // duplicate oids (same pair via several cover cells), distance ties
     // broken by (tb, oid), many partitions so the partial-merge path runs
@@ -697,26 +697,26 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       .repartition(16)
     rows.cache().count()
     val agg = rows.groupBy("qid")
-      .agg(st.f("sd_knn_bound_agg", col("d"), col("tb"), col("oid"), lit(5)).as("b"))
-      .select(col("qid"), col("b.dk").as("dk"), col("b.cnt").as("cnt"))
+      .agg(st.f("sd_knn_topk_agg", col("d"), col("tb"), col("oid"), lit(5)).as("top"))
+      .select(col("qid"), explode(col("top")).as("t"))
+      .select(col("qid"), col("t.oid").as("oid"), col("t.rank").as("rank"))
     // oracle: per (qid, oid) keep the min (d, tb), rank by (d, tb, oid)
     val wOid = Window.partitionBy("qid", "oid").orderBy(col("d"), col("tb"))
     val w = Window.partitionBy("qid").orderBy(col("d"), col("tb"), col("oid"))
     val oracle = rows.withColumn("rn0", row_number().over(wOid)).filter(col("rn0") === 1)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-      .groupBy("qid").agg(max(col("d")).as("dk"), count(lit(1)).cast("int").as("cnt"))
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
+      .select(col("qid"), col("oid"), col("rank"))
     assert(sortedRows(agg) == sortedRows(oracle))
     rows.unpersist()
   }
 
-  test("spheroid grid KNN: isolated queries escalate geometrically, stay exact") {
+  test("spheroid grid KNN: isolated queries stay exact") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     // sparse/clustered workload: 70% of queries sit inside the object
     // cluster, 30% are isolated (nearest object > 2000 km — mid-ocean
-    // sensors vs coastal assets). The escalation rounds must hand the
-    // isolated tail a 4x/16x-ring bound instead of the whole-globe cover,
-    // and the result must still be the exact geodesic top-k.
+    // sensors vs coastal assets). The isolated tail gets a wide round-1
+    // bound, and the result must still be the exact geodesic top-k.
     val rnd = new java.util.Random(41)
     val o = (0 until 300).map { i => // objects clustered in a ~15° patch
       (i.toLong, -5.0 + rnd.nextDouble() * 15, 40.0 + rnd.nextDouble() * 15)
@@ -737,12 +737,11 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sortedRows(grid) == sortedRows(brute))
   }
 
-  test("KNN whole-histogram probe plans a hash join, never BNLJ/cartesian") {
+  test("sphere grid KNN plans no BNLJ or cartesian product") {
     import spark.implicits._
-    // 3 objects force the whole-histogram probe in round 1 (cover cells
-    // >= histogram rows) — the non-foldable constant join key must keep
-    // it a BroadcastHashJoin; a literal key constant-folds into the
-    // BroadcastNestedLoopJoin the plan audit forbids
+    // 3 objects on the whole globe: every query's bound spans nearly all
+    // cells, and the plan must still hold no BroadcastNestedLoopJoin or
+    // CartesianProduct, which the plan audit forbids
     val o = Seq((1L, 10.0, 10.0), (2L, -120.0, 45.0), (3L, 100.0, -60.0))
       .toDF("oid", "olon", "olat")
       .select(col("oid"), st.point(col("olon"), col("olat")).as("opt"))
@@ -759,7 +758,7 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     // isolated queries just WEST of the dateline; the object cluster sits
-    // ~3500 km EAST of it (across the wrap). The escalated radius pushes
+    // ~3500 km EAST of it (across the wrap). Their wide radius pushes
     // the cover past MaxFineCells, so the final probe runs at the COARSE
     // level — and that coarse cover must wrap lon like the fine one does.
     val rnd = new java.util.Random(7)

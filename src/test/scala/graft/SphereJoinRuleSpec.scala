@@ -201,7 +201,7 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("tiny side declines the rewrite; extra conjuncts survive as remainder") {
-    // 3-row side under minSideBytes with broadcast on: BNLJ is the right
+    // 3-row side under the 64 KB cutoff with broadcast on: BNLJ is the right
     // plan, the rule must not fire
     pts(3, 91, "aid", "ag").createOrReplaceTempView("spht_a")
     pts(200, 93, "bid", "bg").createOrReplaceTempView("spht_b")
