@@ -15,26 +15,33 @@ object PlanAudit {
       flagged: Boolean, error: Option[String])
 
   /** A BNLJ is acceptable exactly when every NON-EQUI logical join in the
-    * query has a small pair product — the same policy the rewrite rules
-    * (SphereJoinRule.worthGrid, the banded-range tiny test) apply, so
-    * gates carry NO conf windows and still can't hide a scale-hostile
-    * fallback: a rule that silently stops firing on large sides pushes
-    * the product past the cutoff and flags here. Cutoff mirrors
-    * worthGrid: 65536² · 4 bytes² (~a couple million pairs at 100 B/row). */
+    * query has a small pair product and no spherical predicate, so gates
+    * carry NO conf windows and still can't hide a scale-hostile fallback:
+    * a rewrite rule that silently stops firing on large sides (the
+    * banded-range tiny test) pushes the product past the cutoff and flags
+    * here. Cutoff: 65536² · 4 bytes² (~a couple million pairs at
+    * 100 B/row). A join condition with an `st_*sphere` call never
+    * justifies a BNLJ: broadcast-sized sphere joins plan the broadcast
+    * index join and all others SphereJoinRule's grid. */
   private def bnljJustified(df: org.apache.spark.sql.DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     val cutoff = BigInt(65536) * 65536 * 4
     val all = df.queryExecution.optimizedPlan.collect { case j: Join => j }
     val nonEqui = all.filter(j => j.condition.isEmpty ||
       !graft.plans.RangeJoinShapes.hasEquiConjunct(j.condition.get, j.left, j.right))
+    def spherical(j: Join): Boolean = j.condition.exists(_.exists {
+      case graft.functions.GeomScalar(name, _, _, _, _) =>
+        name.startsWith("st_") && name.endsWith("sphere")
+      case _ => false
+    })
     // the physical BNLJ came from SOME logical join: judge the non-equi
     // ones when present, otherwise every join (an equi-join shape Catalyst
     // could not hash — e.g. an outer join with a null-intolerant key —
     // still falls back to BNLJ and must not pass vacuously); a BNLJ with
     // no logical join at all (subquery machinery) is never justified
     val suspects = if (nonEqui.nonEmpty) nonEqui else all
-    suspects.nonEmpty &&
-      suspects.forall(j => j.left.stats.sizeInBytes * j.right.stats.sizeInBytes <= cutoff)
+    suspects.nonEmpty && suspects.forall(j => !spherical(j) &&
+      j.left.stats.sizeInBytes * j.right.stats.sizeInBytes <= cutoff)
   }
 
   /** Build (not execute) every gate query's physical plan and classify

@@ -1374,52 +1374,70 @@ object Spherical {
     case _ => 0.0
   }
 
-  /** Lat-lon grid cells covered by `env` expanded by `radiusM` meters of
-    * great-circle distance — the partitioning kernel for the geography
-    * (spherical) join, the analog of the reference's S2-covering join
-    * (rust/sedona-spatial-join-geography). Grid: `nx` cells over lon
-    * [-180,180) x `ny` over lat [-90,90], row-major id = latIdx*nx+lonIdx.
-    *
-    * Longitude expansion uses the exact spherical bound
-    * |sin(dlam/2)| <= sin(r/2R)/cos(phi_max) (from the haversine identity),
-    * so no within-radius pair can land in disjoint cell sets; antimeridian
-    * wrap emits the modulo cells, and a band that reaches a pole covers the
-    * full longitude ring.
-    */
-  /** Compact cell cover: lat rows [cy0, cy1] × a circular lon range of
-    * `lonLen` cells starting at `lonStart` (lonLen == nx ⇒ full ring).
-    * (-1, -1, 0, 0) encodes an empty cover. Shared by gridCells (which
-    * materializes it) and refCell (which intersects two covers
-    * arithmetically — no per-call array/hash allocation, the former
-    * scale-killer for polar caps whose covers held thousands of cells). */
-  private def coverOf(env: org.locationtech.jts.geom.Envelope,
-      radiusM: Double, nx: Int, ny: Int): (Int, Int, Int, Int) = {
-    if (env.isNull) return (-1, -1, 0, 0)
+  /** `env` (a [[latLngBound]]) widened by `radiusM` meters of
+    * great-circle distance: latitudes by r/R, clamped at the poles, and
+    * longitudes by the exact spherical bound
+    * |sin(dlam/2)| <= sin(r/2R)/cos(phi_max) (from the haversine
+    * identity), so no point within the radius of `env` lies outside the
+    * result. A box that reaches a pole, or whose widened longitudes span
+    * the whole circle, is the full longitude ring, returned with
+    * longitudes -inf..inf. The grid cover ([[gridCells]]) and the
+    * broadcast index join's spherical probe both widen through here. */
+  def radiusBound(env: org.locationtech.jts.geom.Envelope,
+      radiusM: Double): org.locationtech.jts.geom.Envelope = {
+    val out = new org.locationtech.jts.geom.Envelope()
+    if (env.isNull) return out
     val dLat = math.toDegrees(radiusM / R)
     val poleTouch = env.getMaxY + dLat >= 90.0 || env.getMinY - dLat <= -90.0
     val lat0 = math.max(-90.0, env.getMinY - dLat)
     val lat1 = math.min(90.0, env.getMaxY + dLat)
-    def latIdx(lat: Double): Int = {
-      val i = ((lat + 90.0) / 180.0 * ny).toInt
-      if (i < 0) 0 else if (i >= ny) ny - 1 else i
-    }
-    val cy0 = latIdx(lat0)
-    val cy1 = latIdx(lat1)
+    if (lat0 > lat1) return out
     val cosMax = math.cos(math.toRadians(math.max(math.abs(lat0), math.abs(lat1))))
     val sinHalf = math.sin(math.min(radiusM / (2 * R), math.Pi / 2))
     val fullRing = poleTouch || sinHalf >= cosMax ||
       { val dLon = math.toDegrees(2 * math.asin(sinHalf / cosMax))
         env.getWidth + 2 * dLon >= 360.0 }
-    if (fullRing) (cy0, cy1, 0, nx)
+    if (fullRing) out.init(Double.NegativeInfinity, Double.PositiveInfinity, lat0, lat1)
     else {
       val dLon = if (radiusM <= 0) 0.0 else math.toDegrees(2 * math.asin(sinHalf / cosMax))
-      val cx0 = math.floor((env.getMinX - dLon + 180.0) / 360.0 * nx).toLong
-      val cx1 = math.floor((env.getMaxX + dLon + 180.0) / 360.0 * nx).toLong
+      out.init(env.getMinX - dLon, env.getMaxX + dLon, lat0, lat1)
+    }
+    out
+  }
+
+  /** Compact cell cover of `env` widened by `radiusM` ([[radiusBound]]):
+    * lat rows [cy0, cy1] × a circular lon range of `lonLen` cells
+    * starting at `lonStart` (lonLen == nx ⇒ full ring; antimeridian wrap
+    * is the modulo range). (-1, -1, 0, 0) encodes an empty cover. Shared
+    * by gridCells (which materializes it) and refCell (which intersects
+    * two covers arithmetically — no per-call array/hash allocation, the
+    * former scale-killer for polar caps whose covers held thousands of
+    * cells). */
+  private def coverOf(env: org.locationtech.jts.geom.Envelope,
+      radiusM: Double, nx: Int, ny: Int): (Int, Int, Int, Int) = {
+    val b = radiusBound(env, radiusM)
+    if (b.isNull) return (-1, -1, 0, 0)
+    def latIdx(lat: Double): Int = {
+      val i = ((lat + 90.0) / 180.0 * ny).toInt
+      if (i < 0) 0 else if (i >= ny) ny - 1 else i
+    }
+    val cy0 = latIdx(b.getMinY)
+    val cy1 = latIdx(b.getMaxY)
+    if (b.getWidth.isInfinite) (cy0, cy1, 0, nx)
+    else {
+      val cx0 = math.floor((b.getMinX + 180.0) / 360.0 * nx).toLong
+      val cx1 = math.floor((b.getMaxX + 180.0) / 360.0 * nx).toLong
       val len = math.min(nx.toLong, cx1 - cx0 + 1).toInt
       ((cy0, cy1, (((cx0 % nx) + nx) % nx).toInt, len))
     }
   }
 
+  /** Lat-lon grid cells covered by `env` expanded by `radiusM` meters of
+    * great-circle distance — the partitioning kernel for the geography
+    * (spherical) grid join, the analog of the reference's S2-covering
+    * join (rust/sedona-spatial-join-geography). Grid: `nx` cells over lon
+    * [-180,180) x `ny` over lat [-90,90], row-major id = latIdx*nx+lonIdx.
+    */
   def gridCells(env: org.locationtech.jts.geom.Envelope,
       radiusM: Double, nx: Int, ny: Int): Array[Long] = {
     val (cy0, cy1, lonStart, lonLen) = coverOf(env, radiusM, nx, ny)

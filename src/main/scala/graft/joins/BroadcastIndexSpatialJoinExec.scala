@@ -1,6 +1,5 @@
 package graft.joins
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
@@ -10,13 +9,15 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.locationtech.jts.geom.{Envelope, Geometry}
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
-import org.locationtech.jts.index.strtree.STRtree
+import org.locationtech.jts.index.ItemVisitor
+import org.locationtech.jts.index.hprtree.HPRtree
+import graft.functions.Spherical
 import graft.geom.GeomIO
 
-/** Broadcast index spatial join: build side is broadcast, an STRtree over
-  * its geometries is built once per executor (soft-cached by broadcast id),
-  * and each streamed row probes the tree and refines candidates with a
-  * prepared geometry.
+/** Broadcast index spatial join: build side is broadcast, a Hilbert-packed
+  * R-tree (JTS HPRtree) over its geometries is built once per executor
+  * and broadcast value, and each streamed row probes the tree and refines
+  * candidates with a prepared geometry.
   *
   * This is the Spark-native analog of the reference's build/probe/refine
   * SpatialJoinExec (rust/sedona-spatial-join/src/exec.rs:80-88) with its
@@ -24,6 +25,14 @@ import graft.geom.GeomIO
   * geometry refinement (refine/exec_mode_selector.rs). Broadcast replaces
   * the OnceAsync build-side collection; at cluster scale the build side
   * ships once per executor, the probe side never moves — zero shuffle.
+  *
+  * Spherical mode (a `_sphere` predicate, `SpatialPredicate.extractSphere`)
+  * is the reference's geography join on the same operator
+  * (rust/sedona/src/context.rs:163-172): the tree holds each build row's
+  * spherical bound (`Spherical.latLngBound`), the probe is the stream
+  * row's bound widened by the radius (`Spherical.radiusBound`), matched
+  * across the antimeridian at longitude shifts 0/±360, and candidates
+  * refine with the kernels of the SQL sphere functions.
   *
   * Join types (reference SpatialJoinExec covers the same set,
   * test_sjoin.py): Inner/Cross either orientation; LeftOuter, LeftSemi,
@@ -39,7 +48,8 @@ case class BroadcastIndexSpatialJoinExec(
     streamGeom: Expression,
     /** predicate oriented as pred(streamG, buildG) */
     predName: String,
-    distance: Option[Expression], // bound to stream side; st_dwithin only
+    /** bound to stream side; st_dwithin, or st_dwithinsphere's radius */
+    distance: Option[Expression],
     buildIsLeft: Boolean,
     joinType: JoinType,
     extraCondition: Option[Expression])
@@ -75,6 +85,7 @@ case class BroadcastIndexSpatialJoinExec(
     "candidatePairs" -> SQLMetrics.createMetric(sparkContext, "index candidate pairs"))
 
   protected override def doExecute(): RDD[InternalRow] = {
+    import BroadcastIndexSpatialJoinExec._
     val numOutputRows = longMetric("numOutputRows")
     val candidatePairs = longMetric("candidatePairs")
     val broadcastRows = buildPlan.executeBroadcast[Array[InternalRow]]()
@@ -86,13 +97,17 @@ case class BroadcastIndexSpatialJoinExec(
     val pairAttrs = left.output ++ right.output
     val boundExtra = extraCondition.map(BindReferences.bindReference(_, pairAttrs))
     val pred = predName
+    val spherical = SpatialPredicate.sphereRelationPreds(pred) || pred == "st_dwithinsphere"
     val bIsLeft = buildIsLeft
     val jt = joinType
     val buildWidth = buildPlan.output.size
-    val appId = sparkContext.applicationId
+    val outTypes = output.map(_.dataType).toArray
 
     streamPlan.execute().mapPartitions { streamIter =>
-      val tree = BroadcastIndexSpatialJoinExec.treeFor(appId, broadcastRows, boundBuildGeom)
+      // rows leave as UnsafeRows, like every Spark join's: a collect or
+      // shuffle directly above reads them as such
+      val toUnsafe = UnsafeProjection.create(outTypes)
+      val index = indexFor(broadcastRows.value, boundBuildGeom, spherical)
       val joined = new JoinedRow()
       val nullBuild = new GenericInternalRow(buildWidth)
       val existsTrue = new GenericInternalRow(Array[Any](true))
@@ -103,14 +118,19 @@ case class BroadcastIndexSpatialJoinExec(
           if (gBytes == null) Iterator.empty
           else {
             val sg = GeomIO.read(gBytes.asInstanceOf[Array[Byte]])
-            val env = new Envelope(sg.getEnvelopeInternal)
             val dist = boundDistance.map(_.eval(streamRow) match {
               // SQL `st_dwithin(a, b, 2.0)` carries a DECIMAL literal
               case d: org.apache.spark.sql.types.Decimal => d.toDouble
               case n: Number => n.doubleValue()
             })
-            dist.foreach(d => env.expandBy(d))
-            val candidates = tree.query(env)
+            val candidates =
+              if (spherical) index.querySphere(
+                Spherical.radiusBound(Spherical.latLngBound(sg), dist.getOrElse(0.0)))
+              else {
+                val env = new Envelope(sg.getEnvelopeInternal)
+                dist.foreach(d => env.expandBy(d))
+                index.query(env)
+              }
             if (candidates.isEmpty) Iterator.empty
             else {
               val nCand = candidates.size()
@@ -120,24 +140,23 @@ case class BroadcastIndexSpatialJoinExec(
               // edge index costs more than one or two plain relate ops, so
               // only prepare when enough index hits will amortize it.
               val prepared: PreparedGeometry =
-                if (dist.isEmpty && nCand >= BroadcastIndexSpatialJoinExec.prepareThreshold)
+                if (!spherical && dist.isEmpty && nCand >= prepareThreshold)
                   PreparedGeometryFactory.prepare(sg)
                 else null
               val it = candidates.iterator()
-              new Iterator[(Geometry, InternalRow)] {
+              new Iterator[BuildRow] {
                 override def hasNext: Boolean = it.hasNext
-                override def next(): (Geometry, InternalRow) =
-                  it.next().asInstanceOf[(Geometry, InternalRow)]
-              }.filter { case (bg, _) =>
-                dist match {
-                  case Some(d) => sg.isWithinDistance(bg, d)
+                override def next(): BuildRow = it.next().asInstanceOf[BuildRow]
+              }.filter { b =>
+                if (spherical) refineSphere(sg, pred, b.geom, dist.getOrElse(0.0))
+                else dist match {
+                  case Some(d) => sg.isWithinDistance(b.geom, d)
                   case None =>
-                    if (prepared != null)
-                      BroadcastIndexSpatialJoinExec.refine(prepared, pred, bg)
-                    else BroadcastIndexSpatialJoinExec.refineDirect(sg, pred, bg)
+                    if (prepared != null) refine(prepared, pred, b.geom)
+                    else refineDirect(sg, pred, b.geom)
                 }
-              }.map { case (_, buildRow) =>
-                if (bIsLeft) joined(buildRow, streamRow) else joined(streamRow, buildRow)
+              }.map { b =>
+                if (bIsLeft) joined(b.row, streamRow) else joined(streamRow, b.row)
               }
             }
           }
@@ -175,7 +194,7 @@ case class BroadcastIndexSpatialJoinExec(
               if (filtered.hasNext) existsTrue else existsFalse))
           case t => throw new IllegalStateException(s"unsupported spatial join type $t")
         }
-      }
+      }.map(toUnsafe)
     }
   }
 
@@ -186,37 +205,100 @@ case class BroadcastIndexSpatialJoinExec(
 }
 
 object BroadcastIndexSpatialJoinExec {
-  /** Executor-local soft cache: one STRtree per broadcast build side, not
-    * one per task (the reference builds its index once per join via
-    * OnceAsync, exec.rs:44-46). Keyed by (applicationId, broadcast id):
-    * broadcast ids restart at 0 with every new SparkContext, and a local
-    * JVM can host several contexts over its lifetime — a bare-id key
-    * serves stale trees across contexts. */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.ref.SoftReference[STRtree]]()
 
-  def treeFor(appId: String, b: Broadcast[Array[InternalRow]],
-      geomExpr: Expression): STRtree = {
-    val key = (appId, b.id)
-    val ref = cache.get(key)
-    val cached = if (ref != null) ref.get() else null
-    if (cached != null) return cached
-    synchronized {
-      val again = cache.get(key)
-      val c2 = if (again != null) again.get() else null
-      if (c2 != null) return c2
-      val tree = new STRtree()
-      b.value.foreach { row =>
-        val bytes = geomExpr.eval(row)
-        if (bytes != null) {
-          val g = GeomIO.read(bytes.asInstanceOf[Array[Byte]])
-          if (!g.isEmpty) tree.insert(g.getEnvelopeInternal, (g, row))
+  /** A build-side row with its parsed geometry: the index's item. */
+  final class BuildRow(val geom: Geometry, val row: InternalRow)
+
+  /** The index over one broadcast build side: an HPRtree of the rows'
+    * envelopes — planar, or in spherical mode their spherical bounds.
+    * Spherical rows whose bound spans ≥ 180° of longitude (polar caps,
+    * rings across the antimeridian) are the full ring: they stay out of
+    * the tree, in `fullRing`, and match every probe they overlap in
+    * latitude. */
+  final class BuildIndex(tree: HPRtree, fullRing: Array[(Envelope, BuildRow)]) {
+
+    def query(env: Envelope): java.util.List[AnyRef] =
+      tree.query(env).asInstanceOf[java.util.List[AnyRef]]
+
+    /** Build rows whose spherical bound meets the probe bound `q` (a
+      * `Spherical.radiusBound`) — `sphereRelationJoin`'s lonOverlap
+      * rules: a probe ≥ 180° wide is the full ring, a narrower one is
+      * matched at longitude shifts 0 and ±360. Each row is returned once:
+      * a tree bound and a probe both under 180° wide can meet at most one
+      * of the shifts, which lie 360° apart. */
+    def querySphere(q: Envelope): java.util.List[AnyRef] = {
+      val out = new java.util.ArrayList[AnyRef]()
+      if (q.isNull) return out
+      val visitor = new ItemVisitor { def visitItem(item: AnyRef): Unit = out.add(item) }
+      if (q.getWidth >= 180.0)
+        tree.query(new Envelope(Double.NegativeInfinity, Double.PositiveInfinity,
+          q.getMinY, q.getMaxY), visitor)
+      else for (shift <- Shifts)
+        tree.query(new Envelope(q.getMinX + shift, q.getMaxX + shift,
+          q.getMinY, q.getMaxY), visitor)
+      for ((env, b) <- fullRing)
+        if (env.getMinY <= q.getMaxY && q.getMinY <= env.getMaxY) out.add(b)
+      out
+    }
+  }
+
+  private val Shifts = Array(0.0, 360.0, -360.0)
+
+  private def buildIndex(rows: Array[InternalRow], geomExpr: Expression,
+      spherical: Boolean): BuildIndex = {
+    val tree = new HPRtree()
+    val fullRing = Array.newBuilder[(Envelope, BuildRow)]
+    rows.foreach { row =>
+      val bytes = geomExpr.eval(row)
+      if (bytes != null) {
+        val g = GeomIO.read(bytes.asInstanceOf[Array[Byte]])
+        if (!g.isEmpty) {
+          val b = new BuildRow(g, row)
+          if (!spherical) tree.insert(g.getEnvelopeInternal, b)
+          else {
+            val env = Spherical.latLngBound(g)
+            if (env.getWidth >= 180.0) fullRing += ((env, b)) else tree.insert(env, b)
+          }
         }
       }
-      tree.build()
-      cache.put(key, new java.lang.ref.SoftReference[STRtree](tree))
-      tree
     }
+    tree.build()
+    new BuildIndex(tree, fullRing.result())
+  }
+
+  /** Executor-local indexes: one per broadcast build side (and geometry
+    * expression and mode), not one per task — the reference builds its
+    * index once per join via OnceAsync (exec.rs:44-46). Keyed weakly by
+    * the broadcast VALUE, and each index held weakly: it lives while the
+    * tasks of its join probe it, which hold the broadcast too, and the
+    * first GC after the join drops it — even before Spark removes the
+    * broadcast. The build runs under its broadcast's own lock, so the
+    * tasks of one join wait for its single build while unrelated joins
+    * proceed. */
+  private val indexes = new java.util.WeakHashMap[AnyRef,
+    java.util.HashMap[(Expression, Boolean), java.lang.ref.WeakReference[BuildIndex]]]()
+
+  def indexFor(rows: Array[InternalRow], geomExpr: Expression,
+      spherical: Boolean): BuildIndex = {
+    val perBroadcast = indexes.synchronized {
+      indexes.computeIfAbsent(rows, _ => new java.util.HashMap())
+    }
+    perBroadcast.synchronized {
+      val key = (geomExpr, spherical)
+      val cached = perBroadcast.get(key)
+      Option(if (cached == null) null else cached.get).getOrElse {
+        val index = buildIndex(rows, geomExpr, spherical)
+        perBroadcast.put(key, new java.lang.ref.WeakReference(index))
+        index
+      }
+    }
+  }
+
+  /** Indexes currently alive in this JVM. */
+  private[graft] def cachedIndexes: Int = indexes.synchronized {
+    var n = 0
+    indexes.values.forEach(m => m.synchronized(m.values.forEach(r => if (r.get != null) n += 1)))
+    n
   }
 
   /** Candidate count at which preparing the stream geometry pays for
@@ -249,4 +331,24 @@ object BroadcastIndexSpatialJoinExec {
     case "st_overlaps" => prepared.overlaps(bg)
     case "st_equals" => prepared.getGeometry.equalsTopo(bg)
   }
+
+  /** pred(streamG, buildG) for the spherical predicates, by the kernels of
+    * the SQL functions of the same names — the last conjunct of the grid
+    * path. `radiusM` is st_dwithinsphere's radius. */
+  def refineSphere(sg: Geometry, pred: String, bg: Geometry, radiusM: Double): Boolean =
+    pred match {
+      case "st_dwithinsphere" => Spherical.distance(sg, bg) match {
+        case d: Double => d <= radiusM
+        case _ => false
+      }
+      case "st_intersectssphere" => Spherical.distance(sg, bg) match {
+        case d: Double => d == 0.0
+        case _ => false
+      }
+      case "st_containssphere" => Spherical.containsGeom(sg, bg)
+      case "st_withinsphere" => Spherical.containsGeom(bg, sg)
+      case "st_coverssphere" => Spherical.coversGeom(sg, bg)
+      case "st_coveredbysphere" => Spherical.coversGeom(bg, sg)
+      case "st_equalssphere" => Spherical.equalsGeom(sg, bg)
+    }
 }

@@ -1,10 +1,11 @@
 package graft.joins
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.internal.SQLConf
+import graft.plans.{RangeJoinShapes, SphereJoinRule}
 
 /** Plans joins whose condition carries a spatial predicate into
   * BroadcastIndexSpatialJoinExec. Mirrors the reference's
@@ -15,30 +16,25 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   * Filter-over-cross-join into the join condition (the reference needed
   * MergeSpatialFilterIntoJoin for this, optimizer.rs:313-339).
   *
-  * Build-side choice by plan statistics (reference spatial_join_reordering,
-  * option.rs:105-108). Joins with an equi-conjunct are left to Spark's
-  * hash joins, matching the reference (optimizer.rs:253-257): a hash join
-  * on the equi key beats an index join that ignores it.
+  * Both predicate families plan here: planar (`SpatialPredicate.extract`)
+  * and, unless `spark.graft.join.sphere.enabled=false`, spherical
+  * (`SpatialPredicate.extractSphere`: st_dwithinsphere, st_distancesphere
+  * < / <= d and the sphere relations) — the reference runs geography
+  * joins through the same build/probe/refine operator
+  * (rust/sedona/src/context.rs:163-172).
   *
-  * Falls back (Nil) when no side fits the broadcast threshold — Spark plans
-  * BNLJ; for large-large use graft.operators.SpatialJoins.gridJoin, the
-  * shuffle-partitioned path.
+  * Build-side choice by plan statistics ([[SpatialJoinStrategy.buildSide]],
+  * the reference's spatial_join_reordering, option.rs:105-108). Joins with
+  * an equi-conjunct are left to Spark's hash joins, matching the reference
+  * (optimizer.rs:253-257): a hash join on the equi key beats an index join
+  * that ignores it.
+  *
+  * Falls back (Nil) when no side can be the build. A large-large join
+  * reaches here only when its rewrite rule declined: GridSpatialJoinRule
+  * (planar) and SphereJoinRule (spherical) rewrite exactly those joins
+  * onto their shuffle-partitioned grids.
   */
 case class SpatialJoinStrategy(spark: SparkSession) extends SparkStrategy {
-
-  private def hasEquiConjunct(cond: Expression, left: LogicalPlan, right: LogicalPlan): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.{EqualTo, And}
-    def split(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => split(l) ++ split(r)
-      case other => Seq(other)
-    }
-    split(cond).exists {
-      case EqualTo(a, b) =>
-        (a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet)) ||
-          (a.references.subsetOf(right.outputSet) && b.references.subsetOf(left.outputSet))
-      case _ => false
-    }
-  }
 
   /** Broadcast-indexed KNN exec. Large object sides never reach here —
     * KnnGridJoinRule rewrites them at logical-optimization time (a
@@ -79,51 +75,62 @@ case class SpatialJoinStrategy(spark: SparkSession) extends SparkStrategy {
           case Inner | Cross | LeftOuter | RightOuter |
                LeftSemi | LeftAnti | _: ExistenceJoin => true
           case _ => false
-        }) && !hasEquiConjunct(cond, left, right) =>
-      SpatialPredicate.extract(cond, left, right) match {
-        case Some(ex) =>
-          val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-          val leftSize = left.stats.sizeInBytes
-          val rightSize = right.stats.sizeInBytes
-          // the preserved side must stream: it can never be the
-          // broadcast build (a broadcast of the preserved side would
-          // need cross-partition match bookkeeping to pad/emit/suppress)
-          val leftPreserved = joinType match {
-            case LeftOuter | LeftSemi | LeftAnti | _: ExistenceJoin => true
-            case _ => false
-          }
-          val rightPreserved = joinType == RightOuter
-          val canBroadcastLeft = leftSize >= 0 && leftSize <= threshold && !leftPreserved
-          val canBroadcastRight = rightSize >= 0 && rightSize <= threshold && !rightPreserved
-          // prefer the smaller broadcastable side as build
-          val buildLeft =
-            if (canBroadcastLeft && canBroadcastRight) leftSize <= rightSize
-            else canBroadcastLeft
-          if (!canBroadcastLeft && !canBroadcastRight) Nil
-          else {
-            // distance must be evaluable on the stream side
-            val streamSide = if (buildLeft) right else left
-            val distOk = ex.distance.forall(_.references.subsetOf(streamSide.outputSet))
-            if (!distOk) Nil
-            else {
-              // orient predicate as pred(streamG, buildG)
-              val (streamGeom, buildGeom, streamPred) =
-                if (buildLeft) (ex.rightGeom, ex.leftGeom, SpatialPredicate.invert(ex.predName))
-                else (ex.leftGeom, ex.rightGeom, ex.predName)
-              BroadcastIndexSpatialJoinExec(
-                buildPlan = planLater(if (buildLeft) left else right),
-                streamPlan = planLater(streamSide),
-                buildGeom = buildGeom,
-                streamGeom = streamGeom,
-                predName = streamPred,
-                distance = ex.distance,
-                buildIsLeft = buildLeft,
-                joinType = joinType,
-                extraCondition = ex.remainder) :: Nil
-            }
-          }
-        case None => Nil
-      }
+        }) && !RangeJoinShapes.hasEquiConjunct(cond, left, right) =>
+      val extracted = SpatialPredicate.extract(cond, left, right).orElse(
+        if (SphereJoinRule.enabled(spark)) SpatialPredicate.extractSphere(cond, left, right)
+        else None)
+      (for {
+        ex <- extracted
+        buildLeft <- SpatialJoinStrategy.buildSide(
+          spark.sessionState.conf, joinType, left, right)
+        streamSide = if (buildLeft) right else left
+        // distance must be evaluable on the stream side
+        if ex.distance.forall(_.references.subsetOf(streamSide.outputSet))
+      } yield {
+        // orient predicate as pred(streamG, buildG)
+        val (streamGeom, buildGeom, streamPred) =
+          if (buildLeft) (ex.rightGeom, ex.leftGeom, SpatialPredicate.invert(ex.predName))
+          else (ex.leftGeom, ex.rightGeom, ex.predName)
+        BroadcastIndexSpatialJoinExec(
+          buildPlan = planLater(if (buildLeft) left else right),
+          streamPlan = planLater(streamSide),
+          buildGeom = buildGeom,
+          streamGeom = streamGeom,
+          predName = streamPred,
+          distance = ex.distance,
+          buildIsLeft = buildLeft,
+          joinType = joinType,
+          extraCondition = ex.remainder)
+      }).toList
     case _ => Nil
+  }
+}
+
+object SpatialJoinStrategy {
+
+  /** The side the broadcast index join builds (`Some(true)`: left), or
+    * None when it cannot take the join. A side can build when it fits
+    * `spark.sql.autoBroadcastJoinThreshold` (so never with broadcast
+    * disabled) and is not preserved by the join type: the preserved side
+    * always streams, since broadcasting it would need cross-partition
+    * match bookkeeping to pad/emit/suppress. Of two such sides the
+    * smaller builds. SphereJoinRule rewrites a sphere join onto its grid
+    * exactly when this is None, so the two never disagree. */
+  def buildSide(conf: SQLConf, joinType: JoinType,
+      left: LogicalPlan, right: LogicalPlan): Option[Boolean] = {
+    val threshold = conf.autoBroadcastJoinThreshold
+    val leftSize = left.stats.sizeInBytes
+    val rightSize = right.stats.sizeInBytes
+    val leftPreserved = joinType match {
+      case LeftOuter | LeftSemi | LeftAnti | _: ExistenceJoin | FullOuter => true
+      case _ => false
+    }
+    val rightPreserved = joinType == RightOuter || joinType == FullOuter
+    val canBroadcastLeft = leftSize >= 0 && leftSize <= threshold && !leftPreserved
+    val canBroadcastRight = rightSize >= 0 && rightSize <= threshold && !rightPreserved
+    if (canBroadcastLeft && canBroadcastRight) Some(leftSize <= rightSize)
+    else if (canBroadcastLeft) Some(true)
+    else if (canBroadcastRight) Some(false)
+    else None
   }
 }

@@ -267,8 +267,8 @@ object SpatialJoins {
     * overlap (intersects / contains / within / covers / coveredby /
     * equals — NOT disjoint) is admitted by the same radius-0 grid
     * candidate generation, so the predicate only changes the last
-    * conjunct. The SQL planner path (`SphereJoinRule`) routes all
-    * recognized spherical relation predicates through here. */
+    * conjunct. The SQL planner's large-large path (`SphereJoinRule`)
+    * routes all recognized spherical relation predicates through here. */
   def sphereRelationJoin(
       left: DataFrame, right: DataFrame,
       leftGeom: Column, rightGeom: Column,

@@ -262,10 +262,11 @@ object JoinQueries {
         .select(col("p_partkey"), col("o_orderkey"))
     }),
 
-    // SQL planner surface for geography joins (SphereJoinRule): the SQL
-    // forms of sj08's dwithin and sj13's intersects shapes. Without the
-    // rule both joins have no equi-conjunct and plan a quadratic BNLJ;
-    // with it they route through the two-level-grid spherical joins.
+    // SQL planner surface for geography joins (sj14): the SQL forms of
+    // sj08's dwithin and sj13's intersects shapes. Neither join has an
+    // equi-conjunct; a broadcast-sized side plans the broadcast index
+    // join's spherical mode, and large-large sides SphereJoinRule's
+    // two-level-grid spherical joins, never a quadratic BNLJ.
     // distributed DBSCAN: eps-neighbor graph from the grid join, core
     // points from one degree agg, clusters from connected components of
     // the core-core subgraph, borders to the min neighboring cluster —
@@ -312,11 +313,10 @@ object JoinQueries {
         .withColumn("pt", st.point(col("plon"), col("plat")))
         .select(col("o_orderkey").cast("long").as("o_orderkey"), col("pt"))
         .createOrReplaceTempView("sj14_p")
-      // NO conf window: the rule's pair-product test (worthGrid) engages
-      // the grid at DEFAULT confs for driver-scale inputs, and at tiny
-      // audit scale a broadcast BNLJ is the genuinely optimal plan — a
-      // set/force/restore window here would diverge from what a later
-      // .count() replans (the round-10 postmortem hazard)
+      // NO conf window: the broadcast threshold picks the index join or
+      // the grid at DEFAULT confs — a set/force/restore window here would
+      // diverge from what a later .count() replans (the round-10
+      // postmortem hazard)
       s.sql("""
         SELECT c_custkey AS ka, s_suppkey AS kb, 'dwithin' AS tag
         FROM sj14_c JOIN sj14_s ON st_dwithinsphere(cpt, spt, 250000.0D)

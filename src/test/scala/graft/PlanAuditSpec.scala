@@ -52,19 +52,16 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(grid.contains("BroadcastIndexSpatialJoin") ||
       grid.contains("SortMergeJoin") || grid.contains("ShuffledHashJoin") ||
       grid.contains("BroadcastHashJoin"), "sj07 lost its spatial join operator")
-    // sj14/sj15: the gates carry NO conf windows, so at audit scale the
-    // sphere sides (150 × 10 rows) plan the genuinely-optimal tiny-side
-    // broadcast BNLJ, which the blanket audit admits ONLY via the
-    // pair-product justification (PlanAudit.bnljJustified — the same
-    // worthGrid policy the rule applies). The grid rewrite firing at
-    // DEFAULT confs on large pair products is pinned in
-    // SphereJoinRuleSpec ("one small side does NOT excuse a BNLJ…"), and
-    // the blanket test above flags either gate the moment its product
-    // outgrows the cutoff without the rule firing.
-    assert(!entries("sj14_sphere_sql_join").flagged,
-      "sj14 BNLJ must stay pair-product-justified at audit scale")
-    assert(!entries("sj15_sphere_sql_semi_anti").flagged,
-      "sj15 BNLJ must stay pair-product-justified at audit scale")
+    // sj14/sj15: the gates carry NO conf windows, and at audit scale their
+    // sphere sides fit the broadcast threshold, so every sphere join plans
+    // the broadcast index join's spherical mode — never a BNLJ (which
+    // PlanAudit.bnljJustified no longer admits for sphere predicates).
+    // The large-large grid rewrite is pinned in SphereJoinRuleSpec.
+    for (g <- Seq("sj14_sphere_sql_join", "sj15_sphere_sql_semi_anti")) {
+      val p = entries(g).plan
+      assert(!entries(g).flagged && p.contains("BroadcastIndexSpatialJoin") &&
+        !p.contains("BroadcastNestedLoopJoin"), s"$g must plan BroadcastIndexSpatialJoin")
+    }
   }
 
   test("analyzer KNN barrier survives constant folding of the query side") {
@@ -224,11 +221,12 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // reduced to a left-semi guard (no |d|x|keys| product anywhere)
     val q27 = entries("q27_asof_date").plan
     assert(q27.contains("ExistingRDD"), "q27 probe-side sweep missing")
-    // sj14: conf-window-free — justified tiny-side BNLJ at audit scale;
-    // the grid rewrite firing at default confs on large pair products is
-    // pinned in SphereJoinRuleSpec
-    assert(!entries("sj14_sphere_sql_join").flagged,
-      "sj14 BNLJ must stay pair-product-justified at audit scale")
+    // sj14: conf-window-free — plans the broadcast index join at audit
+    // scale; the grid rewrite for large-large sides is pinned in
+    // SphereJoinRuleSpec
+    assert(!entries("sj14_sphere_sql_join").flagged &&
+      entries("sj14_sphere_sql_join").plan.contains("BroadcastIndexSpatialJoin"),
+      "sj14 must plan BroadcastIndexSpatialJoin")
     // gs01: dbscan's persisted intermediates re-enter as RDD leaves
     // (the anti-exponential-plan barrier) — joins run over those scans
     val gs = entries("gs01_dbscan").plan

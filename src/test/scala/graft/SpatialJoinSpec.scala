@@ -52,6 +52,28 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(physical.contains("BroadcastIndexSpatialJoin"), physical.take(2000))
   }
 
+  test("index join trees live only as long as their broadcasts") {
+    // 8 distinct build sides (distinct seeds), each joined once and dropped
+    (1 to 8).foreach { i =>
+      val j = points(200, 10 + i).join(boxes(50, 20 + i),
+        st.intersects(col("pgeom"), col("bgeom")))
+      assert(j.queryExecution.executedPlan.toString.contains("BroadcastIndexSpatialJoin"))
+      assert(j.collect().nonEmpty)
+    }
+    // the executor-local trees are weakly keyed by the broadcast values:
+    // once the queries are gone, GC drops them (bounded retry — the
+    // context cleaner removes broadcasts asynchronously)
+    var cached = joins.BroadcastIndexSpatialJoinExec.cachedIndexes
+    var tries = 0
+    while (cached > 1 && tries < 40) {
+      System.gc()
+      Thread.sleep(250)
+      cached = joins.BroadcastIndexSpatialJoinExec.cachedIndexes
+      tries += 1
+    }
+    assert(cached <= 1, s"$cached index trees still cached after $tries GCs")
+  }
+
   // raster side: small deterministic rasters over the same 0..100 plane
   private def rasters(n: Int, seed: Int): DataFrame =
     spark.range(n).select(col("id").as("rid"),
