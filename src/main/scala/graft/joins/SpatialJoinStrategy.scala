@@ -1,6 +1,7 @@
 package graft.joins
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
@@ -29,10 +30,13 @@ import graft.plans.{RangeJoinShapes, SphereJoinRule}
   * (optimizer.rs:253-257): a hash join on the equi key beats an index join
   * that ignores it.
   *
-  * Falls back (Nil) when no side can be the build. A large-large join
-  * reaches here only when its rewrite rule declined: GridSpatialJoinRule
+  * Falls back (Nil) when no side can be the build. GridSpatialJoinRule
   * (planar) and SphereJoinRule (spherical) rewrite exactly those joins
-  * onto their shuffle-partitioned grids.
+  * of type INNER / CROSS, LEFT OUTER / SEMI / ANTI and FULL OUTER onto
+  * their shuffle-partitioned grids, so a spatial join reaches here
+  * without a build side only when it is a RIGHT OUTER or existence join,
+  * is streaming, has a distance its rule cannot bind to the left side,
+  * or its rule is switched off.
   */
 case class SpatialJoinStrategy(spark: SparkSession) extends SparkStrategy {
 
@@ -70,43 +74,51 @@ case class SpatialJoinStrategy(spark: SparkSession) extends SparkStrategy {
           objectIsLeft = true, spheroid = sph))
       else Nil
 
-    case Join(left, right, joinType, Some(cond), _)
-        if (joinType match {
-          case Inner | Cross | LeftOuter | RightOuter |
-               LeftSemi | LeftAnti | _: ExistenceJoin => true
-          case _ => false
-        }) && !RangeJoinShapes.hasEquiConjunct(cond, left, right) =>
-      val extracted = SpatialPredicate.extract(cond, left, right).orElse(
-        if (SphereJoinRule.enabled(spark)) SpatialPredicate.extractSphere(cond, left, right)
-        else None)
-      (for {
-        ex <- extracted
-        buildLeft <- SpatialJoinStrategy.buildSide(
-          spark.sessionState.conf, joinType, left, right)
-        streamSide = if (buildLeft) right else left
-        // distance must be evaluable on the stream side
-        if ex.distance.forall(_.references.subsetOf(streamSide.outputSet))
-      } yield {
-        // orient predicate as pred(streamG, buildG)
-        val (streamGeom, buildGeom, streamPred) =
-          if (buildLeft) (ex.rightGeom, ex.leftGeom, SpatialPredicate.invert(ex.predName))
-          else (ex.leftGeom, ex.rightGeom, ex.predName)
-        BroadcastIndexSpatialJoinExec(
-          buildPlan = planLater(if (buildLeft) left else right),
-          streamPlan = planLater(streamSide),
-          buildGeom = buildGeom,
-          streamGeom = streamGeom,
-          predName = streamPred,
-          distance = ex.distance,
-          buildIsLeft = buildLeft,
-          joinType = joinType,
-          extraCondition = ex.remainder)
-      }).toList
+    case Join(left, right, joinType, Some(cond), _) =>
+      SpatialJoinStrategy.indexJoin(spark, joinType, left, right, cond).map {
+        case (ex, buildLeft) =>
+          // orient predicate as pred(streamG, buildG)
+          val (streamGeom, buildGeom, streamPred) =
+            if (buildLeft) (ex.rightGeom, ex.leftGeom, SpatialPredicate.invert(ex.predName))
+            else (ex.leftGeom, ex.rightGeom, ex.predName)
+          BroadcastIndexSpatialJoinExec(
+            buildPlan = planLater(if (buildLeft) left else right),
+            streamPlan = planLater(if (buildLeft) right else left),
+            buildGeom = buildGeom,
+            streamGeom = streamGeom,
+            predName = streamPred,
+            distance = ex.distance,
+            buildIsLeft = buildLeft,
+            joinType = joinType,
+            extraCondition = ex.remainder)
+      }.toList
     case _ => Nil
   }
 }
 
 object SpatialJoinStrategy {
+
+  /** How the broadcast index join takes `Join(left, right, joinType,
+    * cond)`: the recognized predicate and the side it builds (`true`:
+    * left), or None when it cannot take the join — an unsupported join
+    * type, an equi-conjunct (Spark's hash joins are better), no
+    * recognized predicate, no [[buildSide]], or a distance the stream
+    * side cannot evaluate. */
+  def indexJoin(spark: SparkSession, joinType: JoinType, left: LogicalPlan,
+      right: LogicalPlan, cond: Expression): Option[(SpatialPredicate.Extracted, Boolean)] = {
+    val supported = joinType match {
+      case Inner | Cross | LeftOuter | RightOuter | LeftSemi | LeftAnti | _: ExistenceJoin => true
+      case _ => false
+    }
+    if (!supported || RangeJoinShapes.hasEquiConjunct(cond, left, right)) None
+    else for {
+      ex <- SpatialPredicate.extract(cond, left, right).orElse(
+        if (SphereJoinRule.enabled(spark)) SpatialPredicate.extractSphere(cond, left, right)
+        else None)
+      buildLeft <- buildSide(spark.sessionState.conf, joinType, left, right)
+      if ex.distance.forall(_.references.subsetOf((if (buildLeft) right else left).outputSet))
+    } yield (ex, buildLeft)
+  }
 
   /** The side the broadcast index join builds (`Some(true)`: left), or
     * None when it cannot take the join. A side can build when it fits

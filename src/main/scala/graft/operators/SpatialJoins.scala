@@ -44,15 +44,8 @@ object SpatialJoins {
       distance: Option[Column] = None,
       extraCond: Option[Column] = None): DataFrame = {
 
-    val (xmin, ymin, xmax, ymax) = bounds.getOrElse {
-      val Row(a: Double, b: Double, c: Double, d: Double) =
-        left.select(st.envelopeAgg(leftGeom).as("e"))
-          .unionAll(right.select(st.envelopeAgg(rightGeom).as("e")))
-          .select(min(st.xmin(col("e"))), min(st.ymin(col("e"))),
-            max(st.xmax(col("e"))), max(st.ymax(col("e"))))
-          .collect()(0)
-      (a, b, c, d)
-    }
+    val (xmin, ymin, xmax, ymax) =
+      bounds.getOrElse(gridBounds(left, right, leftGeom, rightGeom))
     def cells4(e4: Column): Column = st.f("sd_gridcells4", e4,
       lit(xmin), lit(ymin), lit(xmax), lit(ymax), lit(nx), lit(ny))
 
@@ -61,7 +54,7 @@ object SpatialJoins {
     // carried envelope doubles — codegen'd double math. The WKB-parsing
     // predicate refines only pairs that survive the cheap conjuncts.
     // Distance joins expand the left envelope by the radius for cell
-    // assignment and dedup (same construction as GridSpatialJoinRule).
+    // assignment and dedup.
     val l4base = st.f("sd_envelope4", leftGeom)
     val l4 = distance match {
       case Some(dst) => array(
@@ -103,24 +96,24 @@ object SpatialJoins {
       .drop("__lcell", "__rcell", "__l4", "__r4", "__lg", "__rg")
   }
 
-  /** Size-adaptive spatial join: broadcast index join when a side fits the
-    * broadcast threshold (the SpatialJoinStrategy path), otherwise the
-    * shuffle grid join — the policy the reference's planner chain applies
-    * via statistics (rust/sedona-spatial-join/option.rs:105-108 +
-    * partitioned fallback). */
-  def autoJoin(
-      left: DataFrame, right: DataFrame,
-      leftGeom: Column, rightGeom: Column,
-      predicate: String,
-      nx: Int = 64, ny: Int = 64): DataFrame = {
-    val spark = left.sparkSession
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    def size(df: DataFrame): BigInt =
-      df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (size(left) <= threshold || size(right) <= threshold)
-      left.join(right, st.f(predicate, leftGeom, rightGeom))
-    else
-      gridJoin(left, right, leftGeom, rightGeom, predicate, None, nx, ny)
+  /** Grid extent of a [[gridJoin]] or [[knnJoinGrid]]: the min/max of both
+    * sides' envelopes, one partial-aggregated envelope pre-pass. When
+    * neither side has a non-empty geometry no row explodes into a cell, so
+    * any extent gives the (empty) join; the unit square stands in.
+    *
+    * The pre-pass collects through the physical plan, so no query
+    * listener sees it: inside a planner rule, a completed query would
+    * sweep `CacheRegistry` and could release a cache that a rewrite
+    * below registered for the consuming query. */
+  def gridBounds(left: DataFrame, right: DataFrame,
+      leftGeom: Column, rightGeom: Column): (Double, Double, Double, Double) = {
+    val row = left.select(st.envelopeAgg(leftGeom).as("e"))
+      .unionAll(right.select(st.envelopeAgg(rightGeom).as("e")))
+      .select(min(st.xmin(col("e"))), min(st.ymin(col("e"))),
+        max(st.xmax(col("e"))), max(st.ymax(col("e"))))
+      .queryExecution.executedPlan.executeCollect()(0)
+    if (row.isNullAt(0)) (0.0, 0.0, 1.0, 1.0)
+    else (row.getDouble(0), row.getDouble(1), row.getDouble(2), row.getDouble(3))
   }
 
   /** Geography (spherical) distance join — both sides shuffle-partitioned
@@ -322,15 +315,8 @@ object SpatialJoins {
       nx: Int = 32, ny: Int = 32,
       bounds: Option[(Double, Double, Double, Double)] = None): DataFrame = {
 
-    val (xmin, ymin, xmax, ymax) = bounds.getOrElse {
-      val Row(a: Double, b: Double, c: Double, d: Double) =
-        objects.select(st.envelopeAgg(objectGeom).as("e"))
-          .unionAll(query.select(st.envelopeAgg(queryGeom).as("e")))
-          .select(min(st.xmin(col("e"))), min(st.ymin(col("e"))),
-            max(st.xmax(col("e"))), max(st.ymax(col("e"))))
-          .collect()(0)
-      (a, b, c, d)
-    }
+    val (xmin, ymin, xmax, ymax) =
+      bounds.getOrElse(gridBounds(objects, query, objectGeom, queryGeom))
     val diag = math.sqrt((xmax - xmin) * (xmax - xmin) + (ymax - ymin) * (ymax - ymin))
     val cellW = (xmax - xmin) / nx
     val cellH = (ymax - ymin) / ny

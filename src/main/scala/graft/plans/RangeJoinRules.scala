@@ -117,8 +117,8 @@ object RangeJoinShapes {
   * reimplement.
   *
   * `spark.graft.join.band.enabled=false` disables the rewrite. Inner,
-  * cross, and left-outer joins (the outer form via a row-id-tagged
-  * inner join + anti-join null pad). The rewrite fires unless the
+  * cross, and left-outer joins (the outer form composed by `TaggedJoin`
+  * around this inner rewrite). The rewrite fires unless the
   * smaller side is under 64 KB (~1k rows) — a broadcast BNLJ is
   * quadratic in the pair count even when one side "fits broadcast", so
   * broadcastability alone is not a reason to skip banding.
@@ -150,46 +150,16 @@ case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
       case j @ Join(left, right, jt, Some(cond), _)
           if (jt == Inner || jt == Cross) && !j.isStreaming &&
             !hasEquiConjunct(cond, left, right) && worthBanding(left, right) =>
-        extract(cond, left, right).flatMap(rewrite(j, _)).getOrElse(j)
+        extract(cond, left, right).map(rewrite(j, _)).getOrElse(j)
       case j @ Join(left, right, LeftOuter, Some(cond), _)
           if !j.isStreaming && !hasEquiConjunct(cond, left, right) &&
-            worthBanding(left, right) &&
-            left.output.map(_.name).toSet
-              .intersect(right.output.map(_.name).toSet).isEmpty =>
-        extract(cond, left, right).flatMap(rewriteLeftOuter(j, _)).getOrElse(j)
-    }
-  }
-
-  /** Large-large LEFT OUTER range join: inner banded join over a
-    * row-id-tagged left side, then null-padded anti rows unioned back —
-    * the same construction `GridSpatialJoinRule.rewriteLeftOuter`
-    * proved for spatial predicates. The tagged left is persisted inside
-    * the rewrite so both branches observe identical ids; disjoint
-    * column names across sides required (the anti branch selects by
-    * name). */
-  private def rewriteLeftOuter(j: Join, b: RangeJoinShapes.Band): Option[LogicalPlan] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.graft.DatasetBridge
-    val lDF = graft.CacheRegistry.register(
-      DatasetBridge.ofRows(session, j.left)
-        .withColumn("__brj_id", monotonically_increasing_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val lPlan = lDF.queryExecution.analyzed
-    val innerJoin = Join(lPlan, j.right, Inner, j.condition, JoinHint.NONE)
-    rewrite(innerJoin, b).map { innerPlan =>
-      val lNames = j.left.output.map(_.name)
-      val rNames = j.right.output.map(_.name)
-      val inner = DatasetBridge.ofRows(session, innerPlan)
-      val matched = inner.select(col("__brj_id")).distinct()
-      val anti = lDF.join(matched, Seq("__brj_id"), "left_anti")
-        .select(lNames.map(col) ++
-          j.right.output.map(a => lit(null).cast(a.dataType).as(a.name)): _*)
-      val result = inner.select((lNames ++ rNames).map(col): _*).unionAll(anti)
-      val analyzed = result.queryExecution.optimizedPlan
-      val byName = analyzed.output.map(a => a.name -> a).toMap
-      Project(j.output.map { orig =>
-        Alias(byName(orig.name), orig.name)(exprId = orig.exprId)
-      }, analyzed)
+            worthBanding(left, right) =>
+        extract(cond, left, right).flatMap { b =>
+          TaggedJoin(session, j) { (l, r) =>
+            org.apache.spark.sql.graft.DatasetBridge.ofRows(session,
+              rewrite(Join(l, r, Inner, Some(cond), JoinHint.NONE), b))
+          }
+        }.getOrElse(j)
     }
   }
 
@@ -205,7 +175,7 @@ case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
       yield Band(lLow, rHigh, rLow, lHigh)
   }
 
-  private def rewrite(j: Join, b: Band): Option[LogicalPlan] = {
+  private def rewrite(j: Join, b: Band): LogicalPlan = {
     val w = cellWidth(j.left, j.right, b)
     def cellsOf(a: Expression, bb: Expression): Expression = {
       val ca = cellOf(toLong(a), w)
@@ -229,13 +199,13 @@ case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
       cellOf(Greatest(Seq(toLong(b.lLow), toLong(b.rLow))), w), lcell)
     val newCond = Seq[Expression](EqualTo(lcell, rcell), refCell,
       j.condition.get).reduce(And)
-    Some(Project(j.left.output ++ j.right.output,
-      Join(lgen, rgen, Inner, Some(newCond), JoinHint.NONE)))
+    Project(j.left.output ++ j.right.output,
+      Join(lgen, rgen, Inner, Some(newCond), JoinHint.NONE))
   }
 
   /** Smallest width that caps per-row fanout at 2 cells: the max ABSOLUTE
     * interval length across both sides (one partial-aggregated pre-pass
-    * per side, the 1-D analog of GridSpatialJoinRule's bounds pre-pass),
+    * per side, the 1-D analog of SpatialJoins.gridBounds),
     * floored at 1. abs() matters: the rewrite preserves inverted-row
     * (lo > hi) theta semantics by exploding least..greatest of the
     * endpoint cells, so a strongly inverted row sized against only the

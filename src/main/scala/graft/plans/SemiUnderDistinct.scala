@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import graft.joins.SpatialJoinStrategy
 
 /** A grouping-only Aggregate (i.e. DISTINCT) that reads columns from only
   * ONE side of an inner join underneath it cannot observe the join's
@@ -23,9 +24,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Fired only when every aggregate output is aggregation-free (pure
   * DISTINCT — a count/sum DOES observe multiplicities) and every
-  * referenced column comes from one join side. Mirrored for the right
-  * side by swapping the children. `spark.graft.semidistinct.enabled=false`
-  * disables.
+  * referenced column comes from one join side, and not when the broadcast
+  * index join takes the inner join but not its semi form. Mirrored for
+  * the right side by swapping the children.
+  * `spark.graft.semidistinct.enabled=false` disables.
   */
 case class SemiUnderDistinctRule(session: SparkSession)
     extends Rule[LogicalPlan] {
@@ -56,13 +58,22 @@ case class SemiUnderDistinctRule(session: SparkSession)
           val below = AttributeSet(kept.flatMap(_.references))
           descend(c, below).map(nc => Project(kept, nc))
         case jn @ Join(a, b, Inner, cond, JoinHint.NONE) if !jn.isStreaming =>
-          if (needed.subsetOf(a.outputSet))
-            Some(jn.copy(joinType = LeftSemi))
-          else if (needed.subsetOf(b.outputSet))
-            Some(Join(b, a, LeftSemi, cond, JoinHint.NONE))
-          else None
+          val semi =
+            if (needed.subsetOf(a.outputSet)) Some(jn.copy(joinType = LeftSemi))
+            else if (needed.subsetOf(b.outputSet)) Some(Join(b, a, LeftSemi, cond, JoinHint.NONE))
+            else None
+          semi.filterNot(keepsInner(jn, _))
         case _ => None
       }
     descend(child, agg.references).map(nc => agg.copy(child = nc))
+  }
+
+  /** The broadcast index join builds only a side the join does not
+    * preserve: an inner spatial join it takes whose semi form preserves
+    * the only side that fits would become a BroadcastNestedLoopJoin. */
+  private def keepsInner(inner: Join, semi: Join): Boolean = inner.condition.exists { c =>
+    def indexed(j: Join) =
+      SpatialJoinStrategy.indexJoin(session, j.joinType, j.left, j.right, c).isDefined
+    indexed(inner) && !indexed(semi)
   }
 }

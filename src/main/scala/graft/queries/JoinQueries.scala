@@ -181,9 +181,6 @@ object JoinQueries {
           round(col("knn_distance"), 2).as("dist_m"))
     }),
 
-    // planner-level grid rewrite: pure SQL, no hints, broadcast disabled —
-    // GridSpatialJoinRule turns the spatial theta-join into the explode/
-    // equi-join/dedup plan (the plan a 1000-executor cluster needs)
     // spatial semi / anti / mark (EXISTS-in-OR → ExistenceJoin) / right
     // outer, all through the broadcast index join (reference
     // test_sjoin.py test_spatial_join_semi_anti +
@@ -210,10 +207,10 @@ object JoinQueries {
     }),
 
     // FULL OUTER spatial join (reference exec.rs:88, test_sjoin.py:34-36):
-    // GridSpatialJoinRule assembles inner + both-side anti-pads from
-    // row-id-tagged sides; the inner join takes the broadcast index path
-    // at gate scale (the large-large grid path is pinned in
-    // SpatialJoinSpec with set+collect inside one conf window)
+    // GridSpatialJoinRule rewrites it through TaggedJoin, inner join plus
+    // both-side anti-pads over row-id-tagged sides; the inner join takes
+    // the broadcast index path at gate scale (the large-large grid path
+    // is pinned in SpatialJoinSpec with set+collect inside one conf window)
     "sj17_full_outer_join" -> ((s, dir) => {
       val pts = orderPoints(s, dir).select(col("o_orderkey"), col("pt"))
       val boxes = partBoxes(s, dir).select(col("p_partkey"), col("box"))
@@ -262,11 +259,6 @@ object JoinQueries {
         .select(col("p_partkey"), col("o_orderkey"))
     }),
 
-    // SQL planner surface for geography joins (sj14): the SQL forms of
-    // sj08's dwithin and sj13's intersects shapes. Neither join has an
-    // equi-conjunct; a broadcast-sized side plans the broadcast index
-    // join's spherical mode, and large-large sides SphereJoinRule's
-    // two-level-grid spherical joins, never a quadratic BNLJ.
     // distributed DBSCAN: eps-neighbor graph from the grid join, core
     // points from one degree agg, clusters from connected components of
     // the core-core subgraph, borders to the min neighboring cluster —
@@ -287,6 +279,11 @@ object JoinQueries {
         .select(col("id"), col("role"), col("cluster"))
     }),
 
+    // SQL planner surface for geography joins (sj14): the SQL forms of
+    // sj08's dwithin and sj13's intersects shapes. Neither join has an
+    // equi-conjunct; a broadcast-sized side plans the broadcast index
+    // join's spherical mode, and large-large sides SphereJoinRule's
+    // two-level-grid spherical joins, never a quadratic BNLJ.
     "sj14_sphere_sql_join" -> ((s, dir) => {
       t(s, dir, "customer")
         .withColumn("clon", (col("c_custkey") % 720).cast("double") / 2.0 - 180.0)

@@ -107,6 +107,28 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == expect)
     assert(got.exists(_._2 == -1L) && got.exists(_._2 >= 0L),
       "fixture must exercise matched AND unmatched left rows")
+    // a column name shared by both sides (`id`), against the rule-off run
+    events(1200).withColumnRenamed("eid", "id").createOrReplaceTempView("brj_lo_ev2")
+    windows(80).withColumnRenamed("wid", "id").createOrReplaceTempView("brj_lo_win2")
+    val shared = "SELECT e.id, w.id FROM brj_lo_ev2 e LEFT JOIN brj_lo_win2 w " +
+      "ON ts BETWEEN ws AND we"
+    def key(r: org.apache.spark.sql.Row) = (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
+    CacheRegistry.releaseAll() // count from zero
+    val gotShared = withBroadcastOff {
+      val df = spark.sql(shared)
+      val ps = planString(df)
+      assert(!ps.contains("BroadcastNestedLoopJoin") && !ps.contains("CartesianProduct"),
+        s"shared-name left-outer banded rewrite must purge BNLJ:\n$ps")
+      df.collect().map(key).sorted.toSeq
+    }
+    // the release runs on the listener bus, after collect() returns
+    val deadline = System.nanoTime() + 10000000000L
+    while (CacheRegistry.pinnedCount > 0 && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(CacheRegistry.pinnedCount == 0, "rewrite caches not released")
+    spark.conf.set("spark.graft.join.band.enabled", "false")
+    val expectShared = try spark.sql(shared).collect().map(key).sorted.toSeq
+      finally spark.conf.set("spark.graft.join.band.enabled", "true")
+    assert(gotShared == expectShared && gotShared == got)
   }
 
   test("banded rewrite fires under broadcast when no side is tiny") {

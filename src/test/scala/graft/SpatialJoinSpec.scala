@@ -207,19 +207,6 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       bruteD.collect().map(_.getLong(0)).toSet)
   }
 
-  test("autoJoin picks grid path when broadcast is disabled, same result") {
-    val p = points(150, 31)
-    val b = boxes(120, 37)
-    val expected = sortedRows(
-      p.join(b, st.intersects(col("pgeom"), col("bgeom"))).select("pid", "bid"))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val auto = SpatialJoins.autoJoin(p, b, col("pgeom"), col("bgeom"), "st_intersects",
-        nx = 6, ny = 6).select("pid", "bid")
-      assert(sortedRows(auto) == expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-  }
-
   test("grid join ≡ index join") {
     val p = points(400, 13)
     val b = boxes(300, 17)
@@ -231,6 +218,13 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     val grid2 = SpatialJoins.gridJoin(p, b, col("pgeom"), col("bgeom"), "st_intersects",
       nx = 5, ny = 5).select("pid", "bid")
     assert(sortedRows(grid2) == sortedRows(idx))
+    // no envelope on either side (no rows, or only null geometries): the
+    // pre-pass finds no extent and the join is empty
+    val nullGeoms = p.select(col("pid"), lit(null).cast("binary").as("pgeom"))
+    for ((l, r) <- Seq((p.filter(col("pid") < 0), b.filter(col("bid") < 0)),
+        (nullGeoms, b.filter(col("bid") < 0))))
+      assert(SpatialJoins.gridJoin(l, r, col("pgeom"), col("bgeom"), "st_intersects",
+        nx = 5, ny = 5).count() == 0)
   }
 
   test("planner rewrites large-large spatial join to grid equi-join (SQL path)") {
@@ -285,14 +279,52 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val j = p.join(b, st.intersects(col("pgeom"), col("bgeom")), "left_outer")
         .select(col("pid"), col("bid"))
-      val phys = j.queryExecution.executedPlan.toString
-      assert(!phys.contains("BroadcastNestedLoopJoin"), phys.take(2000))
-      assert(sortedRows(j) == expected)
+      assert(gridRewriteRows(j) == expected)
       // dwithin left outer through the same rewrite
       val j2 = p.join(q, st.dwithin(col("pgeom"), col("qgeom"), lit(3.0)), "left_outer")
         .select(col("pid"), col("qid"))
-      assert(sortedRows(j2) == exp2)
+      assert(gridRewriteRows(j2) == exp2)
+      // LEFT SEMI / LEFT ANTI, and a column name shared by both sides
+      val shared = b.withColumnRenamed("bid", "pid")
+      def q3(kind: String): DataFrame =
+        p.join(shared, st.intersects(p("pgeom"), shared("bgeom")), kind).select(p("pid"))
+      for (kind <- Seq("left_semi", "left_anti"))
+        assert(gridRewriteRows(q3(kind)) == gridRuleOffRows(q3(kind)), kind)
+      def q4(): DataFrame = p.join(shared, st.intersects(p("pgeom"), shared("bgeom")),
+        "left_outer").select(p("pid"), shared("pid"))
+      assert(gridRewriteRows(q4()) == gridRuleOffRows(q4()))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    // the preserved side alone fits the threshold: no broadcast side for
+    // the LEFT OUTER, so the rewrite's inner join broadcasts the left
+    val big = boxes(2000, 97)
+    def size(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size(big) > 4 * size(p))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (2 * size(p)).toString)
+    try {
+      def q5(): DataFrame = p.join(big, st.intersects(col("pgeom"), col("bgeom")),
+        "left_outer").select(col("pid"), col("bid"))
+      assert(gridRewriteRows(q5()) == gridRuleOffRows(q5()))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+  }
+
+  /** `q` with the grid rule off: Spark's own (BNLJ) plan. */
+  private def gridRuleOffRows(q: => DataFrame): Seq[String] = {
+    spark.conf.set("spark.graft.join.grid.enabled", "false")
+    try sortedRows(q) finally spark.conf.set("spark.graft.join.grid.enabled", "true")
+  }
+
+  /** Sorted rows of `q`, which must plan no BNLJ; the caches its rewrite
+    * pinned must be released once it has been collected. */
+  private def gridRewriteRows(q: DataFrame): Seq[String] = {
+    CacheRegistry.releaseAll() // count from zero
+    val phys = q.queryExecution.executedPlan.toString
+    assert(!phys.contains("BroadcastNestedLoopJoin"), phys.take(2000))
+    val rows = sortedRows(q)
+    // the release runs on the listener bus, after collect() returns
+    val deadline = System.nanoTime() + 10000000000L
+    while (CacheRegistry.pinnedCount > 0 && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(CacheRegistry.pinnedCount == 0, "rewrite caches not released")
+    rows
   }
 
   test("FULL OUTER spatial join: broadcast and grid paths, no BNLJ") {
@@ -341,9 +373,34 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = boxes(50, 99)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      // bounds pre-pass sees no rows -> no rewrite; join is empty either way
+      // the extent pre-pass takes the non-empty side's envelopes; the
+      // rewritten join is empty
       assert(p.join(b, st.intersects(col("pgeom"), col("bgeom"))).count() == 0)
       assert(p.join(b, st.intersects(col("pgeom"), col("bgeom")), "left_outer").count() == 0)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+  }
+
+  test("stream-static spatial join with broadcast off runs as with the rule off") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sj_stream").toString
+    val pts = points(300, 111)
+    pts.write.mode("overwrite").parquet(dir)
+    boxes(60, 113).createOrReplaceTempView("sj_stream_boxes")
+    def run(name: String): Seq[String] = {
+      spark.readStream.schema(pts.schema).parquet(dir).createOrReplaceTempView("sj_stream_pts")
+      val q = spark.sql("""SELECT pid, bid FROM sj_stream_pts JOIN sj_stream_boxes
+          ON st_intersects(pgeom, bgeom)""")
+        .writeStream.format("memory").queryName(name)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      sortedRows(spark.table(name))
+    }
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val got = run("sj_stream_rule_on")
+      spark.conf.set("spark.graft.join.grid.enabled", "false")
+      val expected = try run("sj_stream_rule_off")
+        finally spark.conf.set("spark.graft.join.grid.enabled", "true")
+      assert(got.nonEmpty && got == expected)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 

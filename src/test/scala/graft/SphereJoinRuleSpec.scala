@@ -179,6 +179,29 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(got.nonEmpty && got == expect)
     assert(got.exists(_._2 == Long.MinValue), "some left rows must be unmatched")
+    // FULL OUTER has no broadcast side: rewritten at every size, its inner
+    // join broadcast-sized on the index join, with broadcast off on the grid
+    val full = "SELECT laid, rbid FROM spho_a FULL OUTER JOIN spho_b " +
+      "ON st_dwithinsphere(lag, rbg, 200000.0)"
+    def fkey(x: org.apache.spark.sql.Row) =
+      (if (x.isNullAt(0)) Long.MinValue else x.getLong(0),
+        if (x.isNullAt(1)) Long.MinValue else x.getLong(1))
+    val fullExpect = ruleOff { spark.sql(full).collect().map(fkey).sorted.toSeq }
+    assert(fullExpect.exists(_._1 == Long.MinValue) && fullExpect.exists(_._2 == Long.MinValue),
+      "both sides must have unmatched rows")
+    def fullRows(assertPlan: String => Unit): Seq[(Long, Long)] = {
+      CacheRegistry.releaseAll() // count from zero
+      val df = spark.sql(full)
+      assertPlan(planString(df))
+      val rows = df.collect().map(fkey).sorted.toSeq
+      // the release runs on the listener bus, after collect() returns
+      val deadline = System.nanoTime() + 10000000000L
+      while (CacheRegistry.pinnedCount > 0 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(CacheRegistry.pinnedCount == 0, "rewrite caches not released")
+      rows
+    }
+    assert(fullRows(assertIndex) == fullExpect)
+    assert(withBroadcastOff(fullRows(assertGrid)) == fullExpect)
   }
 
   test("SQL LEFT SEMI / LEFT ANTI st_dwithinsphere joins: grid plan ≡ rule-off") {
@@ -366,18 +389,19 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.nonEmpty && got == expect)
   }
 
-  test("LEFT OUTER declines rewrite when a side already has __spj_id/__spj_mid") {
-    // the left-type rewrite tags the left with __spj_id and joins the
-    // matched-id set as __spj_mid; a user column with either name would be
-    // silently replaced / ambiguous, so the rule must keep the default plan
-    // and still return correct results
+  test("LEFT OUTER declines rewrite when a side already has a __tj_ tag column") {
+    // the rewrite tags the left with __tj_lid and joins the matched-id set
+    // as __tj_mid; a user column named with that prefix would be silently
+    // replaced (__tj_lid) or make that join ambiguous (__tj_mid), so the
+    // rule must keep the default plan and still return correct results
     pts(150, 301, "aid", "ag")
-      .withColumn("__spj_id", col("aid") * 1000)
+      .withColumn("__tj_mid", col("aid") * 1000)
       .createOrReplaceTempView("sphr_a")
     pts(150, 303, "bid", "bg").createOrReplaceTempView("sphr_b")
-    val sql = "SELECT aid, __spj_id, bid FROM sphr_a LEFT JOIN sphr_b " +
+    val sql = "SELECT aid, __tj_mid, bid FROM sphr_a LEFT JOIN sphr_b " +
       "ON st_dwithinsphere(ag, bg, 400000.0)"
-    val got = spark.sql(sql).collect()
+    // broadcast off: the index join cannot take it, so the rule sees it
+    val got = withBroadcastOff { spark.sql(sql).collect() }
       .map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
       .sorted.toSeq
     val expect = ruleOff {
@@ -387,6 +411,6 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(got.nonEmpty && got == expect)
     assert(got.forall { case (aid, sid, _) => sid == aid * 1000 },
-      "user __spj_id column must survive untouched")
+      "user __tj_mid column must survive untouched")
   }
 }
