@@ -22,7 +22,7 @@ object GraftExtensions {
   val operatorRules: Seq[RuleBuilder] = Seq(
     _ => graft.plans.GeoPruneRule,
     _ => graft.plans.RasterJoinRule,
-    graft.plans.GridSpatialJoinRule(_),
+    graft.plans.SpatialJoinRule(_),
     graft.joins.KnnGridJoinRule(_),
     _ => graft.plans.RasterLoadRule)
 
@@ -40,8 +40,7 @@ object GraftExtensions {
     // bare-aggregate rewrite would otherwise consume the Aggregate
     graft.plans.AggregateJoinReorderRule(_),
     graft.plans.AsOfProbeJoinRule(_),
-    graft.plans.AsOfAggregateRule(_),
-    graft.plans.SphereJoinRule(_))
+    graft.plans.AsOfAggregateRule(_))
 
   // Sessions already installed. Weak keys: a stopped session is dropped
   // with its last reference, and a new one gets a full install.

@@ -107,14 +107,16 @@ object MicroBench {
         Tables.t(spark, "/root/testdata/sf0.1", "documents").select(
           graft.pipeline.TextOps.shingleHashes(
             graft.pipeline.TextOps.tokens(col("text")), 3)))),
-      time("sphere_join")(run(SpatialJoins.sphereDWithinJoin(
+      time("sphere_join")(run(
         points.limit(20000).select(col("id").as("aid"),
           st.point(pmod(hash(col("id"), lit(21)), lit(7200)).cast("double") / 20.0 - 180.0,
-            pmod(hash(col("id"), lit(22)), lit(3500)).cast("double") / 20.0 - 87.5).as("ag")),
-        points.limit(20000).select(col("id").as("bid"),
-          st.point(pmod(hash(col("id"), lit(23)), lit(7200)).cast("double") / 20.0 - 180.0,
-            pmod(hash(col("id"), lit(24)), lit(3500)).cast("double") / 20.0 - 87.5).as("bg")),
-        col("ag"), col("bg"), 100000.0, nx = 180, ny = 90))),
+            pmod(hash(col("id"), lit(22)), lit(3500)).cast("double") / 20.0 - 87.5).as("ag"))
+          .hint("shuffle_hash")
+          .join(points.limit(20000).select(col("id").as("bid"),
+            st.point(pmod(hash(col("id"), lit(23)), lit(7200)).cast("double") / 20.0 - 180.0,
+              pmod(hash(col("id"), lit(24)), lit(3500)).cast("double") / 20.0 - 87.5).as("bg"))
+            .hint("shuffle_hash"),
+            st.f("st_dwithinsphere", col("ag"), col("bg"), lit(100000.0))))),
       time("connected_components")(run(
         graft.pipeline.PipelineOps.dedupGroups(
           spark.range(20000).select((col("id") / 3).cast("long").as("a"),
@@ -132,17 +134,19 @@ object MicroBench {
           st.geomFromWkt(lit("POLYGON ((0 71, 60 71, 120 71, 180 71, -120 71, -60 71, 0 71))")),
           st.point(pmod(hash(col("id"), lit(33)), lit(7200)).cast("double") / 20.0 - 180.0,
             pmod(hash(col("id"), lit(34)), lit(3600)).cast("double") / 20.0 - 90.0))))),
-      time("sphere_intersects_join")(run(SpatialJoins.sphereIntersectsJoin(
+      time("sphere_intersects_join")(run(
         points.limit(20000).select(col("id").as("aid"),
           st.makeEnvelope(
             pmod(hash(col("id"), lit(41)), lit(7000)).cast("double") / 20.0 - 179.0,
             pmod(hash(col("id"), lit(42)), lit(3300)).cast("double") / 20.0 - 84.0,
             pmod(hash(col("id"), lit(41)), lit(7000)).cast("double") / 20.0 - 177.0,
-            pmod(hash(col("id"), lit(42)), lit(3300)).cast("double") / 20.0 - 82.0).as("ag")),
-        points.limit(20000).select(col("id").as("bid"),
-          st.point(pmod(hash(col("id"), lit(43)), lit(7200)).cast("double") / 20.0 - 180.0,
-            pmod(hash(col("id"), lit(44)), lit(3500)).cast("double") / 20.0 - 87.5).as("bg")),
-        col("ag"), col("bg"), nx = 180, ny = 90))),
+            pmod(hash(col("id"), lit(42)), lit(3300)).cast("double") / 20.0 - 82.0).as("ag"))
+          .hint("shuffle_hash")
+          .join(points.limit(20000).select(col("id").as("bid"),
+            st.point(pmod(hash(col("id"), lit(43)), lit(7200)).cast("double") / 20.0 - 180.0,
+              pmod(hash(col("id"), lit(44)), lit(3500)).cast("double") / 20.0 - 87.5).as("bg"))
+            .hint("shuffle_hash"),
+            st.f("st_intersectssphere", col("ag"), col("bg"))))),
       // round-8 kernels: out-db windowed netCDF sampling (block-clustered
       // probes, warm cache after the first touch of each 256px block),
       // COG overview-path resample reuse, NTv2 grid-shift transform

@@ -22,7 +22,7 @@ object PlanAudit {
     * here. Cutoff: 65536² · 4 bytes² (~a couple million pairs at
     * 100 B/row). A join condition with an `st_*sphere` call never
     * justifies a BNLJ: broadcast-sized sphere joins plan the broadcast
-    * index join and all others SphereJoinRule's grid. */
+    * index join and all others the partitioned index join. */
   private def bnljJustified(df: org.apache.spark.sql.DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     val cutoff = BigInt(65536) * 65536 * 4
@@ -55,6 +55,7 @@ object PlanAudit {
         val cart = p.contains("CartesianProduct")
         val tags = Seq(
           if (p.contains("BroadcastIndexSpatialJoin")) Some("spatial-idx") else None,
+          if (p.contains("PartitionedIndexSpatialJoin")) Some("spatial-part") else None,
           if (p.contains("KnnJoin ")) Some("knn") else None,
           if (p.contains("SortMergeJoin")) Some("smj") else None,
           if (p.contains("ShuffledHashJoin")) Some("shj") else None,

@@ -12,17 +12,31 @@ import java.nio.charset.StandardCharsets
   *
   * Lambda class names, identity hashes, `plan_id`s and the source lines
   * of RDD call sites vary between runs and edits that keep the plan;
-  * they are normalized, so two dumps of the same plans are
-  * byte-identical and compare with plain `diff`.
+  * they are normalized. So are expression ids (`#1234`) and RDD ids
+  * (`RDD[56]`), which depend on how many ids the gates dumped earlier in
+  * the session allocated: each gate's are renumbered in order of first
+  * appearance, so a wrong attribute binding still shows. Two dumps of
+  * the same plans are byte-identical and compare with plain `diff`.
   *
   * Usage: runMain graft.PlanDump <suffix> [queryName...]
   *   suffix "before" -> plans/r18/<name>_before.txt
   */
 object PlanDump {
   def normalize(plan: String): String =
-    plan.replaceAll("""\$\$Lambda[$\d]*/0x[0-9a-f]+@[0-9a-f]+""", "\\$\\$Lambda")
-      .replaceAll("""plan_id=\d+""", "plan_id=N")
-      .replaceAll("""(\.scala):\d+""", "$1:N")
+    renumber(renumber(
+      plan.replaceAll("""\$\$Lambda[$\d]*/0x[0-9a-f]+@[0-9a-f]+""", "\\$\\$Lambda")
+        .replaceAll("""plan_id=\d+""", "plan_id=N")
+        .replaceAll("""(\.scala):\d+""", "$1:N"),
+      "#", ""), "RDD[", "]")
+
+  /** The numbers after `open` (and before `close`) renumbered 0, 1, … in
+    * order of first appearance. */
+  private def renumber(s: String, open: String, close: String): String = {
+    val ids = scala.collection.mutable.HashMap[String, Int]()
+    (java.util.regex.Pattern.quote(open) + """(\d+)""" + java.util.regex.Pattern.quote(close)).r
+      .replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(
+        open + ids.getOrElseUpdate(m.group(1), ids.size) + close))
+  }
 
   def main(args: Array[String]): Unit = {
     val suffix = if (args.nonEmpty) args(0) else "before"
@@ -45,7 +59,8 @@ object PlanDump {
           StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
         val nEx = "Exchange".r.findAllIn(txt).length
         val joins = Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
-          "BroadcastNestedLoopJoin", "KnnJoin", "BroadcastIndexSpatialJoin")
+          "BroadcastNestedLoopJoin", "KnnJoin", "BroadcastIndexSpatialJoin",
+          "PartitionedIndexSpatialJoin")
           .filter(txt.contains).mkString(",")
         println(s"[plandump] $name exchanges=$nEx joins=$joins")
       } catch {

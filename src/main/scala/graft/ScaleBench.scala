@@ -147,19 +147,17 @@ object ScaleBench {
         timed(points(m, 150000).join(boxesN(m, 20000, 10.0 * sqrtM(m)),
           st.intersects(col("pt"), col("box"))))
       },
-      // sj05 path: shuffle-partitioned grid join, both sides scale,
-      // cell size constant in ground units (nx ~ sqrt(m))
+      // sj05 path: partitioned index join (both sides hinted
+      // SHUFFLE_HASH), both sides scale
       "sj05_grid_join" -> { m =>
-        val nx = math.max(8, (32 * sqrtM(m)).toInt)
-        timed(SpatialJoins.gridJoin(points(m, 150000), boxes(m, 20000, 5.0),
-          col("pt"), col("box"), "st_intersects",
-          bounds = Some((0.0, 0.0, planeW(m), planeH(m))), nx = nx, ny = nx))
+        timed(points(m, 150000).hint("shuffle_hash")
+          .join(boxes(m, 20000, 5.0).hint("shuffle_hash"), st.intersects(col("pt"), col("box"))))
       },
-      // sj05 SKEW variant: 10% of probe points pile onto ONE cell-sized
-      // hot spot (the city-downtown shape), boxes stay uniform — the hot
-      // grid key concentrates 15k·m probe rows in one shuffle partition,
-      // and AQE's skew-join split must keep wall ~ m (a plan without the
-      // split shows one straggler task and a super-linear ratio)
+      // sj05 SKEW variant: 10% of probe points pile onto ONE hot spot the
+      // size of a 32·sqrt(m)-grid cell (the city-downtown shape), boxes
+      // stay uniform — the KDB tree's sampled medians must split the hot
+      // spot over several leaves to keep wall ~ m (one straggler task
+      // shows as a super-linear ratio)
       "sj05_grid_skew" -> { m =>
         val nx = math.max(8, (32 * sqrtM(m)).toInt)
         val hotX = planeW(m) / 2
@@ -172,9 +170,8 @@ object ScaleBench {
             when(col("hot"), lit(hotY) + u(col("id"), 6) * (planeH(m) / nx))
               .otherwise(u(col("id"), 2) * planeH(m))))
           .select(col("id"), col("pt"))
-        timed(SpatialJoins.gridJoin(pts, boxes(m, 20000, 5.0),
-          col("pt"), col("box"), "st_intersects",
-          bounds = Some((0.0, 0.0, planeW(m), planeH(m))), nx = nx, ny = nx))
+        timed(pts.hint("shuffle_hash")
+          .join(boxes(m, 20000, 5.0).hint("shuffle_hash"), st.intersects(col("pt"), col("box"))))
       },
       // sj16 path: spheroid out-of-core KNN grid — same density-constant
       // globe as sj08; query count and object count scale with m, the
@@ -219,33 +216,26 @@ object ScaleBench {
         timed(SpatialJoins.knnJoinGridSphere(
           q, o, col("qpt"), col("opt"), 3, col("oid"), nx = 2 * ny, ny = ny))
       },
-      // sj07 path: planner-level SQL grid join under broadcast-off,
-      // grid resolution from the deployment conf
+      // sj07 path: the planner's SQL spatial join under broadcast-off
+      // (the partitioned index join)
       "sj07_planner_grid" -> { m =>
-        val nx = math.max(8, (64 * sqrtM(m)).toInt)
         points(m, 150000).select(col("id"), col("pt")).createOrReplaceTempView("sb_pts")
         boxes(m, 20000, 5.0).createOrReplaceTempView("sb_boxes")
         val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.graft.join.grid.nx", nx.toString)
-        spark.conf.set("spark.graft.join.grid.ny", nx.toString)
         try timed(spark.sql(
           "SELECT id, bid FROM sb_pts JOIN sb_boxes ON st_intersects(pt, box)"))
-        finally {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-          spark.conf.unset("spark.graft.join.grid.nx")
-          spark.conf.unset("spark.graft.join.grid.ny")
-        }
+        finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
       },
       // sj08 path: spherical dwithin join on the (fixed) globe — density
       // grows with m, so the ground radius shrinks ~1/sqrt(m) to keep
-      // matches-per-probe constant and the grid tracks the radius
+      // matches-per-probe constant
       "sj08_sphere_dwithin" -> { m =>
-        val nx = math.max(36, (72 * sqrtM(m)).toInt)
-        timed(SpatialJoins.sphereDWithinJoin(
-          globePoints(15000L * m, 11).select(col("id").as("aid"), col("pt").as("apt")),
-          globePoints(15000L * m, 13).select(col("id").as("bid"), col("pt").as("bpt")),
-          col("apt"), col("bpt"), 250000.0 / sqrtM(m), nx = nx, ny = nx / 2))
+        timed(globePoints(15000L * m, 11).select(col("id").as("aid"), col("pt").as("apt"))
+          .hint("shuffle_hash")
+          .join(globePoints(15000L * m, 13).select(col("id").as("bid"), col("pt").as("bpt"))
+            .hint("shuffle_hash"),
+            st.f("st_dwithinsphere", col("apt"), col("bpt"), lit(250000.0 / sqrtM(m)))))
       },
       // sj10 path: out-of-core two-round KNN grid, k fixed, both sides
       // scale, cells constant in ground units
@@ -306,9 +296,8 @@ object ScaleBench {
       },
       // sj13 path: spherical intersects join — polygon count scales,
       // polygon side shrinks 1/sqrt(m) so expected point-in-quad pairs
-      // stay linear; the adaptive two-level grid tracks nx
+      // stay linear
       "sj13_sphere_intersects" -> { m =>
-        val nx = math.max(90, (360 * sqrtM(m)).toInt)
         val side = 2.0 / sqrtM(m)
         val quads = spark.range(0, 2000L * m).toDF("qid")
           .withColumn("qx", u(col("qid"), 21) * (360.0 - side) - 180.0)
@@ -316,9 +305,9 @@ object ScaleBench {
           .withColumn("quad", st.makeEnvelope(col("qx"), col("qy"),
             col("qx") + lit(side), col("qy") + lit(side)))
           .select(col("qid"), col("quad"))
-        timed(SpatialJoins.sphereIntersectsJoin(
-          quads, globePoints(150000L * m, 31), col("quad"), col("pt"),
-          nx = nx, ny = nx / 2))
+        timed(quads.hint("shuffle_hash")
+          .join(globePoints(150000L * m, 31).hint("shuffle_hash"),
+            st.f("st_intersectssphere", col("quad"), col("pt"))))
       },
       // pl04 path: MinHash+LSH banding, constant dup rate
       "pl04_minhash" -> { m =>
@@ -590,7 +579,7 @@ object ScaleBench {
           .withColumn("pt", st.point(col("x"), col("y")))
         val bxs = boxes(m, 200, 8.0)
         val joined = SpatialJoins.gridJoin(pts, bxs, col("pt"), col("box"),
-          "st_intersects", bounds = Some((0.0, 0.0, planeW(m), planeH(m))))
+          "st_intersects", bounds = (0.0, 0.0, planeW(m), planeH(m)))
           .select(col("id"), col("bid"))
         val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -1083,8 +1072,7 @@ object ScaleBench {
         } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       },
       // gs01 path: distributed DBSCAN — points and extent grow with m
-      // (density constant), eps/minPts fixed, grid cells ~ extent: the
-      // neighbor graph, degree agg and CC all scale with the point
+      // (density constant), eps/minPts fixed: the neighbor graph, degree agg and CC all scale with the point
       // count, never the pair product
       "gs01_dbscan" -> { m =>
         val w = 200.0 * sqrtM(m)
@@ -1096,10 +1084,7 @@ object ScaleBench {
               .cast("double") / 2.0,
             (u(col("id"), 302) * (hh * 2).toLong.toDouble).cast("long")
               .cast("double") / 2.0).as("pt"))
-        val nx = math.max(16, (80 * sqrtM(m)).toInt)
-        timed(graft.operators.Dbscan.dbscan(pts, col("id"), col("pt"),
-          eps = 1.5, minPts = 4, bounds = Some((0.0, 0.0, w, hh)),
-          nx = nx, ny = nx))
+        timed(graft.operators.Dbscan.dbscan(pts, col("id"), col("pt"), eps = 1.5, minPts = 4))
       },
       // rs18 path: JPEG 2000 lossless codec throughput — raster count
       // grows with m at constant tile size, encode+decode map-only per

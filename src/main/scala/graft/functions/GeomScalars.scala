@@ -1901,43 +1901,19 @@ object GeomScalars {
       Spherical.buffer(g0(a), d(a, 1))),
     fn("st_lineinterpolatepointsphere", BinaryType, Seq(Geom, Dbl))(a =>
       Spherical.lineInterpolatePoint(g0(a), d(a, 1))),
-    // geography-join partitioning kernels (S2-covering analog,
-    // rust/sedona-spatial-join-geography): wrap-safe lat-lon grid cover
-    // of the radius-expanded envelope + canonical-cell pair dedup
+    // wrap-safe lat-lon grid cover of the radius-expanded envelope
+    // (S2-covering analog, rust/sedona-spatial-join-geography)
     "st_gridcells_sphere" -> ((children: Seq[Expression]) =>
       GeomScalar("st_gridcells_sphere", children, ArrayType(LongType, containsNull = false),
         Seq(Geom, Dbl, Int_, Int_), a =>
           new GenericArrayData(Spherical.gridCells(
             Spherical.latLngBound(g0(a)), d(a, 1), i(a, 2), i(a, 3))))),
-    fn("st_refcell_sphere", LongType, Seq(Geom, Geom, Dbl, Int_, Int_))(a =>
-      Spherical.refCell(g0(a), g1(a), d(a, 2), i(a, 3), i(a, 4))),
-    // join-condition forms over a PRECOMPUTED spherical bound (the
-    // lat/lng rect as 4 doubles): the spherical analog of sd_envelope4 /
-    // sd_gridcells4 — bound computed once per row, cells/refcell/bbox
-    // checks become per-pair double arithmetic with no WKB parse
+    // the spherical bound as 4 doubles, computed once per row: the
+    // spherical analog of sd_envelope4
     fn("sd_envelopesphere4", ArrayType(DoubleType, containsNull = false), Seq(Geom))(a => {
       val e = Spherical.latLngBound(g0(a))
       if (e.isNull) null
       else new GenericArrayData(Array(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY))
-    }),
-    // two-level covers: wide geometries (polar caps) emit coarse cells
-    // past maxCells instead of thousands of fine ones; the probe side
-    // emits both levels (Spherical two-level cover notes)
-    fn("sd_gridcells_sphere4_adaptive", ArrayType(LongType, containsNull = false),
-        Seq(ArgKind.Raw, Dbl, Int_, Int_, Int_))(a => {
-      val e = a(0).asInstanceOf[ArrayData]
-      new GenericArrayData(Spherical.gridCellsAdaptive(
-        new org.locationtech.jts.geom.Envelope(
-          e.getDouble(0), e.getDouble(2), e.getDouble(1), e.getDouble(3)),
-        d(a, 1), i(a, 2), i(a, 3), i(a, 4)))
-    }),
-    fn("sd_gridcells_sphere4_dual", ArrayType(LongType, containsNull = false),
-        Seq(ArgKind.Raw, Dbl, Int_, Int_))(a => {
-      val e = a(0).asInstanceOf[ArrayData]
-      new GenericArrayData(Spherical.gridCellsDual(
-        new org.locationtech.jts.geom.Envelope(
-          e.getDouble(0), e.getDouble(2), e.getDouble(1), e.getDouble(3)),
-        d(a, 1), i(a, 2), i(a, 3)))
     }),
     // KNN mixed cover + its object-side dual: NESTED coarse interior +
     // fine boundary past maxCells — pair-set identical to all-fine
@@ -1977,17 +1953,6 @@ object GeomScalars {
     // per-pair arithmetic — no WKB in the hot path
     fn("sd_haversine", DoubleType, Seq(Dbl, Dbl, Dbl, Dbl))(a =>
       Spherical.haversine(d(a, 0), d(a, 1), d(a, 2), d(a, 3))),
-    fn("sd_refcell_sphere4", LongType,
-        Seq(ArgKind.Raw, ArgKind.Raw, Dbl, Int_, Int_))(a => {
-      val ea = a(0).asInstanceOf[ArrayData]
-      val eb = a(1).asInstanceOf[ArrayData]
-      Spherical.refCellEnv(
-        new org.locationtech.jts.geom.Envelope(
-          ea.getDouble(0), ea.getDouble(2), ea.getDouble(1), ea.getDouble(3)),
-        new org.locationtech.jts.geom.Envelope(
-          eb.getDouble(0), eb.getDouble(2), eb.getDouble(1), eb.getDouble(3)),
-        d(a, 2), i(a, 3), i(a, 4))
-    }),
 
     // ---- KNN join stub: only valid inside a join condition, where
     // SpatialJoinStrategy plans it into KnnJoinExec (reference pattern:

@@ -1408,11 +1408,7 @@ object Spherical {
   /** Compact cell cover of `env` widened by `radiusM` ([[radiusBound]]):
     * lat rows [cy0, cy1] × a circular lon range of `lonLen` cells
     * starting at `lonStart` (lonLen == nx ⇒ full ring; antimeridian wrap
-    * is the modulo range). (-1, -1, 0, 0) encodes an empty cover. Shared
-    * by gridCells (which materializes it) and refCell (which intersects
-    * two covers arithmetically — no per-call array/hash allocation, the
-    * former scale-killer for polar caps whose covers held thousands of
-    * cells). */
+    * is the modulo range). (-1, -1, 0, 0) encodes an empty cover. */
   private def coverOf(env: org.locationtech.jts.geom.Envelope,
       radiusM: Double, nx: Int, ny: Int): (Int, Int, Int, Int) = {
     val b = radiusBound(env, radiusM)
@@ -1455,35 +1451,16 @@ object Spherical {
     out
   }
 
-  // ---- two-level cover: the fanout bound for wide geometries. A polar
-  // cap's fine cover is (band rows × nx) cells (~7k at 360×180) — at
-  // scale that multiplies the shuffle by orders of magnitude. The
-  // adaptive side emits FINE cells while its cover is small and COARSE
-  // cells (grid nx/8 × ny/8, ids offset by nx*ny) once it exceeds
-  // `maxCells`; the other side emits BOTH levels (one extra cell per
-  // point). A pair meets at exactly the level the adaptive row chose,
-  // so per-level refcell dedup keeps pairs unique. ----
-
-  @inline def coarseNx(nx: Int): Int = math.max(1, nx / 8)
-  @inline def coarseNy(ny: Int): Int = math.max(1, ny / 8)
-
-  /** Adaptive cover: fine cells, or OFFSET+coarse cells past maxCells. */
-  def gridCellsAdaptive(env: org.locationtech.jts.geom.Envelope,
-      radiusM: Double, nx: Int, ny: Int, maxCells: Int): Array[Long] = {
-    val (cy0, cy1, _, lonLen) = coverOf(env, radiusM, nx, ny)
-    if (cy1 < cy0) return Array.empty
-    if ((cy1 - cy0 + 1).toLong * lonLen <= maxCells)
-      gridCells(env, radiusM, nx, ny)
-    else {
-      val off = nx.toLong * ny
-      gridCells(env, radiusM, coarseNx(nx), coarseNy(ny)).map(_ + off)
-    }
-  }
+  // ---- two-level KNN cover: the fanout bound for wide geometries. A
+  // polar cap's fine cover is (band rows × nx) cells (~7k at 360×180) —
+  // at scale that multiplies the shuffle by orders of magnitude. Past a
+  // cell budget the query side emits NESTED coarse cells for its
+  // interior, and the object side emits both levels. ----
 
   /** Largest divisor of n that is <= 8: the NESTED coarse factor for the
     * KNN mixed cover (nesting must be exact so interior coarse cells
-    * admit precisely the objects their fine cells would; the /8 grid of
-    * gridCellsAdaptive does not nest when n % 8 != 0). 1 = no nesting. */
+    * admit precisely the objects their fine cells would). 1 = no
+    * nesting. */
   @inline private def nestFactor(n: Int): Int = Grid.nestFactor(n)
 
   /** KNN final-probe cover: all-fine while small; past `maxCells`, a
@@ -1588,24 +1565,6 @@ object Spherical {
     out
   }
 
-  /** Dual cover: fine cells plus OFFSET+coarse cells — the probe-side
-    * companion of gridCellsAdaptive. */
-  def gridCellsDual(env: org.locationtech.jts.geom.Envelope,
-      radiusM: Double, nx: Int, ny: Int): Array[Long] = {
-    val fine = gridCells(env, radiusM, nx, ny)
-    val off = nx.toLong * ny
-    val coarse = gridCells(env, radiusM, coarseNx(nx), coarseNy(ny))
-    val out = new Array[Long](fine.length + coarse.length)
-    System.arraycopy(fine, 0, out, 0, fine.length)
-    var i = 0
-    while (i < coarse.length) { out(fine.length + i) = coarse(i) + off; i += 1 }
-    out
-  }
-
-  /** Canonical cell for pair dedup in the spherical grid join: the minimum
-    * cell id common to a's expanded cover and b's cover (the wrap-safe
-    * analog of the planar reference-point rule). Null when disjoint —
-    * which the join condition already excludes. */
   /** Spherical lat/lng bound (S2 RectBounder): the chart envelope of the
     * vertices widened by each geodesic edge's poleward latitude bulge.
     * A great-circle arc between two points at latitude φ reaches beyond
@@ -1868,45 +1827,6 @@ object Spherical {
         }
       }
     Some(out)
-  }
-
-  def refCell(a: Geometry, b: Geometry, radiusM: Double, nx: Int, ny: Int): Any =
-    refCellEnv(latLngBound(a), latLngBound(b), radiusM, nx, ny)
-
-  /** refCell on precomputed spherical bounds (sd_envelopesphere4 arrays):
-    * the join-condition form — pure cover arithmetic, no WKB parse and no
-    * bound recomputation per pair. */
-  def refCellEnv(ea: org.locationtech.jts.geom.Envelope,
-      eb: org.locationtech.jts.geom.Envelope,
-      radiusM: Double, nx: Int, ny: Int): Any = {
-    val (ay0, ay1, as0, alen) = coverOf(ea, radiusM, nx, ny)
-    val (by0, by1, bs0, blen) = coverOf(eb, 0.0, nx, ny)
-    if (ay1 < ay0 || by1 < by0) return null
-    val cy = math.max(ay0, by0)
-    if (cy > math.min(ay1, by1)) return null
-    // every common row shares the same common lon set, so the minimum
-    // common id lives in the lowest common row: scan the smaller lon
-    // range with O(1) membership in the other — no materialization
-    @inline def inRange(cx: Int, s: Int, len: Int): Boolean =
-      ((cx - s) % nx + nx) % nx < len
-    var best = Int.MaxValue
-    if (alen <= blen) {
-      var j = 0
-      while (j < alen) {
-        val cx = (as0 + j) % nx
-        if (cx < best && inRange(cx, bs0, blen)) best = cx
-        j += 1
-      }
-    } else {
-      var j = 0
-      while (j < blen) {
-        val cx = (bs0 + j) % nx
-        if (cx < best && inRange(cx, as0, alen)) best = cx
-        j += 1
-      }
-    }
-    if (best == Int.MaxValue) null
-    else java.lang.Long.valueOf(cy.toLong * nx + best)
   }
 
   def perimeter(g: Geometry): Any = g match {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.physical._
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.execution.metric.SQLMetrics
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.locationtech.jts.geom.{Envelope, Geometry}
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 import org.locationtech.jts.index.ItemVisitor
@@ -94,10 +94,10 @@ case class BroadcastIndexSpatialJoinExec(
     val boundDistance = distance.map(BindReferences.bindReference(_, streamPlan.output))
     // the extra condition sees the full (left ++ right) pair row, even for
     // join types whose OUTPUT omits the build side
-    val pairAttrs = left.output ++ right.output
-    val boundExtra = extraCondition.map(BindReferences.bindReference(_, pairAttrs))
+    val boundExtra = extraCondition.map(
+      BindReferences.bindReference(_, left.output ++ right.output))
     val pred = predName
-    val spherical = SpatialPredicate.sphereRelationPreds(pred) || pred == "st_dwithinsphere"
+    val spherical = isSpherical(pred)
     val bIsLeft = buildIsLeft
     val jt = joinType
     val buildWidth = buildPlan.output.size
@@ -108,62 +108,14 @@ case class BroadcastIndexSpatialJoinExec(
       // shuffle directly above reads them as such
       val toUnsafe = UnsafeProjection.create(outTypes)
       val index = indexFor(broadcastRows.value, boundBuildGeom, spherical)
+      val probe = new Probe(boundStreamGeom, boundDistance, boundExtra, pred, bIsLeft,
+        candidatePairs)
       val joined = new JoinedRow()
       val nullBuild = new GenericInternalRow(buildWidth)
       val existsTrue = new GenericInternalRow(Array[Any](true))
       val existsFalse = new GenericInternalRow(Array[Any](false))
       streamIter.flatMap { streamRow =>
-        val gBytes = boundStreamGeom.eval(streamRow)
-        val matches: Iterator[InternalRow] =
-          if (gBytes == null) Iterator.empty
-          else {
-            val sg = GeomIO.read(gBytes.asInstanceOf[Array[Byte]])
-            val dist = boundDistance.map(_.eval(streamRow) match {
-              // SQL `st_dwithin(a, b, 2.0)` carries a DECIMAL literal
-              case d: org.apache.spark.sql.types.Decimal => d.toDouble
-              case n: Number => n.doubleValue()
-            })
-            val candidates =
-              if (spherical) index.querySphere(
-                Spherical.radiusBound(Spherical.latLngBound(sg), dist.getOrElse(0.0)))
-              else {
-                val env = new Envelope(sg.getEnvelopeInternal)
-                dist.foreach(d => env.expandBy(d))
-                index.query(env)
-              }
-            if (candidates.isEmpty) Iterator.empty
-            else {
-              val nCand = candidates.size()
-              candidatePairs += nCand
-              // Speculative prepare (reference option.rs:276-301 /
-              // exec_mode_selector.rs): building the prepared geometry's
-              // edge index costs more than one or two plain relate ops, so
-              // only prepare when enough index hits will amortize it.
-              val prepared: PreparedGeometry =
-                if (!spherical && dist.isEmpty && nCand >= prepareThreshold)
-                  PreparedGeometryFactory.prepare(sg)
-                else null
-              val it = candidates.iterator()
-              new Iterator[BuildRow] {
-                override def hasNext: Boolean = it.hasNext
-                override def next(): BuildRow = it.next().asInstanceOf[BuildRow]
-              }.filter { b =>
-                if (spherical) refineSphere(sg, pred, b.geom, dist.getOrElse(0.0))
-                else dist match {
-                  case Some(d) => sg.isWithinDistance(b.geom, d)
-                  case None =>
-                    if (prepared != null) refine(prepared, pred, b.geom)
-                    else refineDirect(sg, pred, b.geom)
-                }
-              }.map { b =>
-                if (bIsLeft) joined(b.row, streamRow) else joined(streamRow, b.row)
-              }
-            }
-          }
-        val filtered = boundExtra match {
-          case Some(c) => matches.filter(r => java.lang.Boolean.TRUE == c.eval(r))
-          case None => matches
-        }
+        val filtered = probe(index, streamRow)
         jt match {
           case Inner | Cross =>
             filtered.map { r => numOutputRows += 1; r }
@@ -206,8 +158,96 @@ case class BroadcastIndexSpatialJoinExec(
 
 object BroadcastIndexSpatialJoinExec {
 
-  /** A build-side row with its parsed geometry: the index's item. */
-  final class BuildRow(val geom: Geometry, val row: InternalRow)
+  /** A build-side row with its parsed geometry and its [[buildBound]]:
+    * the index's item. */
+  final class BuildRow(val geom: Geometry, val row: InternalRow, val bound: Envelope)
+
+  /** Whether `pred` (a `SpatialPredicate.Extracted` name) is spherical. */
+  def isSpherical(pred: String): Boolean =
+    SpatialPredicate.sphereRelationPreds(pred) || pred == "st_dwithinsphere"
+
+  /** A build geometry's bound in the index: its envelope, or on the
+    * sphere its `Spherical.latLngBound`. */
+  def buildBound(g: Geometry, spherical: Boolean): Envelope =
+    if (spherical) Spherical.latLngBound(g) else g.getEnvelopeInternal
+
+  /** A stream geometry's probe bound: its envelope widened by the
+    * distance, or on the sphere its `Spherical.latLngBound` widened by the
+    * radius (`Spherical.radiusBound`). */
+  def streamBound(g: Geometry, dist: Option[Double], spherical: Boolean): Envelope =
+    if (spherical) Spherical.radiusBound(Spherical.latLngBound(g), dist.getOrElse(0.0))
+    else {
+      val env = new Envelope(g.getEnvelopeInternal)
+      dist.foreach(d => env.expandBy(d))
+      env
+    }
+
+  /** A distance expression's value; SQL `st_dwithin(a, b, 2.0)` carries a
+    * DECIMAL literal. */
+  def distanceOf(e: Expression, row: InternalRow): Double = e.eval(row) match {
+    case d: org.apache.spark.sql.types.Decimal => d.toDouble
+    case n: Number => n.doubleValue()
+  }
+
+  /** The per-row probe of both index joins: a stream row's index
+    * candidates that `keep` admits, refined by the predicate, joined with
+    * the stream row in child order and filtered by the extra condition.
+    * One per task, over bound expressions: it reuses its joined row. */
+  final class Probe(streamGeom: Expression, distance: Option[Expression],
+      extra: Option[Expression], pred: String, buildIsLeft: Boolean,
+      candidatePairs: SQLMetric) {
+    private val spherical = isSpherical(pred)
+    private val joined = new JoinedRow()
+
+    /** `keep(streamBound, candidate)` admits the candidates this probe
+      * owns; null admits all. */
+    def apply(index: BuildIndex, streamRow: InternalRow,
+        keep: (Envelope, BuildRow) => Boolean = null): Iterator[InternalRow] = {
+      val gBytes = streamGeom.eval(streamRow)
+      if (gBytes == null) return Iterator.empty
+      val sg = GeomIO.read(gBytes.asInstanceOf[Array[Byte]])
+      val dist = distance.map(distanceOf(_, streamRow))
+      val q = streamBound(sg, dist, spherical)
+      val found = if (spherical) index.querySphere(q) else index.query(q)
+      val candidates =
+        if (keep == null) found
+        else {
+          val kept = new java.util.ArrayList[AnyRef](found.size)
+          found.forEach(c => if (keep(q, c.asInstanceOf[BuildRow])) kept.add(c))
+          kept
+        }
+      if (candidates.isEmpty) return Iterator.empty
+      val nCand = candidates.size()
+      candidatePairs += nCand
+      // Speculative prepare (reference option.rs:276-301 /
+      // exec_mode_selector.rs): building the prepared geometry's
+      // edge index costs more than one or two plain relate ops, so
+      // only prepare when enough index hits will amortize it.
+      val prepared: PreparedGeometry =
+        if (!spherical && dist.isEmpty && nCand >= prepareThreshold)
+          PreparedGeometryFactory.prepare(sg)
+        else null
+      val it = candidates.iterator()
+      val matches = new Iterator[BuildRow] {
+        override def hasNext: Boolean = it.hasNext
+        override def next(): BuildRow = it.next().asInstanceOf[BuildRow]
+      }.filter { b =>
+        if (spherical) refineSphere(sg, pred, b.geom, dist.getOrElse(0.0))
+        else dist match {
+          case Some(d) => sg.isWithinDistance(b.geom, d)
+          case None =>
+            if (prepared != null) refine(prepared, pred, b.geom)
+            else refineDirect(sg, pred, b.geom)
+        }
+      }.map { b =>
+        if (buildIsLeft) joined(b.row, streamRow) else joined(streamRow, b.row)
+      }
+      extra match {
+        case Some(c) => matches.filter(r => java.lang.Boolean.TRUE == c.eval(r))
+        case None => matches
+      }
+    }
+  }
 
   /** The index over one broadcast build side: an HPRtree of the rows'
     * envelopes — planar, or in spherical mode their spherical bounds.
@@ -221,11 +261,10 @@ object BroadcastIndexSpatialJoinExec {
       tree.query(env).asInstanceOf[java.util.List[AnyRef]]
 
     /** Build rows whose spherical bound meets the probe bound `q` (a
-      * `Spherical.radiusBound`) — `sphereRelationJoin`'s lonOverlap
-      * rules: a probe ≥ 180° wide is the full ring, a narrower one is
-      * matched at longitude shifts 0 and ±360. Each row is returned once:
-      * a tree bound and a probe both under 180° wide can meet at most one
-      * of the shifts, which lie 360° apart. */
+      * `Spherical.radiusBound`): a probe ≥ 180° wide is the full ring, a
+      * narrower one is matched at longitude shifts 0 and ±360. Each row is
+      * returned once: a tree bound and a probe both under 180° wide can
+      * meet at most one of the shifts, which lie 360° apart. */
     def querySphere(q: Envelope): java.util.List[AnyRef] = {
       val out = new java.util.ArrayList[AnyRef]()
       if (q.isNull) return out
@@ -242,9 +281,10 @@ object BroadcastIndexSpatialJoinExec {
     }
   }
 
-  private val Shifts = Array(0.0, 360.0, -360.0)
+  private[joins] val Shifts = Array(0.0, 360.0, -360.0)
 
-  private def buildIndex(rows: Array[InternalRow], geomExpr: Expression,
+  /** The index over `rows`, skipping null and empty geometries. */
+  def buildIndex(rows: Iterator[InternalRow], geomExpr: Expression,
       spherical: Boolean): BuildIndex = {
     val tree = new HPRtree()
     val fullRing = Array.newBuilder[(Envelope, BuildRow)]
@@ -253,12 +293,10 @@ object BroadcastIndexSpatialJoinExec {
       if (bytes != null) {
         val g = GeomIO.read(bytes.asInstanceOf[Array[Byte]])
         if (!g.isEmpty) {
-          val b = new BuildRow(g, row)
-          if (!spherical) tree.insert(g.getEnvelopeInternal, b)
-          else {
-            val env = Spherical.latLngBound(g)
-            if (env.getWidth >= 180.0) fullRing += ((env, b)) else tree.insert(env, b)
-          }
+          val env = buildBound(g, spherical)
+          val b = new BuildRow(g, row, env)
+          if (spherical && env.getWidth >= 180.0) fullRing += ((env, b))
+          else tree.insert(env, b)
         }
       }
     }
@@ -287,7 +325,7 @@ object BroadcastIndexSpatialJoinExec {
       val key = (geomExpr, spherical)
       val cached = perBroadcast.get(key)
       Option(if (cached == null) null else cached.get).getOrElse {
-        val index = buildIndex(rows, geomExpr, spherical)
+        val index = buildIndex(rows.iterator, geomExpr, spherical)
         perBroadcast.put(key, new java.lang.ref.WeakReference(index))
         index
       }

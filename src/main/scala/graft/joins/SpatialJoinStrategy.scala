@@ -3,19 +3,19 @@ package graft.joins
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans._
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, JoinHint, LogicalPlan, SHUFFLE_HASH, SHUFFLE_MERGE}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
-import graft.plans.{RangeJoinShapes, SphereJoinRule}
+import graft.plans.{RangeJoinShapes, SpatialJoinRule}
 
-/** Plans joins whose condition carries a spatial predicate into
-  * BroadcastIndexSpatialJoinExec. Mirrors the reference's
-  * SpatialJoinLogicalRewrite + physical planner chain
-  * (rust/sedona-query-planner/src/optimizer.rs:197-260,
-  * spatial_join_physical_planner.rs:45-97), collapsed into one Catalyst
-  * Strategy: Catalyst's PushPredicateThroughJoin already folds
-  * Filter-over-cross-join into the join condition (the reference needed
-  * MergeSpatialFilterIntoJoin for this, optimizer.rs:313-339).
+/** Plans joins whose condition carries a spatial predicate onto the two
+  * index joins. Mirrors the reference's SpatialJoinLogicalRewrite +
+  * physical planner chain (rust/sedona-query-planner/src/
+  * optimizer.rs:197-260, spatial_join_physical_planner.rs:45-97),
+  * collapsed into one Catalyst Strategy: Catalyst's
+  * PushPredicateThroughJoin already folds Filter-over-cross-join into the
+  * join condition (the reference needed MergeSpatialFilterIntoJoin for
+  * this, optimizer.rs:313-339).
   *
   * Both predicate families plan here: planar (`SpatialPredicate.extract`)
   * and, unless `spark.graft.join.sphere.enabled=false`, spherical
@@ -24,19 +24,24 @@ import graft.plans.{RangeJoinShapes, SphereJoinRule}
   * joins through the same build/probe/refine operator
   * (rust/sedona/src/context.rs:163-172).
   *
-  * Build-side choice by plan statistics ([[SpatialJoinStrategy.buildSide]],
-  * the reference's spatial_join_reordering, option.rs:105-108). Joins with
-  * an equi-conjunct are left to Spark's hash joins, matching the reference
-  * (optimizer.rs:253-257): a hash join on the equi key beats an index join
-  * that ignores it.
+  * One decision per join:
+  *   - a build side ([[SpatialJoinStrategy.buildSide]], by plan
+  *     statistics — the reference's spatial_join_reordering,
+  *     option.rs:105-108): BroadcastIndexSpatialJoinExec, for every join
+  *     type it runs ([[SpatialJoinStrategy.indexJoin]]);
+  *   - none, INNER / CROSS and not streaming:
+  *     PartitionedIndexSpatialJoinExec
+  *     ([[SpatialJoinStrategy.partitionedJoin]]). A side hinted
+  *     SHUFFLE_HASH / SHUFFLE_MERGE is no build side, so the hint asks
+  *     for this operator;
+  *   - otherwise Nil. `SpatialJoinRule` composes the other join types
+  *     around an inner join before planning, so a spatial join reaches
+  *     here unplanned only when it is streaming, is a mark join, has a
+  *     distance no one side can evaluate, or its switch is off.
   *
-  * Falls back (Nil) when no side can be the build. GridSpatialJoinRule
-  * (planar) and SphereJoinRule (spherical) rewrite exactly those joins
-  * of type INNER / CROSS, LEFT OUTER / SEMI / ANTI and FULL OUTER onto
-  * their shuffle-partitioned grids, so a spatial join reaches here
-  * without a build side only when it is a RIGHT OUTER or existence join,
-  * is streaming, has a distance its rule cannot bind to the left side,
-  * or its rule is switched off.
+  * Joins with an equi-conjunct are left to Spark's hash joins, matching
+  * the reference (optimizer.rs:253-257): a hash join on the equi key
+  * beats an index join that ignores it.
   */
 case class SpatialJoinStrategy(spark: SparkSession) extends SparkStrategy {
 
@@ -74,13 +79,14 @@ case class SpatialJoinStrategy(spark: SparkSession) extends SparkStrategy {
           objectIsLeft = true, spheroid = sph))
       else Nil
 
-    case Join(left, right, joinType, Some(cond), _) =>
-      SpatialJoinStrategy.indexJoin(spark, joinType, left, right, cond).map {
+    case j @ Join(left, right, joinType, Some(cond), hint) =>
+      // predicate oriented as pred(streamG, buildG)
+      def oriented(ex: SpatialPredicate.Extracted, buildLeft: Boolean) =
+        if (buildLeft) (ex.rightGeom, ex.leftGeom, SpatialPredicate.invert(ex.predName))
+        else (ex.leftGeom, ex.rightGeom, ex.predName)
+      SpatialJoinStrategy.indexJoin(spark, joinType, left, right, cond, hint).map {
         case (ex, buildLeft) =>
-          // orient predicate as pred(streamG, buildG)
-          val (streamGeom, buildGeom, streamPred) =
-            if (buildLeft) (ex.rightGeom, ex.leftGeom, SpatialPredicate.invert(ex.predName))
-            else (ex.leftGeom, ex.rightGeom, ex.predName)
+          val (streamGeom, buildGeom, streamPred) = oriented(ex, buildLeft)
           BroadcastIndexSpatialJoinExec(
             buildPlan = planLater(if (buildLeft) left else right),
             streamPlan = planLater(if (buildLeft) right else left),
@@ -91,7 +97,14 @@ case class SpatialJoinStrategy(spark: SparkSession) extends SparkStrategy {
             buildIsLeft = buildLeft,
             joinType = joinType,
             extraCondition = ex.remainder)
-      }.toList
+      }.orElse(
+        if (j.isStreaming) None
+        else SpatialJoinStrategy.partitionedJoin(spark, joinType, left, right, cond).map {
+          case (ex, buildLeft) =>
+            val (streamGeom, buildGeom, streamPred) = oriented(ex, buildLeft)
+            PartitionedIndexSpatialJoinExec(planLater(left), planLater(right),
+              buildGeom, streamGeom, streamPred, ex.distance, buildLeft, ex.remainder)
+        }).toList
     case _ => Nil
   }
 }
@@ -99,37 +112,67 @@ case class SpatialJoinStrategy(spark: SparkSession) extends SparkStrategy {
 object SpatialJoinStrategy {
 
   /** How the broadcast index join takes `Join(left, right, joinType,
-    * cond)`: the recognized predicate and the side it builds (`true`:
-    * left), or None when it cannot take the join — an unsupported join
-    * type, an equi-conjunct (Spark's hash joins are better), no
-    * recognized predicate, no [[buildSide]], or a distance the stream
-    * side cannot evaluate. */
+    * cond, hint)`: the recognized predicate and the side it builds
+    * (`true`: left), or None when it cannot take the join — an
+    * unsupported join type, an equi-conjunct (Spark's hash joins are
+    * better), no recognized predicate, no [[buildSide]], or a distance the
+    * stream side cannot evaluate. */
   def indexJoin(spark: SparkSession, joinType: JoinType, left: LogicalPlan,
-      right: LogicalPlan, cond: Expression): Option[(SpatialPredicate.Extracted, Boolean)] = {
+      right: LogicalPlan, cond: Expression,
+      hint: JoinHint): Option[(SpatialPredicate.Extracted, Boolean)] = {
     val supported = joinType match {
       case Inner | Cross | LeftOuter | RightOuter | LeftSemi | LeftAnti | _: ExistenceJoin => true
       case _ => false
     }
     if (!supported || RangeJoinShapes.hasEquiConjunct(cond, left, right)) None
     else for {
-      ex <- SpatialPredicate.extract(cond, left, right).orElse(
-        if (SphereJoinRule.enabled(spark)) SpatialPredicate.extractSphere(cond, left, right)
-        else None)
-      buildLeft <- buildSide(spark.sessionState.conf, joinType, left, right)
+      ex <- extract(spark, planar = true, cond, left, right)
+      buildLeft <- buildSide(spark.sessionState.conf, joinType, left, right, hint)
       if ex.distance.forall(_.references.subsetOf((if (buildLeft) right else left).outputSet))
     } yield (ex, buildLeft)
   }
 
+  /** How the partitioned index join takes an INNER / CROSS join: the
+    * recognized predicate — planar while `spark.graft.join.grid.enabled`,
+    * spherical while `spark.graft.join.sphere.enabled` — and the side it
+    * builds (`true`: left), the smaller by plan statistics of the sides
+    * the distance leaves free to build. None for another join type, an
+    * equi-conjunct, no recognized predicate, or a distance that
+    * references both sides. */
+  def partitionedJoin(spark: SparkSession, joinType: JoinType, left: LogicalPlan,
+      right: LogicalPlan, cond: Expression): Option[(SpatialPredicate.Extracted, Boolean)] =
+    if ((joinType != Inner && joinType != Cross) ||
+        RangeJoinShapes.hasEquiConjunct(cond, left, right)) None
+    else extract(spark, SpatialJoinRule.planarEnabled(spark), cond, left, right).flatMap { ex =>
+      def streams(side: LogicalPlan) = ex.distance.forall(_.references.subsetOf(side.outputSet))
+      val buildLeft =
+        if (streams(left) && streams(right))
+          Some(left.stats.sizeInBytes <= right.stats.sizeInBytes)
+        else if (streams(right)) Some(true)
+        else if (streams(left)) Some(false)
+        else None
+      buildLeft.map(ex -> _)
+    }
+
+  /** The first recognized spatial conjunct of `cond`: planar when
+    * `planar`, else spherical while `spark.graft.join.sphere.enabled`. */
+  private def extract(spark: SparkSession, planar: Boolean, cond: Expression,
+      left: LogicalPlan, right: LogicalPlan): Option[SpatialPredicate.Extracted] =
+    (if (planar) SpatialPredicate.extract(cond, left, right) else None).orElse(
+      if (SpatialJoinRule.sphereEnabled(spark)) SpatialPredicate.extractSphere(cond, left, right)
+      else None)
+
   /** The side the broadcast index join builds (`Some(true)`: left), or
     * None when it cannot take the join. A side can build when it fits
     * `spark.sql.autoBroadcastJoinThreshold` (so never with broadcast
-    * disabled) and is not preserved by the join type: the preserved side
-    * always streams, since broadcasting it would need cross-partition
-    * match bookkeeping to pad/emit/suppress. Of two such sides the
-    * smaller builds. SphereJoinRule rewrites a sphere join onto its grid
-    * exactly when this is None, so the two never disagree. */
-  def buildSide(conf: SQLConf, joinType: JoinType,
-      left: LogicalPlan, right: LogicalPlan): Option[Boolean] = {
+    * disabled), is not hinted SHUFFLE_HASH / SHUFFLE_MERGE and is not
+    * preserved by the join type: the preserved side always streams, since
+    * broadcasting it would need cross-partition match bookkeeping to
+    * pad/emit/suppress. Of two such sides the smaller builds.
+    * `SpatialJoinRule` composes a non-inner join exactly when this is
+    * None, so the two never disagree. */
+  def buildSide(conf: SQLConf, joinType: JoinType, left: LogicalPlan,
+      right: LogicalPlan, hint: JoinHint): Option[Boolean] = {
     val threshold = conf.autoBroadcastJoinThreshold
     val leftSize = left.stats.sizeInBytes
     val rightSize = right.stats.sizeInBytes
@@ -138,8 +181,12 @@ object SpatialJoinStrategy {
       case _ => false
     }
     val rightPreserved = joinType == RightOuter || joinType == FullOuter
-    val canBroadcastLeft = leftSize >= 0 && leftSize <= threshold && !leftPreserved
-    val canBroadcastRight = rightSize >= 0 && rightSize <= threshold && !rightPreserved
+    def shuffleHinted(h: Option[HintInfo]) =
+      h.flatMap(_.strategy).exists(s => s == SHUFFLE_HASH || s == SHUFFLE_MERGE)
+    val canBroadcastLeft = leftSize >= 0 && leftSize <= threshold && !leftPreserved &&
+      !shuffleHinted(hint.leftHint)
+    val canBroadcastRight = rightSize >= 0 && rightSize <= threshold && !rightPreserved &&
+      !shuffleHinted(hint.rightHint)
     if (canBroadcastLeft && canBroadcastRight) Some(leftSize <= rightSize)
     else if (canBroadcastLeft) Some(true)
     else if (canBroadcastRight) Some(false)

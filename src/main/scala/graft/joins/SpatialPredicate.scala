@@ -82,12 +82,15 @@ object SpatialPredicate {
       }
   }
 
-  /** The first planar spatial conjunct of `cond`. */
+  /** The first planar spatial conjunct of `cond`. The distance forms
+    * extract as `st_dwithin`; a strict `st_distance(a, b) < d` keeps the
+    * original conjunct first in the remainder, so pairs at exactly
+    * distance d stay excluded. */
   def extract(cond: Expression, left: LogicalPlan, right: LogicalPlan): Option[Extracted] =
     extractWith(cond, left, right) { (p, sides) =>
-      def dwithin(a: Expression, b: Expression, d: Expression) =
+      def dwithin(a: Expression, b: Expression, d: Expression, keep: Seq[Expression] = Nil) =
         sides(a, b).map { case (lg, rg, _) =>
-          (Extracted("st_dwithin", lg, rg, Some(d), None), Nil)
+          (Extracted("st_dwithin", lg, rg, Some(d), None), keep)
         }
       p match {
         case GeomScalar(rawName, Seq(a, b), _, _, _) if relationPreds(rawName) =>
@@ -98,7 +101,8 @@ object SpatialPredicate {
             (Extracted(if (swapped) invert(name) else name, lg, rg, None, None), Nil)
           }
         case GeomScalar("st_dwithin", Seq(a, b, d), _, _, _) => dwithin(a, b, d)
-        case LessThan(GeomScalar("st_distance", Seq(a, b), _, _, _), d) => dwithin(a, b, d)
+        case LessThan(GeomScalar("st_distance", Seq(a, b), _, _, _), d) =>
+          dwithin(a, b, d, Seq(p))
         case LessThanOrEqual(GeomScalar("st_distance", Seq(a, b), _, _, _), d) =>
           dwithin(a, b, d)
         case _ => None

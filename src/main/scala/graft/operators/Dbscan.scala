@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** Distributed DBSCAN (Ester et al., KDD'96), composed from the engine's
   * own scale primitives instead of a bespoke clusterer:
   *
-  *   1. eps-neighbor pairs from the partitioned GRID join — one cell
-  *      equi-shuffle, reference-cell dedup, never an all-pairs product;
+  *   1. eps-neighbor pairs from an `st_dwithin` self-join, which plans
+  *      an index join (the partitioned one when the points do not
+  *      broadcast), never an all-pairs product;
   *   2. core points from one degree aggregation
   *      (|N_eps(p)| >= minPts, N including p itself);
   *   3. cluster ids from the size-adaptive connected components of the
@@ -40,16 +41,14 @@ object Dbscan {
   /** DBSCAN over `df` (see the object doc for the algorithm).
     *
     * Eager: this runs Spark actions while the result plan is being
-    * built — the grid join's envelope pre-pass when `bounds` is None, a
-    * `pairs.count()` that picks the local or distributed finish by size
+    * built — a `pairs.count()` that picks the local or distributed finish by size
     * (and warms the persisted point and pair caches), the local finish's
     * collect, or on the distributed path the connected-components
     * actions (see `PipelineOps.connectedComponents`). The caches register
     * with `CacheRegistry` `afterCurrent`, so these construction-time
     * actions cannot release them before the caller's query runs. */
   def dbscan(df: DataFrame, id: Column, geom: Column, eps: Double,
-      minPts: Int, bounds: Option[(Double, Double, Double, Double)] = None,
-      nx: Int = 64, ny: Int = 64): DataFrame = {
+      minPts: Int): DataFrame = {
     require(eps > 0 && minPts >= 1, s"dbscan: bad eps=$eps minPts=$minPts")
     import org.apache.spark.sql.graft.DatasetBridge
     val spark = df.sparkSession
@@ -79,8 +78,7 @@ object Dbscan {
     val l = pts.select(col("__pid").as("__ida"), col("__pg").as("__ga"))
     val r = pts.select(col("__pid").as("__idb"), col("__pg").as("__gb"))
     val pairsBarrier = new Barrier(
-      SpatialJoins.gridJoin(l, r, col("__ga"), col("__gb"), "st_dwithin",
-          bounds, nx, ny, distance = Some(lit(eps)))
+      l.join(r, graft.functions.GraftFunctions.st.dwithin(col("__ga"), col("__gb"), lit(eps)))
         .filter(col("__ida") =!= col("__idb"))
         .select(col("__ida"), col("__idb")))
     val pairs = pairsBarrier.df
@@ -136,8 +134,8 @@ object Dbscan {
   }
 
   /** One driver pass over the packed (a, b) neighbor-pair rows (both
-    * orientations present, exactly once each — the grid join's
-    * reference-cell dedup guarantees it): degree per id from the first
+    * orientations present, exactly once each — the index joins emit each
+    * matching pair once): degree per id from the first
     * position, cores at degree+1 >= minPts, min-rooted union-find over
     * core-core rows (ids sorted, union at the smaller index, so every
     * root IS its component's minimum core id — the same invariant as

@@ -10,42 +10,41 @@ import graft.geom.GeomIO
 
 /** Whole-operator spatial joins exposed as DataFrame combinators.
   *
-  * - `gridJoin`: the 100TB path — both sides shuffle-partitioned on a
+  * - `gridJoin`: the streaming spatial join — both sides exploded onto a
   *   uniform grid, geometries duplicated into every overlapped cell, pairs
-  *   deduplicated by the reference-point rule. This is the reference's
-  *   out-of-core partitioned join (rust/sedona-spatial-join/src/
-  *   partitioning/kdb.rs:20-46, multi-assignment + dedup) re-expressed as
-  *   explode + equi-join so Catalyst/Tungsten run the shuffle, AQE handles
-  *   skew, and our ST_ predicate refines per cell.
+  *   deduplicated by the reference-point rule. The cell id is the equi
+  *   key a streaming join needs for its state. A batch spatial join is
+  *   written as a plain join and plans an index join
+  *   (`graft.joins.SpatialJoinStrategy`).
   *
   * - `knnJoin`: k nearest neighbours with deterministic tie-breaking —
   *   reference semantics from index/default_spatial_index.rs:359-430
   *   (neighbour search + tie re-search) and probe/knn_results_merger.rs.
   *   Objects side is broadcast; the scale path for a large object side is
-  *   gridJoin with a distance bound then rank-per-query.
+  *   `knnJoinGrid`.
   */
 object SpatialJoins {
   import graft.functions.GraftFunctions.st
 
-  /** Spatial join of two large inputs via grid partitioning.
+  /** Spatial join on a grid-cell equi key, for streaming inputs
+    * (`StreamingOps.streamSpatialJoin`, stream-static joins).
     *
     * @param predicate SQL name of the refinement predicate, e.g.
     *   "st_intersects" (applied as predicate(leftGeom, rightGeom))
-    * @param bounds (xmin, ymin, xmax, ymax) of the data; pass None to
-    *   compute with an envelope-aggregate pre-pass
+    * @param bounds (xmin, ymin, xmax, ymax) of the data: an unbounded
+    *   stream has no extent to compute
     * @param nx, ny grid resolution — tune so cells hold O(10k) geometries
     */
   def gridJoin(
       left: DataFrame, right: DataFrame,
       leftGeom: Column, rightGeom: Column,
       predicate: String,
-      bounds: Option[(Double, Double, Double, Double)] = None,
+      bounds: (Double, Double, Double, Double),
       nx: Int = 64, ny: Int = 64,
       distance: Option[Column] = None,
       extraCond: Option[Column] = None): DataFrame = {
 
-    val (xmin, ymin, xmax, ymax) =
-      bounds.getOrElse(gridBounds(left, right, leftGeom, rightGeom))
+    val (xmin, ymin, xmax, ymax) = bounds
     def cells4(e4: Column): Column = st.f("sd_gridcells4", e4,
       lit(xmin), lit(ymin), lit(xmax), lit(ymax), lit(nx), lit(ny))
 
@@ -85,21 +84,14 @@ object SpatialJoins {
     }
     val cond = col("__lcell") === col("__rcell") &&
       bboxOverlap && refCell === col("__lcell") && refine
-    // (opt r17 note: the spherical joins redistribute their larger side
-    // by cell before joining — see cellRepartitionLarger — because their
-    // per-pair refine is spherical trig over WKB. The planar refine here
-    // is double-interval math + one cheap JTS predicate; an A/B showed
-    // the extra exchange LOSES at gate scale (gs01 2.07→2.71 s) and at
-    // cluster scale the join's own shuffle already provides the width,
-    // so the planar path deliberately stays as-is.)
     l.join(r, extraCond.map(cond && _).getOrElse(cond))
       .drop("__lcell", "__rcell", "__l4", "__r4", "__lg", "__rg")
   }
 
-  /** Grid extent of a [[gridJoin]] or [[knnJoinGrid]]: the min/max of both
-    * sides' envelopes, one partial-aggregated envelope pre-pass. When
-    * neither side has a non-empty geometry no row explodes into a cell, so
-    * any extent gives the (empty) join; the unit square stands in.
+  /** Grid extent of a [[knnJoinGrid]]: the min/max of both sides'
+    * envelopes, one partial-aggregated envelope pre-pass. When neither
+    * side has a non-empty geometry no row explodes into a cell, so any
+    * extent gives the (empty) join; the unit square stands in.
     *
     * The pre-pass collects through the physical plan, so no query
     * listener sees it: inside a planner rule, a completed query would
@@ -116,183 +108,9 @@ object SpatialJoins {
     else (row.getDouble(0), row.getDouble(1), row.getDouble(2), row.getDouble(3))
   }
 
-  /** Geography (spherical) distance join — both sides shuffle-partitioned
-    * on a wrap-safe lat-lon grid, pairs refined with great-circle
-    * st_dwithinsphere and deduplicated by the canonical-common-cell rule.
-    * The Spark re-expression of the reference's S2-based geography join
-    * (rust/sedona-spatial-join-geography, planner fallback at
-    * context.rs:163-172): cell-id equality makes it a regular shuffled
-    * equi-join, so AQE skew handling applies; antimeridian and pole cases
-    * are covered by the cell kernel, not special-cased join logic.
-    *
-    * @param radiusM great-circle radius in meters
-    * @param nx,ny   grid resolution over lon [-180,180] x lat [-90,90]
-    */
-  def sphereDWithinJoin(
-      left: DataFrame, right: DataFrame,
-      leftGeom: Column, rightGeom: Column,
-      radiusM: Double,
-      nx: Int = 360, ny: Int = 180): DataFrame = {
-    // spherical bound computed ONCE per row (sd_envelopesphere4), so the
-    // per-pair conjuncts — lat-band overlap, canonical-cell dedup — are
-    // double arithmetic with no WKB re-parse; the great-circle refine
-    // runs last, only on pairs the cheap conjuncts admit (the same
-    // carried-envelope layout as the planar gridJoin)
-    val dLat = math.toDegrees(radiusM / graft.functions.Spherical.R)
-    val l = left.withColumn("__lg", leftGeom)
-      .withColumn("__l4", st.f("sd_envelopesphere4", col("__lg")))
-      .withColumn("__cell", explode(st.f("sd_gridcells_sphere4_adaptive", col("__l4"),
-        lit(radiusM), lit(nx), lit(ny), lit(MaxFineCells))))
-    val r = right.withColumn("__rg", rightGeom)
-      .withColumn("__r4", st.f("sd_envelopesphere4", col("__rg")))
-      .withColumn("__cell", explode(st.f("sd_gridcells_sphere4_dual", col("__r4"),
-        lit(0.0), lit(nx), lit(ny))))
-    def le(k: Int) = element_at(col("__l4"), k)
-    def re(k: Int) = element_at(col("__r4"), k)
-    val latOverlap = le(2) - lit(dLat) <= re(4) && re(2) <= le(4) + lit(dLat)
-    // Distribute the LARGER candidate set by cell before the join (opt
-    // r17): cell is the join's own equi-key, so at scale a sort-merge/
-    // hash plan reuses the exchange outright — and when the smaller side
-    // broadcasts (gate scale), the probe side no longer inherits the
-    // SCAN's split count (one task per small parquet file) for the
-    // expensive great-circle refine: the per-pair work spreads over the
-    // session's shuffle width either way. The smaller side is left
-    // alone so the broadcast fast path stays shuffle-free. Explicit N
-    // pins the width (AQE would coalesce a few-MB exploded set back to
-    // one task — the exact straggler this fixes).
-    val (lp, rp) = cellRepartitionLarger(left, right, l, r)
-    lp.join(rp, lp("__cell") === rp("__cell")
-        && latOverlap
-        && levelRefCell(lp("__cell"), lit(radiusM), nx, ny)
-        && st.f("st_dwithinsphere", col("__lg"), col("__rg"), lit(radiusM)))
-      .drop("__cell", "__lg", "__rg", "__l4", "__r4")
-  }
-
-  /** Fine cover budget before the adaptive side switches to coarse
-    * cells (two-level spherical grid — Spherical.gridCellsAdaptive). */
+  /** Fine cover budget before the KNN covers switch to nested coarse
+    * cells (`Spherical.gridCellsKnnCover`, `Grid.cellsKnnCover`). */
   val MaxFineCells = 256
-
-  /** Micro-join floor of [[cellRepartitionLarger]]: when even the larger
-    * input is under this many bytes, the whole candidate set is one
-    * cheap task and the extra exchange is pure overhead. Any
-    * production-scale side clears 1 MB by many orders of magnitude, so
-    * the floor only exempts toy inputs. */
-  private val RepartitionMinBytes: Long = 1L << 20
-
-  /** Cell-keyed pre-shuffle of the larger join input (its exploded
-    * frame), leaving the smaller input on the broadcast fast path.
-    * "Larger" by the optimizer's size estimate of the un-exploded
-    * inputs — both sides inflate by the same cover machinery, so the
-    * input ordering is the candidate-set ordering. */
-  private def cellRepartitionLarger(left: DataFrame, right: DataFrame,
-      l: DataFrame, r: DataFrame): (DataFrame, DataFrame) = {
-    val spark = left.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val lBytes = left.queryExecution.optimizedPlan.stats.sizeInBytes
-    val rBytes = right.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (lBytes.max(rBytes) < RepartitionMinBytes) return (l, r)
-    // Redistribute ONLY when the candidate side is actually
-    // under-parallelized (e.g. one task per small single-row-group
-    // file): a source that already scans wide — a big cluster input, a
-    // generated range — keeps its width, and the broadcast fast path
-    // stays exchange-free (measured: blanket redistribution cost
-    // sj13's m=10 ScaleBench run ~1.5 s of pure shuffle overhead on an
-    // already-32-way input).
-    //
-    // The toRdd probe is gated to EXCHANGE-FREE physical plans (ADVICE
-    // r17): under AQE, toRdd on a plan with an Exchange/Broadcast
-    // materializes the child stages at planning time — the work would
-    // run here, be discarded, and run again in the real query. A plan
-    // that carries its own exchange already gets the session's shuffle
-    // width from it, so "already wide" (no repartition) is also the
-    // semantically right answer for that case; only exchange-free scans
-    // (the gate case: one task per single-row-group file) are probed,
-    // where toRdd is pure planning. The catch is scoped to NonFatal so
-    // a genuine planning failure still surfaces in the real query, not
-    // here.
-    def width(df: DataFrame): Int =
-      try {
-        val plan = df.queryExecution.sparkPlan
-        val hasExchange = plan.exists {
-          case _: org.apache.spark.sql.execution.exchange.Exchange => true
-          case _ => false
-        }
-        if (hasExchange) parts
-        else df.queryExecution.toRdd.getNumPartitions
-      } catch { case scala.util.control.NonFatal(_) => parts }
-    val (bigIn, big, small, bigFirst) =
-      if (lBytes >= rBytes) (left, l, r, true) else (right, r, l, false)
-    if (width(bigIn) * 2 >= parts) (l, r)
-    else if (bigFirst) (big.repartition(parts, col("__cell")), small)
-    else (small, big.repartition(parts, col("__cell")))
-  }
-
-  /** Per-level canonical-cell dedup: a pair meets at the level the
-    * adaptive (left) row chose, so the refcell comparison runs against
-    * that level's grid (coarse ids carry the nx*ny offset). */
-  private def levelRefCell(cell: Column, radius: Column, nx: Int, ny: Int): Column = {
-    import graft.functions.Spherical.{coarseNx, coarseNy}
-    val off = nx.toLong * ny
-    when(cell < off,
-      st.f("sd_refcell_sphere4", col("__l4"), col("__r4"),
-        radius, lit(nx), lit(ny)) === cell)
-      .otherwise(
-        st.f("sd_refcell_sphere4", col("__l4"), col("__r4"),
-          radius, lit(coarseNx(nx)), lit(coarseNy(ny))) === cell - lit(off))
-  }
-
-  /** Geography intersects join: the dwithin machinery at radius 0 with
-    * the st_intersectssphere refine (winding containment + crossing
-    * geodesic arcs — the reference's geography sjoin surface,
-    * tests/geography/test_geog_sjoin.py). The modulo lon-interval
-    * pre-filter is gated off for bounds spanning ≥ 180° (polar caps,
-    * whose chart lon interval is not a cover); latitude overlap is
-    * always a valid cover test because latLngBound carries the geodesic
-    * bulges. */
-  def sphereIntersectsJoin(
-      left: DataFrame, right: DataFrame,
-      leftGeom: Column, rightGeom: Column,
-      nx: Int = 360, ny: Int = 180): DataFrame =
-    sphereRelationJoin(left, right, leftGeom, rightGeom, "st_intersectssphere", nx, ny)
-
-  /** The sphereIntersectsJoin machinery with a parameterized exact
-    * refine: any spherical binary predicate that IMPLIES envelope
-    * overlap (intersects / contains / within / covers / coveredby /
-    * equals — NOT disjoint) is admitted by the same radius-0 grid
-    * candidate generation, so the predicate only changes the last
-    * conjunct. The SQL planner's large-large path (`SphereJoinRule`)
-    * routes all recognized spherical relation predicates through here. */
-  def sphereRelationJoin(
-      left: DataFrame, right: DataFrame,
-      leftGeom: Column, rightGeom: Column,
-      predicate: String,
-      nx: Int = 360, ny: Int = 180): DataFrame = {
-    val l = left.withColumn("__lg", leftGeom)
-      .withColumn("__l4", st.f("sd_envelopesphere4", col("__lg")))
-      .withColumn("__cell", explode(st.f("sd_gridcells_sphere4_adaptive", col("__l4"),
-        lit(0.0), lit(nx), lit(ny), lit(MaxFineCells))))
-    val r = right.withColumn("__rg", rightGeom)
-      .withColumn("__r4", st.f("sd_envelopesphere4", col("__rg")))
-      .withColumn("__cell", explode(st.f("sd_gridcells_sphere4_dual", col("__r4"),
-        lit(0.0), lit(nx), lit(ny))))
-    def le(k: Int) = element_at(col("__l4"), k)
-    def re(k: Int) = element_at(col("__r4"), k)
-    val latOverlap = le(2) <= re(4) && re(2) <= le(4)
-    def lonOv(shift: Double) =
-      le(1) + lit(shift) <= re(3) && re(1) <= le(3) + lit(shift)
-    val lonOverlap = (le(3) - le(1) >= 180.0) || (re(3) - re(1) >= 180.0) ||
-      lonOv(0.0) || lonOv(360.0) || lonOv(-360.0)
-    // cell-keyed redistribution of the larger side before the join — see
-    // sphereDWithinJoin: exchange-reused at scale, and the winding/
-    // arc-crossing refine gets the session's full shuffle width instead
-    // of the scan's split count
-    val (lp, rp) = cellRepartitionLarger(left, right, l, r)
-    lp.join(rp, lp("__cell") === rp("__cell")
-        && latOverlap && lonOverlap
-        && levelRefCell(lp("__cell"), lit(0.0), nx, ny)
-        && st.f(predicate, col("__lg"), col("__rg")))
-      .drop("__cell", "__lg", "__rg", "__l4", "__r4")
-  }
 
   /** Partitioned KNN join — the scale path when the OBJECT side cannot be
     * broadcast (the reference's out-of-core kNN territory:
@@ -567,8 +385,7 @@ object SpatialJoins {
     *   - cells: `sd_gridcells_sphere4_knncover` — the lat/lon cover of
     *     the geometry's SPHERICAL envelope (S2 RectBounder latitude
     *     bulges) expanded by a geodesic radius in METERS, full-ring/
-    *     pole-touch fallbacks included (the cover kernel the sphere
-    *     dwithin join's candidate cover is gate-proven on, two-level);
+    *     pole-touch fallbacks included, two-level;
     *   - distance: `st_distancesphere` (haversine meters);
     *   - the "no candidates" fallback radius: half the circumference
     *     (π·R — the antipodal maximum), the spherical analog of the

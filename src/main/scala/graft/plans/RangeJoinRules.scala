@@ -86,7 +86,7 @@ object RangeJoinShapes {
 }
 
 /** Planner-level banded 1-D range join — the time/interval analog of
-  * `GridSpatialJoinRule`, giving SQL users writing
+  * the partitioned spatial join, giving SQL users writing
   * `l.ts BETWEEN r.lo AND r.hi` or
   * `l.lo <= r.hi AND r.lo <= l.hi` the banded equi-join plan instead of
   * Spark's quadratic BroadcastNestedLoopJoin.

@@ -1,25 +1,24 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
-import org.apache.spark.sql.catalyst.plans.{Cross, FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.{FullOuter, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id}
 import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.storage.StorageLevel
 import graft.CacheRegistry
-import graft.joins.SpatialJoinStrategy
 
-/** Every join type the theta-join rules rewrite, composed from one INNER
-  * join over row-id-tagged sides (the reference's spatial join runs all
-  * join types through one operator, rust/sedona-spatial-join/src/
-  * exec.rs:88; here the inner join is the rule's own plan and the other
-  * types are assembled around it):
+/** The non-inner theta joins, composed from one INNER join over
+  * row-id-tagged sides (the reference's spatial join runs all join types
+  * through one operator, rust/sedona-spatial-join/src/exec.rs:88; here
+  * the inner join is the caller's plan and the other types are assembled
+  * around it):
   *
-  *   INNER / CROSS  inner(L, R)
   *   LEFT SEMI      L' SEMI matched          L' = L + lid (persisted)
   *   LEFT ANTI      L' ANTI matched          matched = distinct lid of inner(L', R)
   *   LEFT OUTER     inner(L', R) ∪ (L' ANTI matched) × nulls
+  *   RIGHT OUTER    LEFT OUTER with the sides swapped, columns put back
   *   FULL OUTER     pairs ⋈ L' ⋈ R' ∪ (L' ANTI pairs.lid) × nulls
   *                    ∪ nulls × (R' ANTI pairs.rid)
   *                  R' = R + rid; pairs = (lid, rid) of inner(L', R'), persisted
@@ -45,28 +44,21 @@ private[plans] object TaggedJoin {
   type Build = (LogicalPlan, LogicalPlan) => DataFrame
 
   def handles(jt: JoinType): Boolean = jt match {
-    case Inner | Cross | LeftOuter | LeftSemi | LeftAnti | FullOuter => true
+    case LeftOuter | LeftSemi | LeftAnti | RightOuter | FullOuter => true
     case _ => false
   }
 
   /** `j` rewritten onto `inner`, or None when the rewrite declines. */
   def apply(session: SparkSession, j: Join)(inner: Build): Option[LogicalPlan] =
     j.joinType match {
-      case Inner | Cross => realias(j, inner(j.left, j.right))
       case _ if j.left.output.exists(clashes) || j.right.output.exists(clashes) => None
       case LeftOuter | LeftSemi | LeftAnti => leftTyped(session, j, inner)
+      case RightOuter =>
+        leftTyped(session, Join(j.right, j.left, LeftOuter, j.condition, JoinHint.NONE), inner)
+          .map(p => Project(j.output.map(a => p.output.find(_.exprId == a.exprId).get), p))
       case FullOuter => fullOuter(session, j, inner)
       case _ => None
     }
-
-  /** The inner join of the spatial rules: Spark's own join when the
-    * broadcast index join can take it (`SpatialJoinStrategy.indexJoin`),
-    * `grid` otherwise. */
-  def indexOrGrid(session: SparkSession, cond: Expression)(grid: Build): Build =
-    (l, r) =>
-      if (SpatialJoinStrategy.indexJoin(session, Inner, l, r, cond).isDefined)
-        DatasetBridge.ofRows(session, Join(l, r, Inner, Some(cond), JoinHint.NONE))
-      else grid(l, r)
 
   private def clashes(a: org.apache.spark.sql.catalyst.expressions.Attribute): Boolean =
     a.name.toLowerCase(java.util.Locale.ROOT).startsWith(Prefix)

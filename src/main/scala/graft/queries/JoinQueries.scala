@@ -7,7 +7,7 @@ import graft.functions.GraftFunctions.st
 import graft.operators.SpatialJoins
 
 /** Spatial join coverage (SURVEY.md §2.4): broadcast index join (inner +
-  * left outer), distance join, KNN join, and the shuffle-partitioned grid
+  * left outer), distance join, KNN join, and the partitioned index
   * join. Oracles are interval-logic SQL joins in plain DuckDB.
   */
 object JoinQueries {
@@ -207,10 +207,11 @@ object JoinQueries {
     }),
 
     // FULL OUTER spatial join (reference exec.rs:88, test_sjoin.py:34-36):
-    // GridSpatialJoinRule rewrites it through TaggedJoin, inner join plus
+    // SpatialJoinRule composes it through TaggedJoin, inner join plus
     // both-side anti-pads over row-id-tagged sides; the inner join takes
-    // the broadcast index path at gate scale (the large-large grid path
-    // is pinned in SpatialJoinSpec with set+collect inside one conf window)
+    // the broadcast index path at gate scale (the large-large partitioned
+    // path is pinned in SpatialJoinSpec with set+collect inside one conf
+    // window)
     "sj17_full_outer_join" -> ((s, dir) => {
       val pts = orderPoints(s, dir).select(col("o_orderkey"), col("pt"))
       val boxes = partBoxes(s, dir).select(col("p_partkey"), col("box"))
@@ -218,10 +219,11 @@ object JoinQueries {
         .select(col("o_orderkey"), col("p_partkey"))
     }),
 
-    // geography intersects join (st_intersectssphere refine over the
-    // radius-0 grid cover). Point-in-quad membership rides the chart
-    // containment branch of the spherical distance kernel, so the
-    // oracle's interval logic states the identical predicate.
+    // geography intersects join on the partitioned index join (both sides
+    // hinted SHUFFLE_HASH, so neither builds a broadcast). Point-in-quad
+    // membership rides the chart containment branch of the spherical
+    // distance kernel, so the oracle's interval logic states the
+    // identical predicate.
     "sj13_sphere_intersects_join" -> ((s, dir) => {
       val quads = t(s, dir, "part")
         .withColumn("qxmin", (col("p_partkey") % 60).cast("double") * 6.0 - 180.0)
@@ -254,12 +256,12 @@ object JoinQueries {
         .withColumn("plat", (col("o_custkey") % 56).cast("double") * 3.0 - 83.75)
         .withColumn("pt", st.point(col("plon"), col("plat")))
         .select(col("o_orderkey"), col("pt"))
-      SpatialJoins.sphereIntersectsJoin(
-          quads.union(wrapQuads).union(caps), pts, col("quad"), col("pt"))
+      quads.union(wrapQuads).union(caps).hint("shuffle_hash")
+        .join(pts.hint("shuffle_hash"), st.f("st_intersectssphere", col("quad"), col("pt")))
         .select(col("p_partkey"), col("o_orderkey"))
     }),
 
-    // distributed DBSCAN: eps-neighbor graph from the grid join, core
+    // distributed DBSCAN: eps-neighbor graph from a spatial self-join, core
     // points from one degree agg, clusters from connected components of
     // the core-core subgraph, borders to the min neighboring cluster —
     // the whole clusterer composed from scale primitives (no all-pairs)
@@ -273,17 +275,15 @@ object JoinQueries {
         .withColumn("y", ((col("o_custkey") * 11) % 120).cast("double"))
         .select(col("o_orderkey").cast("long").as("oid"),
           st.point(col("x"), col("y")).as("pt"))
-      graft.operators.Dbscan.dbscan(pts, col("oid"), col("pt"),
-          eps = 2.5, minPts = 4,
-          bounds = Some((0.0, 0.0, 200.0, 120.0)), nx = 80, ny = 48)
+      graft.operators.Dbscan.dbscan(pts, col("oid"), col("pt"), eps = 2.5, minPts = 4)
         .select(col("id"), col("role"), col("cluster"))
     }),
 
     // SQL planner surface for geography joins (sj14): the SQL forms of
     // sj08's dwithin and sj13's intersects shapes. Neither join has an
     // equi-conjunct; a broadcast-sized side plans the broadcast index
-    // join's spherical mode, and large-large sides SphereJoinRule's
-    // two-level-grid spherical joins, never a quadratic BNLJ.
+    // join's spherical mode, and large-large sides the partitioned index
+    // join's, never a quadratic BNLJ.
     "sj14_sphere_sql_join" -> ((s, dir) => {
       t(s, dir, "customer")
         .withColumn("clon", (col("c_custkey") % 720).cast("double") / 2.0 - 180.0)
@@ -310,8 +310,8 @@ object JoinQueries {
         .withColumn("pt", st.point(col("plon"), col("plat")))
         .select(col("o_orderkey").cast("long").as("o_orderkey"), col("pt"))
         .createOrReplaceTempView("sj14_p")
-      // NO conf window: the broadcast threshold picks the index join or
-      // the grid at DEFAULT confs — a set/force/restore window here would
+      // NO conf window: the broadcast threshold picks the broadcast or the
+      // partitioned index join at DEFAULT confs — a set/force/restore window here would
       // diverge from what a later .count() replans (the round-10
       // postmortem hazard)
       s.sql("""
@@ -367,15 +367,16 @@ object JoinQueries {
         .createOrReplaceTempView("pg_boxes")
       // NO conf window: at gate scale both sides broadcast, so the plan
       // is the (equally scale-sound) broadcast index spatial join; the
-      // large-large grid rewrite's plan AND execution are pinned in
-      // SpatialJoinSpec/PlanAuditSpec where set+collect happen inside one
-      // window — gates must execute what a default-conf replan would
+      // large-large partitioned join's plan AND execution are pinned in
+      // SpatialJoinSpec where set+collect happen inside one window —
+      // gates must execute what a default-conf replan would
       s.sql(
         "SELECT o_orderkey, p_partkey FROM pg_pts JOIN pg_boxes ON st_intersects(pt, box)")
     }),
 
-    // geography join: great-circle dwithin via wrap-safe lat-lon grid —
-    // full lon ring incl. antimeridian pairs and ±89 latitudes
+    // geography join: great-circle dwithin on the partitioned index join
+    // (both sides hinted SHUFFLE_HASH) — full lon ring incl. antimeridian
+    // pairs and ±89 latitudes
     "sj08_sphere_join" -> ((s, dir) => {
       val c = t(s, dir, "customer")
         .withColumn("clon", (col("c_custkey") % 720).cast("double") / 2.0 - 180.0)
@@ -387,8 +388,9 @@ object JoinQueries {
         .withColumn("slat", (col("s_suppkey") % 356).cast("double") / 2.0 - 88.75)
         .withColumn("spt", st.point(col("slon"), col("slat")))
         .select(col("s_suppkey"), col("spt"))
-      SpatialJoins.sphereDWithinJoin(c, sup, col("cpt"), col("spt"), 250000.0,
-          nx = 72, ny = 36)
+      c.hint("shuffle_hash")
+        .join(sup.hint("shuffle_hash"),
+          st.f("st_dwithinsphere", col("cpt"), col("spt"), lit(250000.0)))
         .select(col("c_custkey"), col("s_suppkey"))
     }),
 
@@ -413,12 +415,13 @@ object JoinQueries {
         .select(col("o_orderkey"), col("p_partkey"))
     }),
 
-    // shuffle-partitioned grid join — same semantics as sj01
+    // partitioned index join (both sides hinted SHUFFLE_HASH, so neither
+    // builds a broadcast) — same semantics as sj01
     "sj05_grid_join" -> ((s, dir) => {
       val pts = orderPoints(s, dir).select(col("o_orderkey"), col("pt"))
       val boxes = partBoxes(s, dir).select(col("p_partkey"), col("box"))
-      SpatialJoins.gridJoin(pts, boxes, col("pt"), col("box"), "st_intersects",
-          bounds = Some((0.0, 0.0, 2020.0, 1020.0)), nx = 32, ny = 32)
+      pts.hint("shuffle_hash")
+        .join(boxes.hint("shuffle_hash"), st.intersects(col("pt"), col("box")))
         .select(col("o_orderkey"), col("p_partkey"))
     })
   )

@@ -330,7 +330,7 @@ object StreamingQueries {
         .select(col("p_partkey"), col("box"))
       val joined = graft.operators.SpatialJoins.gridJoin(
         pts, boxes, col("pt"), col("box"), "st_intersects",
-        bounds = Some((0.0, 0.0, 89.0, 67.0)))
+        bounds = (0.0, 0.0, 89.0, 67.0))
         .select(col("event_id"), col("p_partkey"))
       val sinkName = s"graft_stst_${math.abs(dir.hashCode)}"
       gateRun(s) {

@@ -207,7 +207,7 @@ object StreamingOps {
     * grid-cell decomposition of the batch grid join provides one: both
     * sides explode their envelope's covering cells and equi-join on cell
     * id, then bbox overlap + reference-cell dedup + the exact predicate
-    * refine, exactly as in `SpatialJoins.gridJoin`. `timeCond` (an
+    * refine (`SpatialJoins.gridJoin`). `timeCond` (an
     * event-time range over the two sides' watermarked timestamp columns,
     * e.g. `l_ts BETWEEN r_ts - INTERVAL 10 SECONDS AND r_ts + INTERVAL 10
     * SECONDS`) bounds the join state so old rows age out — the standard
@@ -224,7 +224,7 @@ object StreamingOps {
       nx: Int = 64, ny: Int = 64,
       distance: Option[Column] = None): DataFrame =
     graft.operators.SpatialJoins.gridJoin(left, right, leftGeom, rightGeom,
-      predicate, bounds = Some(bounds), nx = nx, ny = ny,
+      predicate, bounds, nx = nx, ny = ny,
       distance = distance, extraCond = Some(timeCond))
 
   /** Stream-stream 1-D interval overlap join — the time-range analog of

@@ -448,39 +448,8 @@ class GeomPropertySpec extends AnyFunSuite {
     })
   }
 
-  test("two-level grid cover: adaptive and dual covers always meet") {
-    // the invariant behind the two-level spherical join: whatever level
-    // the adaptive side picks, the dual side emits that level too, so
-    // within-radius (here: intersecting/identical-point) pairs share a
-    // cell — exercised across narrow points, wide bands, and polar caps
-    import graft.functions.Spherical
-    import org.locationtech.jts.geom.Envelope
-    val envGen: Gen[Envelope] = Gen.oneOf(
-      for { // narrow
-        lon <- Gen.chooseNum(-179.0, 179.0); lat <- Gen.chooseNum(-89.0, 89.0)
-      } yield new Envelope(lon, lon, lat, lat),
-      for { // wide band (forces the coarse level at 360x180)
-        lat <- Gen.chooseNum(-80.0, 80.0); h <- Gen.chooseNum(1.0, 8.0)
-      } yield new Envelope(-170.0, 170.0, lat, lat + h),
-      for { // polar cap band
-        lat <- Gen.chooseNum(60.0, 85.0)
-      } yield new Envelope(-180.0, 180.0, lat, 90.0))
-    val ptIn: Gen[(Envelope, Double, Double)] = for {
-      e <- envGen
-      fx <- Gen.chooseNum(0.0, 1.0); fy <- Gen.chooseNum(0.0, 1.0)
-    } yield (e, e.getMinX + fx * e.getWidth, e.getMinY + fy * e.getHeight)
-    check(Prop.forAll(ptIn, Gen.chooseNum(8, 360), Gen.chooseNum(4, 180)) {
-      case ((e, px, py), nx, ny) =>
-        val ca = Spherical.gridCellsAdaptive(e, 0.0, nx, ny,
-          graft.operators.SpatialJoins.MaxFineCells).toSet
-        val cb = Spherical.gridCellsDual(
-          new Envelope(px, px, py, py), 0.0, nx, ny).toSet
-        ca.intersect(cb).nonEmpty
-    })
-  }
-
   test("spherical grid cover: within-radius pairs always share a cell") {
-    // the invariant behind sphereDWithinJoin's correctness — the lon bound
+    // the invariant behind the grid KNN covers — the lon bound
     // sin(dlam/2) <= sin(r/2R)/cos(phi) plus pole/antimeridian handling
     // must guarantee cell-set overlap for every within-radius pair
     import graft.functions.Spherical

@@ -56,7 +56,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // sphere sides fit the broadcast threshold, so every sphere join plans
     // the broadcast index join's spherical mode — never a BNLJ (which
     // PlanAudit.bnljJustified no longer admits for sphere predicates).
-    // The large-large grid rewrite is pinned in SphereJoinRuleSpec.
+    // The large-large partitioned join is pinned in SphereJoinRuleSpec.
     for (g <- Seq("sj14_sphere_sql_join", "sj15_sphere_sql_semi_anti")) {
       val p = entries(g).plan
       assert(!entries(g).flagged && p.contains("BroadcastIndexSpatialJoin") &&
@@ -92,10 +92,11 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sj12.contains("BroadcastIndexSpatialJoin") ||
       sj12.contains("SortMergeJoin") || sj12.contains("ShuffledHashJoin"),
       "sj12 semi/anti lost its spatial join operators")
-    // sj13: sphere intersects join rewrites to an equi-join on grid cell
+    // sj13: sphere intersects join plans the partitioned index join
     val sj13 = entries("sj13_sphere_intersects_join").plan
-    assert(sj13.contains("SortMergeJoin") || sj13.contains("ShuffledHashJoin") ||
-      sj13.contains("BroadcastHashJoin"), "sj13 sphere join did not equi-join")
+    assert(sj13.contains("PartitionedIndexSpatialJoin") &&
+      !sj13.contains("BroadcastNestedLoopJoin"),
+      "sj13 sphere join lost the partitioned index join")
     // pl18 PII redaction is map-only: no shuffle anywhere in the plan
     val pl18 = entries("pl18_pii_redact").plan
     assert(!pl18.contains("Exchange"), "pl18 redaction gained a shuffle")
@@ -141,22 +142,14 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     val knn = findKnn(sj11df.queryExecution.executedPlan)
     assert(knn.nonEmpty, "sj11 lost the KNN operator")
     assert(knn.head.spheroid, "sj11 KNN not in spheroid (chord kd-tree) mode")
-    // sj13's wrap/cap extension must still plan as a cell equi-join
-    val sj13 = entries("sj13_sphere_intersects_join").plan
-    assert(!sj13.contains("CartesianProduct") &&
-      !sj13.contains("BroadcastNestedLoopJoin"), "sj13 fell off the grid join")
-    // the two-level cover must stay in the plan: adaptive explode on the
-    // build side, dual explode on the probe side (fanout bound for wide
-    // covers — a regression to single-level reverts polar caps to ~7k
-    // exploded cells per row)
-    assert(sj13.contains("sd_gridcells_sphere4_adaptive"),
-      "sj13 lost the adaptive cover explode")
-    assert(sj13.contains("sd_gridcells_sphere4_dual"),
-      "sj13 lost the dual cover explode")
-    val sj08 = entries("sj08_sphere_join").plan
-    assert(sj08.contains("sd_gridcells_sphere4_adaptive") &&
-      sj08.contains("sd_gridcells_sphere4_dual"),
-      "sj08 lost the two-level cover")
+    // sj05, sj08 and sj13 (with its wrap/cap shapes) plan the
+    // partitioned index join, no BNLJ
+    for (g <- Seq("sj05_grid_join", "sj08_sphere_join", "sj13_sphere_intersects_join")) {
+      val p = entries(g).plan
+      assert(p.contains("PartitionedIndexSpatialJoin") &&
+        !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"$g must plan PartitionedIndexSpatialJoin, no BNLJ")
+    }
   }
 
   test("round-8/9 gates keep their intended plan shapes") {
@@ -302,7 +295,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         (col("id") % 3).cast("double") + 0.25).as("box"))
     val j2 = graft.operators.SpatialJoins.gridJoin(
       pts, boxes, col("pt"), col("box"), "st_intersects",
-      bounds = Some((0.0, 0.0, 5.0, 3.0)))
+      bounds = (0.0, 0.0, 5.0, 3.0))
     val q2 = j2.select("l_event", "bid").writeStream
       .format("memory").queryName("pa_stst").outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -210,40 +210,119 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("grid join ≡ index join") {
     val p = points(400, 13)
     val b = boxes(300, 17)
-    val grid = SpatialJoins.gridJoin(p, b, col("pgeom"), col("bgeom"), "st_intersects",
-      bounds = Some((0.0, 0.0, 104.0, 104.0)), nx = 8, ny = 8).select("pid", "bid")
-    val idx = p.join(b, st.intersects(col("pgeom"), col("bgeom"))).select("pid", "bid")
-    assert(sortedRows(grid) == sortedRows(idx))
-    // auto-computed bounds path
-    val grid2 = SpatialJoins.gridJoin(p, b, col("pgeom"), col("bgeom"), "st_intersects",
-      nx = 5, ny = 5).select("pid", "bid")
-    assert(sortedRows(grid2) == sortedRows(idx))
-    // no envelope on either side (no rows, or only null geometries): the
-    // pre-pass finds no extent and the join is empty
-    val nullGeoms = p.select(col("pid"), lit(null).cast("binary").as("pgeom"))
+    def q(l: DataFrame, r: DataFrame, pred: Column = st.intersects(col("pgeom"), col("bgeom"))) =
+      l.hint("shuffle_hash").join(r.hint("shuffle_hash"), pred).select("pid", "bid")
+    // the SHUFFLE_HASH hints leave no broadcast side: the partitioned join
+    assert(partitionedRows(q(p, b)) == ruleOffRows(q(p, b)))
+    // no envelope on either side (no rows, or only null geometries)
+    val nullGeoms = p.select(col("pid"), when(col("pid") < 0, col("pgeom")).as("pgeom"))
     for ((l, r) <- Seq((p.filter(col("pid") < 0), b.filter(col("bid") < 0)),
         (nullGeoms, b.filter(col("bid") < 0))))
-      assert(SpatialJoins.gridJoin(l, r, col("pgeom"), col("bgeom"), "st_intersects",
-        nx = 5, ny = 5).count() == 0)
+      assert(partitionedRows(q(l, r)).isEmpty)
+    // hard cases: 500 identical points (a degenerate KDB split), one box
+    // over every leaf, boxes touching along shared edges and at a corner
+    // the identical points sit on, null and empty geometries, and a point
+    // at exactly distance 5 from a box corner
+    val hardPts = spark.range(500).select(col("id").as("pid"),
+        st.point(lit(50.0), lit(50.0)).as("pgeom"))
+      .unionAll(points(300, 19).select(col("pid") + 1000, col("pgeom")))
+      .unionAll(spark.sql("""SELECT * FROM VALUES
+        (9001L, CAST(NULL AS BINARY)), (9002L, st_geomfromwkt('POINT EMPTY')),
+        (9003L, st_point(10.0D, 20.0D)) AS t(pid, pgeom)"""))
+    val hardBoxes = boxes(200, 23).unionAll(spark.sql("""SELECT * FROM VALUES
+        (8001L, st_makeenvelope(-10.0D, -10.0D, 110.0D, 110.0D)),
+        (8002L, st_makeenvelope(10.0D, 10.0D, 20.0D, 20.0D)),
+        (8003L, st_makeenvelope(20.0D, 10.0D, 30.0D, 20.0D)),
+        (8004L, st_makeenvelope(10.0D, 20.0D, 20.0D, 30.0D)),
+        (8005L, CAST(NULL AS BINARY)), (8006L, st_geomfromwkt('POLYGON EMPTY')),
+        (8007L, st_makeenvelope(50.0D, 50.0D, 60.0D, 60.0D)),
+        (8008L, st_makeenvelope(13.0D, 24.0D, 14.0D, 25.0D)) AS t(bid, bgeom)"""))
+    def hard(pred: Column, l: DataFrame = hardPts, r: DataFrame = hardBoxes): Seq[String] = {
+      val got = partitionedRows(q(l, r, pred))
+      assert(got == ruleOffRows(q(l, r, pred)))
+      got
+    }
+    val inter = hard(st.intersects(col("pgeom"), col("bgeom")))
+    assert(inter.contains("[0,8007]") && inter.contains("[499,8001]") &&
+      inter.contains("[9003,8004]"))
+    val touch = hard(st.f("st_touches", col("pgeom"), col("bgeom")))
+    assert(touch.contains("[0,8007]") && touch.contains("[9003,8002]"))
+    hard(st.f("st_within", col("pgeom"), col("bgeom")))
+    // the distance scalars take an empty geometry as within any distance
+    // (JTS), the index joins drop it: the distance inputs leave empties out
+    val (nonEmptyPts, nonEmptyBoxes) =
+      (hardPts.filter(col("pid") =!= 9002), hardBoxes.filter(col("bid") =!= 8006))
+    assert(hard(st.dwithin(col("pgeom"), col("bgeom"), lit(5.0)), nonEmptyPts, nonEmptyBoxes)
+      .contains("[9003,8008]"))
+    assert(!hard(st.distance(col("pgeom"), col("bgeom")) < lit(5.0), nonEmptyPts, nonEmptyBoxes)
+      .contains("[9003,8008]"))
+    // identical points alone: no split at all, one leaf
+    val same = hardPts.filter(col("pid") < 500)
+    assert(partitionedRows(q(same, hardBoxes.filter(col("bid") === 8007))).size == 500)
   }
 
   test("planner rewrites large-large spatial join to grid equi-join (SQL path)") {
     val p = points(300, 41)
     val b = boxes(250, 43)
-    val expected = sortedRows(
-      p.join(b, st.intersects(col("pgeom"), col("bgeom"))).select("pid", "bid"))
     p.createOrReplaceTempView("gp")
     b.createOrReplaceTempView("gb")
+    def q = spark.sql("SELECT pid, bid FROM gp JOIN gb ON st_intersects(pgeom, bgeom)")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val expected = try ruleOffRows(q)
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try assert(partitionedRows(q) == expected)
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    // the SQL hint asks for the partitioned join at any size
+    assert(partitionedRows(spark.sql("SELECT /*+ SHUFFLE_HASH(gp, gb) */ pid, bid " +
+      "FROM gp JOIN gb ON st_intersects(pgeom, bgeom)")) == expected)
+  }
+
+  test("planning a large-large spatial join starts no Spark job") {
+    val p = points(300, 131)
+    val b = boxes(250, 133)
+    val planning = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var sentinel = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == "sentinel") sentinel = true
+        else planning.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val j = spark.sql(
-        "SELECT pid, bid FROM gp JOIN gb ON st_intersects(pgeom, bgeom)")
-      val physical = j.queryExecution.executedPlan.toString
-      assert(!physical.contains("BroadcastNestedLoopJoin"), physical.take(2000))
-      assert(physical.contains("SortMergeJoin") || physical.contains("ShuffledHashJoin"),
-        physical.take(2000))
-      assert(sortedRows(j) == expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+      for (kind <- Seq("inner", "left_outer")) {
+        val plan = p.join(b, st.intersects(col("pgeom"), col("bgeom")), kind)
+          .queryExecution.executedPlan.toString
+        assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
+      }
+      // listener events arrive in order: once the sentinel job is seen,
+      // any job the planning started has been counted
+      spark.sparkContext.setJobGroup("sentinel", "sentinel")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!sentinel && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sentinel)
+      assert(planning.get == 0, s"${planning.get} jobs started while planning")
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+      spark.sparkContext.removeSparkListener(listener)
+      CacheRegistry.releaseAll()
+    }
+  }
+
+  test("partitioned index join reports numOutputRows and candidatePairs") {
+    val j = points(300, 141).hint("shuffle_hash")
+      .join(boxes(250, 143).hint("shuffle_hash"), st.intersects(col("pgeom"), col("bgeom")))
+    assert(j.collect().nonEmpty)
+    val execs = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(j.queryExecution.executedPlan) {
+        case e: joins.PartitionedIndexSpatialJoinExec => e
+      }
+    assert(execs.size == 1)
+    for (m <- Seq("numOutputRows", "candidatePairs"))
+      assert(execs.head.metrics(m).value > 0, m)
   }
 
   test("planner grid rewrite handles dwithin and distance< with constant radius") {
@@ -293,6 +372,10 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       def q4(): DataFrame = p.join(shared, st.intersects(p("pgeom"), shared("bgeom")),
         "left_outer").select(p("pid"), shared("pid"))
       assert(gridRewriteRows(q4()) == gridRuleOffRows(q4()))
+      // RIGHT OUTER: the LEFT OUTER composition with the sides swapped
+      def q6(): DataFrame = b.join(p, st.intersects(col("pgeom"), col("bgeom")),
+        "right_outer").select(col("pid"), col("bid"))
+      assert(gridRewriteRows(q6()) == gridRuleOffRows(q6()))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     // the preserved side alone fits the threshold: no broadcast side for
     // the LEFT OUTER, so the rewrite's inner join broadcasts the left
@@ -311,6 +394,22 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def gridRuleOffRows(q: => DataFrame): Seq[String] = {
     spark.conf.set("spark.graft.join.grid.enabled", "false")
     try sortedRows(q) finally spark.conf.set("spark.graft.join.grid.enabled", "true")
+  }
+
+  /** Sorted rows of `q` with both spatial switches off: Spark's own
+    * (BNLJ) plan. */
+  private def ruleOffRows(q: => DataFrame): Seq[String] = {
+    spark.conf.set("spark.graft.join.sphere.enabled", "false")
+    try gridRuleOffRows(q) finally spark.conf.set("spark.graft.join.sphere.enabled", "true")
+  }
+
+  /** Sorted rows of `q`, which must plan the partitioned index join and
+    * no BNLJ. */
+  private def partitionedRows(q: DataFrame): Seq[String] = {
+    val phys = q.queryExecution.executedPlan.toString
+    assert(phys.contains("PartitionedIndexSpatialJoin") &&
+      !phys.contains("BroadcastNestedLoopJoin"), phys.take(2000))
+    sortedRows(q)
   }
 
   /** Sorted rows of `q`, which must plan no BNLJ; the caches its rewrite
@@ -436,13 +535,9 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
         .filter(st.f("st_distancesphere", col("ag"), col("bg")) <= r)
         .select(col("aid"), col("bid")))
     assert(expected.nonEmpty)
-    val grid = SpatialJoins.sphereDWithinJoin(a, b, col("ag"), col("bg"), r,
-      nx = 36, ny = 18).select(col("aid"), col("bid"))
-    assert(sortedRows(grid) == expected)
-    // finer grid, same answer
-    val grid2 = SpatialJoins.sphereDWithinJoin(a, b, col("ag"), col("bg"), r,
-      nx = 360, ny = 180).select(col("aid"), col("bid"))
-    assert(sortedRows(grid2) == expected)
+    assert(partitionedRows(a.hint("shuffle_hash").join(b.hint("shuffle_hash"),
+        st.f("st_dwithinsphere", col("ag"), col("bg"), lit(r)))
+      .select(col("aid"), col("bid"))) == expected)
   }
 
   test("SQL st_knn join plans as KnnJoinExec and matches brute force") {
@@ -926,13 +1021,12 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bulged.getMaxY > 69.0, s"bulge missing: $bulged")
     // join correctness: high-lat edge geometries near the bulge apex must
     // pair with points there even though chart envelopes are disjoint
-    val lines = spark.range(1).selectExpr(
-      "id AS lid", "st_geomfromwkt('LINESTRING (-60 60, 60 60)') AS lg")
-    val pts = spark.range(1).selectExpr(
-      "id AS pid", "st_point(0.0D, 73.5D) AS pg")
-    val j = graft.operators.SpatialJoins.sphereDWithinJoin(
-      lines, pts, col("lg"), col("pg"), 100000.0)
-    assert(j.count() == 1, "bulge-apex pair lost by the grid cover")
+    val lines = spark.sql(
+      "SELECT * FROM VALUES (0L, st_geomfromwkt('LINESTRING (-60 60, 60 60)')) AS t(lid, lg)")
+    val pts = spark.sql("SELECT * FROM VALUES (0L, st_point(0.0D, 73.5D)) AS t(pid, pg)")
+    val j = lines.hint("shuffle_hash").join(pts.hint("shuffle_hash"),
+      st.f("st_dwithinsphere", col("lg"), col("pg"), lit(100000.0)))
+    assert(partitionedRows(j).size == 1, "bulge-apex pair lost by the partitioned join")
   }
 
   test("geography intersects: predicate semantics + sphere intersects join") {
@@ -958,10 +1052,9 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(b(s"st_intersectssphere(${g("LINESTRING (-60 60, 60 60)")}, " +
       s"${g("LINESTRING (0 60, 0 80)")})") == true)
 
-    // join: sphereIntersectsJoin == brute-force over the predicate.
-    // The two polar caps and the dateline quad have wide covers, so they
-    // exercise the adaptive COARSE level of the two-level grid while the
-    // envelopes stay on the fine level.
+    // join: the partitioned index join == brute-force over the predicate.
+    // The two polar caps are full-ring bounds (every leaf in their
+    // latitude band); the dateline quad's bound wraps mod 360.
     val caps = spark.sql("""SELECT aid, st_geomfromwkt(w) AS ag FROM VALUES
       (1000L, 'POLYGON ((0 71, 30 71, 60 71, 90 71, 120 71, 150 71, 180 71, -150 71, -120 71, -90 71, -60 71, -30 71, 0 71))'),
       (1001L, 'POLYGON ((0 -71, 30 -71, 60 -71, 90 -71, 120 -71, 150 -71, 180 -71, -150 -71, -120 -71, -90 -71, -60 -71, -30 -71, 0 -71))'),
@@ -976,8 +1069,9 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pts = spark.range(300).selectExpr("id AS bid",
       """st_point(CAST(pmod(hash(id*3), 340) AS DOUBLE) - 170.0,
          CAST(pmod(hash(id*11), 160) AS DOUBLE) - 80.0) AS bg""")
-    val j = graft.operators.SpatialJoins.sphereIntersectsJoin(
-      polys, pts, col("ag"), col("bg")).select("aid", "bid")
+    val j = polys.hint("shuffle_hash").join(pts.hint("shuffle_hash"),
+      st.f("st_intersectssphere", col("ag"), col("bg"))).select("aid", "bid")
+    assert(j.queryExecution.executedPlan.toString.contains("PartitionedIndexSpatialJoin"))
     val ref = polys.crossJoin(pts)
       .filter(st.f("st_intersectssphere", col("ag"), col("bg")))
       .select("aid", "bid")
@@ -996,9 +1090,7 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       (20L, 13.0, 13.0),
       (30L, 90.0, 90.0), (31L, 0.0, 99.0)
     ).toDF("pid", "x", "y").withColumn("pt", st.point(col("x"), col("y")))
-    val out = graft.operators.Dbscan.dbscan(pts, col("pid"), col("pt"),
-        eps = 3.0, minPts = 4, bounds = Some((0.0, 0.0, 100.0, 100.0)),
-        nx = 16, ny = 16)
+    val out = graft.operators.Dbscan.dbscan(pts, col("pid"), col("pt"), eps = 3.0, minPts = 4)
       .collect().map(r => r.getLong(0) ->
         (r.getString(1), if (r.isNullAt(2)) -1L else r.getLong(2))).toMap
     for (i <- Seq(1L, 2L, 3L, 4L, 5L, 6L))
@@ -1022,8 +1114,7 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
         (pmod(hash(col("id"), lit(1)), lit(400)).cast("double") / 4.0),
         (pmod(hash(col("id"), lit(2)), lit(300)).cast("double") / 4.0)).as("pt"))
     def run(): Seq[(Long, String, Long)] = graft.operators.Dbscan
-      .dbscan(pts, col("pid"), col("pt"), eps = 4.0, minPts = 4,
-        bounds = Some((0.0, 0.0, 100.0, 75.0)), nx = 16, ny = 12)
+      .dbscan(pts, col("pid"), col("pt"), eps = 4.0, minPts = 4)
       .collect().map(r => (r.getLong(0), r.getString(1),
         if (r.isNullAt(2)) -1L else r.getLong(2))).sorted.toSeq
     val local = run()

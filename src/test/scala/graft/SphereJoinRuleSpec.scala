@@ -8,8 +8,8 @@ import graft.functions.GraftFunctions.st
 
 /** SQL planner surface for geography (spherical) joins: a SQL user writing
   * `JOIN ON st_dwithinsphere(a, b, r)` must get the broadcast index join
-  * when a side fits the broadcast threshold and the two-level-grid plan
-  * when none does — never a quadratic BroadcastNestedLoopJoin. */
+  * when a side fits the broadcast threshold and the partitioned index
+  * join when none does — never a quadratic BroadcastNestedLoopJoin. */
 class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -44,12 +44,10 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       st.point(pmod(hash(col("id") * 3 + seed), lit(7200)) / 20.0 - 180.0,
         pmod(hash(col("id") * 11 + seed), lit(3580)) / 20.0 - 89.5).as(gc))
 
-  private def assertGrid(p: String): Unit = {
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-      s"sphere rewrite must purge BNLJ/cartesian:\n${p.take(3000)}")
-    assert(p.toLowerCase.contains("gridcells_sphere"),
-      s"spherical grid explode missing:\n${p.take(3000)}")
-  }
+  private def assertPartitioned(p: String): Unit =
+    assert(p.contains("PartitionedIndexSpatialJoin") &&
+      !p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+      s"large-large sphere join must plan the partitioned index join, no BNLJ:\n${p.take(3000)}")
 
   private def assertIndex(p: String): Unit =
     assert(p.contains("BroadcastIndexSpatialJoin") &&
@@ -70,15 +68,18 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SQL st_dwithinsphere join: grid plan, results ≡ rule-off BNLJ") {
-    pts(220, 71, "aid", "ag").createOrReplaceTempView("sph_a")
-    pts(220, 73, "bid", "bg").createOrReplaceTempView("sph_b")
+    // null and empty geometries match nothing on either side
+    val nulls = spark.sql("""SELECT * FROM VALUES (9001L, CAST(NULL AS BINARY)),
+      (9002L, st_geomfromwkt('POINT EMPTY')) AS t(id, g)""")
+    pts(220, 71, "aid", "ag").unionAll(nulls).createOrReplaceTempView("sph_a")
+    pts(220, 73, "bid", "bg").unionAll(nulls).createOrReplaceTempView("sph_b")
     val sql = "SELECT aid, bid FROM sph_a JOIN sph_b " +
       "ON st_dwithinsphere(ag, bg, 300000.0)"
     val (p, got) = withBroadcastOff {
       val df = spark.sql(sql)
       (planString(df), df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
     }
-    assertGrid(p)
+    assertPartitioned(p)
     val expect = ruleOff {
       spark.sql(sql).collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     }
@@ -109,9 +110,14 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SQL st_intersectssphere join incl. polar caps + dateline: grid plan ≡ rule-off") {
+    // both polar caps (full-ring bounds), an antimeridian ring and chart
+    // 179…181 quads (bounds wrapping mod 360)
     val caps = spark.sql("""SELECT aid, st_geomfromwkt(w) AS ag FROM VALUES
       (1000L, 'POLYGON ((0 71, 30 71, 60 71, 90 71, 120 71, 150 71, 180 71, -150 71, -120 71, -90 71, -60 71, -30 71, 0 71))'),
-      (1001L, 'POLYGON ((175 -20, -175 -20, -175 20, 175 20, 175 -20))')
+      (1001L, 'POLYGON ((175 -20, -175 -20, -175 20, 175 20, 175 -20))'),
+      (1002L, 'POLYGON ((0 -71, 30 -71, 60 -71, 90 -71, 120 -71, 150 -71, 180 -71, -150 -71, -120 -71, -90 -71, -60 -71, -30 -71, 0 -71))'),
+      (1003L, 'POLYGON ((179 -12, 181 -12, 181 -10, 179 -10, 179 -12))'),
+      (1004L, 'POLYGON ((179 30, 181 30, 181 32, 179 32, 179 30))')
       AS t(aid, w)""")
     val polys = spark.range(40).selectExpr("id AS aid",
       """st_makeenvelope(CAST(pmod(hash(id), 300) AS DOUBLE) - 150.0,
@@ -120,21 +126,27 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
          CAST(pmod(hash(id*7), 120) AS DOUBLE) - 55.0) AS ag""")
       .unionAll(caps)
     polys.createOrReplaceTempView("sphi_a")
+    // plus points within 2° of ±180, at every 3° of latitude
     spark.range(250).selectExpr("id AS bid",
       """st_point(CAST(pmod(hash(id*3), 340) AS DOUBLE) - 170.0,
          CAST(pmod(hash(id*11), 160) AS DOUBLE) - 80.0) AS bg""")
+      .unionAll(spark.range(480).selectExpr("id + 1000 AS bid",
+        """st_point(CASE WHEN id % 8 < 4 THEN 178.25 + CAST(id % 8 AS DOUBLE) * 0.5
+             ELSE -181.75 + CAST(id % 8 AS DOUBLE) * 0.5 END,
+           CAST(id DIV 8 AS DOUBLE) * 3.0 - 88.75) AS bg"""))
       .createOrReplaceTempView("sphi_b")
     val sql = "SELECT aid, bid FROM sphi_a JOIN sphi_b ON st_intersectssphere(ag, bg)"
     val (p, got) = withBroadcastOff {
       val df = spark.sql(sql)
       (planString(df), df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
     }
-    assertGrid(p)
+    assertPartitioned(p)
     val expect = ruleOff {
       spark.sql(sql).collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     }
     assert(got.nonEmpty && got == expect)
-    assert(got.exists(_._1 >= 1000L), "cap/dateline rows must participate")
+    for (id <- 1000L to 1004L)
+      assert(got.exists(_._1 == id), s"special shape $id must match some point")
   }
 
   test("SQL st_containssphere with swapped args inverts to within, ≡ rule-off") {
@@ -154,7 +166,7 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       val df = spark.sql(sql)
       (planString(df), df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
     }
-    assertGrid(p)
+    assertPartitioned(p)
     val expect = ruleOff {
       spark.sql(sql).collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     }
@@ -201,7 +213,18 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       rows
     }
     assert(fullRows(assertIndex) == fullExpect)
-    assert(withBroadcastOff(fullRows(assertGrid)) == fullExpect)
+    assert(withBroadcastOff(fullRows(assertPartitioned)) == fullExpect)
+    // RIGHT OUTER with no broadcast side: the LEFT OUTER composition with
+    // the sides swapped
+    val rightSql = "SELECT laid, rbid FROM spho_b RIGHT JOIN spho_a " +
+      "ON st_dwithinsphere(lag, rbg, 200000.0)"
+    val (rp, rightGot) = withBroadcastOff {
+      val df = spark.sql(rightSql)
+      (planString(df), df.collect().map(key).sorted.toSeq)
+    }
+    assertPartitioned(rp)
+    assert(rightGot == ruleOff { spark.sql(rightSql).collect().map(key).sorted.toSeq })
+    assert(rightGot == expect)
   }
 
   test("SQL LEFT SEMI / LEFT ANTI st_dwithinsphere joins: grid plan ≡ rule-off") {
@@ -214,8 +237,7 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
         val df = spark.sql(sql)
         (planString(df), df.collect().map(_.getLong(0)).sorted.toSeq)
       }
-      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-        s"$kind sphere rewrite must purge BNLJ:\n${p.take(3000)}")
+      assertPartitioned(p)
       val expect = ruleOff {
         spark.sql(sql).collect().map(_.getLong(0)).sorted.toSeq
       }
@@ -385,7 +407,7 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       val g = spark.sql(sql)
       (planString(g), g.collect().map(pair).sorted.toSeq)
     }
-    assertGrid(p)
+    assertPartitioned(p)
     assert(got.nonEmpty && got == expect)
   }
 
