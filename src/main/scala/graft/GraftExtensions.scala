@@ -23,7 +23,6 @@ object GraftExtensions {
     _ => graft.plans.GeoPruneRule,
     _ => graft.plans.RasterJoinRule,
     graft.plans.SpatialJoinRule(_),
-    graft.joins.KnnGridJoinRule(_),
     _ => graft.plans.RasterLoadRule)
 
   /** The physical strategy that goes with the operator rules. */

@@ -49,7 +49,7 @@ object ScaleBench {
     val changelog = sys.env.get("SPARK_GRAFT_SS_CHANGELOG").map(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> _)
     // generic A/B hook: ';'-separated key=value session confs (e.g.
-    // spark.graft.knn.occCover=false for the legacy cover path)
+    // spark.sql.shuffle.partitions=64)
     val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(_.split(";")).map { kv =>
       val i = kv.indexOf('=')
       require(i > 0, s"SPARK_GRAFT_EXTRA_CONF: bad entry '$kv'")
@@ -173,28 +173,23 @@ object ScaleBench {
         timed(pts.hint("shuffle_hash")
           .join(boxes(m, 20000, 5.0).hint("shuffle_hash"), st.intersects(col("pt"), col("box"))))
       },
-      // sj16 path: spheroid out-of-core KNN grid — same density-constant
-      // globe as sj08; query count and object count scale with m, the
-      // geodesic grid tracks object density (ny ~ sqrt(m)) so round-1
-      // neighbourhoods keep ~constant candidates
+      // sj16 path: spheroid out-of-core KNN (the partitioned KNN join) —
+      // same density-constant globe as sj08; query count and object
+      // count scale with m
       "sj16_knn_sphere_grid" -> { m =>
-        val ny = math.max(24, (24 * sqrtM(m)).toInt)
-        timed(SpatialJoins.knnJoinGridSphere(
+        timed(SpatialJoins.knnJoin(
           globePoints(1500L * m, 17).select(col("id").as("qid"), col("pt").as("qpt")),
-          globePoints(20000L * m, 19).select(col("id").as("oid"), col("pt").as("opt")),
-          col("qpt"), col("opt"), 3, col("oid"), nx = 2 * ny, ny = ny))
+          globePoints(20000L * m, 19).select(col("id").as("oid"), col("pt").as("opt"))
+            .hint("shuffle_hash"),
+          col("qpt"), col("opt"), 3, col("oid"), spheroid = true))
       },
       // sj16 SPARSE variant: 30% of queries are isolated (mid-ocean
       // sensors, nearest object > 2000 km). Objects are uniform over the
       // globe EXCEPT a ~90°x60° empty "ocean" whose center holds the
-      // isolated queries — per-cell object density stays what sj16's
-      // uniform workload has, but 30% of probes find NOTHING in their
-      // one-cell ring. The former π·R fallback joined every such query
-      // against the ENTIRE object side (30% of probes x all objects —
-      // quadratic in m); the per-query histogram bound must keep wall ~ m
-      // by resolving them at a few-ring cover instead.
+      // isolated queries — their round-1 leaf lies in or by the ocean, so
+      // their radius, and with it the leaves they probe, is wide; wall
+      // must stay ~ m.
       "sj16_knn_sphere_sparse" -> { m =>
-        val ny = math.max(24, (24 * sqrtM(m)).toInt)
         // objects: uniform outside the ocean [-135,-45]x[-30,30]
         val o = spark.range(0, 20000L * m).toDF("id")
           .withColumn("lon", u(col("id"), 23) * 360.0 - 180.0)
@@ -213,8 +208,8 @@ object ScaleBench {
             when(col("iso"), lit(-7.0) + u(col("id"), 26) * 14.0)
               .otherwise(u(col("id"), 26) * 100.0 - 50.0))
           .select(col("id").as("qid"), st.point(col("qlon"), col("qlat")).as("qpt"))
-        timed(SpatialJoins.knnJoinGridSphere(
-          q, o, col("qpt"), col("opt"), 3, col("oid"), nx = 2 * ny, ny = ny))
+        timed(SpatialJoins.knnJoin(
+          q, o.hint("shuffle_hash"), col("qpt"), col("opt"), 3, col("oid"), spheroid = true))
       },
       // sj07 path: the planner's SQL spatial join under broadcast-off
       // (the partitioned index join)
@@ -237,50 +232,20 @@ object ScaleBench {
             .hint("shuffle_hash"),
             st.f("st_dwithinsphere", col("apt"), col("bpt"), lit(250000.0 / sqrtM(m)))))
       },
-      // sj10 path: out-of-core two-round KNN grid, k fixed, both sides
-      // scale, cells constant in ground units
+      // sj10 path: out-of-core KNN (the partitioned KNN join), k fixed,
+      // both sides scale
       "sj10_knn_grid" -> { m =>
-        val nx = math.max(8, (32 * sqrtM(m)).toInt)
-        timed(SpatialJoins.knnJoinGrid(
+        timed(SpatialJoins.knnJoin(
           points(m, 1500).select(col("id").as("qid"), col("pt").as("qpt")),
-          points(m, 20000).select(col("id").as("oid"), col("pt").as("opt")),
-          col("qpt"), col("opt"), 3, col("oid"),
-          nx = nx, ny = nx, bounds = Some((0.0, 0.0, planeW(m), planeH(m)))))
-      },
-      // GUARD PROBE (round-17 VERDICT #3): a grid past the occupancy
-      // bitmap's Int budget (50000^2 + coarse image > 2^31 bits) must
-      // take the legacy broadcast-semi cover path — same answer rows,
-      // no wrap, no OOM. Runs the sj10 shape twice (normal grid with
-      // the bitmap vs oversized grid without) and pins equal results;
-      // wall of the second leg is the degradation cost, not a target.
-      "knn_occ_guard" -> { m =>
-        val q = points(m, 1500).select(col("id").as("qid"), col("pt").as("qpt"))
-        val o = points(m, 20000).select(col("id").as("oid"), col("pt").as("opt"))
-        val normal = SpatialJoins.knnJoinGrid(q, o, col("qpt"), col("opt"), 3,
-          col("oid"), nx = 32, ny = 32,
-          bounds = Some((0.0, 0.0, planeW(m), planeH(m))))
-          .select(col("qid"), col("oid")).collect().map(r =>
-            (r.getLong(0), r.getLong(1))).toSet
-        val res = timed(SpatialJoins.knnJoinGrid(q, o, col("qpt"), col("opt"), 3,
-          col("oid"), nx = 50000, ny = 50000,
-          bounds = Some((0.0, 0.0, planeW(m), planeH(m)))))
-        val guarded = SpatialJoins.knnJoinGrid(q, o, col("qpt"), col("opt"), 3,
-          col("oid"), nx = 50000, ny = 50000,
-          bounds = Some((0.0, 0.0, planeW(m), planeH(m))))
-          .select(col("qid"), col("oid")).collect().map(r =>
-            (r.getLong(0), r.getLong(1))).toSet
-        println(s"""{"wl":"knn_occ_guard","diag":"m=$m """ +
-          s"""identical=${normal == guarded} pairs=${normal.size}"}""")
-        res
+          points(m, 20000).select(col("id").as("oid"), col("pt").as("opt"))
+            .hint("shuffle_hash"),
+          col("qpt"), col("opt"), 3, col("oid")))
       },
       // sj10 SPARSE variant (the planar twin of sj16_knn_sphere_sparse):
       // objects clustered in the left half of the plane, 30% of queries
-      // isolated deep in the empty right half — their resolved radius
-      // spans a large fraction of the extent, so the final probe's cover
-      // runs through the nested MIXED kernel instead of enumerating
-      // ~(d_iso/cell)^2 fine cells
+      // isolated deep in the empty right half — their radius spans a large
+      // fraction of the extent
       "sj10_knn_grid_sparse" -> { m =>
-        val nx = math.max(8, (32 * sqrtM(m)).toInt)
         val w = planeW(m); val h = planeH(m)
         val o = spark.range(0, 20000L * m).toDF("id")
           .select(col("id").as("oid"),
@@ -291,8 +256,8 @@ object ScaleBench {
             when(col("iso"), lit(0.8) * w + u(col("id"), 63) * (w * 0.15))
               .otherwise(u(col("id"), 63) * (w * 0.38)),
             u(col("id"), 64) * h).as("qpt"))
-        timed(SpatialJoins.knnJoinGrid(q, o, col("qpt"), col("opt"), 3,
-          col("oid"), nx = nx, ny = nx, bounds = Some((0.0, 0.0, w, h))))
+        timed(SpatialJoins.knnJoin(q, o.hint("shuffle_hash"), col("qpt"), col("opt"), 3,
+          col("oid")))
       },
       // sj13 path: spherical intersects join — polygon count scales,
       // polygon side shrinks 1/sqrt(m) so expected point-in-quad pairs

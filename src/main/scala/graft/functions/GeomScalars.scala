@@ -1908,51 +1908,6 @@ object GeomScalars {
         Seq(Geom, Dbl, Int_, Int_), a =>
           new GenericArrayData(Spherical.gridCells(
             Spherical.latLngBound(g0(a)), d(a, 1), i(a, 2), i(a, 3))))),
-    // the spherical bound as 4 doubles, computed once per row: the
-    // spherical analog of sd_envelope4
-    fn("sd_envelopesphere4", ArrayType(DoubleType, containsNull = false), Seq(Geom))(a => {
-      val e = Spherical.latLngBound(g0(a))
-      if (e.isNull) null
-      else new GenericArrayData(Array(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY))
-    }),
-    // KNN mixed cover + its object-side dual: NESTED coarse interior +
-    // fine boundary past maxCells — pair-set identical to all-fine
-    // (Spherical.gridCellsKnnCover notes)
-    fn("sd_gridcells_sphere4_knncover", ArrayType(LongType, containsNull = false),
-        Seq(ArgKind.Raw, Dbl, Int_, Int_, Int_))(a => {
-      val e = a(0).asInstanceOf[ArrayData]
-      new GenericArrayData(Spherical.gridCellsKnnCover(
-        new org.locationtech.jts.geom.Envelope(
-          e.getDouble(0), e.getDouble(2), e.getDouble(1), e.getDouble(3)),
-        d(a, 1), i(a, 2), i(a, 3), i(a, 4)))
-    }),
-    // occupancy-filtered spherical KNN cover: trailing binary arg is the
-    // bitmap over cell ids (fine 0..nx*ny-1, nested-coarse past nx*ny)
-    // of cells holding >= 1 object — pair-set identical to the
-    // unfiltered cover, no empty-cell explode rows (planar twin:
-    // st_gridcells_knncover_occ)
-    fn("sd_gridcells_sphere4_knncover_occ",
-        ArrayType(LongType, containsNull = false),
-        Seq(ArgKind.Raw, Dbl, Int_, Int_, Int_, Bin))(a => {
-      val e = a(0).asInstanceOf[ArrayData]
-      new GenericArrayData(Spherical.gridCellsKnnCoverOcc(
-        new org.locationtech.jts.geom.Envelope(
-          e.getDouble(0), e.getDouble(2), e.getDouble(1), e.getDouble(3)),
-        d(a, 1), i(a, 2), i(a, 3), i(a, 4),
-        a(5).asInstanceOf[Array[Byte]]))
-    }),
-    fn("sd_gridcells_sphere4_knndual", ArrayType(LongType, containsNull = false),
-        Seq(ArgKind.Raw, Dbl, Int_, Int_))(a => {
-      val e = a(0).asInstanceOf[ArrayData]
-      new GenericArrayData(Spherical.gridCellsKnnDual(
-        new org.locationtech.jts.geom.Envelope(
-          e.getDouble(0), e.getDouble(2), e.getDouble(1), e.getDouble(3)),
-        d(a, 1), i(a, 2), i(a, 3)))
-    }),
-    // raw-doubles great-circle distance (meters): the KNN bound rounds'
-    // per-pair arithmetic — no WKB in the hot path
-    fn("sd_haversine", DoubleType, Seq(Dbl, Dbl, Dbl, Dbl))(a =>
-      Spherical.haversine(d(a, 0), d(a, 1), d(a, 2), d(a, 3))),
 
     // ---- KNN join stub: only valid inside a join condition, where
     // SpatialJoinStrategy plans it into KnnJoinExec (reference pattern:
@@ -2002,38 +1957,6 @@ object GeomScalars {
           else new GenericArrayData(Grid.cellsOf(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY,
             d(a, 1), d(a, 2), d(a, 3), d(a, 4), i(a, 5), i(a, 6)))
         })),
-    // planar KNN mixed cover + object dual (Grid.cellsKnnCover notes):
-    // nested coarse interior + fine boundary past maxCells — pair-set
-    // identical to all-fine
-    fn("st_gridcells_knncover", ArrayType(LongType, containsNull = false),
-        Seq(Geom, Dbl, Dbl, Dbl, Dbl, Int_, Int_, Int_))(a => {
-      val e = g0(a).getEnvelopeInternal
-      if (e.isNull) null
-      else new GenericArrayData(Grid.cellsKnnCover(
-        e.getMinX, e.getMinY, e.getMaxX, e.getMaxY,
-        d(a, 1), d(a, 2), d(a, 3), d(a, 4), i(a, 5), i(a, 6), i(a, 7)))
-    }),
-    // occupancy-filtered covers for the KNN probes: the trailing binary
-    // arg is a bitmap over cell ids (fine ids 0..nx*ny-1, nested-coarse
-    // ids past nx*ny) of cells that hold >= 1 object — emitted set =
-    // cover ∩ occupied, pair-set identical, no empty-cell explode rows
-    fn("st_gridcells_knncover_occ", ArrayType(LongType, containsNull = false),
-        Seq(Geom, Dbl, Dbl, Dbl, Dbl, Int_, Int_, Int_, Bin))(a => {
-      val e = g0(a).getEnvelopeInternal
-      if (e.isNull) null
-      else new GenericArrayData(Grid.cellsKnnCoverOcc(
-        e.getMinX, e.getMinY, e.getMaxX, e.getMaxY,
-        d(a, 1), d(a, 2), d(a, 3), d(a, 4), i(a, 5), i(a, 6), i(a, 7),
-        a(8).asInstanceOf[Array[Byte]]))
-    }),
-    fn("st_gridcells_knndual", ArrayType(LongType, containsNull = false),
-        Seq(Geom, Dbl, Dbl, Dbl, Dbl, Int_, Int_))(a => {
-      val e = g0(a).getEnvelopeInternal
-      if (e.isNull) null
-      else new GenericArrayData(Grid.cellsKnnDual(
-        e.getMinX, e.getMinY, e.getMaxX, e.getMaxY,
-        d(a, 1), d(a, 2), d(a, 3), d(a, 4), i(a, 5), i(a, 6)))
-    }),
     fn("st_refcell", LongType, Seq(Geom, Geom, Dbl, Dbl, Dbl, Dbl, Int_, Int_))(a => {
       val e1 = g0(a).getEnvelopeInternal
       val e2 = g1(a).getEnvelopeInternal

@@ -19,8 +19,7 @@ object GraftFunctions {
     "st_collect_agg" -> (es => StCollectAgg(es.head)),
     "st_convexhull_agg" -> (es => StConvexHullAgg(es.head)),
     "st_analyze_agg" -> (es => StAnalyzeAgg(es.head)),
-    "st_polygonize_agg" -> (es => StPolygonizeAgg(es.head)),
-    "sd_knn_topk_agg" -> (es => SdKnnTopKAgg(es(0), es(1), es(2), es(3))))
+    "st_polygonize_agg" -> (es => StPolygonizeAgg(es.head)))
 
   private val sketches: Map[String, Seq[Expression] => Expression] = Map(
     "sd_minhash" -> (es => graft.pipeline.MinHashSig(es.head, es(1) match {

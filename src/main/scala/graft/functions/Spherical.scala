@@ -12,13 +12,19 @@ object Spherical {
   /** IUGG mean Earth radius, meters (same constant the oracle SQL uses). */
   final val R = 6371008.8
 
+  /** Great-circle distance in meters, in the atan2 form (Vincenty's
+    * formula on the sphere): the central angle is atan2 of the norm of the
+    * two unit vectors' cross product and their dot product, well
+    * conditioned at every angle. The haversine's asin(sqrt(a)) loses
+    * about 1e-6 m near antipodes, where asin is flat. */
   def haversine(lon1: Double, lat1: Double, lon2: Double, lat2: Double): Double = {
     val p1 = math.toRadians(lat1); val p2 = math.toRadians(lat2)
-    val dphi = math.toRadians(lat2 - lat1)
     val dlam = math.toRadians(lon2 - lon1)
-    val a = math.sin(dphi / 2) * math.sin(dphi / 2) +
-      math.cos(p1) * math.cos(p2) * math.sin(dlam / 2) * math.sin(dlam / 2)
-    2 * R * math.asin(math.sqrt(a))
+    val (s1, c1) = (math.sin(p1), math.cos(p1))
+    val (s2, c2) = (math.sin(p2), math.cos(p2))
+    val cl = math.cos(dlam)
+    val cross = math.hypot(c2 * math.sin(dlam), c1 * s2 - s1 * c2 * cl)
+    R * math.atan2(cross, s1 * s2 + c1 * c2 * cl)
   }
 
   // ---- exact great-circle distance between geometries (S2-style edge
@@ -1451,120 +1457,6 @@ object Spherical {
     out
   }
 
-  // ---- two-level KNN cover: the fanout bound for wide geometries. A
-  // polar cap's fine cover is (band rows × nx) cells (~7k at 360×180) —
-  // at scale that multiplies the shuffle by orders of magnitude. Past a
-  // cell budget the query side emits NESTED coarse cells for its
-  // interior, and the object side emits both levels. ----
-
-  /** Largest divisor of n that is <= 8: the NESTED coarse factor for the
-    * KNN mixed cover (nesting must be exact so interior coarse cells
-    * admit precisely the objects their fine cells would). 1 = no
-    * nesting. */
-  @inline private def nestFactor(n: Int): Int = Grid.nestFactor(n)
-
-  /** KNN final-probe cover: all-fine while small; past `maxCells`, a
-    * MIXED cover — nested coarse cells (ids offset nx*ny on the
-    * nx/fx x ny/fy grid) for the fully-contained interior plus FINE
-    * cells along the boundary ring. Paired with [[gridCellsKnnDual]] on
-    * the object side, the admitted candidate-pair set is IDENTICAL to
-    * the all-fine cover's (interior coarse cells match exactly the
-    * objects whose fine cells they contain; the boundary stays fine), so
-    * a wide-radius query enumerates ~fx*fy fewer cover rows with
-    * zero extra exact-distance work. */
-  def gridCellsKnnCover(env: org.locationtech.jts.geom.Envelope,
-      radiusM: Double, nx: Int, ny: Int, maxCells: Int): Array[Long] = {
-    val (cy0, cy1, lonStart, lonLen) = coverOf(env, radiusM, nx, ny)
-    if (cy1 < cy0) return Array.empty
-    if ((cy1 - cy0 + 1).toLong * lonLen <= maxCells)
-      return gridCells(env, radiusM, nx, ny)
-    val fx = nestFactor(nx); val fy = nestFactor(ny)
-    if (fx * fy <= 1) return gridCells(env, radiusM, nx, ny)
-    val cnx = nx / fx
-    val off = nx.toLong * ny
-    // contained coarse band: coarse row r covers fine rows [r*fy, r*fy+fy);
-    // coarse col c covers UNWRAPPED fine cols [c*fx, (c+1)*fx) against the
-    // circular fine arc [lonStart, lonStart+lonLen)
-    val ry0 = (cy0 + fy - 1) / fy
-    val ry1 = (cy1 + 1) / fy // exclusive
-    val rx0 = (lonStart + fx - 1) / fx
-    val rx1 = (lonStart + lonLen) / fx // exclusive, unwrapped
-    if (ry0 >= ry1 || rx0 >= rx1) return gridCells(env, radiusM, nx, ny)
-    val out = new scala.collection.mutable.ArrayBuffer[Long]()
-    var r = ry0
-    while (r < ry1) {
-      var c = rx0
-      while (c < rx1) { out += off + r.toLong * cnx + (c % cnx); c += 1 }
-      r += 1
-    }
-    def fineRow(cy: Int, fromU: Int, toU: Int): Unit = {
-      var u = fromU
-      while (u < toU) { out += cy.toLong * nx + (u % nx); u += 1 }
-    }
-    var cy = cy0
-    while (cy < math.min(ry0 * fy, cy1 + 1)) { // rows above the band
-      fineRow(cy, lonStart, lonStart + lonLen); cy += 1
-    }
-    cy = math.max(ry1 * fy, cy0)
-    while (cy <= cy1) { // rows below the band
-      fineRow(cy, lonStart, lonStart + lonLen); cy += 1
-    }
-    cy = math.max(ry0 * fy, cy0)
-    val bandEnd = math.min(ry1 * fy, cy1 + 1)
-    while (cy < bandEnd) { // in-band rows: fine cols outside the coarse arc
-      fineRow(cy, lonStart, rx0 * fx)
-      fineRow(cy, rx1 * fx, lonStart + lonLen)
-      cy += 1
-    }
-    out.toArray
-  }
-
-  /** [[gridCellsKnnCover]] filtered by the occupancy bitmap (fine AND
-    * nested-coarse ids share one bit space — coarse bits sit past nx*ny,
-    * exactly the ids [[gridCellsKnnDual]] assigns). Emitted set = mixed
-    * cover ∩ occupied, so paired with the dual object explode the
-    * candidate-pair set is IDENTICAL to the unfiltered cover's (an
-    * unoccupied cell matches nothing) — the spherical twin of
-    * Grid.cellsKnnCoverOcc, closing the explode-then-broadcast-semi tax
-    * the planar side already removed. */
-  def gridCellsKnnCoverOcc(env: org.locationtech.jts.geom.Envelope,
-      radiusM: Double, nx: Int, ny: Int, maxCells: Int,
-      occ: Array[Byte]): Array[Long] = {
-    val all = gridCellsKnnCover(env, radiusM, nx, ny, maxCells)
-    var n = 0
-    var i = 0
-    while (i < all.length) {
-      if (Grid.occHit(occ, all(i))) { all(n) = all(i); n += 1 }
-      i += 1
-    }
-    if (n == all.length) all else java.util.Arrays.copyOf(all, n)
-  }
-
-  /** Object-side companion of [[gridCellsKnnCover]]: the fine cover plus
-    * its image on the NESTED coarse grid (exact nesting, so the coarse
-    * set is just the floor-divided fine set, deduplicated). */
-  def gridCellsKnnDual(env: org.locationtech.jts.geom.Envelope,
-      radiusM: Double, nx: Int, ny: Int): Array[Long] = {
-    val fine = gridCells(env, radiusM, nx, ny)
-    val fx = nestFactor(nx); val fy = nestFactor(ny)
-    if (fx * fy <= 1 || fine.isEmpty) return fine
-    val cnx = nx / fx
-    val off = nx.toLong * ny
-    val coarse = new java.util.TreeSet[Long]()
-    var i = 0
-    while (i < fine.length) {
-      val cy = fine(i) / nx; val cx = fine(i) % nx
-      coarse.add(off + (cy / fy) * cnx + cx / fx)
-      i += 1
-    }
-    val out = new Array[Long](fine.length + coarse.size)
-    System.arraycopy(fine, 0, out, 0, fine.length)
-    val it = coarse.iterator()
-    var j = fine.length
-    while (it.hasNext) { out(j) = it.next(); j += 1 }
-    out
-  }
-
   /** Spherical lat/lng bound (S2 RectBounder): the chart envelope of the
     * vertices widened by each geodesic edge's poleward latitude bulge.
     * A great-circle arc between two points at latitude φ reaches beyond
@@ -2408,7 +2300,9 @@ object Spherical {
       case _ => return g.getFactory.createPoint()
     }
     // nearest vertex, ties to the later one; rebuild as a point of the
-    // owning sequence's dimension so Z/M ride along
+    // owning sequence's dimension so Z/M ride along. Distances within a
+    // nanometre tie: two vertices equidistant from the centroid need not
+    // round to the same double
     var bestSeq: org.locationtech.jts.geom.CoordinateSequence = null
     var bestIdx = -1
     var bestAng = Double.MaxValue
@@ -2416,7 +2310,7 @@ object Spherical {
       var i = 0
       while (i < seq.size) {
         val a = haversine(c._1, c._2, seq.getX(i), seq.getY(i))
-        if (a <= bestAng) { bestAng = a; bestSeq = seq; bestIdx = i }
+        if (a <= bestAng + 1e-9) { bestAng = math.min(a, bestAng); bestSeq = seq; bestIdx = i }
         i += 1
       }
     }

@@ -107,7 +107,9 @@ case class BroadcastIndexSpatialJoinExec(
       // rows leave as UnsafeRows, like every Spark join's: a collect or
       // shuffle directly above reads them as such
       val toUnsafe = UnsafeProjection.create(outTypes)
-      val index = indexFor(broadcastRows.value, boundBuildGeom, spherical)
+      val rows = broadcastRows.value
+      val index = indexFor(rows, (boundBuildGeom, spherical))(
+        buildIndex(rows.iterator, boundBuildGeom, spherical))
       val probe = new Probe(boundStreamGeom, boundDistance, boundExtra, pred, bIsLeft,
         candidatePairs)
       val joined = new JoinedRow()
@@ -304,31 +306,31 @@ object BroadcastIndexSpatialJoinExec {
     new BuildIndex(tree, fullRing.result())
   }
 
-  /** Executor-local indexes: one per broadcast build side (and geometry
-    * expression and mode), not one per task — the reference builds its
-    * index once per join via OnceAsync (exec.rs:44-46). Keyed weakly by
-    * the broadcast VALUE, and each index held weakly: it lives while the
-    * tasks of its join probe it, which hold the broadcast too, and the
-    * first GC after the join drops it — even before Spark removes the
-    * broadcast. The build runs under its broadcast's own lock, so the
+  /** Executor-local indexes: one per broadcast build side (and index
+    * key: geometry expression and mode), not one per task — the reference
+    * builds its index once per join via OnceAsync (exec.rs:44-46). Keyed
+    * weakly by the broadcast VALUE, and each index held weakly: it lives
+    * while the tasks of its join probe it, which hold the broadcast too,
+    * and the first GC after the join drops it — even before Spark removes
+    * the broadcast. The build runs under its broadcast's own lock, so the
     * tasks of one join wait for its single build while unrelated joins
-    * proceed. */
+    * proceed. The KNN join caches its index here too. */
   private val indexes = new java.util.WeakHashMap[AnyRef,
-    java.util.HashMap[(Expression, Boolean), java.lang.ref.WeakReference[BuildIndex]]]()
+    java.util.HashMap[AnyRef, java.lang.ref.WeakReference[AnyRef]]]()
 
-  def indexFor(rows: Array[InternalRow], geomExpr: Expression,
-      spherical: Boolean): BuildIndex = {
+  /** The index `build` makes over broadcast `rows`, built once per
+    * broadcast value and `key`. */
+  def indexFor[I <: AnyRef](rows: Array[InternalRow], key: AnyRef)(build: => I): I = {
     val perBroadcast = indexes.synchronized {
       indexes.computeIfAbsent(rows, _ => new java.util.HashMap())
     }
     perBroadcast.synchronized {
-      val key = (geomExpr, spherical)
       val cached = perBroadcast.get(key)
       Option(if (cached == null) null else cached.get).getOrElse {
-        val index = buildIndex(rows.iterator, geomExpr, spherical)
-        perBroadcast.put(key, new java.lang.ref.WeakReference(index))
+        val index = build
+        perBroadcast.put(key, new java.lang.ref.WeakReference[AnyRef](index))
         index
-      }
+      }.asInstanceOf[I]
     }
   }
 

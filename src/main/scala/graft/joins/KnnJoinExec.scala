@@ -5,16 +5,19 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.physical._
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.locationtech.jts.geom.{Envelope, Geometry}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
+import org.apache.spark.unsafe.types.ByteArray
+import org.locationtech.jts.geom.{Envelope, Geometry, Point}
 import org.locationtech.jts.index.strtree.{ItemBoundable, ItemDistance, STRtree}
+import graft.functions.Spherical
 import graft.geom.GeomIO
 
-/** SQL-level KNN join: `q JOIN o ON st_knn(q.geom, o.geom, k)` — for every
-  * query-side row, the k nearest object rows. Object side is broadcast and
-  * indexed (STRtree) once per executor; ties at the kth distance are
-  * resolved by a radius re-search ordered by (distance, object WKB), so
-  * results are deterministic.
+/** Broadcast KNN join: `q JOIN o ON st_knn(q.geom, o.geom, k)` — for every
+  * query-side row, the k nearest object rows. The object side is broadcast
+  * and indexed once per broadcast value (`BroadcastIndexSpatialJoinExec`'s
+  * executor cache); each query row runs [[KnnJoinExec.nearest]], the search
+  * [[PartitionedKnnJoinExec]] runs per leaf.
   *
   * Reference: ST_KNN stub + SpatialJoinPlanNode rewrite
   * (rust/sedona-functions/src/st_knn.rs:30-44,
@@ -23,6 +26,10 @@ import graft.geom.GeomIO
   * pushdown barrier caveat applies: place object-side filters in a
   * subquery if they must run BEFORE the kNN (Catalyst pushdown happens
   * before this strategy sees the plan).
+  *
+  * @param tieBreak a DOUBLE over the object side ordering equal
+  *   distances; None orders them by the object WKB
+  * @param rankOutput `knn_distance` and `knn_rank`, or empty
   */
 case class KnnJoinExec(
     queryPlan: SparkPlan,
@@ -31,12 +38,16 @@ case class KnnJoinExec(
     objectGeom: Expression,
     k: Int,
     objectIsLeft: Boolean,
-    spheroid: Boolean = false)
+    spheroid: Boolean,
+    tieBreak: Option[Expression],
+    rankOutput: Seq[Attribute])
   extends BinaryExecNode {
+
+  import KnnJoinExec._
 
   override def left: SparkPlan = if (objectIsLeft) objectPlan else queryPlan
   override def right: SparkPlan = if (objectIsLeft) queryPlan else objectPlan
-  override def output: Seq[Attribute] = left.output ++ right.output
+  override def output: Seq[Attribute] = left.output ++ right.output ++ rankOutput
 
   override def requiredChildDistribution: Seq[Distribution] = {
     val b = BroadcastDistribution(IdentityBroadcastMode)
@@ -44,104 +55,31 @@ case class KnnJoinExec(
   }
 
   override lazy val metrics = Map(
-    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
-
-  private class GeomDist extends ItemDistance with Serializable {
-    override def distance(a: ItemBoundable, b: ItemBoundable): Double =
-      a.getItem.asInstanceOf[(Geometry, Any)]._1
-        .distance(b.getItem.asInstanceOf[(Geometry, Any)]._1)
-  }
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "candidatePairs" -> SQLMetrics.createMetric(sparkContext, "knn candidate pairs"))
 
   protected override def doExecute(): RDD[InternalRow] = {
     val numOutputRows = longMetric("numOutputRows")
+    val candidatePairs = longMetric("candidatePairs")
     val broadcastRows = objectPlan.executeBroadcast[Array[InternalRow]]()
-    val boundObjGeom = BindReferences.bindReference(objectGeom, objectPlan.output)
+    val objects = ObjectSide.bound(objectPlan.output, objectGeom, tieBreak, spheroid)
     val boundQueryGeom = BindReferences.bindReference(queryGeom, queryPlan.output)
     val kk = k
     val objLeft = objectIsLeft
+    val ranked = rankOutput.nonEmpty
+    val outTypes = output.map(_.dataType).toArray
 
     queryPlan.execute().mapPartitions { queryIter =>
-      val objs = broadcastRows.value.flatMap { row =>
-        val bytes = boundObjGeom.eval(row)
-        if (bytes == null) None
-        else Some((GeomIO.read(bytes.asInstanceOf[Array[Byte]]), row))
-      }
-      val tree = new STRtree()
-      objs.foreach { case item @ (g, _) => tree.insert(g.getEnvelopeInternal, item) }
-      if (objs.nonEmpty) tree.build()
-      val itemDist = new GeomDist
-      val joined = new JoinedRow()
-      val sph = spheroid
-      // spheroid + all-point object side (the typical KNN workload):
-      // 3D unit-vector kd-tree, chord distance branch-and-bound — exact,
-      // because chord is strictly monotone in great-circle distance.
-      // Non-point objects (or query rows) fall back to the full rank.
-      val chordTree: ChordKdTree =
-        if (sph && objs.nonEmpty &&
-            objs.forall(_._1.isInstanceOf[org.locationtech.jts.geom.Point])) {
-          val t = new ChordKdTree(objs.length)
-          objs.foreach { case (g, _) =>
-            val c = g.getCoordinate; t.add(c.x, c.y)
-          }
-          t.build()
-          t
-        } else null
+      val rows = broadcastRows.value
+      val index = BroadcastIndexSpatialJoinExec.indexFor(rows, objects)(objects.index(rows.iterator))
+      val emit = new Emit(objLeft, ranked, outTypes)
       queryIter.flatMap { qRow =>
-        val bytes = boundQueryGeom.eval(qRow)
-        if (bytes == null || objs.isEmpty) Iterator.empty
+        val qg = geometryOf(boundQueryGeom, qRow)
+        if (qg == null) Iterator.empty
         else {
-          val qg = GeomIO.read(bytes.asInstanceOf[Array[Byte]])
-          val n = math.min(kk, objs.length)
-          val cands =
-            if (sph && chordTree != null &&
-                qg.isInstanceOf[org.locationtech.jts.geom.Point]) {
-              // exact chord-space branch-and-bound: kth chord distance,
-              // then a chord-range sweep so kth-distance ties are all
-              // present before the deterministic (distance, WKB-hash)
-              // tie-break — same result set as the full rank
-              val c = qg.getCoordinate
-              val qv = chordTree.embed(c.x, c.y)
-              val k2 = chordTree.kthDist2(qv, n)
-              chordTree.range(qv, k2)
-                .map { i =>
-                  val (g, row) = objs(i)
-                  (KnnJoinExec.geodesicDistance(qg, g), g, row)
-                }
-                .sortBy { case (d, g, _) =>
-                  (d, java.util.Arrays.hashCode(GeomIO.write(g)).toLong)
-                }
-                .take(n)
-            } else if (sph) {
-              // geodesic metric with non-point geometries: planar
-              // envelope distance is not a valid lower bound for meters —
-              // rank the broadcast object set by great-circle distance
-              // (closest planar point pair, haversine).
-              objs
-                .map { case (g, row) => (KnnJoinExec.geodesicDistance(qg, g), g, row) }
-                .sortBy { case (d, g, _) =>
-                  (d, java.util.Arrays.hashCode(GeomIO.write(g)).toLong)
-                }
-                .take(n)
-            } else {
-              val nearest =
-                tree.nearestNeighbour(qg.getEnvelopeInternal, (qg, null), itemDist, n)
-              val dk = nearest
-                .map(o => qg.distance(o.asInstanceOf[(Geometry, InternalRow)]._1)).max
-              val env = new Envelope(qg.getEnvelopeInternal)
-              env.expandBy(dk)
-              tree.query(env).toArray
-                .map(_.asInstanceOf[(Geometry, InternalRow)])
-                .map { case (g, row) => (qg.distance(g), g, row) }
-                .filter(_._1 <= dk)
-                .sortBy { case (d, g, _) =>
-                  (d, java.util.Arrays.hashCode(GeomIO.write(g)).toLong)
-                }
-                .take(n)
-            }
+          val cands = nearest(index, qg, kk, candidatePairs)
           numOutputRows += cands.length
-          cands.iterator.map { case (_, _, oRow) =>
-            if (objLeft) joined(oRow, qRow) else joined(qRow, oRow)
-          }
+          emit(qRow, cands)
         }
       }
     }
@@ -153,11 +91,230 @@ case class KnnJoinExec(
     else copy(queryPlan = newLeft, objectPlan = newRight)
 }
 
+/** The KNN search both KNN execs run, and its one order: (distance,
+  * tie-break, object row bytes). */
 object KnnJoinExec {
+
+  /** An object row as the search sees it: its geometry, its bound
+    * (`BroadcastIndexSpatialJoinExec.buildBound`), its tie key and its
+    * UnsafeRow bytes. */
+  final class KnnObject(val geom: Geometry, val bound: Envelope, val tie: Array[Byte],
+      val bytes: Array[Byte], numFields: Int) {
+    def row: UnsafeRow = {
+      val r = new UnsafeRow(numFields)
+      r.pointTo(bytes, bytes.length)
+      r
+    }
+  }
+
+  final class Candidate(val d: Double, val obj: KnnObject)
+
+  /** Distance, then the tie key, then the object row's bytes: a total
+    * order, so every path keeps the same k rows. Keys are computed once per
+    * object. */
+  val byRank: java.util.Comparator[Candidate] = (a, b) => {
+    val c = java.lang.Double.compare(a.d, b.d)
+    if (c != 0) c
+    else {
+      val t = ByteArray.compareBinary(a.obj.tie, b.obj.tie)
+      if (t != 0) t else ByteArray.compareBinary(a.obj.bytes, b.obj.bytes)
+    }
+  }
+
+  /** The `k` best candidates offered, by [[byRank]]. */
+  final class TopK(k: Int) {
+    private val heap = new java.util.PriorityQueue[Candidate](math.max(1, k), byRank.reversed())
+    def offer(c: Candidate): Unit =
+      if (heap.size < k) heap.add(c)
+      else if (k > 0 && byRank.compare(c, heap.peek) < 0) { heap.poll(); heap.add(c) }
+    def sorted: Array[Candidate] = {
+      val out = heap.toArray(new Array[Candidate](0))
+      java.util.Arrays.sort(out, byRank)
+      out
+    }
+  }
+
+  /** A tie-break DOUBLE as bytes in the same unsigned order; null first. */
+  def doubleKey(v: Any): Array[Byte] = v match {
+    case d: Double =>
+      val bits = java.lang.Double.doubleToLongBits(d)
+      java.nio.ByteBuffer.allocate(8).putLong(if (bits < 0) ~bits else bits ^ Long.MinValue).array()
+    case _ => Array.emptyByteArray
+  }
+
+  /** The geometry `geom` evaluates to on `row`; null for a null or empty
+    * geometry, which matches nothing. */
+  def geometryOf(geom: Expression, row: InternalRow): Geometry = {
+    val bytes = geom.eval(row)
+    if (bytes == null) null
+    else {
+      val g = GeomIO.read(bytes.asInstanceOf[Array[Byte]])
+      if (g.isEmpty) null else g
+    }
+  }
+
+  /** How object rows enter the search; also the broadcast index's cache
+    * key. `geom` and `tieBreak` are bound to the object side's output. */
+  final case class ObjectSide(types: Seq[DataType], geom: Expression,
+      tieBreak: Option[Expression], spheroid: Boolean) {
+
+    def index(rows: Iterator[InternalRow]): KnnIndex = {
+      val toUnsafe = UnsafeProjection.create(types.toArray)
+      val objects = Array.newBuilder[KnnObject]
+      rows.foreach { row =>
+        val g = geometryOf(geom, row)
+        if (g != null) {
+          val tie = tieBreak match {
+            case Some(t) => doubleKey(t.eval(row))
+            case None => geom.eval(row).asInstanceOf[Array[Byte]]
+          }
+          objects += new KnnObject(g, BroadcastIndexSpatialJoinExec.buildBound(g, spheroid), tie,
+            toUnsafe(row).copy().getBytes, types.length)
+        }
+      }
+      new KnnIndex(objects.result(), spheroid)
+    }
+  }
+
+  object ObjectSide {
+    /** The object side of `attrs`, its expressions bound to them. */
+    def bound(attrs: Seq[Attribute], geom: Expression, tieBreak: Option[Expression],
+        spheroid: Boolean): ObjectSide =
+      ObjectSide(attrs.map(_.dataType), BindReferences.bindReference(geom, attrs),
+        tieBreak.map(BindReferences.bindReference(_, attrs)), spheroid)
+  }
+
+  /** The objects of one broadcast or one leaf: planar in an STRtree; on
+    * the sphere, all-point objects in a [[ChordKdTree]] (chord distance
+    * is strictly monotone in great-circle distance), others unindexed. */
+  final class KnnIndex(val objects: Array[KnnObject], val spheroid: Boolean) {
+    val tree: STRtree =
+      if (spheroid || objects.isEmpty) null
+      else {
+        val t = new STRtree()
+        objects.foreach(o => t.insert(o.geom.getEnvelopeInternal, o))
+        t.build()
+        t
+      }
+    val chord: ChordKdTree =
+      if (!spheroid || objects.isEmpty || !objects.forall(_.geom.isInstanceOf[Point])) null
+      else {
+        val t = new ChordKdTree(objects.length)
+        objects.foreach { o => val c = o.geom.getCoordinate; t.add(c.x, c.y) }
+        t.build()
+        t
+      }
+  }
+
+  private object ObjectDistance extends ItemDistance {
+    override def distance(a: ItemBoundable, b: ItemBoundable): Double =
+      a.getItem.asInstanceOf[KnnObject].geom.distance(b.getItem.asInstanceOf[KnnObject].geom)
+  }
+
   /** Great-circle distance in meters between the planar-nearest points of
     * two lon/lat geometries (exact for point-point). */
-  def geodesicDistance(a: Geometry, b: Geometry): Double = {
-    val pts = org.locationtech.jts.operation.distance.DistanceOp.nearestPoints(a, b)
-    graft.functions.Spherical.haversine(pts(0).x, pts(0).y, pts(1).x, pts(1).y)
+  def geodesicDistance(a: Geometry, b: Geometry): Double = (a, b) match {
+    case (p: Point, q: Point) => Spherical.haversine(p.getX, p.getY, q.getX, q.getY)
+    case _ =>
+      val pts = org.locationtech.jts.operation.distance.DistanceOp.nearestPoints(a, b)
+      Spherical.haversine(pts(0).x, pts(0).y, pts(1).x, pts(1).y)
+  }
+
+  def distance(q: Geometry, o: Geometry, spheroid: Boolean): Double =
+    if (spheroid) geodesicDistance(q, o) else q.distance(o)
+
+  /** `r` plus a rounding slack, so a bound widened by it holds every
+    * geometry within `r` of `q`: 1e-9 of it plus 1 mm on the sphere, 1e-12
+    * of it and of `q`'s coordinates on the plane. */
+  def padded(q: Geometry, r: Double, spheroid: Boolean): Double =
+    if (r.isPosInfinity) r
+    else if (spheroid) r * (1 + 1e-9) + 1e-3
+    else {
+      val e = q.getEnvelopeInternal
+      val mag = math.max(math.max(math.abs(e.getMinX), math.abs(e.getMaxX)),
+        math.max(math.abs(e.getMinY), math.abs(e.getMaxY)))
+      r + 1e-12 * (r + mag)
+    }
+
+  /** The kth smallest distance from `q` to the index's objects, +∞ when
+    * it holds fewer than k: planar by `STRtree.nearestNeighbour`, on the
+    * sphere by the chord tree's kth chord (padded into meters) or a full
+    * rank. */
+  def kthDistance(index: KnnIndex, q: Geometry, k: Int): Double = {
+    val objects = index.objects
+    if (objects.length < k || k < 1) Double.PositiveInfinity
+    else if (index.tree != null)
+      index.tree.nearestNeighbour(q.getEnvelopeInternal,
+          new KnnObject(q, null, null, null, 0), ObjectDistance, k)
+        .map(o => q.distance(o.asInstanceOf[KnnObject].geom)).max
+    else if (index.chord != null && q.isInstanceOf[Point]) {
+      val c = q.getCoordinate
+      val c2 = index.chord.kthDist2(index.chord.embed(c.x, c.y), k)
+      padded(q, 2 * Spherical.R * math.asin(math.min(1.0, math.sqrt(c2) / 2)), spheroid = true)
+    } else {
+      val ds = objects.map(o => geodesicDistance(q, o.geom))
+      java.util.Arrays.sort(ds)
+      ds(k - 1)
+    }
+  }
+
+  /** The up to `k` best objects within `radius` of `q` that `keep`
+    * admits (null admits all), best first by [[byRank]]. `candidates`
+    * counts the distances computed. */
+  def rankWithin(index: KnnIndex, q: Geometry, radius: Double, k: Int,
+      keep: KnnObject => Boolean = null, candidates: SQLMetric = null): Array[Candidate] = {
+    val objects = index.objects
+    if (k < 1 || objects.isEmpty) return Array.empty
+    val top = new TopK(k)
+    var n = 0L
+    def offer(o: KnnObject): Unit =
+      if (keep == null || keep(o)) {
+        n += 1
+        val d = distance(q, o.geom, index.spheroid)
+        if (d <= radius) top.offer(new Candidate(d, o))
+      }
+    if (radius.isPosInfinity) objects.foreach(offer)
+    else if (index.tree != null) {
+      val env = new Envelope(q.getEnvelopeInternal)
+      env.expandBy(padded(q, radius, spheroid = false))
+      val it = index.tree.query(env).iterator()
+      while (it.hasNext) offer(it.next().asInstanceOf[KnnObject])
+    } else if (index.chord != null && q.isInstanceOf[Point]) {
+      val c = q.getCoordinate
+      val chord = 2 * math.sin(math.min(math.Pi / 2,
+        padded(q, radius, spheroid = true) / (2 * Spherical.R)))
+      index.chord.range(index.chord.embed(c.x, c.y), chord * chord).foreach(i => offer(objects(i)))
+    } else objects.foreach(offer)
+    if (candidates != null) candidates += n
+    top.sorted
+  }
+
+  /** The `k` nearest objects to `q`, best first: everything within the
+    * kth distance, ranked, so ties at the kth distance resolve by
+    * [[byRank]] (the reference's tie re-search). */
+  def nearest(index: KnnIndex, q: Geometry, k: Int,
+      candidates: SQLMetric = null): Array[Candidate] =
+    rankWithin(index, q, kthDistance(index, q, k), k, candidates = candidates)
+
+  /** Output rows of a query row's ranked candidates: query and object in
+    * child order, then `knn_distance` and `knn_rank` when `ranked`. One
+    * per task: it reuses its rows. */
+  final class Emit(objectIsLeft: Boolean, ranked: Boolean, outTypes: Array[DataType]) {
+    private val toUnsafe = UnsafeProjection.create(outTypes)
+    private val pair = new JoinedRow()
+    private val withRank = new JoinedRow()
+    private val rank = new SpecificInternalRow(Seq(DoubleType, IntegerType))
+
+    def apply(qRow: InternalRow, cands: Array[Candidate]): Iterator[InternalRow] =
+      cands.iterator.zipWithIndex.map { case (c, i) =>
+        val o = c.obj.row
+        val r = if (objectIsLeft) pair(o, qRow) else pair(qRow, o)
+        if (!ranked) toUnsafe(r)
+        else {
+          rank.setDouble(0, c.d)
+          rank.setInt(1, i + 1)
+          toUnsafe(withRank(r, rank))
+        }
+      }
   }
 }

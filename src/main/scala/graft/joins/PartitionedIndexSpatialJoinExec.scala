@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, UnsafeRowSerializer}
 import org.apache.spark.sql.execution.metric.SQLMetrics
+import org.apache.spark.sql.types.DataType
 import org.locationtech.jts.geom.Envelope
 import graft.geom.GeomIO
 
@@ -73,31 +74,11 @@ case class PartitionedIndexSpatialJoinExec(
     val streamBounds = Bounds(boundStreamGeom, boundDistance, stream = true, spherical)
     val buildBounds = Bounds(boundBuildGeom, None, stream = false, spherical)
 
-    val maxLeaves = math.max(1, conf.numShufflePartitions)
-    val perPartition = math.ceil(3.0 * SamplePerLeaf * maxLeaves /
-      math.max(1, streamRows.getNumPartitions + buildRows.getNumPartitions)).toInt
-    val sample = sampleCorners(streamRows, streamBounds, perPartition)
-      .union(sampleCorners(buildRows, buildBounds, perPartition)).collect()
-    val kdb = KdbTree(sample, math.min(maxLeaves, math.max(1, sample.length / MinSamplePerLeaf)))
+    val kdb = kdbTree(Seq(streamRows -> streamBounds, buildRows -> buildBounds),
+      math.max(1, conf.numShufflePartitions))
 
-    def byLeaf(rows: RDD[InternalRow], attrs: Seq[Attribute], bounds: Bounds) = {
-      val types = attrs.map(_.dataType).toArray
-      val keyed = rows.mapPartitions { it =>
-        val toUnsafe = UnsafeProjection.create(types)
-        it.flatMap { row =>
-          val env = bounds(row)
-          if (env == null) Iterator.empty
-          else {
-            val u = toUnsafe(row).copy()
-            kdb.leavesOf(env, spherical).iterator.map(leaf => (leaf, u: InternalRow))
-          }
-        }
-      }
-      new ShuffledRDD[Int, InternalRow, InternalRow](keyed, new HashPartitioner(kdb.numLeaves))
-        .setSerializer(new UnsafeRowSerializer(attrs.size))
-        .map(_._2)
-    }
-
+    def byLeaf(rows: RDD[InternalRow], attrs: Seq[Attribute], bounds: Bounds) =
+      exchange(rows, attrs.map(_.dataType).toArray, kdb.numLeaves)(meeting(kdb, bounds))
     // zipPartitions hands its function no partition index, and a task's
     // partition id is its consuming RDD's (a coalesce above differs), so
     // the leaf id comes from mapPartitionsWithIndex over the zipped pair
@@ -127,6 +108,43 @@ object PartitionedIndexSpatialJoinExec {
   private val SamplePerLeaf = 100
   private val MinSamplePerLeaf = 8
 
+  /** The KDB tree over a sample of `sides`' bound min corners: at most
+    * `maxLeaves` leaves, fewer for a small sample. Runs one job. */
+  def kdbTree(sides: Seq[(RDD[InternalRow], Bounds)], maxLeaves: Int): KdbTree = {
+    val perPartition = math.ceil(3.0 * SamplePerLeaf * maxLeaves /
+      math.max(1, sides.map(_._1.getNumPartitions).sum)).toInt
+    val sample = sides.map { case (rows, bounds) => sampleCorners(rows, bounds, perPartition) }
+      .reduce(_ union _).collect()
+    KdbTree(sample, math.min(maxLeaves, math.max(1, sample.length / MinSamplePerLeaf)))
+  }
+
+  /** `rows` as UnsafeRows of `types`, shuffled into `n` partitions: each
+    * row to every partition `targets` names for it, none to drop it. */
+  def exchange(rows: RDD[InternalRow], types: Array[DataType], n: Int)(
+      targets: InternalRow => Iterator[Int]): RDD[InternalRow] = {
+    val keyed = rows.mapPartitions { it =>
+      val toUnsafe = UnsafeProjection.create(types)
+      it.flatMap { row =>
+        val to = targets(row)
+        if (!to.hasNext) Iterator.empty
+        else {
+          val u = toUnsafe(row).copy()
+          to.map(p => (p, u: InternalRow))
+        }
+      }
+    }
+    new ShuffledRDD[Int, InternalRow, InternalRow](keyed, new HashPartitioner(n))
+      .setSerializer(new UnsafeRowSerializer(types.length))
+      .map(_._2)
+  }
+
+  /** The leaves of `kdb` a row's bound meets: none for a null or empty
+    * geometry. */
+  def meeting(kdb: KdbTree, bounds: Bounds): InternalRow => Iterator[Int] = row => {
+    val env = bounds(row)
+    if (env == null) Iterator.empty else kdb.leavesOf(env, bounds.spherical).iterator
+  }
+
   /** Slack of a wrapped longitude interval against a leaf edge: it covers
     * the rounding of the ±360 shift that placed a pair's reference point. */
   private val WrapSlack = 1e-9
@@ -134,7 +152,7 @@ object PartitionedIndexSpatialJoinExec {
   /** One side's row bound, as the index sees it: `streamBound` with the
     * distance on the stream side, `buildBound` on the build side; null
     * for a null or empty geometry. */
-  private final case class Bounds(geom: Expression, distance: Option[Expression],
+  final case class Bounds(geom: Expression, distance: Option[Expression],
       stream: Boolean, spherical: Boolean) {
     def apply(row: InternalRow): Envelope = {
       val bytes = geom.eval(row)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, JoinHint, LogicalPlan, SHUFFLE_HASH, SHUFFLE_MERGE}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
-import graft.plans.{RangeJoinShapes, SpatialJoinRule}
+import graft.plans.{KnnJoinPlan, RangeJoinShapes, SpatialJoinRule}
 
 /** Plans joins whose condition carries a spatial predicate onto the two
   * index joins. Mirrors the reference's SpatialJoinLogicalRewrite +
@@ -39,45 +39,36 @@ import graft.plans.{RangeJoinShapes, SpatialJoinRule}
   *     here unplanned only when it is streaming, is a mark join, has a
   *     distance no one side can evaluate, or its switch is off.
   *
+  * KNN joins (`KnnJoinPlan`, or a raw `st_knn` join) plan the broadcast
+  * or the partitioned KNN join by the same build-side decision.
+  *
   * Joins with an equi-conjunct are left to Spark's hash joins, matching
   * the reference (optimizer.rs:253-257): a hash join on the equi key
   * beats an index join that ignores it.
   */
 case class SpatialJoinStrategy(spark: SparkSession) extends SparkStrategy {
 
-  /** Broadcast-indexed KNN exec. Large object sides never reach here —
-    * KnnGridJoinRule rewrites them at logical-optimization time (a
-    * strategy-level rewrite would be rebuilt by every AQE re-plan). */
-  private def planKnn(p: graft.plans.KnnJoinPlan): Seq[SparkPlan] = {
+  /** A KNN join broadcasts its objects (KnnJoinExec) when it is
+    * streaming or when [[SpatialJoinStrategy.buildSide]] lets the object
+    * side build with the query side preserved; otherwise it runs
+    * partitioned (PartitionedKnnJoinExec). */
+  private def planKnn(p: KnnJoinPlan): Seq[SparkPlan] = {
     val (queryChild, objectChild) =
       if (p.objectIsLeft) (p.right, p.left) else (p.left, p.right)
-    KnnJoinExec(planLater(queryChild), planLater(objectChild),
-      p.queryGeom, p.objectGeom, p.k, p.objectIsLeft, p.spheroid) :: Nil
+    val broadcast = p.isStreaming || SpatialJoinStrategy.buildSide(spark.sessionState.conf,
+      if (p.objectIsLeft) RightOuter else LeftOuter, p.left, p.right,
+      if (p.objectIsLeft) JoinHint(p.objectHint, None) else JoinHint(None, p.objectHint)
+    ).isDefined
+    val exec = if (broadcast) KnnJoinExec.apply _ else PartitionedKnnJoinExec.apply _
+    exec(planLater(queryChild), planLater(objectChild), p.queryGeom, p.objectGeom, p.k,
+      p.objectIsLeft, p.spheroid, p.tieBreak, p.rankOutput) :: Nil
   }
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    // KNN join captured at analysis time (pushdown-barrier node)
-    case p: graft.plans.KnnJoinPlan => planKnn(p)
-
-    // KNN join: ST_KNN(query_geom, object_geom[, k[, use_spheroid]]);
-    // omitted k defaults to 1 (test_knnjoin.py test_knn_join_default_k)
-    case Join(left, right, joinType, Some(
-        graft.functions.GeomScalar("st_knn", args, _, _, _)), _)
-        if (joinType == Inner || joinType == Cross)
-          && args.length >= 2 && args.length <= 4 && args.drop(2).forall(_.foldable) =>
-      val Seq(a, b) = args.take(2)
-      val k = if (args.length < 3) 1 else args(2).eval() match {
-        case n: java.lang.Number => n.intValue()
-        case d: org.apache.spark.sql.types.Decimal => d.toInt
-      }
-      val sph = args.length == 4 && args(3).eval() == true
-      if (a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet))
-        planKnn(graft.plans.KnnJoinPlan(left, right, a, b, k,
-          objectIsLeft = false, spheroid = sph))
-      else if (a.references.subsetOf(right.outputSet) && b.references.subsetOf(left.outputSet))
-        planKnn(graft.plans.KnnJoinPlan(left, right, a, b, k,
-          objectIsLeft = true, spheroid = sph))
-      else Nil
+    // KNN join captured at analysis time (pushdown-barrier node), or a raw
+    // st_knn join in a session without the analyzer capture
+    case p: KnnJoinPlan => planKnn(p)
+    case j: Join if KnnJoinPlan.from(j).isDefined => planKnn(KnnJoinPlan.from(j).get)
 
     case j @ Join(left, right, joinType, Some(cond), hint) =>
       // predicate oriented as pred(streamG, buildG)

@@ -205,7 +205,7 @@ case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] 
 
   /** Smallest width that caps per-row fanout at 2 cells: the max ABSOLUTE
     * interval length across both sides (one partial-aggregated pre-pass
-    * per side, the 1-D analog of SpatialJoins.gridBounds),
+    * per side, the 1-D analog of an extent pre-pass),
     * floored at 1. abs() matters: the rewrite preserves inverted-row
     * (lo > hi) theta semantics by exploding least..greatest of the
     * endpoint cells, so a strongly inverted row sized against only the

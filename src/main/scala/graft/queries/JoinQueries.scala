@@ -114,8 +114,9 @@ object JoinQueries {
           |WHERE p_partkey % 2 = 1""".stripMargin)
     }),
 
-    // out-of-core KNN: the two-round grid algorithm (nothing broadcast,
-    // nothing quadratic) on the same data as sj04 — identical result set
+    // out-of-core KNN: the objects hinted shuffle_hash take the
+    // partitioned KNN join (nothing broadcast) on the same data as sj04 —
+    // identical result set
     "sj10_knn_grid_join" -> ((s, dir) => {
       val q = t(s, dir, "customer")
         .filter(col("c_custkey") % 10 === 0)
@@ -126,7 +127,8 @@ object JoinQueries {
       val o = partBoxes(s, dir)
         .withColumn("opt", st.centroid(col("box")))
         .select(col("p_partkey"), col("opt"))
-      SpatialJoins.knnJoinGrid(q, o, col("qpt"), col("opt"), 3, col("p_partkey"))
+      SpatialJoins.knnJoin(q, o.hint("shuffle_hash"), col("qpt"), col("opt"), 3,
+          col("p_partkey"))
         .select(col("c_custkey"), col("p_partkey"), col("knn_rank"),
           round(col("knn_distance"), 6).as("knn_distance"))
     }),
@@ -157,10 +159,10 @@ object JoinQueries {
           |FROM knn_sph_q JOIN knn_sph_o ON st_knn(qpt, opt, 3, true)""".stripMargin)
     }),
 
-    // spheroid out-of-core KNN: the geodesic two-round grid path (nothing
-    // broadcast, wrap-safe st_gridcells_sphere cover) on the same data as
-    // sj11 — identical result set to the broadcast chord-kd path. The
-    // per-key epsilons make distances tie-free, so the tie rule is moot.
+    // spheroid out-of-core KNN: the partitioned KNN join (objects hinted
+    // shuffle_hash, nothing broadcast) on the same data as sj11 —
+    // identical result set to the broadcast chord-kd path. The per-key
+    // epsilons make distances tie-free, so the tie rule is moot.
     "sj16_knn_spheroid_grid" -> ((s, dir) => {
       val q = t(s, dir, "customer")
         .filter(col("c_custkey") % 10 === 0)
@@ -175,8 +177,8 @@ object JoinQueries {
           (col("p_partkey") % 320).cast("double") / 4.0 - 40.0
             + col("p_partkey").cast("double") * 1.0e-6))
         .select(col("p_partkey"), col("opt"))
-      SpatialJoins.knnJoinGridSphere(q, o, col("qpt"), col("opt"), 3,
-          col("p_partkey"))
+      SpatialJoins.knnJoin(q, o.hint("shuffle_hash"), col("qpt"), col("opt"), 3,
+          col("p_partkey"), spheroid = true)
         .select(col("c_custkey"), col("p_partkey"),
           round(col("knn_distance"), 2).as("dist_m"))
     }),

@@ -24,6 +24,11 @@ object DatasetBridge {
 
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
+  /** The hints on `plan`'s top chain of unary nodes, outermost first
+    * (the private[sql] EliminateResolvedHint.extractHintsFromPlan). */
+  def hints(plan: LogicalPlan): Seq[org.apache.spark.sql.catalyst.plans.logical.HintInfo] =
+    org.apache.spark.sql.catalyst.optimizer.EliminateResolvedHint.extractHintsFromPlan(plan)._2
+
   def expr(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** DataFrame over an RDD of UnsafeRows matching `schema` (the

@@ -716,111 +716,4 @@ class GeomPropertySpec extends AnyFunSuite {
     assert(math.abs(areaO(frame) - (areaO(diff) + areaO(inter))) <= 1e-9 * sphere,
       "difference + intersection must partition the frame")
   }
-
-  test("gridCellsKnnCover: mixed cover decomposes the fine cover exactly") {
-    import graft.functions.Spherical
-    // property: (emitted fine cells) + (fine expansion of emitted nested
-    // coarse cells, intersected with the fine cover) == the all-fine
-    // cover, disjointly — the invariant that makes the mixed cover's
-    // candidate-pair set IDENTICAL to the all-fine cover's
-    val rnd = new java.util.Random(99)
-    for (_ <- 0 until 300) {
-      val nx = 2 + rnd.nextInt(200)
-      val ny = 2 + rnd.nextInt(100)
-      val lon = rnd.nextDouble() * 360 - 180
-      val lat = rnd.nextDouble() * 170 - 85
-      val w = rnd.nextDouble() * 40
-      val h = rnd.nextDouble() * 20
-      val env = new org.locationtech.jts.geom.Envelope(
-        lon, math.min(180, lon + w), lat, math.min(90, lat + h))
-      val r = rnd.nextDouble() * 4.0e6
-      val maxCells = 1 + rnd.nextInt(64)
-      val fine = Spherical.gridCells(env, r, nx, ny).toSet
-      val mixed = Spherical.gridCellsKnnCover(env, r, nx, ny, maxCells)
-      assert(mixed.length == mixed.toSet.size, s"duplicate cells nx=$nx ny=$ny")
-      val off = nx.toLong * ny
-      val (coarse, fineOut) = mixed.partition(_ >= off)
-      if (coarse.isEmpty) assert(fineOut.toSet == fine)
-      else {
-        // expansion factors recovered from the id arithmetic: largest
-        // divisor <= 8 (same rule as the kernel)
-        def fac(n: Int): Int = { var f = math.min(8, n); while (f > 1 && n % f != 0) f -= 1; f }
-        val fx = fac(nx); val fy = fac(ny)
-        val cnx = nx / fx
-        val expanded = coarse.flatMap { cid =>
-          val c = cid - off
-          val cy = (c / cnx).toInt; val cx = (c % cnx).toInt
-          for (dy <- 0 until fy; dx <- 0 until fx)
-            yield (cy * fy + dy).toLong * nx + (cx * fx + dx)
-        }.toSet
-        assert(expanded.subsetOf(fine),
-          s"coarse interior leaks outside the fine cover nx=$nx ny=$ny")
-        assert((expanded ++ fineOut).size == expanded.size + fineOut.length,
-          s"fine boundary overlaps coarse interior nx=$nx ny=$ny")
-        assert(expanded ++ fineOut.toSet == fine,
-          s"mixed cover misses fine cells nx=$nx ny=$ny maxCells=$maxCells")
-      }
-      // dual side: coarse image of the fine cover, exactly
-      val dual = Spherical.gridCellsKnnDual(env, 0.0, nx, ny)
-      val dFine = Spherical.gridCells(env, 0.0, nx, ny).toSet
-      def fac2(n: Int): Int = { var f = math.min(8, n); while (f > 1 && n % f != 0) f -= 1; f }
-      val (fx2, fy2) = (fac2(nx), fac2(ny))
-      if (fx2 * fy2 > 1) {
-        val cnx2 = nx / fx2
-        val expect = dFine.map(id => off + (id / nx / fy2) * cnx2 + (id % nx) / fx2)
-        assert(dual.filter(_ >= off).toSet == expect)
-        assert(dual.filter(_ < off).toSet == dFine)
-      } else assert(dual.toSet == dFine)
-    }
-  }
-
-  test("Grid.cellsKnnCover: planar mixed cover decomposes the fine cover exactly") {
-    import graft.functions.Grid
-    val rnd = new java.util.Random(77)
-    for (_ <- 0 until 300) {
-      val nx = 2 + rnd.nextInt(200)
-      val ny = 2 + rnd.nextInt(100)
-      val (xmin, ymin, xmax, ymax) = (0.0, 0.0, 1000.0, 500.0)
-      val gx = rnd.nextDouble() * 1100 - 50 // may clamp at the border
-      val gy = rnd.nextDouble() * 600 - 50
-      val gw = rnd.nextDouble() * 600
-      val gh = rnd.nextDouble() * 300
-      val maxCells = 1 + rnd.nextInt(64)
-      val fine = Grid.cellsOf(gx, gy, gx + gw, gy + gh,
-        xmin, ymin, xmax, ymax, nx, ny).toSet
-      val mixed = Grid.cellsKnnCover(gx, gy, gx + gw, gy + gh,
-        xmin, ymin, xmax, ymax, nx, ny, maxCells)
-      assert(mixed.length == mixed.toSet.size, s"duplicates nx=$nx ny=$ny")
-      val off = nx.toLong * ny
-      val (coarse, fineOut) = mixed.partition(_ >= off)
-      if (coarse.isEmpty) assert(fineOut.toSet == fine)
-      else {
-        def fac(n: Int): Int = { var f = math.min(8, n); while (f > 1 && n % f != 0) f -= 1; f }
-        val fx = fac(nx); val fy = fac(ny)
-        val cnx = nx / fx
-        val expanded = coarse.flatMap { cid =>
-          val c = cid - off
-          val cy = (c / cnx).toInt; val cx = (c % cnx).toInt
-          for (dy <- 0 until fy; dx <- 0 until fx)
-            yield (cy * fy + dy).toLong * nx + (cx * fx + dx)
-        }.toSet
-        assert(expanded.subsetOf(fine), s"interior leak nx=$nx ny=$ny")
-        assert((expanded ++ fineOut).size == expanded.size + fineOut.length,
-          s"overlap nx=$nx ny=$ny")
-        assert(expanded ++ fineOut.toSet == fine, s"miss nx=$nx ny=$ny")
-      }
-      val dual = Grid.cellsKnnDual(gx, gy, gx + gw, gy + gh,
-        xmin, ymin, xmax, ymax, nx, ny)
-      def fac2(n: Int): Int = { var f = math.min(8, n); while (f > 1 && n % f != 0) f -= 1; f }
-      val (fx2, fy2) = (fac2(nx), fac2(ny))
-      val dFine = Grid.cellsOf(gx, gy, gx + gw, gy + gh,
-        xmin, ymin, xmax, ymax, nx, ny).toSet
-      if (fx2 * fy2 > 1) {
-        val cnx2 = nx / fx2
-        val expect = dFine.map(id => off + (id / nx / fy2) * cnx2 + (id % nx) / fx2)
-        assert(dual.filter(_ >= off).toSet == expect)
-        assert(dual.filter(_ < off).toSet == dFine)
-      } else assert(dual.toSet == dFine)
-    }
-  }
 }

@@ -40,10 +40,13 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       "sj01 lost the broadcast index join")
     assert(entries("sj03_dwithin_join").plan.contains("BroadcastIndexSpatialJoin"),
       "sj03 lost the broadcast index distance join")
-    // sj04 drives the API-level knnJoin (materializes before the plan),
-    // so the SQL-planned KNN operator is asserted on sj06
-    assert(entries("sj06_knn_filter_barrier").plan.contains("KnnJoin"),
-      "sj06 lost the KNN pushdown capture")
+    // sj04 drives the API-level knnJoin, which plans like SQL st_knn: the
+    // broadcast KNN join, as sj06 (which also pins the pushdown capture)
+    for (g <- Seq("sj04_knn_join", "sj06_knn_filter_barrier")) {
+      val p = entries(g).plan
+      assert(p.contains("KnnJoin") && !p.contains("PartitionedKnnJoin"),
+        s"$g lost the broadcast KNN join")
+    }
     // sj07 carries no conf window: at audit scale the broadcast index
     // spatial join is the right plan (the large-large grid rewrite's plan
     // AND execution are pinned in SpatialJoinSpec, set+collect in one
@@ -122,14 +125,11 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-7 gates keep their intended plan shapes") {
-    // sj10 out-of-core KNN grid: cell equi-join + BOUNDED top-k aggregate
-    // (round 15: sd_knn_topk_agg + winner rejoin replaced the
-    // dropDuplicates/row_number window — only (qid, <=k) buffers shuffle);
-    // anything quadratic is a bug
+    // sj10 out-of-core KNN: objects hinted shuffle_hash plan the
+    // partitioned KNN join; anything quadratic is a bug
     val sj10 = entries("sj10_knn_grid_join").plan
-    assert(sj10.contains("SortMergeJoin") || sj10.contains("ShuffledHashJoin") ||
-      sj10.contains("BroadcastHashJoin"), "sj10 lost its grid equi-join")
-    assert(sj10.contains("sd_knn_topk_agg"), "sj10 lost its top-k aggregate")
+    assert(sj10.contains("PartitionedKnnJoin") && !sj10.contains("CartesianProduct") &&
+      !sj10.contains("BroadcastNestedLoopJoin"), "sj10 must plan PartitionedKnnJoin, no BNLJ")
     // sj11: the planner must pick KnnJoinExec in spheroid mode (the
     // chord kd-tree branch-and-bound path, not the planar tree)
     val sj11df = SparkEntry.queries("sj11_knn_spheroid")(spark, dir)
@@ -384,17 +384,11 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-13 gates keep their intended plan shapes") {
-    // sj16 spheroid out-of-core KNN: geodesic cell equi-join + BOUNDED
-    // top-k aggregate (see sj10's round-15 note), nothing broadcast-
-    // nested-loop, the spherical cover explode present — the plan that
-    // holds when the object side is 100 TB
+    // sj16 spheroid out-of-core KNN: the partitioned KNN join, nothing
+    // broadcast-nested-loop — the plan that holds when the object side
+    // is 100 TB
     val sj16 = entries("sj16_knn_spheroid_grid").plan
-    assert(!sj16.contains("BroadcastNestedLoopJoin") &&
-      !sj16.contains("CartesianProduct"), "sj16 fell back to BNLJ/cartesian")
-    assert(sj16.contains("SortMergeJoin") || sj16.contains("ShuffledHashJoin") ||
-      sj16.contains("BroadcastHashJoin"), "sj16 lost its grid equi-join")
-    assert(sj16.contains("sd_knn_topk_agg"), "sj16 lost its top-k aggregate")
-    assert(sj16.toLowerCase.contains("gridcells_sphere"),
-      "sj16 lost the spherical grid cover explode")
+    assert(sj16.contains("PartitionedKnnJoin") && !sj16.contains("BroadcastNestedLoopJoin") &&
+      !sj16.contains("CartesianProduct"), "sj16 must plan PartitionedKnnJoin, no BNLJ")
   }
 }

@@ -296,6 +296,15 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
           .queryExecution.executedPlan.toString
         assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
       }
+      // KNN: SQL st_knn with no broadcast side, and building knnJoin(...)
+      // with objects hinted shuffle_hash
+      p.createOrReplaceTempView("nojob_p")
+      b.createOrReplaceTempView("nojob_b")
+      val knnPlans = Seq(
+        spark.sql("SELECT pid, bid FROM nojob_p JOIN nojob_b ON st_knn(pgeom, bgeom, 3)"),
+        SpatialJoins.knnJoin(p, b.hint("shuffle_hash"), col("pgeom"), col("bgeom"), 3, col("bid")))
+        .map(_.queryExecution.executedPlan.toString)
+      for (plan <- knnPlans) assert(plan.contains("PartitionedKnnJoin"), plan.take(2000))
       // listener events arrive in order: once the sentinel job is seen,
       // any job the planning started has been counted
       spark.sparkContext.setJobGroup("sentinel", "sentinel")
@@ -323,6 +332,19 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(execs.size == 1)
     for (m <- Seq("numOutputRows", "candidatePairs"))
       assert(execs.head.metrics(m).value > 0, m)
+    // both KNN joins, broadcast and partitioned
+    val q = points(50, 145).select(col("pid").as("qid"), col("pgeom").as("qg"))
+    for (o <- Seq(points(200, 147), points(200, 147).hint("shuffle_hash"))) {
+      val knn = SpatialJoins.knnJoin(q, o, col("qg"), col("pgeom"), 3, col("pid"))
+      assert(knn.collect().length == 150)
+      val knnExecs = aqe.collect(knn.queryExecution.executedPlan) {
+        case e: joins.KnnJoinExec => e
+        case e: joins.PartitionedKnnJoinExec => e
+      }
+      assert(knnExecs.size == 1)
+      for (m <- Seq("numOutputRows", "candidatePairs"))
+        assert(knnExecs.head.metrics(m).value > 0, s"${knnExecs.head.nodeName} $m")
+    }
   }
 
   test("planner grid rewrite handles dwithin and distance< with constant radius") {
@@ -689,9 +711,92 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  // ---- KNN: the broadcast and the partitioned exec on the same input ----
+
+  private val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** The KNN execs of `df`'s plan, "broadcast" or "partitioned". */
+  private def knnExecs(df: DataFrame): Seq[String] =
+    aqe.collect(df.queryExecution.executedPlan) {
+      case _: joins.PartitionedKnnJoinExec => "partitioned"
+      case _: joins.KnnJoinExec => "broadcast"
+    }
+
+  /** Sorted rows of `df`, planned by the KNN exec `exec` with no BNLJ or
+    * cartesian product. */
+  private def knnRows(df: DataFrame, exec: String): Seq[String] = {
+    val phys = df.queryExecution.executedPlan.toString
+    assert(knnExecs(df) == Seq(exec), phys.take(3000))
+    assert(!phys.contains("BroadcastNestedLoopJoin") && !phys.contains("CartesianProduct"),
+      phys.take(3000))
+    sortedRows(df)
+  }
+
+  /** (qid, oid, knn_rank) of `knnJoin(q, o, k)` ranked by (distance, oid),
+    * the objects hinted shuffle_hash on the partitioned exec and unhinted
+    * on the broadcast exec, asserted equal to each other and to a window
+    * over the cross join without null or empty geometries. On the sphere
+    * the distance is great-circle meters between the query point and its
+    * planar-nearest point of the object (point or axis-aligned box). */
+  private def assertKnnPaths(q: DataFrame, o: DataFrame, k: Int,
+      spheroid: Boolean = false): Unit = {
+    import org.apache.spark.sql.expressions.Window
+    def knn(objects: DataFrame) = SpatialJoins.knnJoin(q, objects, col("qg"), col("og"), k,
+      col("oid"), spheroid).select("qid", "oid", "knn_rank")
+    val partitioned = knnRows(knn(o.hint("shuffle_hash")), "partitioned")
+    val broadcast = knnRows(knn(o), "broadcast")
+    def valid(g: String) = col(g).isNotNull && !st.f("st_isempty", col(g))
+    def clamp(lo: Column, v: Column, hi: Column) = greatest(lo, least(v, hi))
+    val d =
+      if (!spheroid) st.distance(col("qg"), col("og"))
+      else st.f("st_distancesphere", col("qg"), st.point(
+        clamp(st.xmin(col("og")), st.f("st_x", col("qg")), st.f("st_xmax", col("og"))),
+        clamp(st.f("st_ymin", col("og")), st.f("st_y", col("qg")), st.f("st_ymax", col("og")))))
+    // a duplicated query row is a query of its own
+    val w = Window.partitionBy("qrow").orderBy(col("d"), col("oid"))
+    val oracle = q.filter(valid("qg")).withColumn("qrow", monotonically_increasing_id())
+      .crossJoin(o.filter(valid("og")))
+      .withColumn("d", d).withColumn("knn_rank", row_number().over(w))
+      .filter(col("knn_rank") <= k).select("qid", "oid", "knn_rank")
+    assert(partitioned.nonEmpty)
+    assert(partitioned == broadcast)
+    assert(partitioned == sortedRows(oracle))
+  }
+
+  private val nullGeom = lit(null).cast("binary")
+  private def wkt(s: String): Column = st.f("st_geomfromtext", lit(s))
+
+  /** Planted planar KNN inputs: an integer lattice (exact-distance ties
+    * everywhere) with duplicate rows, a null and an empty geometry, and
+    * one box over every leaf; queries on and between lattice points,
+    * duplicated, outside the extent, null and empty. */
+  private def plantedPlanar(): (DataFrame, DataFrame) = {
+    val lattice = spark.range(400).select(col("id").as("oid"),
+      st.point((col("id") % 20).cast("double"), floor(col("id") / 20).cast("double")).as("og"))
+    val o = lattice
+      .union(lattice.filter(col("oid") % 37 === 0))
+      .union(spark.range(1).select(lit(1000L).as("oid"), nullGeom.as("og")))
+      .union(spark.range(1).select(lit(1001L).as("oid"), wkt("POINT EMPTY").as("og")))
+      .union(spark.range(1).select(lit(1002L).as("oid"),
+        st.makeEnvelope(lit(-1.0), lit(-1.0), lit(20.0), lit(20.0)).as("og")))
+    val onLattice = spark.range(40).select(col("id").as("qid"), st.point(
+      (col("id") * 7 % 23).cast("double") - 1.0 + (col("id") % 2) * 0.5,
+      (col("id") * 3 % 23).cast("double") - 1.0 + (col("id") % 3 === 0).cast("double") * 0.5)
+      .as("qg"))
+    val q = onLattice
+      .union(onLattice.filter(col("qid") % 5 === 0))
+      .union(spark.range(1).select(lit(100L).as("qid"), st.point(lit(-30.0), lit(5.0)).as("qg")))
+      .union(spark.range(1).select(lit(101L).as("qid"), st.point(lit(50.0), lit(60.0)).as("qg")))
+      .union(spark.range(1).select(lit(102L).as("qid"), nullGeom.as("qg")))
+      .union(spark.range(1).select(lit(103L).as("qid"), wkt("POINT EMPTY").as("qg")))
+    (q, o)
+  }
+
   test("SQL KNN with large object side plans the partitioned grid path") {
-    // unique coordinates + irrational offsets -> tie-free, so the grid
-    // path must return exactly the broadcast path's rows
+    import org.apache.spark.sql.expressions.Window
+    // unique coordinates + irrational offsets -> tie-free; the hint sends
+    // the objects to the partitioned exec, which must return exactly the
+    // broadcast exec's rows
     val q = points(60, 81).select(col("pid").as("qid"),
       st.f("st_translate", col("pgeom"), lit(1.0 / 3), lit(1.0 / 7)).as("qg"))
     val o = spark.range(3000).select(col("id").as("oid"),
@@ -699,124 +804,102 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
         col("id") % 47 * 2.17 + col("id") * 1e-5).as("og"))
     q.createOrReplaceTempView("knngrid_q")
     o.createOrReplaceTempView("knngrid_o")
-    val sql = "SELECT qid, oid FROM knngrid_q JOIN knngrid_o ON st_knn(qg, og, 4)"
-    val expected = sortedRows(spark.sql(sql)) // broadcast path (default conf)
-    assert(spark.sql(sql).queryExecution.executedPlan.toString.contains("KnnJoin "))
-    spark.conf.set("spark.graft.knn.broadcastThreshold", "0")
-    try {
-      val grid = spark.sql(sql)
-      val phys = grid.queryExecution.executedPlan.toString
-      assert(!phys.contains("KnnJoin "), phys.take(2000))
-      assert(sortedRows(grid) == expected)
-    } finally spark.conf.unset("spark.graft.knn.broadcastThreshold")
+    def sql(hint: String) =
+      s"SELECT $hint qid, oid FROM knngrid_q JOIN knngrid_o ON st_knn(qg, og, 4)"
+    val partitioned = knnRows(spark.sql(sql("/*+ SHUFFLE_HASH(knngrid_o) */")), "partitioned")
+    assert(partitioned == knnRows(spark.sql(sql("")), "broadcast"))
+    val w = Window.partitionBy("qid").orderBy(col("d"))
+    assert(partitioned == sortedRows(q.crossJoin(o)
+      .withColumn("d", st.distance(col("qg"), col("og")))
+      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 4).select("qid", "oid")))
+    // planted lattice: SQL st_knn breaks exact-distance ties on the
+    // object WKB, then on the object row
+    val (pq, po) = plantedPlanar()
+    pq.createOrReplaceTempView("knnlat_q")
+    po.createOrReplaceTempView("knnlat_o")
+    def latSql(hint: String) =
+      s"SELECT $hint qid, oid FROM knnlat_q JOIN knnlat_o ON st_knn(qg, og, 6)"
+    val latPartitioned = knnRows(spark.sql(latSql("/*+ SHUFFLE_HASH(knnlat_o) */")), "partitioned")
+    assert(latPartitioned == knnRows(spark.sql(latSql("")), "broadcast"))
+    val wkb = Window.partitionBy("qrow").orderBy(col("d"), col("og"))
+    def valid(g: String) = col(g).isNotNull && !st.f("st_isempty", col(g))
+    assert(latPartitioned == sortedRows(spark.table("knnlat_q").filter(valid("qg"))
+      .withColumn("qrow", monotonically_increasing_id()).crossJoin(spark.table("knnlat_o").filter(valid("og")))
+      .withColumn("d", st.distance(col("qg"), col("og")))
+      .withColumn("rk", row_number().over(wkb)).filter(col("rk") <= 6).select("qid", "oid")))
   }
 
   test("partitioned grid KNN ≡ brute force, including sparse-cell fallback") {
-    import org.apache.spark.sql.expressions.Window
-    val q = points(60, 41).withColumnRenamed("pid", "qid").withColumnRenamed("pgeom", "qgeom")
-    // clustered objects: many empty cells -> exercises the radius fallback
+    val q = points(60, 41).select(col("pid").as("qid"), col("pgeom").as("qg"))
+    // clustered objects: most leaves far from most queries
     val o = spark.range(150).select(col("id").as("oid"),
       st.point(pmod(hash(col("id") + 5), lit(200)) / 10.0 + 40.0,
-        pmod(hash(col("id") * 13 + 5), lit(200)) / 10.0 + 40.0).as("ogeom"))
-    val grid = SpatialJoins.knnJoinGrid(q, o, col("qgeom"), col("ogeom"), 4,
-      col("oid"), nx = 16, ny = 16).select("qid", "oid")
-    val w = Window.partitionBy("qid").orderBy(col("d"), col("oid"))
-    val brute = q.crossJoin(o)
-      .withColumn("d", st.distance(col("qgeom"), col("ogeom")))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 4)
-      .select("qid", "oid")
-    assert(sortedRows(grid) == sortedRows(brute))
+        pmod(hash(col("id") * 13 + 5), lit(200)) / 10.0 + 40.0).as("og"))
+    assertKnnPaths(q, o, 4)
+    // planted: lattice ties, duplicate rows, null and empty geometries,
+    // a box over every leaf, queries outside the extent; k > object count
+    val (pq, po) = plantedPlanar()
+    assertKnnPaths(pq, po, 6)
+    assertKnnPaths(pq, po.filter(col("oid") < 3), 5)
   }
 
   test("planar grid KNN: isolated queries take the mixed cover, stay exact") {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     // objects clustered in one corner of a large extent; 30% of queries
-    // isolated far away — their resolved radius spans most of the plane,
-    // so the final probe's cover goes through the nested mixed kernel
+    // isolated far away — their round-1 leaf holds few objects, so their
+    // radius spans most of the plane
     val rnd = new java.util.Random(23)
     val o = (0 until 300).map { i =>
       (i.toLong, rnd.nextDouble() * 60, rnd.nextDouble() * 60)
     }.toDF("oid", "ox", "oy")
-      .select(col("oid"), st.point(col("ox"), col("oy")).as("opt"))
+      .select(col("oid"), st.point(col("ox"), col("oy")).as("og"))
     val q = (0 until 40).map { i =>
       if (i % 10 < 3) (i.toLong, 1500.0 + rnd.nextDouble() * 400, 700.0 + rnd.nextDouble() * 200)
       else (i.toLong, rnd.nextDouble() * 55, rnd.nextDouble() * 55)
     }.toDF("qid", "qx", "qy")
-      .select(col("qid"), st.point(col("qx"), col("qy")).as("qpt"))
-    val grid = SpatialJoins.knnJoinGrid(q, o, col("qpt"), col("opt"),
-      5, col("oid"), nx = 64, ny = 32,
-      bounds = Some((0.0, 0.0, 2000.0, 1000.0))).select("qid", "oid")
-    val w = Window.partitionBy("qid").orderBy(col("d"), col("oid"))
-    val brute = q.crossJoin(o)
-      .withColumn("d", st.distance(col("qpt"), col("opt")))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select("qid", "oid")
-    assert(sortedRows(grid) == sortedRows(brute))
+      .select(col("qid"), st.point(col("qx"), col("qy")).as("qg"))
+    assertKnnPaths(q, o, 5)
   }
 
-  test("planar grid KNN: occupancy-filtered covers ≡ legacy explode+semi path") {
+  /** Planted sphere KNN inputs: an integer lon/lat lattice (exact
+    * great-circle ties) with duplicate rows, boxes along both sides of
+    * the antimeridian and around both poles, a null and an empty
+    * geometry; queries on the lattice, across the antimeridian from the
+    * boxes, at the poles, null and empty. */
+  private def plantedSphere(): (DataFrame, DataFrame) = {
     import spark.implicits._
-    // same sparse-clustered shape that motivates the occ bitmap: the
-    // emitted pair set (and thus the result) must be IDENTICAL with the
-    // occupancy-filtered cover kernels on (default) and off (legacy
-    // broadcast-semi path) — an unoccupied cell matches nothing either way
-    val rnd = new java.util.Random(47)
-    val o = (0 until 400).map { i =>
-      (i.toLong, rnd.nextDouble() * 800, rnd.nextDouble() * 1000)
-    }.toDF("oid", "ox", "oy")
-      .select(col("oid"), st.point(col("ox"), col("oy")).as("opt"))
-    val q = (0 until 50).map { i =>
-      if (i % 10 < 3) (i.toLong, 1600.0 + rnd.nextDouble() * 300, rnd.nextDouble() * 1000)
-      else (i.toLong, rnd.nextDouble() * 760, rnd.nextDouble() * 1000)
-    }.toDF("qid", "qx", "qy")
-      .select(col("qid"), st.point(col("qx"), col("qy")).as("qpt"))
-    def run(): Seq[String] = sortedRows(
-      SpatialJoins.knnJoinGrid(q, o, col("qpt"), col("opt"), 3, col("oid"),
-        nx = 64, ny = 32, bounds = Some((0.0, 0.0, 2000.0, 1000.0)))
-        .select(col("qid"), col("oid"), col("knn_rank")))
-    val withOcc = run()
-    spark.conf.set("spark.graft.knn.occCover", "false")
-    val legacy = try run()
-      finally spark.conf.unset("spark.graft.knn.occCover")
-    assert(withOcc == legacy)
-    assert(withOcc.nonEmpty)
-  }
-
-  test("sphere grid KNN: occupancy-filtered covers ≡ legacy explode+semi path") {
-    import spark.implicits._
-    // spherical twin of the planar occ A/B: objects cluster on one
-    // "coast", queries include far-ocean strays (whose wide covers
-    // cross mostly empty cells) and dateline-adjacent points — the
-    // emitted pair set must be IDENTICAL with the occ-filtered cover
-    // kernel on (default) and off (legacy broadcast-semi path)
-    val rnd = new java.util.Random(53)
-    val o = (0 until 400).map { i =>
-      (i.toLong, -20.0 + rnd.nextDouble() * 40, -30.0 + rnd.nextDouble() * 60)
-    }.toDF("oid", "ox", "oy")
-      .select(col("oid"), st.point(col("ox"), col("oy")).as("opt"))
-    val q = (0 until 50).map { i =>
-      if (i % 10 < 3) (i.toLong, 170.0 + rnd.nextDouble() * 19.9, -40.0 + rnd.nextDouble() * 80)
-      else (i.toLong, -18.0 + rnd.nextDouble() * 36, -28.0 + rnd.nextDouble() * 56)
-    }.toDF("qid", "qx", "qy")
-      .select(col("qid"), st.point(col("qx"), col("qy")).as("qpt"))
-    def run(): Seq[String] = sortedRows(
-      SpatialJoins.knnJoinGridSphere(q, o, col("qpt"), col("opt"), 3, col("oid"))
-        .select(col("qid"), col("oid"), col("knn_rank")))
-    val withOcc = run()
-    spark.conf.set("spark.graft.knn.occCover", "false")
-    val legacy = try run()
-      finally spark.conf.unset("spark.graft.knn.occCover")
-    assert(withOcc == legacy)
-    assert(withOcc.nonEmpty)
+    val lattice = spark.range(121).select(col("id").as("oid"),
+      st.point((col("id") % 11 - 5).cast("double"), (floor(col("id") / 11) - 5).cast("double"))
+        .as("og"))
+    val boxes = Seq(
+      (500L, 178.5, -10.0, 179.5, -8.0), (501L, 176.0, 20.0, 179.9, 21.0),
+      (502L, -179.6, 5.0, -178.8, 6.0), (503L, -180.0, -40.0, -177.0, -39.0),
+      (504L, -10.0, 88.0, 10.0, 89.5), (505L, -180.0, 85.0, 180.0, 90.0),
+      (506L, 100.0, -89.0, 140.0, -87.5), (507L, 170.0, -60.0, 179.0, -55.0))
+      .toDF("oid", "x0", "y0", "x1", "y1")
+      .select(col("oid"), st.makeEnvelope(col("x0"), col("y0"), col("x1"), col("y1")).as("og"))
+    val o = lattice
+      .union(lattice.filter(col("oid") % 17 === 0))
+      .union(boxes)
+      .union(spark.range(1).select(lit(600L).as("oid"), nullGeom.as("og")))
+      .union(spark.range(1).select(lit(601L).as("oid"), wkt("POINT EMPTY").as("og")))
+    val q = Seq((1L, 0.0, 0.0), (2L, 2.0, -3.0), (3L, -4.0, 4.0), (4L, 0.5, 0.5),
+        (5L, -179.9, -9.0), (6L, -179.5, 20.5), (7L, 179.9, 5.5), (8L, 178.0, -39.5),
+        (9L, 30.0, 89.9), (10L, -150.0, 86.0), (11L, 120.0, -89.9), (12L, -175.0, -57.0),
+        (13L, 90.0, 0.0))
+      .toDF("qid", "qx", "qy")
+      .select(col("qid"), st.point(col("qx"), col("qy")).as("qg"))
+    val withDup = q.union(q.filter(col("qid") % 4 === 0))
+      .union(spark.range(1).select(lit(50L).as("qid"), nullGeom.as("qg")))
+      .union(spark.range(1).select(lit(51L).as("qid"), wkt("POINT EMPTY").as("qg")))
+    (withDup, o)
   }
 
   test("spheroid grid KNN ≡ brute-force geodesic rank incl. dateline + pole") {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     // same adversarial shape as the chord kd test: global spread with
-    // antimeridian and pole clusters — the geodesic grid cover must not
-    // lose candidates at the wrap or the caps
+    // antimeridian and pole clusters — the partitioned exec must not lose
+    // candidates at the wrap or the caps
     val rnd = new java.util.Random(13)
     val objPts = (0 until 400).map { i =>
       if (i % 10 == 0) (i.toLong, 179.5 + rnd.nextDouble(), -60 + rnd.nextInt(120) * 1.0)
@@ -825,138 +908,86 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val queries = Seq((1L, -179.9, 0.0), (2L, 0.0, 89.9),
       (3L, 12.5, 48.1), (4L, 179.95, -45.0), (5L, -20.0, -89.7))
+    // 179.5 + u can pass 180: wrap it back into [-180, 180)
     val o = objPts.toDF("oid", "olon", "olat")
-      .select(col("oid"), st.point(col("olon"), col("olat")).as("opt"))
+      .select(col("oid"), st.point(when(col("olon") >= 180.0, col("olon") - 360.0)
+        .otherwise(col("olon")), col("olat")).as("og"))
     val q = queries.toDF("qid", "qlon", "qlat")
-      .select(col("qid"), st.point(col("qlon"), col("qlat")).as("qpt"))
-    val grid = SpatialJoins.knnJoinGridSphere(q, o, col("qpt"), col("opt"),
-      7, col("oid")).select("qid", "oid")
-    val w = Window.partitionBy("qid").orderBy(col("d"), col("oid"))
-    val brute = q.crossJoin(o)
-      .withColumn("d", st.f("st_distancesphere", col("qpt"), col("opt")))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 7)
-      .select("qid", "oid")
-    assert(sortedRows(grid) == sortedRows(brute))
+      .select(col("qid"), st.point(col("qlon"), col("qlat")).as("qg"))
+    assertKnnPaths(q, o, 7, spheroid = true)
+    // planted: lattice ties, duplicates, boxes across the antimeridian
+    // and at the poles, null and empty geometries
+    val (pq, po) = plantedSphere()
+    assertKnnPaths(pq, po, 5, spheroid = true)
   }
 
   test("spheroid grid KNN: sparse neighbourhood falls back to the global cover") {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    // 3 objects on the whole globe, k=2: every query's round-1 bound
-    // spans most of the globe, so round 2 probes a near-global cover
+    // 3 objects on the whole globe, k=2: every query's round-1 leaf holds
+    // fewer than k objects, so round 2 probes every leaf
     val o = Seq((1L, 10.0, 10.0), (2L, -120.0, 45.0), (3L, 100.0, -60.0))
       .toDF("oid", "olon", "olat")
-      .select(col("oid"), st.point(col("olon"), col("olat")).as("opt"))
+      .select(col("oid"), st.point(col("olon"), col("olat")).as("og"))
     val q = Seq((1L, -170.0, -5.0), (2L, 60.0, 80.0)).toDF("qid", "qlon", "qlat")
-      .select(col("qid"), st.point(col("qlon"), col("qlat")).as("qpt"))
-    val grid = SpatialJoins.knnJoinGridSphere(q, o, col("qpt"), col("opt"),
-      2, col("oid")).select("qid", "oid")
-    val w = Window.partitionBy("qid").orderBy(col("d"), col("oid"))
-    val brute = q.crossJoin(o)
-      .withColumn("d", st.f("st_distancesphere", col("qpt"), col("opt")))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 2)
-      .select("qid", "oid")
-    assert(sortedRows(grid) == sortedRows(brute))
-  }
-
-  test("sd_knn_topk_agg ≡ window oracle: distinct-oid top-k oids and ranks") {
-    import org.apache.spark.sql.expressions.Window
-    // duplicate oids (same pair via several cover cells), distance ties
-    // broken by (tb, oid), many partitions so the partial-merge path runs
-    val rows = spark.range(4000).select(
-      (col("id") % 37).as("qid"),
-      (pmod(hash(col("id"), lit(1)), lit(50)).cast("double") / 10.0).as("d"),
-      (pmod(hash(col("id"), lit(2)), lit(3)).cast("double")).as("tb"),
-      pmod(hash(col("id"), lit(3)), lit(40)).cast("long").as("oid"))
-      .repartition(16)
-    rows.cache().count()
-    val agg = rows.groupBy("qid")
-      .agg(st.f("sd_knn_topk_agg", col("d"), col("tb"), col("oid"), lit(5)).as("top"))
-      .select(col("qid"), explode(col("top")).as("t"))
-      .select(col("qid"), col("t.oid").as("oid"), col("t.rank").as("rank"))
-    // oracle: per (qid, oid) keep the min (d, tb), rank by (d, tb, oid)
-    val wOid = Window.partitionBy("qid", "oid").orderBy(col("d"), col("tb"))
-    val w = Window.partitionBy("qid").orderBy(col("d"), col("tb"), col("oid"))
-    val oracle = rows.withColumn("rn0", row_number().over(wOid)).filter(col("rn0") === 1)
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-      .select(col("qid"), col("oid"), col("rank"))
-    assert(sortedRows(agg) == sortedRows(oracle))
-    rows.unpersist()
+      .select(col("qid"), st.point(col("qlon"), col("qlat")).as("qg"))
+    assertKnnPaths(q, o, 2, spheroid = true)
+    // k > object count: every query gets all three
+    assertKnnPaths(q, o, 5, spheroid = true)
   }
 
   test("spheroid grid KNN: isolated queries stay exact") {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     // sparse/clustered workload: 70% of queries sit inside the object
     // cluster, 30% are isolated (nearest object > 2000 km — mid-ocean
     // sensors vs coastal assets). The isolated tail gets a wide round-1
-    // bound, and the result must still be the exact geodesic top-k.
+    // radius, and the result must still be the exact geodesic top-k.
     val rnd = new java.util.Random(41)
     val o = (0 until 300).map { i => // objects clustered in a ~15° patch
       (i.toLong, -5.0 + rnd.nextDouble() * 15, 40.0 + rnd.nextDouble() * 15)
     }.toDF("oid", "olon", "olat")
-      .select(col("oid"), st.point(col("olon"), col("olat")).as("opt"))
+      .select(col("oid"), st.point(col("olon"), col("olat")).as("og"))
     val q = (0 until 40).map { i =>
       if (i % 10 < 3) (i.toLong, -150.0 + rnd.nextDouble() * 40, -40.0 + rnd.nextDouble() * 30)
       else (i.toLong, -4.0 + rnd.nextDouble() * 13, 41.0 + rnd.nextDouble() * 13)
     }.toDF("qid", "qlon", "qlat")
-      .select(col("qid"), st.point(col("qlon"), col("qlat")).as("qpt"))
-    val grid = SpatialJoins.knnJoinGridSphere(q, o, col("qpt"), col("opt"),
-      5, col("oid")).select("qid", "oid")
-    val w = Window.partitionBy("qid").orderBy(col("d"), col("oid"))
-    val brute = q.crossJoin(o)
-      .withColumn("d", st.f("st_distancesphere", col("qpt"), col("opt")))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select("qid", "oid")
-    assert(sortedRows(grid) == sortedRows(brute))
+      .select(col("qid"), st.point(col("qlon"), col("qlat")).as("qg"))
+    assertKnnPaths(q, o, 5, spheroid = true)
   }
 
   test("sphere grid KNN plans no BNLJ or cartesian product") {
     import spark.implicits._
-    // 3 objects on the whole globe: every query's bound spans nearly all
-    // cells, and the plan must still hold no BroadcastNestedLoopJoin or
-    // CartesianProduct, which the plan audit forbids
+    // 3 objects on the whole globe: every query's radius spans nearly the
+    // whole globe, and the plan must still hold no BroadcastNestedLoopJoin
+    // or CartesianProduct, which the plan audit forbids (knnRows asserts)
     val o = Seq((1L, 10.0, 10.0), (2L, -120.0, 45.0), (3L, 100.0, -60.0))
       .toDF("oid", "olon", "olat")
-      .select(col("oid"), st.point(col("olon"), col("olat")).as("opt"))
+      .select(col("oid"), st.point(col("olon"), col("olat")).as("og"))
     val q = Seq((1L, -170.0, -5.0), (2L, 60.0, 80.0)).toDF("qid", "qlon", "qlat")
-      .select(col("qid"), st.point(col("qlon"), col("qlat")).as("qpt"))
-    val grid = SpatialJoins.knnJoinGridSphere(q, o, col("qpt"), col("opt"),
-      2, col("oid")).select("qid", "oid")
-    val phys = grid.queryExecution.executedPlan.toString
-    assert(!phys.contains("BroadcastNestedLoopJoin") &&
-      !phys.contains("CartesianProduct"), phys.take(3000))
+      .select(col("qid"), st.point(col("qlon"), col("qlat")).as("qg"))
+    assertKnnPaths(q, o, 2, spheroid = true)
   }
 
   test("spheroid grid KNN: coarse-level cover wraps the antimeridian") {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     // isolated queries just WEST of the dateline; the object cluster sits
-    // ~3500 km EAST of it (across the wrap). Their wide radius pushes
-    // the cover past MaxFineCells, so the final probe runs at the COARSE
-    // level — and that coarse cover must wrap lon like the fine one does.
+    // ~3500 km EAST of it (across the wrap): their radius and probe bound
+    // must wrap the antimeridian
     val rnd = new java.util.Random(7)
     val o = (0 until 250).map { i =>
       (i.toLong, -168.0 + rnd.nextDouble() * 12, -50.0 + rnd.nextDouble() * 20)
     }.toDF("oid", "olon", "olat")
-      .select(col("oid"), st.point(col("olon"), col("olat")).as("opt"))
+      .select(col("oid"), st.point(col("olon"), col("olat")).as("og"))
     val q = (0 until 12).map { i =>
       (i.toLong, 168.0 + rnd.nextDouble() * 11, -45.0 + rnd.nextDouble() * 10)
     }.toDF("qid", "qlon", "qlat")
-      .select(col("qid"), st.point(col("qlon"), col("qlat")).as("qpt"))
-    val grid = SpatialJoins.knnJoinGridSphere(q, o, col("qpt"), col("opt"),
-      4, col("oid")).select("qid", "oid")
-    val w = Window.partitionBy("qid").orderBy(col("d"), col("oid"))
-    val brute = q.crossJoin(o)
-      .withColumn("d", st.f("st_distancesphere", col("qpt"), col("opt")))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 4)
-      .select("qid", "oid")
-    assert(sortedRows(grid) == sortedRows(brute))
+      .select(col("qid"), st.point(col("qlon"), col("qlat")).as("qg"))
+    assertKnnPaths(q, o, 4, spheroid = true)
   }
 
   test("SQL spheroid KNN with large object side plans the geodesic grid path") {
-    // tie-free coordinates (per-key epsilons): the grid path must return
-    // exactly the broadcast chord-kd path's rows
+    import org.apache.spark.sql.expressions.Window
+    // tie-free coordinates (per-key epsilons): the partitioned exec must
+    // return exactly the broadcast chord-kd path's rows
     val q = spark.range(40).select(col("id").as("qid"),
       st.point(col("id") % 340 / 2.0 - 85.0 + 1.0 / 3,
         col("id") % 160 / 2.0 - 40.0 + 1.0 / 7).as("qg"))
@@ -965,18 +996,14 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
         col("id") % 320 / 4.0 - 40.0 + col("id") * 1e-6).as("og"))
     q.createOrReplaceTempView("sphgrid_q")
     o.createOrReplaceTempView("sphgrid_o")
-    val sql = "SELECT qid, oid FROM sphgrid_q JOIN sphgrid_o ON st_knn(qg, og, 3, true)"
-    val expected = sortedRows(spark.sql(sql)) // broadcast path (default conf)
-    assert(spark.sql(sql).queryExecution.executedPlan.toString.contains("KnnJoin "))
-    spark.conf.set("spark.graft.knn.broadcastThreshold", "0")
-    try {
-      val grid = spark.sql(sql)
-      val phys = grid.queryExecution.executedPlan.toString
-      assert(!phys.contains("KnnJoin "), phys.take(2000))
-      assert(!phys.contains("BroadcastNestedLoopJoin") &&
-        !phys.contains("CartesianProduct"), phys.take(2000))
-      assert(sortedRows(grid) == expected)
-    } finally spark.conf.unset("spark.graft.knn.broadcastThreshold")
+    def sql(hint: String) =
+      s"SELECT $hint qid, oid FROM sphgrid_q JOIN sphgrid_o ON st_knn(qg, og, 3, true)"
+    val partitioned = knnRows(spark.sql(sql("/*+ SHUFFLE_HASH(sphgrid_o) */")), "partitioned")
+    assert(partitioned == knnRows(spark.sql(sql("")), "broadcast"))
+    val w = Window.partitionBy("qid").orderBy(col("d"))
+    assert(partitioned == sortedRows(q.crossJoin(o)
+      .withColumn("d", st.f("st_distancesphere", col("qg"), col("og")))
+      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 3).select("qid", "oid")))
   }
 
   test("knn join: exactly k per query, ranked by distance") {
