@@ -11,9 +11,16 @@ import graft.sources.RandomGeometry
   * overlay,aggregates,knn,transform}.py over polygons_simple/
   * polygons_complex/points_simple — see BASELINE.md). Prints one JSON
   * line; row counts via env SPARK_GRAFT_MICRO_N (default 200k).
+  *
+  * `MicroBench index` runs only the index-join layer ([[indexJoins]]),
+  * without a Spark session; a full run includes it as `index_join`.
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
+    if (args.headOption.contains("index")) {
+      println(s"""{"metric":"index_join","layer":${indexJoins()}}""")
+      return
+    }
     val n = sys.env.getOrElse("SPARK_GRAFT_MICRO_N", "200000").toLong
     val spark = GraftExtensions.localSession(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "ERROR")
@@ -213,7 +220,71 @@ object MicroBench {
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    println(s"""{"metric":"micro_total","value":$total,"unit":"sec","n":$n,"queries":$qs}""")
+    println(s"""{"metric":"micro_total","value":$total,"unit":"sec","n":$n,"queries":$qs,""" +
+      s""""index_join":${indexJoins()}}""")
     spark.stop()
+  }
+
+  /** The index joins' own layer, on one thread over rows in memory:
+    * index build ms (median of 5) and probe ns per stream row for
+    * perfbench spatial_join's shapes — 42k boxes probed by 300k
+    * half-clustered points (`st_intersects`), and 42k points searched by
+    * every 20th point for its 4 nearest (the KNN join's search). The
+    * probes run 3 times; the last is reported. */
+  def indexJoins(): String = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+    import org.apache.spark.sql.execution.metric.SQLMetric
+    import org.apache.spark.sql.types.BinaryType
+    import graft.geom.GeomIO
+    import graft.joins.{BroadcastIndexSpatialJoinExec, KnnJoinExec}
+    val rnd = new java.util.Random(101)
+    val extent = 1000.0
+    def coord(clustered: Boolean): (Double, Double) =
+      if (!clustered) (rnd.nextDouble() * extent, rnd.nextDouble() * extent)
+      else {
+        val c = rnd.nextInt(8)
+        (100 + 100 * c + rnd.nextGaussian() * 10, 100 + 97 * c + rnd.nextGaussian() * 10)
+      }
+    // broadcast rows arrive as UnsafeRows
+    val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
+      Array[org.apache.spark.sql.types.DataType](BinaryType))
+    def row(bytes: Array[Byte]): InternalRow =
+      toUnsafe(new GenericInternalRow(Array[Any](bytes))).copy()
+    val points = Array.tabulate(300000) { i => val (x, y) = coord(i % 2 == 1); row(GeomIO.pointBytes(x, y)) }
+    val boxes = Array.fill(42000) {
+      val (x, y) = coord(clustered = false)
+      row(GeomIO.envelopeBytes(x, y, x + 1 + rnd.nextDouble() * 4, y + 1 + rnd.nextDouble() * 4))
+    }
+    val sites = Array.fill(42000) { val (x, y) = coord(clustered = false); row(GeomIO.pointBytes(x, y)) }
+    val geom = BoundReference(0, BinaryType, nullable = true)
+    def ms(f: => Unit): Double = { val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6 }
+    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+
+    val build = median((0 until 5).map(_ => ms(
+      BroadcastIndexSpatialJoinExec.buildIndex(boxes.iterator, geom, spherical = false))))
+    val index = BroadcastIndexSpatialJoinExec.buildIndex(boxes.iterator, geom, spherical = false)
+    val candidates = new SQLMetric("sum", 0L)
+    val probe = new BroadcastIndexSpatialJoinExec.Probe(geom, None, None, "st_intersects",
+      buildIsLeft = false, candidates)
+    var matches = 0L
+    val probeMs = (0 until 3).map { _ =>
+      matches = 0L
+      ms(points.foreach(p => matches += probe(index, p).size))
+    }.last
+
+    val side = KnnJoinExec.ObjectSide(Seq(BinaryType), geom, None, spheroid = false)
+    val knnBuild = median((0 until 5).map(_ => ms(side.index(sites.iterator, copy = false))))
+    val search = new KnnJoinExec.Search(side.index(sites.iterator, copy = false))
+    val queries = points.indices.by(20).map(points(_))
+    val q = new BroadcastIndexSpatialJoinExec.Shape
+    var found = 0L
+    val knnMs = (0 until 3).map { _ =>
+      found = 0L
+      ms(queries.foreach { r => q.set(r.getBinary(0)); found += search.nearest(q, 4).length })
+    }.last
+    f"""{"intersects_build_ms":$build%.2f,"intersects_probe_ns_per_row":${probeMs * 1e6 / points.length}%.1f,""" +
+      f""""intersects_matches":$matches,"knn_build_ms":$knnBuild%.2f,""" +
+      f""""knn_probe_ns_per_row":${knnMs * 1e6 / queries.length}%.1f,"knn_rows":$found}"""
   }
 }

@@ -968,23 +968,23 @@ object GeomScalars {
       GeomScalar("st_point", children,
         if (strCrs) ItemCrs.dataType else BinaryType,
         if (children.length >= 3) Seq(Dbl, Dbl, Raw) else Seq(Dbl, Dbl),
-        a => {
+        a => if (a.length < 3) GeomIO.pointBytes(d(a, 0), d(a, 1)) else {
           val p = GeomIO.point(d(a, 0), d(a, 1))
-          if (a.length >= 3) a(2) match {
+          a(2) match {
             case s: UTF8String =>
               val srid = try parseCrsSrid(s.toString) catch { case _: Exception => 0 }
               if (srid != 0) p.setSRID(srid)
               ItemCrs.row(GeomIO.write(p), UTF8String.fromString(s.toString))
             case n: java.lang.Number => p.setSRID(n.intValue()); p
             case dec: Decimal => p.setSRID(dec.toInt); p
-          } else p
+          }
         })
     }),
-    fn("st_makepoint", BinaryType, Seq(Dbl, Dbl))(a => GeomIO.point(d(a, 0), d(a, 1))),
+    fn("st_makepoint", BinaryType, Seq(Dbl, Dbl))(a => GeomIO.pointBytes(d(a, 0), d(a, 1))),
     fn("st_geogpoint", BinaryType, Seq(Dbl, Dbl))(a => GeomIO.point(d(a, 0), d(a, 1))),
     fn("st_pointz", BinaryType, Seq(Dbl, Dbl, Dbl))(a => GeomIO.pointZ(d(a, 0), d(a, 1), d(a, 2))),
     fn("st_makeenvelope", BinaryType, Seq(Dbl, Dbl, Dbl, Dbl))(a =>
-      GeomIO.envelope(d(a, 0), d(a, 1), d(a, 2), d(a, 3))),
+      GeomIO.envelopeBytes(d(a, 0), d(a, 1), d(a, 2), d(a, 3))),
     fn("st_makeline", BinaryType, Seq(Geom, Geom))(a =>
       GeomIO.factory.createLineString(g0(a).getCoordinates ++ g1(a).getCoordinates)),
     fn("st_makepolygon", BinaryType, Seq(Geom))(a => g0(a) match {

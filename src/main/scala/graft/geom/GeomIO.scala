@@ -272,6 +272,252 @@ object GeomIO {
   def envelope(xmin: Double, ymin: Double, xmax: Double, ymax: Double): Geometry =
     factory.toGeometry(new Envelope(xmin, xmax, ymin, ymax))
 
+  // ---- WKB without JTS: the constructors' bytes and the index bounds ----
+
+  private val EwkbSrid = 0x20000000
+
+  /** `write(point(x, y))`, written directly: NDR, the SRID flag, SRID 0. */
+  def pointBytes(x: Double, y: Double): Array[Byte] = {
+    val out = new Array[Byte](25)
+    header(out, 1)
+    putDouble(out, 9, x); putDouble(out, 17, y)
+    out
+  }
+
+  /** `write(envelope(xmin, ymin, xmax, ymax))`: written directly for a
+    * rectangle with width and height; JTS's point, line or empty point
+    * for the degenerate and NaN envelopes. */
+  def envelopeBytes(xmin: Double, ymin: Double, xmax: Double, ymax: Double): Array[Byte] = {
+    // Envelope's normalization: min and max by `<`, as JTS orders them
+    val (x0, x1) = if (xmin < xmax) (xmin, xmax) else (xmax, xmin)
+    val (y0, y1) = if (ymin < ymax) (ymin, ymax) else (ymax, ymin)
+    if (!(x0 < x1 && y0 < y1)) write(envelope(xmin, ymin, xmax, ymax))
+    else {
+      val out = new Array[Byte](97)
+      header(out, 3)
+      putInt(out, 9, 1); putInt(out, 13, 5)
+      // factory.toGeometry's ring: min corner, up, across, down, closed
+      val xs = Array(x0, x0, x1, x1, x0)
+      val ys = Array(y0, y1, y1, y0, y0)
+      var i = 0
+      while (i < 5) { putDouble(out, 17 + 16 * i, xs(i)); putDouble(out, 25 + 16 * i, ys(i)); i += 1 }
+      out
+    }
+  }
+
+  /** NDR byte, 2D type code with the SRID flag, SRID 0. */
+  private def header(out: Array[Byte], tpe: Int): Unit = {
+    out(0) = 1
+    putInt(out, 1, tpe | EwkbSrid)
+    putInt(out, 5, 0)
+  }
+
+  private def putInt(out: Array[Byte], at: Int, v: Int): Unit = {
+    var i = 0
+    while (i < 4) { out(at + i) = (v >>> (8 * i)).toByte; i += 1 }
+  }
+
+  private def putDouble(out: Array[Byte], at: Int, d: Double): Unit = {
+    val v = java.lang.Double.doubleToLongBits(d)
+    var i = 0
+    while (i < 8) { out(at + i) = (v >>> (8 * i)).toByte; i += 1 }
+  }
+
+  /** Shape tags of [[bounds]]: an empty geometry; a 2D point with finite
+    * coordinates; a 2D rectangle with finite corners that JTS's
+    * `Polygon.isRectangle` accepts and whose ring visits four distinct
+    * corners; anything else. */
+  final val EmptyShape = 0
+  final val PointShape = 1
+  final val RectShape = 2
+  final val OtherShape = 3
+
+  /** The planar envelope of the (E)WKB geometry `bytes`, read from the
+    * bytes: `read(bytes).getEnvelopeInternal`, as minX, minY, maxX, maxY
+    * into `out` from `at`, and its shape tag. Either byte order, ISO or
+    * EWKB Z/M, the SRID flag, nested collections. Nothing is written for
+    * an empty geometry. A 2D little-endian point takes no allocation. */
+  def bounds(bytes: Array[Byte], out: Array[Double], at: Int): Int = {
+    // the probe's case first: a 2D NDR point, with or without SRID
+    if (bytes.length >= 21 && bytes(0) == 1 && bytes(2) == 0 && bytes(3) == 0 &&
+        bytes(1) == 1 && (bytes(4) == 0 || bytes(4) == 0x20)) {
+      val p = if (bytes(4) == 0) 5 else 9
+      if (bytes.length < p + 16) throw new IllegalArgumentException("truncated WKB point")
+      val x = java.lang.Double.longBitsToDouble(WkbBounds.long(bytes, p, le = true))
+      val y = java.lang.Double.longBitsToDouble(WkbBounds.long(bytes, p + 8, le = true))
+      if (java.lang.Double.isNaN(x) || java.lang.Double.isNaN(y)) EmptyShape
+      else {
+        out(at) = x; out(at + 1) = y; out(at + 2) = x; out(at + 3) = y
+        if (java.lang.Double.isInfinite(x) || java.lang.Double.isInfinite(y)) OtherShape
+        else PointShape
+      }
+    } else new WkbBounds(bytes).top(out, at)
+  }
+
+  /** The general walk of [[bounds]]. It follows JTS's reader (a byte
+    * order other than 0 or 1 keeps the current one; empty points are NaN)
+    * and JTS's envelopes: a polygon's is its shell's, a collection's the
+    * union of its non-null children's, each built by
+    * `Envelope.expandToInclude`, NaN comparisons included. */
+  private final class WkbBounds(b: Array[Byte]) {
+    private var pos = 0
+    private var le = false
+    // the envelope of the geometry just read; null while maxX < minX
+    private var minX, minY = 0.0
+    private var maxX, maxY = -1.0
+    private var empty = true
+    private var rect = false
+    private var point2d = false
+
+    def top(out: Array[Double], at: Int): Int = {
+      geometry()
+      if (empty) EmptyShape
+      else {
+        out(at) = minX; out(at + 1) = minY; out(at + 2) = maxX; out(at + 3) = maxY
+        val finite = java.lang.Double.isFinite(minX) && java.lang.Double.isFinite(minY) &&
+          java.lang.Double.isFinite(maxX) && java.lang.Double.isFinite(maxY)
+        if (!finite) OtherShape
+        else if (point2d) PointShape
+        else if (rect) RectShape
+        else OtherShape
+      }
+    }
+
+    private def int(): Int = {
+      val v = WkbBounds.int(b, pos, le); pos += 4; v
+    }
+    private def double(): Double = {
+      val v = java.lang.Double.longBitsToDouble(WkbBounds.long(b, pos, le)); pos += 8; v
+    }
+
+    private def setNull(): Unit = { minX = 0.0; minY = 0.0; maxX = -1.0; maxY = -1.0 }
+
+    private def expand(x: Double, y: Double): Unit =
+      if (maxX < minX) { minX = x; maxX = x; minY = y; maxY = y }
+      else {
+        if (x < minX) minX = x
+        if (x > maxX) maxX = x
+        if (y < minY) minY = y
+        if (y > maxY) maxY = y
+      }
+
+    /** Reads `n` coordinates of `dim` ordinates into the envelope. */
+    private def coords(n: Int, dim: Int): Unit = {
+      var i = 0
+      while (i < n) {
+        val x = double(); val y = double()
+        pos += 8 * (dim - 2)
+        expand(x, y)
+        i += 1
+      }
+    }
+
+    private def count(): Int = {
+      val n = int()
+      if (n < 0) throw new IllegalArgumentException(s"negative WKB count $n")
+      n
+    }
+
+    /** Reads one geometry at `pos` into the envelope and the flags. */
+    private def geometry(): Unit = {
+      b(pos) match {
+        case 1 => le = true
+        case 0 => le = false
+        case _ =>
+      }
+      pos += 1
+      val code = int()
+      val iso = (code & 0xffff) / 1000
+      val z = (code & 0x80000000) != 0 || iso == 1 || iso == 3
+      val m = (code & 0x40000000) != 0 || iso == 2 || iso == 3
+      if ((code & EwkbSrid) != 0) pos += 4
+      val dim = 2 + (if (z) 1 else 0) + (if (m) 1 else 0)
+      setNull()
+      empty = true; rect = false; point2d = false
+      (code & 0xffff) % 1000 match {
+        case 1 =>
+          val x = double(); val y = double()
+          pos += 8 * (dim - 2)
+          if (!java.lang.Double.isNaN(x) && !java.lang.Double.isNaN(y)) {
+            expand(x, y); empty = false; point2d = dim == 2
+          }
+        case 2 =>
+          val n = count()
+          coords(n, dim)
+          empty = n == 0
+        case 3 =>
+          val rings = count()
+          if (rings > 0) {
+            val n = count()
+            val start = pos
+            coords(n, dim)
+            empty = n == 0
+            rect = rings == 1 && n == 5 && dim == 2 && isRectangle(start)
+            var r = 1
+            while (r < rings) { val holes = count(); pos += 8 * dim * holes; r += 1 }
+          }
+        case 4 | 5 | 6 | 7 =>
+          val n = count()
+          var cMinX, cMinY = 0.0
+          var cMaxX, cMaxY = -1.0
+          var cEmpty = true
+          var i = 0
+          while (i < n) {
+            geometry()
+            if (!empty) cEmpty = false
+            if (!(maxX < minX)) {
+              if (cMaxX < cMinX) { cMinX = minX; cMinY = minY; cMaxX = maxX; cMaxY = maxY }
+              else {
+                if (minX < cMinX) cMinX = minX
+                if (maxX > cMaxX) cMaxX = maxX
+                if (minY < cMinY) cMinY = minY
+                if (maxY > cMaxY) cMaxY = maxY
+              }
+            }
+            i += 1
+          }
+          minX = cMinX; minY = cMinY; maxX = cMaxX; maxY = cMaxY
+          empty = cEmpty; rect = false; point2d = false
+        case t => throw new IllegalArgumentException(s"unknown WKB geometry type $t")
+      }
+    }
+
+    /** `Polygon.isRectangle` over the 2D ring of 5 points at `start`, with
+      * the envelope just read: every vertex on a corner, each edge moving
+      * along one axis; and besides, a closed ring over four distinct
+      * corners, so the rectangle has width and height. */
+    private def isRectangle(start: Int): Boolean = {
+      val xs = new Array[Double](5)
+      val ys = new Array[Double](5)
+      var i = 0
+      while (i < 5) {
+        xs(i) = java.lang.Double.longBitsToDouble(WkbBounds.long(b, start + 16 * i, le))
+        ys(i) = java.lang.Double.longBitsToDouble(WkbBounds.long(b, start + 16 * i + 8, le))
+        if (!(xs(i) == minX || xs(i) == maxX) || !(ys(i) == minY || ys(i) == maxY)) return false
+        if (i > 0 && (xs(i) != xs(i - 1)) == (ys(i) != ys(i - 1))) return false
+        i += 1
+      }
+      minX < maxX && minY < maxY && xs(4) == xs(0) && ys(4) == ys(0) &&
+        xs(2) != xs(0) && ys(2) != ys(0) && (xs(1) != xs(3) || ys(1) != ys(3))
+    }
+  }
+
+  private object WkbBounds {
+    def int(b: Array[Byte], at: Int, le: Boolean): Int = {
+      if (at + 4 > b.length) throw new IllegalArgumentException("truncated WKB")
+      val v = (b(at) & 0xff) | ((b(at + 1) & 0xff) << 8) | ((b(at + 2) & 0xff) << 16) |
+        ((b(at + 3) & 0xff) << 24)
+      if (le) v else Integer.reverseBytes(v)
+    }
+    def long(b: Array[Byte], at: Int, le: Boolean): Long = {
+      if (at + 8 > b.length) throw new IllegalArgumentException("truncated WKB")
+      val v = org.apache.spark.unsafe.Platform.getLong(b,
+        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + at)
+      if (le == NativeLE) v else java.lang.Long.reverseBytes(v)
+    }
+    private val NativeLE = java.nio.ByteOrder.nativeOrder() == java.nio.ByteOrder.LITTLE_ENDIAN
+  }
+
   def setSrid(g: Geometry, srid: Int): Geometry = {
     val c = g.copy(); c.setSRID(srid); c
   }

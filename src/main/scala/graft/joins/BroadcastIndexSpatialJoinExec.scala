@@ -9,15 +9,15 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.locationtech.jts.geom.{Envelope, Geometry}
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
-import org.locationtech.jts.index.ItemVisitor
-import org.locationtech.jts.index.hprtree.HPRtree
 import graft.functions.Spherical
 import graft.geom.GeomIO
 
 /** Broadcast index spatial join: build side is broadcast, a Hilbert-packed
-  * R-tree (JTS HPRtree) over its geometries is built once per executor
-  * and broadcast value, and each streamed row probes the tree and refines
-  * candidates with a prepared geometry.
+  * R-tree ([[PackedIndex]]) over its bounds, read from the WKB without a
+  * parse, is built once per executor and broadcast value, and each
+  * streamed row probes the tree and refines its candidates: from
+  * coordinates for point and rectangle pairs, else with JTS (a prepared
+  * geometry once a row has several candidates).
   *
   * This is the Spark-native analog of the reference's build/probe/refine
   * SpatialJoinExec (rust/sedona-spatial-join/src/exec.rs:80-88) with its
@@ -160,29 +160,9 @@ case class BroadcastIndexSpatialJoinExec(
 
 object BroadcastIndexSpatialJoinExec {
 
-  /** A build-side row with its parsed geometry and its [[buildBound]]:
-    * the index's item. */
-  final class BuildRow(val geom: Geometry, val row: InternalRow, val bound: Envelope)
-
   /** Whether `pred` (a `SpatialPredicate.Extracted` name) is spherical. */
   def isSpherical(pred: String): Boolean =
     SpatialPredicate.sphereRelationPreds(pred) || pred == "st_dwithinsphere"
-
-  /** A build geometry's bound in the index: its envelope, or on the
-    * sphere its `Spherical.latLngBound`. */
-  def buildBound(g: Geometry, spherical: Boolean): Envelope =
-    if (spherical) Spherical.latLngBound(g) else g.getEnvelopeInternal
-
-  /** A stream geometry's probe bound: its envelope widened by the
-    * distance, or on the sphere its `Spherical.latLngBound` widened by the
-    * radius (`Spherical.radiusBound`). */
-  def streamBound(g: Geometry, dist: Option[Double], spherical: Boolean): Envelope =
-    if (spherical) Spherical.radiusBound(Spherical.latLngBound(g), dist.getOrElse(0.0))
-    else {
-      val env = new Envelope(g.getEnvelopeInternal)
-      dist.foreach(d => env.expandBy(d))
-      env
-    }
 
   /** A distance expression's value; SQL `st_dwithin(a, b, 2.0)` carries a
     * DECIMAL literal. */
@@ -191,119 +171,336 @@ object BroadcastIndexSpatialJoinExec {
     case n: Number => n.doubleValue()
   }
 
+  /** One stream or query geometry as a probe sees it, reused from row to
+    * row: its WKB, its planar bound and shape tag (`GeomIO.bounds`), and
+    * its JTS geometry, parsed at most once, on first use. */
+  final class Shape {
+    val bound = new Array[Double](4)
+    var tag: Int = GeomIO.EmptyShape
+    private var bytes: Array[Byte] = _
+    private var parsed: Geometry = _
+
+    /** Takes the WKB value `v`; false for a null or empty geometry. */
+    def set(v: Any): Boolean = {
+      parsed = null
+      if (v == null) { tag = GeomIO.EmptyShape; false }
+      else {
+        bytes = v.asInstanceOf[Array[Byte]]
+        tag = GeomIO.bounds(bytes, bound, 0)
+        tag != GeomIO.EmptyShape
+      }
+    }
+
+    def isPoint: Boolean = tag == GeomIO.PointShape
+
+    def geom: Geometry = {
+      if (parsed == null) parsed = GeomIO.read(bytes)
+      parsed
+    }
+  }
+
+  /** The rows of one build or object side with a non-empty geometry: each
+    * with its WKB, planar bound (4 doubles) and shape tag, and its JTS
+    * geometry, parsed on first use and then kept. Tasks share it. */
+  final class Items(val rows: Array[InternalRow], wkb: Array[Array[Byte]],
+      val bounds: Array[Double], val shapes: Array[Byte]) {
+    private val parsed = new java.util.concurrent.atomic.AtomicReferenceArray[Geometry](rows.length)
+
+    def size: Int = rows.length
+
+    def isPoint(i: Int): Boolean = shapes(i) == GeomIO.PointShape
+
+    def geom(i: Int): Geometry = {
+      val g = parsed.get(i)
+      if (g != null) g
+      else {
+        val p = GeomIO.read(wkb(i))
+        parsed.set(i, p)
+        p
+      }
+    }
+
+    /** The bounds of the index: the planar ones, or on the sphere each
+      * row's `Spherical.latLngBound` (a point's is the point). */
+    def indexBounds(spherical: Boolean): Array[Double] =
+      if (!spherical) bounds
+      else {
+        val out = bounds.clone()
+        var i = 0
+        while (i < size) {
+          if (!isPoint(i)) putEnvelope(Spherical.latLngBound(geom(i)), out, 4 * i)
+          i += 1
+        }
+        out
+      }
+  }
+
+  object Items {
+    /** The rows whose `geom` is a non-empty geometry, each through
+      * `keep` (the identity, or a copy of a reused row). */
+    def apply(rows: Iterator[InternalRow], geom: Expression,
+        keep: InternalRow => InternalRow = identity): Items = {
+      val kept = Array.newBuilder[InternalRow]
+      val wkb = Array.newBuilder[Array[Byte]]
+      val shapes = Array.newBuilder[Byte]
+      var bounds = new Array[Double](64)
+      var n = 0
+      rows.foreach { row =>
+        val v = geom.eval(row)
+        if (v != null) {
+          val bytes = v.asInstanceOf[Array[Byte]]
+          if (4 * n + 4 > bounds.length) bounds = java.util.Arrays.copyOf(bounds, 2 * bounds.length)
+          val shape = GeomIO.bounds(bytes, bounds, 4 * n)
+          if (shape != GeomIO.EmptyShape) {
+            kept += keep(row)
+            wkb += bytes
+            shapes += shape.toByte
+            n += 1
+          }
+        }
+      }
+      new Items(kept.result(), wkb.result(), java.util.Arrays.copyOf(bounds, 4 * n),
+        shapes.result())
+    }
+  }
+
+  private def putEnvelope(e: Envelope, out: Array[Double], at: Int): Unit = {
+    out(at) = e.getMinX; out(at + 1) = e.getMinY; out(at + 2) = e.getMaxX; out(at + 3) = e.getMaxY
+  }
+
+  /** A build geometry's bound in the index, into `out`: its envelope, or
+    * on the sphere its `Spherical.latLngBound`. */
+  def buildBound(g: Shape, spherical: Boolean, out: Array[Double]): Unit =
+    if (spherical && !g.isPoint) putEnvelope(Spherical.latLngBound(g.geom), out, 0)
+    else System.arraycopy(g.bound, 0, out, 0, 4)
+
+  /** A stream geometry's probe bound, into `out`: its envelope widened by
+    * the distance `d` (`Envelope.expandBy`), or on the sphere its
+    * `Spherical.latLngBound` widened by the radius
+    * (`Spherical.radiusBound`). False when the bound is null. */
+  def probeBound(g: Shape, d: Option[Double], spherical: Boolean, out: Array[Double]): Boolean =
+    if (spherical) {
+      val b = g.bound
+      val e = Spherical.radiusBound(
+        if (g.isPoint) new Envelope(b(0), b(2), b(1), b(3)) else Spherical.latLngBound(g.geom),
+        d.getOrElse(0.0))
+      if (e.isNull) false else { putEnvelope(e, out, 0); true }
+    } else {
+      System.arraycopy(g.bound, 0, out, 0, 4)
+      d match {
+        case Some(r) =>
+          out(0) -= r; out(1) -= r; out(2) += r; out(3) += r
+          !(out(0) > out(2) || out(1) > out(3))
+        case None => true
+      }
+    }
+
+  /** Predicates with a refine from coordinates ([[refineShapes]]). */
+  final val IntersectsMode = 0
+  final val DWithinMode = 1
+  final val DWithinSphereMode = 2
+  final val OtherMode = 3
+
+  def refineMode(pred: String): Int = pred match {
+    case "st_intersects" => IntersectsMode
+    case "st_dwithin" => DWithinMode
+    case "st_dwithinsphere" => DWithinSphereMode
+    case _ => OtherMode
+  }
+
+  /** JTS's distance between two 2D points: `Math.hypot` of the
+    * differences, `Double.MaxValue` where that overflows. */
+  def pointDistance(x0: Double, y0: Double, x1: Double, y1: Double): Double = {
+    val d = Math.hypot(x0 - x1, y0 - y1)
+    if (d < Double.MaxValue) d else Double.MaxValue
+  }
+
+  /** `pred(stream, build)` from the shapes alone, for the pairs where that
+    * is JTS's answer: 1 or 0, or -1 when the pair needs JTS. The bounds
+    * lie at `sAt` and `bAt`; `d` is the distance or the radius.
+    *   - st_intersects of points and rectangles: their closed boxes meet;
+    *   - st_dwithin of two points: `Math.hypot(dx, dy) <= d`;
+    *   - st_dwithinsphere of two points: `Spherical.haversine <= d`.
+    */
+  def refineShapes(mode: Int, sShape: Int, s: Array[Double], sAt: Int, bShape: Int,
+      b: Array[Double], bAt: Int, d: Double): Int = {
+    val points = sShape == GeomIO.PointShape && bShape == GeomIO.PointShape
+    mode match {
+      case IntersectsMode
+          if (sShape == GeomIO.PointShape || sShape == GeomIO.RectShape) &&
+            (bShape == GeomIO.PointShape || bShape == GeomIO.RectShape) =>
+        if (s(sAt) <= b(bAt + 2) && b(bAt) <= s(sAt + 2) &&
+          s(sAt + 1) <= b(bAt + 3) && b(bAt + 1) <= s(sAt + 3)) 1 else 0
+      case DWithinMode if points =>
+        if (Math.hypot(s(sAt) - b(bAt), s(sAt + 1) - b(bAt + 1)) <= d) 1 else 0
+      case DWithinSphereMode if points =>
+        if (Spherical.haversine(s(sAt), s(sAt + 1), b(bAt), b(bAt + 1)) <= d) 1 else 0
+      case _ => -1
+    }
+  }
+
   /** The per-row probe of both index joins: a stream row's index
-    * candidates that `keep` admits, refined by the predicate, joined with
-    * the stream row in child order and filtered by the extra condition.
-    * One per task, over bound expressions: it reuses its joined row. */
+    * candidates that `owned` admits, refined by the predicate, joined
+    * with the stream row in child order and filtered by the extra
+    * condition. Point and rectangle pairs refine from coordinates
+    * ([[refineShapes]]); any other parses the stream geometry once and
+    * takes JTS (prepared once a row has [[prepareThreshold]] candidates)
+    * or the sphere kernels. One per task, over bound expressions: it
+    * reuses its joined row, its candidate buffer and its result iterator,
+    * which holds until the next call. */
   final class Probe(streamGeom: Expression, distance: Option[Expression],
       extra: Option[Expression], pred: String, buildIsLeft: Boolean,
       candidatePairs: SQLMetric) {
     private val spherical = isSpherical(pred)
+    private val mode = refineMode(pred)
     private val joined = new JoinedRow()
-
-    /** `keep(streamBound, candidate)` admits the candidates this probe
-      * owns; null admits all. */
-    def apply(index: BuildIndex, streamRow: InternalRow,
-        keep: (Envelope, BuildRow) => Boolean = null): Iterator[InternalRow] = {
-      val gBytes = streamGeom.eval(streamRow)
-      if (gBytes == null) return Iterator.empty
-      val sg = GeomIO.read(gBytes.asInstanceOf[Array[Byte]])
-      val dist = distance.map(distanceOf(_, streamRow))
-      val q = streamBound(sg, dist, spherical)
-      val found = if (spherical) index.querySphere(q) else index.query(q)
-      val candidates =
-        if (keep == null) found
-        else {
-          val kept = new java.util.ArrayList[AnyRef](found.size)
-          found.forEach(c => if (keep(q, c.asInstanceOf[BuildRow])) kept.add(c))
-          kept
-        }
-      if (candidates.isEmpty) return Iterator.empty
-      val nCand = candidates.size()
-      candidatePairs += nCand
-      // Speculative prepare (reference option.rs:276-301 /
-      // exec_mode_selector.rs): building the prepared geometry's
-      // edge index costs more than one or two plain relate ops, so
-      // only prepare when enough index hits will amortize it.
-      val prepared: PreparedGeometry =
-        if (!spherical && dist.isEmpty && nCand >= prepareThreshold)
-          PreparedGeometryFactory.prepare(sg)
-        else null
-      val it = candidates.iterator()
-      val matches = new Iterator[BuildRow] {
-        override def hasNext: Boolean = it.hasNext
-        override def next(): BuildRow = it.next().asInstanceOf[BuildRow]
-      }.filter { b =>
-        if (spherical) refineSphere(sg, pred, b.geom, dist.getOrElse(0.0))
-        else dist match {
-          case Some(d) => sg.isWithinDistance(b.geom, d)
-          case None =>
-            if (prepared != null) refine(prepared, pred, b.geom)
-            else refineDirect(sg, pred, b.geom)
-        }
-      }.map { b =>
-        if (buildIsLeft) joined(b.row, streamRow) else joined(streamRow, b.row)
+    private val shape = new Shape
+    /** The current stream row's probe bound. */
+    val bound = new Array[Double](4)
+    private var dist = 0.0
+    private var cands = new Array[Int](16)
+    private var nCand = 0
+    private var owned: Int => Boolean = null
+    private val collect: Int => Unit = i =>
+      if (owned == null || owned(i)) {
+        if (nCand == cands.length) cands = java.util.Arrays.copyOf(cands, 2 * nCand)
+        cands(nCand) = i
+        nCand += 1
       }
-      extra match {
-        case Some(c) => matches.filter(r => java.lang.Boolean.TRUE == c.eval(r))
-        case None => matches
+    private var prepared: PreparedGeometry = null
+    private val matches = new Matches
+
+    /** `owned(item)` admits the candidates this probe owns; null admits
+      * all. */
+    def apply(index: BuildIndex, streamRow: InternalRow,
+        owned: Int => Boolean = null): Iterator[InternalRow] = {
+      if (!shape.set(streamGeom.eval(streamRow))) return Iterator.empty
+      val d = distance.map(distanceOf(_, streamRow))
+      dist = d.getOrElse(0.0)
+      if (!probeBound(shape, d, spherical, bound)) return Iterator.empty
+      this.owned = owned
+      nCand = 0
+      if (spherical) index.querySphere(bound, collect)
+      else index.query(bound, collect)
+      this.owned = null
+      if (nCand == 0) return Iterator.empty
+      candidatePairs += nCand
+      prepared = null
+      matches.reset(index.items, streamRow)
+      matches
+    }
+
+    private def refine(items: Items, i: Int): Boolean = {
+      val fast = refineShapes(mode, shape.tag, shape.bound, 0, items.shapes(i), items.bounds,
+        4 * i, dist)
+      if (fast >= 0) fast == 1
+      else {
+        val sg = shape.geom
+        val bg = items.geom(i)
+        if (spherical) refineSphere(sg, pred, bg, dist)
+        else if (distance.isDefined) sg.isWithinDistance(bg, dist)
+        else if (nCand >= prepareThreshold) {
+          // Speculative prepare (reference option.rs:276-301 /
+          // exec_mode_selector.rs): building the prepared geometry's edge
+          // index costs more than one or two plain relate ops, so only
+          // prepare when enough index hits will amortize it.
+          if (prepared == null) prepared = PreparedGeometryFactory.prepare(sg)
+          BroadcastIndexSpatialJoinExec.refine(prepared, pred, bg)
+        } else refineDirect(sg, pred, bg)
+      }
+    }
+
+    /** The joined rows of the current candidates that refine and pass the
+      * extra condition. */
+    private final class Matches extends Iterator[InternalRow] {
+      private var items: Items = _
+      private var streamRow: InternalRow = _
+      private var j = 0
+      private var ready: InternalRow = null
+
+      def reset(items: Items, streamRow: InternalRow): Unit = {
+        this.items = items; this.streamRow = streamRow; j = 0; ready = null
+      }
+
+      override def hasNext: Boolean = {
+        while (ready == null && j < nCand) {
+          val i = cands(j)
+          j += 1
+          if (refine(items, i)) {
+            val b = items.rows(i)
+            val r = if (buildIsLeft) joined(b, streamRow) else joined(streamRow, b)
+            if (extra.forall(c => java.lang.Boolean.TRUE == c.eval(r))) ready = r
+          }
+        }
+        ready != null
+      }
+
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        val r = ready
+        ready = null
+        r
       }
     }
   }
 
-  /** The index over one broadcast build side: an HPRtree of the rows'
-    * envelopes — planar, or in spherical mode their spherical bounds.
-    * Spherical rows whose bound spans ≥ 180° of longitude (polar caps,
-    * rings across the antimeridian) are the full ring: they stay out of
-    * the tree, in `fullRing`, and match every probe they overlap in
-    * latitude. */
-  final class BuildIndex(tree: HPRtree, fullRing: Array[(Envelope, BuildRow)]) {
+  /** The index over one build side: its [[Items]] in a [[PackedIndex]] of
+    * their bounds, planar or spherical. Spherical rows whose bound spans
+    * ≥ 180° of longitude (polar caps, rings across the antimeridian) are
+    * the full ring: they stay out of the tree, in `fullRing`, and match
+    * every probe they overlap in latitude. */
+  final class BuildIndex(val items: Items, val bounds: Array[Double], tree: PackedIndex,
+      fullRing: Array[Int]) {
 
-    def query(env: Envelope): java.util.List[AnyRef] =
-      tree.query(env).asInstanceOf[java.util.List[AnyRef]]
+    /** Visits the rows whose bound meets the probe bound `q`. */
+    def query(q: Array[Double], visit: Int => Unit): Unit =
+      tree.query(q(0), q(1), q(2), q(3), visit)
 
-    /** Build rows whose spherical bound meets the probe bound `q` (a
+    /** Visits the rows whose spherical bound meets the probe bound `q` (a
       * `Spherical.radiusBound`): a probe ≥ 180° wide is the full ring, a
       * narrower one is matched at longitude shifts 0 and ±360. Each row is
-      * returned once: a tree bound and a probe both under 180° wide can
+      * visited once: a tree bound and a probe both under 180° wide can
       * meet at most one of the shifts, which lie 360° apart. */
-    def querySphere(q: Envelope): java.util.List[AnyRef] = {
-      val out = new java.util.ArrayList[AnyRef]()
-      if (q.isNull) return out
-      val visitor = new ItemVisitor { def visitItem(item: AnyRef): Unit = out.add(item) }
-      if (q.getWidth >= 180.0)
-        tree.query(new Envelope(Double.NegativeInfinity, Double.PositiveInfinity,
-          q.getMinY, q.getMaxY), visitor)
-      else for (shift <- Shifts)
-        tree.query(new Envelope(q.getMinX + shift, q.getMaxX + shift,
-          q.getMinY, q.getMaxY), visitor)
-      for ((env, b) <- fullRing)
-        if (env.getMinY <= q.getMaxY && q.getMinY <= env.getMaxY) out.add(b)
-      out
+    def querySphere(q: Array[Double], visit: Int => Unit): Unit = {
+      if (q(2) - q(0) >= 180.0)
+        tree.query(Double.NegativeInfinity, q(1), Double.PositiveInfinity, q(3), visit)
+      else {
+        var s = 0
+        while (s < Shifts.length) {
+          tree.query(q(0) + Shifts(s), q(1), q(2) + Shifts(s), q(3), visit)
+          s += 1
+        }
+      }
+      var r = 0
+      while (r < fullRing.length) {
+        val i = fullRing(r)
+        if (bounds(4 * i + 1) <= q(3) && q(1) <= bounds(4 * i + 3)) visit(i)
+        r += 1
+      }
     }
   }
 
   private[joins] val Shifts = Array(0.0, 360.0, -360.0)
 
-  /** The index over `rows`, skipping null and empty geometries. */
-  def buildIndex(rows: Iterator[InternalRow], geomExpr: Expression,
-      spherical: Boolean): BuildIndex = {
-    val tree = new HPRtree()
-    val fullRing = Array.newBuilder[(Envelope, BuildRow)]
-    rows.foreach { row =>
-      val bytes = geomExpr.eval(row)
-      if (bytes != null) {
-        val g = GeomIO.read(bytes.asInstanceOf[Array[Byte]])
-        if (!g.isEmpty) {
-          val env = buildBound(g, spherical)
-          val b = new BuildRow(g, row, env)
-          if (spherical && env.getWidth >= 180.0) fullRing += ((env, b))
-          else tree.insert(env, b)
-        }
+  /** The index over `rows`, skipping null and empty geometries; `keep`
+    * maps each kept row (a copy of a reused row). */
+  def buildIndex(rows: Iterator[InternalRow], geomExpr: Expression, spherical: Boolean,
+      keep: InternalRow => InternalRow = identity): BuildIndex = {
+    val items = Items(rows, geomExpr, keep)
+    val bounds = items.indexBounds(spherical)
+    val inTree = Array.newBuilder[Int]
+    val fullRing = Array.newBuilder[Int]
+    var i = 0
+    while (i < items.size) {
+      val o = 4 * i
+      // a null bound (max < min) matches nothing
+      if (!(bounds(o + 2) < bounds(o) || bounds(o + 3) < bounds(o + 1))) {
+        if (spherical && bounds(o + 2) - bounds(o) >= 180.0) fullRing += i
+        else inTree += i
       }
+      i += 1
     }
-    tree.build()
-    new BuildIndex(tree, fullRing.result())
+    new BuildIndex(items, bounds, PackedIndex(bounds, inTree.result()), fullRing.result())
   }
 
   /** Executor-local indexes: one per broadcast build side (and index

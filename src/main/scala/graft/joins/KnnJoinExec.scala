@@ -7,11 +7,11 @@ import org.apache.spark.sql.catalyst.plans.physical._
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.ByteArray
-import org.locationtech.jts.geom.{Envelope, Geometry, Point}
-import org.locationtech.jts.index.strtree.{ItemBoundable, ItemDistance, STRtree}
+import org.locationtech.jts.geom.{Geometry, Point}
 import graft.functions.Spherical
-import graft.geom.GeomIO
+import graft.joins.BroadcastIndexSpatialJoinExec.{Items, Shape, pointDistance}
 
 /** Broadcast KNN join: `q JOIN o ON st_knn(q.geom, o.geom, k)` — for every
   * query-side row, the k nearest object rows. The object side is broadcast
@@ -71,13 +71,15 @@ case class KnnJoinExec(
 
     queryPlan.execute().mapPartitions { queryIter =>
       val rows = broadcastRows.value
-      val index = BroadcastIndexSpatialJoinExec.indexFor(rows, objects)(objects.index(rows.iterator))
+      val index = BroadcastIndexSpatialJoinExec.indexFor(rows, objects)(
+        objects.index(rows.iterator, copy = false))
       val emit = new Emit(objLeft, ranked, outTypes)
+      val search = new Search(index)
+      val q = new Shape
       queryIter.flatMap { qRow =>
-        val qg = geometryOf(boundQueryGeom, qRow)
-        if (qg == null) Iterator.empty
+        if (!q.set(boundQueryGeom.eval(qRow))) Iterator.empty
         else {
-          val cands = nearest(index, qg, kk, candidatePairs)
+          val cands = search.nearest(q, kk, candidatePairs)
           numOutputRows += cands.length
           emit(qRow, cands)
         }
@@ -95,19 +97,8 @@ case class KnnJoinExec(
   * tie-break, object row bytes). */
 object KnnJoinExec {
 
-  /** An object row as the search sees it: its geometry, its bound
-    * (`BroadcastIndexSpatialJoinExec.buildBound`), its tie key and its
-    * UnsafeRow bytes. */
-  final class KnnObject(val geom: Geometry, val bound: Envelope, val tie: Array[Byte],
-      val bytes: Array[Byte], numFields: Int) {
-    def row: UnsafeRow = {
-      val r = new UnsafeRow(numFields)
-      r.pointTo(bytes, bytes.length)
-      r
-    }
-  }
-
-  final class Candidate(val d: Double, val obj: KnnObject)
+  /** A ranked object: its distance, its tie key and its row. */
+  final class Candidate(val d: Double, val tie: Array[Byte], val row: UnsafeRow)
 
   /** Distance, then the tie key, then the object row's bytes: a total
     * order, so every path keeps the same k rows. Keys are computed once per
@@ -116,9 +107,23 @@ object KnnJoinExec {
     val c = java.lang.Double.compare(a.d, b.d)
     if (c != 0) c
     else {
-      val t = ByteArray.compareBinary(a.obj.tie, b.obj.tie)
-      if (t != 0) t else ByteArray.compareBinary(a.obj.bytes, b.obj.bytes)
+      val t = ByteArray.compareBinary(a.tie, b.tie)
+      if (t != 0) t else compareRows(a.row, b.row)
     }
+  }
+
+  /** Two rows' bytes, unsigned and lexicographic, as
+    * `ByteArray.compareBinary` orders arrays. */
+  private def compareRows(a: UnsafeRow, b: UnsafeRow): Int = {
+    val n = math.min(a.getSizeInBytes, b.getSizeInBytes)
+    var i = 0
+    while (i < n) {
+      val x = Platform.getByte(a.getBaseObject, a.getBaseOffset + i) & 0xff
+      val y = Platform.getByte(b.getBaseObject, b.getBaseOffset + i) & 0xff
+      if (x != y) return x - y
+      i += 1
+    }
+    a.getSizeInBytes - b.getSizeInBytes
   }
 
   /** The `k` best candidates offered, by [[byRank]]. */
@@ -142,37 +147,27 @@ object KnnJoinExec {
     case _ => Array.emptyByteArray
   }
 
-  /** The geometry `geom` evaluates to on `row`; null for a null or empty
-    * geometry, which matches nothing. */
-  def geometryOf(geom: Expression, row: InternalRow): Geometry = {
-    val bytes = geom.eval(row)
-    if (bytes == null) null
-    else {
-      val g = GeomIO.read(bytes.asInstanceOf[Array[Byte]])
-      if (g.isEmpty) null else g
-    }
-  }
-
   /** How object rows enter the search; also the broadcast index's cache
     * key. `geom` and `tieBreak` are bound to the object side's output. */
   final case class ObjectSide(types: Seq[DataType], geom: Expression,
       tieBreak: Option[Expression], spheroid: Boolean) {
 
-    def index(rows: Iterator[InternalRow]): KnnIndex = {
+    /** The index over `rows`' non-empty geometries. Rows that are already
+      * UnsafeRows are kept as they are, or copied when `copy` (a reused
+      * row buffer); others are projected. */
+    def index(rows: Iterator[InternalRow], copy: Boolean): KnnIndex = {
       val toUnsafe = UnsafeProjection.create(types.toArray)
-      val objects = Array.newBuilder[KnnObject]
-      rows.foreach { row =>
-        val g = geometryOf(geom, row)
-        if (g != null) {
-          val tie = tieBreak match {
-            case Some(t) => doubleKey(t.eval(row))
-            case None => geom.eval(row).asInstanceOf[Array[Byte]]
-          }
-          objects += new KnnObject(g, BroadcastIndexSpatialJoinExec.buildBound(g, spheroid), tie,
-            toUnsafe(row).copy().getBytes, types.length)
+      val items = Items(rows, geom, {
+        case u: UnsafeRow => if (copy) u.copy() else u
+        case r => toUnsafe(r).copy()
+      })
+      val ties = items.rows.map { row =>
+        tieBreak match {
+          case Some(t) => doubleKey(t.eval(row))
+          case None => geom.eval(row).asInstanceOf[Array[Byte]]
         }
       }
-      new KnnIndex(objects.result(), spheroid)
+      new KnnIndex(items, ties, spheroid)
     }
   }
 
@@ -184,31 +179,30 @@ object KnnJoinExec {
         tieBreak.map(BindReferences.bindReference(_, attrs)), spheroid)
   }
 
-  /** The objects of one broadcast or one leaf: planar in an STRtree; on
-    * the sphere, all-point objects in a [[ChordKdTree]] (chord distance
-    * is strictly monotone in great-circle distance), others unindexed. */
-  final class KnnIndex(val objects: Array[KnnObject], val spheroid: Boolean) {
-    val tree: STRtree =
-      if (spheroid || objects.isEmpty) null
-      else {
-        val t = new STRtree()
-        objects.foreach(o => t.insert(o.geom.getEnvelopeInternal, o))
-        t.build()
-        t
-      }
+  /** The objects of one broadcast or one leaf, their rows UnsafeRows:
+    * planar in a [[PackedIndex]] of their bounds; on the sphere, all-point
+    * objects in a [[ChordKdTree]] (chord distance is strictly monotone in
+    * great-circle distance), others unindexed. `bounds` are the objects'
+    * index bounds (spherical on the sphere). */
+  final class KnnIndex(val items: Items, val ties: Array[Array[Byte]], val spheroid: Boolean) {
+    def size: Int = items.size
+    def row(i: Int): UnsafeRow = items.rows(i).asInstanceOf[UnsafeRow]
+    val bounds: Array[Double] = items.indexBounds(spheroid)
+    val points: Boolean = (0 until size).forall(items.isPoint)
+    val tree: PackedIndex =
+      if (spheroid || size == 0) null else PackedIndex(items.bounds, Array.range(0, size))
     val chord: ChordKdTree =
-      if (!spheroid || objects.isEmpty || !objects.forall(_.geom.isInstanceOf[Point])) null
+      if (!spheroid || size == 0 ||
+          !(0 until size).forall(i => items.isPoint(i) || items.geom(i).isInstanceOf[Point])) null
       else {
-        val t = new ChordKdTree(objects.length)
-        objects.foreach { o => val c = o.geom.getCoordinate; t.add(c.x, c.y) }
+        val t = new ChordKdTree(size)
+        (0 until size).foreach { i =>
+          if (items.isPoint(i)) t.add(items.bounds(4 * i), items.bounds(4 * i + 1))
+          else { val c = items.geom(i).getCoordinate; t.add(c.x, c.y) }
+        }
         t.build()
         t
       }
-  }
-
-  private object ObjectDistance extends ItemDistance {
-    override def distance(a: ItemBoundable, b: ItemBoundable): Double =
-      a.getItem.asInstanceOf[KnnObject].geom.distance(b.getItem.asInstanceOf[KnnObject].geom)
   }
 
   /** Great-circle distance in meters between the planar-nearest points of
@@ -220,81 +214,109 @@ object KnnJoinExec {
       Spherical.haversine(pts(0).x, pts(0).y, pts(1).x, pts(1).y)
   }
 
-  def distance(q: Geometry, o: Geometry, spheroid: Boolean): Double =
-    if (spheroid) geodesicDistance(q, o) else q.distance(o)
+  /** The distance from `q` to object `i`: JTS's planar distance, or
+    * [[geodesicDistance]] on the sphere; between two points from their
+    * coordinates, with no parse. */
+  def distance(q: Shape, index: KnnIndex, i: Int): Double = {
+    val items = index.items
+    if (q.isPoint && items.isPoint(i)) {
+      val (x, y) = (items.bounds(4 * i), items.bounds(4 * i + 1))
+      if (index.spheroid) Spherical.haversine(q.bound(0), q.bound(1), x, y)
+      else pointDistance(q.bound(0), q.bound(1), x, y)
+    } else if (index.spheroid) geodesicDistance(q.geom, items.geom(i))
+    else q.geom.distance(items.geom(i))
+  }
 
   /** `r` plus a rounding slack, so a bound widened by it holds every
     * geometry within `r` of `q`: 1e-9 of it plus 1 mm on the sphere, 1e-12
     * of it and of `q`'s coordinates on the plane. */
-  def padded(q: Geometry, r: Double, spheroid: Boolean): Double =
+  def padded(q: Shape, r: Double, spheroid: Boolean): Double =
     if (r.isPosInfinity) r
     else if (spheroid) r * (1 + 1e-9) + 1e-3
     else {
-      val e = q.getEnvelopeInternal
-      val mag = math.max(math.max(math.abs(e.getMinX), math.abs(e.getMaxX)),
-        math.max(math.abs(e.getMinY), math.abs(e.getMaxY)))
+      val b = q.bound
+      val mag = math.max(math.max(math.abs(b(0)), math.abs(b(2))),
+        math.max(math.abs(b(1)), math.abs(b(3))))
       r + 1e-12 * (r + mag)
     }
 
-  /** The kth smallest distance from `q` to the index's objects, +∞ when
-    * it holds fewer than k: planar by `STRtree.nearestNeighbour`, on the
-    * sphere by the chord tree's kth chord (padded into meters) or a full
-    * rank. */
-  def kthDistance(index: KnnIndex, q: Geometry, k: Int): Double = {
-    val objects = index.objects
-    if (objects.length < k || k < 1) Double.PositiveInfinity
-    else if (index.tree != null)
-      index.tree.nearestNeighbour(q.getEnvelopeInternal,
-          new KnnObject(q, null, null, null, 0), ObjectDistance, k)
-        .map(o => q.distance(o.asInstanceOf[KnnObject].geom)).max
-    else if (index.chord != null && q.isInstanceOf[Point]) {
-      val c = q.getCoordinate
-      val c2 = index.chord.kthDist2(index.chord.embed(c.x, c.y), k)
-      padded(q, 2 * Spherical.R * math.asin(math.min(1.0, math.sqrt(c2) / 2)), spheroid = true)
-    } else {
-      val ds = objects.map(o => geodesicDistance(q, o.geom))
-      java.util.Arrays.sort(ds)
-      ds(k - 1)
-    }
-  }
+  /** One task's search over one index, with its scratch. */
+  final class Search(val index: KnnIndex) {
+    private val heap = new PackedIndex.MinHeap
+    private var found = new Array[Int](16)
+    private var q: Shape = _
+    private val exact: Int => Double = i => distance(q, index, i)
 
-  /** The up to `k` best objects within `radius` of `q` that `keep`
-    * admits (null admits all), best first by [[byRank]]. `candidates`
-    * counts the distances computed. */
-  def rankWithin(index: KnnIndex, q: Geometry, radius: Double, k: Int,
-      keep: KnnObject => Boolean = null, candidates: SQLMetric = null): Array[Candidate] = {
-    val objects = index.objects
-    if (k < 1 || objects.isEmpty) return Array.empty
-    val top = new TopK(k)
-    var n = 0L
-    def offer(o: KnnObject): Unit =
-      if (keep == null || keep(o)) {
-        n += 1
-        val d = distance(q, o.geom, index.spheroid)
-        if (d <= radius) top.offer(new Candidate(d, o))
+    /** A radius at least the kth smallest distance from `q` to the
+      * objects, +∞ when there are fewer than k: planar the largest
+      * distance among the k objects the packed tree finds nearest (best
+      * first, by squared box distance, and by exact distance for
+      * non-points); on the sphere the chord tree's kth chord (padded into
+      * meters) or a full rank. Any radius at least the kth distance ranks
+      * the same k objects in [[rankWithin]]. */
+    def kthDistance(q: Shape, k: Int): Double = {
+      if (index.size < k || k < 1) Double.PositiveInfinity
+      else if (index.tree != null) {
+        this.q = q
+        if (found.length < k) found = new Array[Int](k)
+        val b = q.bound
+        val n = index.tree.nearest(b(0), b(1), b(2), b(3), k,
+          if (q.isPoint && index.points) null else exact, heap, found)
+        var r = 0.0
+        var j = 0
+        while (j < n) { r = math.max(r, distance(q, index, found(j))); j += 1 }
+        r
+      } else if (index.chord != null && isPoint(q)) {
+        val c2 = index.chord.kthDist2(embed(q), k)
+        padded(q, 2 * Spherical.R * math.asin(math.min(1.0, math.sqrt(c2) / 2)), spheroid = true)
+      } else {
+        val ds = Array.tabulate(index.size)(i => distance(q, index, i))
+        java.util.Arrays.sort(ds)
+        ds(k - 1)
       }
-    if (radius.isPosInfinity) objects.foreach(offer)
-    else if (index.tree != null) {
-      val env = new Envelope(q.getEnvelopeInternal)
-      env.expandBy(padded(q, radius, spheroid = false))
-      val it = index.tree.query(env).iterator()
-      while (it.hasNext) offer(it.next().asInstanceOf[KnnObject])
-    } else if (index.chord != null && q.isInstanceOf[Point]) {
-      val c = q.getCoordinate
-      val chord = 2 * math.sin(math.min(math.Pi / 2,
-        padded(q, radius, spheroid = true) / (2 * Spherical.R)))
-      index.chord.range(index.chord.embed(c.x, c.y), chord * chord).foreach(i => offer(objects(i)))
-    } else objects.foreach(offer)
-    if (candidates != null) candidates += n
-    top.sorted
-  }
+    }
 
-  /** The `k` nearest objects to `q`, best first: everything within the
-    * kth distance, ranked, so ties at the kth distance resolve by
-    * [[byRank]] (the reference's tie re-search). */
-  def nearest(index: KnnIndex, q: Geometry, k: Int,
-      candidates: SQLMetric = null): Array[Candidate] =
-    rankWithin(index, q, kthDistance(index, q, k), k, candidates = candidates)
+    /** The up to `k` best objects within `radius` of `q` that `keep`
+      * admits (null admits all), best first by [[byRank]]. `candidates`
+      * counts the distances computed. */
+    def rankWithin(q: Shape, radius: Double, k: Int, keep: Int => Boolean = null,
+        candidates: SQLMetric = null): Array[Candidate] = {
+      if (k < 1 || index.size == 0) return Array.empty
+      val top = new TopK(k)
+      var n = 0L
+      val offer: Int => Unit = i =>
+        if (keep == null || keep(i)) {
+          n += 1
+          val d = distance(q, index, i)
+          if (d <= radius) top.offer(new Candidate(d, index.ties(i), index.row(i)))
+        }
+      if (radius.isPosInfinity) (0 until index.size).foreach(offer)
+      else if (index.tree != null) {
+        val pad = padded(q, radius, spheroid = false)
+        val b = q.bound
+        index.tree.query(b(0) - pad, b(1) - pad, b(2) + pad, b(3) + pad, offer)
+      } else if (index.chord != null && isPoint(q)) {
+        val chord = 2 * math.sin(math.min(math.Pi / 2,
+          padded(q, radius, spheroid = true) / (2 * Spherical.R)))
+        index.chord.range(embed(q), chord * chord).foreach(offer)
+      } else (0 until index.size).foreach(offer)
+      if (candidates != null) candidates += n
+      top.sorted
+    }
+
+    private def isPoint(q: Shape): Boolean = q.isPoint || q.geom.isInstanceOf[Point]
+
+    /** A point query's chord-tree position. */
+    private def embed(q: Shape): Array[Double] =
+      if (q.isPoint) index.chord.embed(q.bound(0), q.bound(1))
+      else { val c = q.geom.getCoordinate; index.chord.embed(c.x, c.y) }
+
+    /** The `k` nearest objects to `q`, best first: everything within the
+      * kth distance, ranked, so ties at the kth distance resolve by
+      * [[byRank]] (the reference's tie re-search). */
+    def nearest(q: Shape, k: Int, candidates: SQLMetric = null): Array[Candidate] =
+      rankWithin(q, kthDistance(q, k), k, candidates = candidates)
+  }
 
   /** Output rows of a query row's ranked candidates: query and object in
     * child order, then `knn_distance` and `knn_rank` when `ranked`. One
@@ -307,7 +329,7 @@ object KnnJoinExec {
 
     def apply(qRow: InternalRow, cands: Array[Candidate]): Iterator[InternalRow] =
       cands.iterator.zipWithIndex.map { case (c, i) =>
-        val o = c.obj.row
+        val o = c.row
         val r = if (objectIsLeft) pair(o, qRow) else pair(qRow, o)
         if (!ranked) toUnsafe(r)
         else {

@@ -7,8 +7,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, UnsafeRowSerializer}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.types.DataType
-import org.locationtech.jts.geom.Envelope
-import graft.geom.GeomIO
 
 /** Partitioned index spatial join: the INNER / CROSS spatial join whose
   * sides have no broadcast build side — both too large, or hinted
@@ -24,8 +22,8 @@ import graft.geom.GeomIO
   *      sides by leaf. A stream bound is widened by the distance; on the
   *      sphere a bound is taken mod 360, and one ≥ 180° wide is the full
   *      ring within its latitude band.
-  *   3. In each leaf, build the HPRtree over the build rows and probe it
-  *      with the stream rows (`BroadcastIndexSpatialJoinExec.Probe`). A
+  *   3. In each leaf, build the [[PackedIndex]] over the build rows and
+  *      probe it with the stream rows (`BroadcastIndexSpatialJoinExec.Probe`). A
   *      candidate is kept only in the leaf holding its reference point,
   *      the max of the two bounds' min corners, so each pair is refined
   *      and emitted once.
@@ -88,10 +86,11 @@ case class PartitionedIndexSpatialJoinExec(
       .mapPartitionsWithIndex { (leaf, its) =>
         val (streamIter, buildIter) = its.next()
         // the shuffle reader reuses its row buffer: the index keeps copies
-        val index = buildIndex(buildIter.map(_.copy()), boundBuildGeom, spherical)
+        val index = buildIndex(buildIter, boundBuildGeom, spherical, _.copy())
         val probe = new Probe(boundStreamGeom, boundDistance, boundExtra, pred, bIsLeft,
           candidatePairs)
-        val owned = (q: Envelope, b: BuildRow) => kdb.leafOfPair(q, b.bound, spherical) == leaf
+        val owned = (i: Int) =>
+          kdb.leafOfPair(probe.bound, index.bounds, 4 * i, spherical) == leaf
         val toUnsafe = UnsafeProjection.create(outTypes)
         streamIter.flatMap(probe(index, _, owned)).map { r => numOutputRows += 1; toUnsafe(r) }
       }
@@ -119,17 +118,19 @@ object PartitionedIndexSpatialJoinExec {
   }
 
   /** `rows` as UnsafeRows of `types`, shuffled into `n` partitions: each
-    * row to every partition `targets` names for it, none to drop it. */
+    * row to every partition the task's `targets` names for it, none to
+    * drop it. */
   def exchange(rows: RDD[InternalRow], types: Array[DataType], n: Int)(
-      targets: InternalRow => Iterator[Int]): RDD[InternalRow] = {
+      targets: () => InternalRow => Iterator[Int]): RDD[InternalRow] = {
     val keyed = rows.mapPartitions { it =>
       val toUnsafe = UnsafeProjection.create(types)
+      val to = targets()
       it.flatMap { row =>
-        val to = targets(row)
-        if (!to.hasNext) Iterator.empty
+        val parts = to(row)
+        if (!parts.hasNext) Iterator.empty
         else {
           val u = toUnsafe(row).copy()
-          to.map(p => (p, u: InternalRow))
+          parts.map(p => (p, u: InternalRow))
         }
       }
     }
@@ -140,30 +141,39 @@ object PartitionedIndexSpatialJoinExec {
 
   /** The leaves of `kdb` a row's bound meets: none for a null or empty
     * geometry. */
-  def meeting(kdb: KdbTree, bounds: Bounds): InternalRow => Iterator[Int] = row => {
-    val env = bounds(row)
-    if (env == null) Iterator.empty else kdb.leavesOf(env, bounds.spherical).iterator
+  def meeting(kdb: KdbTree, bounds: Bounds): () => InternalRow => Iterator[Int] = () => {
+    val read = bounds.reader()
+    row => {
+      val b = read(row)
+      if (b == null) Iterator.empty else kdb.leavesOf(b, bounds.spherical).iterator
+    }
   }
 
   /** Slack of a wrapped longitude interval against a leaf edge: it covers
     * the rounding of the ±360 shift that placed a pair's reference point. */
   private val WrapSlack = 1e-9
 
-  /** One side's row bound, as the index sees it: `streamBound` with the
-    * distance on the stream side, `buildBound` on the build side; null
-    * for a null or empty geometry. */
+  /** One side's row bound, as the index sees it: `probeBound` with the
+    * distance on the stream side, `buildBound` on the build side. Planar
+    * bounds and points read from the WKB; other geometries parse once. */
   final case class Bounds(geom: Expression, distance: Option[Expression],
       stream: Boolean, spherical: Boolean) {
-    def apply(row: InternalRow): Envelope = {
-      val bytes = geom.eval(row)
-      if (bytes == null) return null
-      val g = GeomIO.read(bytes.asInstanceOf[Array[Byte]])
-      if (g.isEmpty) return null
-      val env =
-        if (stream) BroadcastIndexSpatialJoinExec.streamBound(g,
-          distance.map(BroadcastIndexSpatialJoinExec.distanceOf(_, row)), spherical)
-        else BroadcastIndexSpatialJoinExec.buildBound(g, spherical)
-      if (env.isNull) null else env
+
+    /** A reader for one task: a row's bound as minX, minY, maxX, maxY, in
+      * an array it reuses, or null for a null or empty geometry or a null
+      * bound. */
+    def reader(): InternalRow => Array[Double] = {
+      val shape = new BroadcastIndexSpatialJoinExec.Shape
+      val out = new Array[Double](4)
+      row =>
+        if (!shape.set(geom.eval(row))) null
+        else if (stream) {
+          val d = distance.map(BroadcastIndexSpatialJoinExec.distanceOf(_, row))
+          if (BroadcastIndexSpatialJoinExec.probeBound(shape, d, spherical, out)) out else null
+        } else {
+          BroadcastIndexSpatialJoinExec.buildBound(shape, spherical, out)
+          if (out(2) < out(0) || out(3) < out(1)) null else out
+        }
     }
   }
 
@@ -174,13 +184,13 @@ object PartitionedIndexSpatialJoinExec {
       k: Int): RDD[(Double, Double)] =
     rows.mapPartitionsWithIndex { (part, it) =>
       val rnd = new java.util.Random(part)
+      val read = bounds.reader()
       val out = new Array[(Double, Double)](k)
       var seen = 0
       it.foreach { row =>
-        val env = bounds(row)
-        if (env != null && !(bounds.spherical && env.getWidth >= 180.0)) {
-          val corner =
-            (if (bounds.spherical) wrapLon(env.getMinX) else env.getMinX, env.getMinY)
+        val b = read(row)
+        if (b != null && !(bounds.spherical && b(2) - b(0) >= 180.0)) {
+          val corner = (if (bounds.spherical) wrapLon(b(0)) else b(0), b(1))
           if (seen < k) out(seen) = corner
           else {
             val j = rnd.nextInt(seen + 1)
@@ -202,20 +212,21 @@ object PartitionedIndexSpatialJoinExec {
 
   /** The reference longitude of a sphere pair `BuildIndex.querySphere`
     * matched: the larger min longitude of probe bound `q` and build bound
-    * `e` in the frame where they meet, wrapped into [-180, 180). A
-    * full-ring bound meets in every frame, so the other bound's min is
-    * the larger; two full rings take -180. */
-  def sphereRefX(q: Envelope, e: Envelope): Double = {
-    val qFull = q.getWidth >= 180.0
-    val eFull = e.getWidth >= 180.0
+    * `e` (minX, minY, maxX, maxY at `qAt`, `eAt`) in the frame where they
+    * meet, wrapped into [-180, 180). A full-ring bound meets in every
+    * frame, so the other bound's min is the larger; two full rings take
+    * -180. */
+  def sphereRefX(q: Array[Double], qAt: Int, e: Array[Double], eAt: Int): Double = {
+    val (qMin, qMax, eMin, eMax) = (q(qAt), q(qAt + 2), e(eAt), e(eAt + 2))
+    val qFull = qMax - qMin >= 180.0
+    val eFull = eMax - eMin >= 180.0
     if (qFull && eFull) -180.0
-    else if (qFull) wrapLon(e.getMinX)
-    else if (eFull) wrapLon(q.getMinX)
+    else if (qFull) wrapLon(eMin)
+    else if (eFull) wrapLon(qMin)
     else wrapLon(BroadcastIndexSpatialJoinExec.Shifts.iterator
-      .map(s => (q.getMinX + s, q.getMaxX + s))
-      .collectFirst { case (lo, hi) if e.getMinX <= hi && lo <= e.getMaxX =>
-        math.max(lo, e.getMinX)
-      }.getOrElse(e.getMinX))
+      .map(s => (qMin + s, qMax + s))
+      .collectFirst { case (lo, hi) if eMin <= hi && lo <= eMax => math.max(lo, eMin) }
+      .getOrElse(eMin))
   }
 
   /** A KDB tree whose leaves tile the whole plane: a split sends a point
@@ -235,10 +246,10 @@ object PartitionedIndexSpatialJoinExec {
     }
 
     /** The leaf holding the reference point of the pair of probe bound
-      * `q` and build bound `e`. */
-    def leafOfPair(q: Envelope, e: Envelope, spherical: Boolean): Int =
-      leafOf(if (spherical) sphereRefX(q, e) else math.max(q.getMinX, e.getMinX),
-        math.max(q.getMinY, e.getMinY))
+      * `q` and build bound `e` (minX, minY, maxX, maxY at `eAt`). */
+    def leafOfPair(q: Array[Double], e: Array[Double], eAt: Int, spherical: Boolean): Int =
+      leafOf(if (spherical) sphereRefX(q, 0, e, eAt) else math.max(q(0), e(eAt)),
+        math.max(q(1), e(eAt + 1)))
 
     /** Every leaf the closed rectangle meets, added to `out`. */
     private def meet(x0: Double, y0: Double, x1: Double, y1: Double,
@@ -249,18 +260,18 @@ object PartitionedIndexSpatialJoinExec {
         if ((if (onX) x1 else y1) >= at) hi.meet(x0, y0, x1, y1, out)
     }
 
-    /** The leaves a row with bound `env` goes to. On the sphere that is
-      * the bound's image mod 360, and the whole latitude band for a bound
-      * ≥ 180° wide. */
-    def leavesOf(env: Envelope, spherical: Boolean): scala.collection.mutable.BitSet = {
+    /** The leaves a row with bound `env` (minX, minY, maxX, maxY) goes
+      * to. On the sphere that is the bound's image mod 360, and the whole
+      * latitude band for a bound ≥ 180° wide. */
+    def leavesOf(env: Array[Double], spherical: Boolean): scala.collection.mutable.BitSet = {
       val out = new scala.collection.mutable.BitSet()
-      val (y0, y1) = (env.getMinY, env.getMaxY)
+      val (y0, y1) = (env(1), env(3))
       val inf = Double.PositiveInfinity
-      if (!spherical) meet(env.getMinX, y0, env.getMaxX, y1, out)
-      else if (env.getWidth >= 180.0) meet(-inf, y0, inf, y1, out)
+      if (!spherical) meet(env(0), y0, env(2), y1, out)
+      else if (env(2) - env(0) >= 180.0) meet(-inf, y0, inf, y1, out)
       else {
-        val a = wrapLon(env.getMinX) - WrapSlack
-        val b = wrapLon(env.getMaxX) + WrapSlack
+        val a = wrapLon(env(0)) - WrapSlack
+        val b = wrapLon(env(2)) + WrapSlack
         if (a <= b) meet(a, y0, b, y1, out)
         else { meet(a, y0, inf, y1, out); meet(-inf, y0, b, y1, out) }
       }

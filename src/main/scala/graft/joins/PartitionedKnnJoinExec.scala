@@ -43,6 +43,7 @@ case class PartitionedKnnJoinExec(
     rankOutput: Seq[Attribute])
   extends BinaryExecNode {
 
+  import BroadcastIndexSpatialJoinExec.{Shape, probeBound}
   import KnnJoinExec._
   import PartitionedIndexSpatialJoinExec._
 
@@ -90,11 +91,12 @@ case class PartitionedKnnJoinExec(
     // zipPartitions hands its function no partition index (see the
     // partitioned index join), so the leaf comes from the zipped pair
     def perLeaf(queries: RDD[InternalRow])(
-        f: (Int, Iterator[InternalRow], KnnIndex) => Iterator[InternalRow]) =
+        f: (Int, Iterator[InternalRow], Search) => Iterator[InternalRow]) =
       queries.zipPartitions(objectsByLeaf)((q, o) => Iterator.single((q, o)))
         .mapPartitionsWithIndex { (leaf, its) =>
           val (queryIter, objectIter) = its.next()
-          f(leaf, queryIter, objects.index(objectIter))
+          // the shuffle reader reuses its row buffer: the index keeps copies
+          f(leaf, queryIter, new Search(objects.index(objectIter, copy = true)))
         }
 
     val numbered = queryPlan.execute().mapPartitionsWithIndex[InternalRow] { (part, it) =>
@@ -103,35 +105,40 @@ case class PartitionedKnnJoinExec(
       var i = -1L
       it.map { row => i += 1; idRow.setLong(0, (part.toLong << 33) | i); joined(idRow, row) }
     }
-    val atCorner = exchange(numbered, types(withId), kdb.numLeaves) { row =>
-      val env = firstBounds(row)
-      if (env == null) Iterator.empty
-      else Iterator.single(kdb.leafOf(
-        if (!sph) env.getMinX else if (env.getWidth >= 180.0) -180.0 else wrapLon(env.getMinX),
-        env.getMinY))
+    val atCorner = exchange(numbered, types(withId), kdb.numLeaves) { () =>
+      val read = firstBounds.reader()
+      row => {
+        val b = read(row)
+        if (b == null) Iterator.empty
+        else Iterator.single(kdb.leafOf(
+          if (!sph) b(0) else if (b(2) - b(0) >= 180.0) -180.0 else wrapLon(b(0)), b(1)))
+      }
     }
-    val radii = perLeaf(atCorner) { (_, queries, index) =>
+    val radii = perLeaf(atCorner) { (_, queries, search) =>
       val r = new SpecificInternalRow(Seq(DoubleType))
       val joined = new JoinedRow()
+      val q = new Shape
       queries.map { row =>
-        val qg = geometryOf(firstGeom, row)
-        r.setDouble(0, padded(qg, kthDistance(index, qg, kk), sph))
+        q.set(firstGeom.eval(row))
+        r.setDouble(0, padded(q, search.kthDistance(q, kk), sph))
         joined(row, r)
       }
     }
     val lists = perLeaf(exchange(radii, types(withRadius), kdb.numLeaves)(
-        meeting(kdb, secondBounds))) { (leaf, queries, index) =>
+        meeting(kdb, secondBounds))) { (leaf, queries, search) =>
       val cand = new SpecificInternalRow(Seq(DoubleType, BinaryType, BinaryType))
       val joined = new JoinedRow()
+      val q = new Shape
+      val probe = new Array[Double](4)
+      val owned = (i: Int) => kdb.leafOfPair(probe, search.index.bounds, 4 * i, sph) == leaf
       queries.flatMap { row =>
-        val qg = geometryOf(secondGeom, row)
+        q.set(secondGeom.eval(row))
         val r = row.getDouble(nQuery + 1)
-        val probe = BroadcastIndexSpatialJoinExec.streamBound(qg, Some(r), sph)
-        val owned = (o: KnnObject) => kdb.leafOfPair(probe, o.bound, sph) == leaf
-        rankWithin(index, qg, r, kk, owned, candidatePairs).iterator.map { c =>
+        probeBound(q, Some(r), sph, probe)
+        search.rankWithin(q, r, kk, owned, candidatePairs).iterator.map { c =>
           cand.setDouble(0, c.d)
-          cand.update(1, c.obj.tie)
-          cand.update(2, c.obj.bytes)
+          cand.update(1, c.tie)
+          cand.update(2, c.row.getBytes)
           joined(row, cand)
         }
       }
@@ -140,7 +147,7 @@ case class PartitionedKnnJoinExec(
     val queryColumns = queryPlan.output.zipWithIndex.map { case (a, i) =>
       BoundReference(i + 1, a.dataType, a.nullable): Expression
     }
-    exchange(lists, types(withCandidate), merges)(row =>
+    exchange(lists, types(withCandidate), merges)(() => row =>
       Iterator.single(java.lang.Math.floorMod(java.lang.Long.hashCode(row.getLong(0)), merges)))
       .mapPartitions { rows =>
         val queryOf = UnsafeProjection.create(queryColumns)
@@ -148,8 +155,10 @@ case class PartitionedKnnJoinExec(
         rows.foreach { row =>
           val top = best.computeIfAbsent(row.getLong(0),
             _ => (queryOf(row).copy(), new TopK(kk)))._2
-          top.offer(new Candidate(row.getDouble(nQuery + 2), new KnnObject(null, null,
-            row.getBinary(nQuery + 3), row.getBinary(nQuery + 4), nObject)))
+          val o = new UnsafeRow(nObject)
+          val bytes = row.getBinary(nQuery + 4)
+          o.pointTo(bytes, bytes.length)
+          top.offer(new Candidate(row.getDouble(nQuery + 2), row.getBinary(nQuery + 3), o))
         }
         val emit = new Emit(objLeft, ranked, outTypes)
         best.values().iterator().asScala.flatMap { case (q, top) =>

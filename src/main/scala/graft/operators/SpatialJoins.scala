@@ -67,8 +67,14 @@ object SpatialJoins {
       .withColumn("__rcell", explode(cells4(col("__r4"))))
     def le(k: Int) = element_at(col("__l4"), k)
     def re(k: Int) = element_at(col("__r4"), k)
-    val bboxOverlap = le(1) <= re(3) && re(1) <= le(3) &&
-      le(2) <= re(4) && re(2) <= le(4)
+    // one conjunct, not four comparisons: a stream-stream join reads each
+    // top-level comparison conjunct as a possible watermark bound and logs
+    // a WARN for every one it cannot use. The optimizer turns a negated
+    // disjunction back into the four comparisons, but keeps the coalesce;
+    // in a join condition NULL and false both reject, so it is the same
+    // filter, NaN and NULL included.
+    val bboxOverlap = coalesce(le(1) <= re(3) && re(1) <= le(3) &&
+      le(2) <= re(4) && re(2) <= le(4), lit(false))
     // arithmetic twin of Grid.cellOf (trunc-toward-zero == floor after the
     // 0-clamp, so the generated cell ids match st_gridcells exactly)
     def cellc(x: Column, mn: Double, mx: Double, n: Int): Column =
