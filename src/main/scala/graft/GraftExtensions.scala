@@ -22,7 +22,6 @@ object GraftExtensions {
   val operatorRules: Seq[RuleBuilder] = Seq(
     _ => graft.plans.GeoPruneRule,
     _ => graft.plans.RasterJoinRule,
-    graft.plans.SpatialJoinRule(_),
     _ => graft.plans.RasterLoadRule)
 
   /** The physical strategy that goes with the operator rules. */

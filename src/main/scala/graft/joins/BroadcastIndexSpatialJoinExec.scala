@@ -39,7 +39,10 @@ import graft.geom.GeomIO
   * LeftAnti, ExistenceJoin (mark join, the EXISTS-in-OR rewrite) with the
   * stream on the left; RightOuter with the stream on the right. The
   * preserved side always streams — only the non-preserved side is
-  * broadcast, so no match is ever lost to broadcasting.
+  * broadcast, so no match is ever lost to broadcasting. A join with no
+  * such side (FULL OUTER always) runs on PartitionedIndexSpatialJoinExec,
+  * which shares this join's output ([[BroadcastIndexSpatialJoinExec.joinOutput]])
+  * and per-row emit ([[BroadcastIndexSpatialJoinExec.RowEmit]]).
   */
 case class BroadcastIndexSpatialJoinExec(
     buildPlan: SparkPlan,
@@ -58,22 +61,8 @@ case class BroadcastIndexSpatialJoinExec(
   override def left: SparkPlan = if (buildIsLeft) buildPlan else streamPlan
   override def right: SparkPlan = if (buildIsLeft) streamPlan else buildPlan
 
-  override def output: Seq[Attribute] = joinType match {
-    case Inner | Cross => left.output ++ right.output
-    case LeftOuter =>
-      require(!buildIsLeft, "left-outer requires the stream on the left")
-      left.output ++ right.output.map(_.withNullability(true))
-    case RightOuter =>
-      require(buildIsLeft, "right-outer requires the stream on the right")
-      left.output.map(_.withNullability(true)) ++ right.output
-    case LeftSemi | LeftAnti =>
-      require(!buildIsLeft, "semi/anti joins stream the left side")
-      left.output
-    case ExistenceJoin(exists) =>
-      require(!buildIsLeft, "existence join streams the left side")
-      left.output :+ exists
-    case t => throw new IllegalStateException(s"unsupported spatial join type $t")
-  }
+  override def output: Seq[Attribute] =
+    BroadcastIndexSpatialJoinExec.joinOutput(joinType, left.output, right.output)
 
   override def requiredChildDistribution: Seq[Distribution] = {
     val b = BroadcastDistribution(IdentityBroadcastMode)
@@ -112,43 +101,9 @@ case class BroadcastIndexSpatialJoinExec(
         buildIndex(rows.iterator, boundBuildGeom, spherical))
       val probe = new Probe(boundStreamGeom, boundDistance, boundExtra, pred, bIsLeft,
         candidatePairs)
-      val joined = new JoinedRow()
-      val nullBuild = new GenericInternalRow(buildWidth)
-      val existsTrue = new GenericInternalRow(Array[Any](true))
-      val existsFalse = new GenericInternalRow(Array[Any](false))
-      streamIter.flatMap { streamRow =>
-        val filtered = probe(index, streamRow)
-        jt match {
-          case Inner | Cross =>
-            filtered.map { r => numOutputRows += 1; r }
-          case LeftOuter | RightOuter =>
-            var any = false
-            val out = filtered.map { r => any = true; numOutputRows += 1; r }
-            // emit the null-padded row lazily after the matches are exhausted
-            new Iterator[InternalRow] {
-              private var doneExtra = false
-              override def hasNext: Boolean = out.hasNext || (!any && !doneExtra)
-              override def next(): InternalRow =
-                if (out.hasNext) out.next()
-                else {
-                  doneExtra = true; numOutputRows += 1
-                  if (bIsLeft) joined(nullBuild, streamRow)
-                  else joined(streamRow, nullBuild)
-                }
-            }
-          case LeftSemi =>
-            if (filtered.hasNext) { numOutputRows += 1; Iterator.single(streamRow) }
-            else Iterator.empty
-          case LeftAnti =>
-            if (filtered.hasNext) Iterator.empty
-            else { numOutputRows += 1; Iterator.single(streamRow) }
-          case ExistenceJoin(_) =>
-            numOutputRows += 1
-            Iterator.single(new JoinedRow(streamRow,
-              if (filtered.hasNext) existsTrue else existsFalse))
-          case t => throw new IllegalStateException(s"unsupported spatial join type $t")
-        }
-      }.map(toUnsafe)
+      val emit = new RowEmit(jt, !bIsLeft, buildWidth)
+      streamIter.flatMap(row => emit(row, probe(index, row)))
+        .map { r => numOutputRows += 1; toUnsafe(r) }
     }
   }
 
@@ -160,15 +115,62 @@ case class BroadcastIndexSpatialJoinExec(
 
 object BroadcastIndexSpatialJoinExec {
 
+  /** The output of a spatial join of type `jt` over children with
+    * outputs `left` and `right`; both index joins take these types. */
+  def joinOutput(jt: JoinType, left: Seq[Attribute], right: Seq[Attribute]): Seq[Attribute] =
+    jt match {
+      case Inner | Cross => left ++ right
+      case LeftOuter => left ++ right.map(_.withNullability(true))
+      case RightOuter => left.map(_.withNullability(true)) ++ right
+      case FullOuter => (left ++ right).map(_.withNullability(true))
+      case LeftSemi | LeftAnti => left
+      case ExistenceJoin(exists) => left :+ exists
+      case t => throw new IllegalStateException(s"unsupported spatial join type $t")
+    }
+
+  /** What a preserved row of a join of type `jt` emits: its pairs, or its
+    * null pad beside the other side's `otherWidth` columns (outer joins);
+    * itself if matched (semi), if not (anti), or with its match flag
+    * (existence). One per task; it reuses the rows it returns. */
+  final class RowEmit(jt: JoinType, preservedIsLeft: Boolean, otherWidth: Int) {
+    private val joined = new JoinedRow()
+    private val nulls = new GenericInternalRow(otherWidth)
+    private val flag = new GenericInternalRow(1)
+
+    /** `row`'s output, given its `pairs` (its matches, in child order). */
+    def apply(row: InternalRow, pairs: Iterator[InternalRow]): Iterator[InternalRow] =
+      jt match {
+        case Inner | Cross => pairs
+        case LeftOuter | RightOuter | FullOuter =>
+          var any = false
+          // the pad is decided once the pairs are exhausted
+          pairs.map { r => any = true; r } ++ alone(row, any)
+        case _ => alone(row, pairs.hasNext)
+      }
+
+    /** `row`'s output beside its pairs, given whether it matched. */
+    def alone(row: InternalRow, matched: Boolean): Iterator[InternalRow] = jt match {
+      case LeftOuter | RightOuter | FullOuter if !matched =>
+        Iterator.single(if (preservedIsLeft) joined(row, nulls) else joined(nulls, row))
+      case LeftSemi if matched => Iterator.single(row)
+      case LeftAnti if !matched => Iterator.single(row)
+      case ExistenceJoin(_) =>
+        flag.setBoolean(0, matched)
+        Iterator.single(joined(row, flag))
+      case _ => Iterator.empty
+    }
+  }
+
   /** Whether `pred` (a `SpatialPredicate.Extracted` name) is spherical. */
   def isSpherical(pred: String): Boolean =
     SpatialPredicate.sphereRelationPreds(pred) || pred == "st_dwithinsphere"
 
-  /** A distance expression's value; SQL `st_dwithin(a, b, 2.0)` carries a
-    * DECIMAL literal. */
+  /** A distance expression's value, NaN for null; SQL
+    * `st_dwithin(a, b, 2.0)` carries a DECIMAL literal. */
   def distanceOf(e: Expression, row: InternalRow): Double = e.eval(row) match {
     case d: org.apache.spark.sql.types.Decimal => d.toDouble
     case n: Number => n.doubleValue()
+    case null => Double.NaN
   }
 
   /** One stream or query geometry as a probe sees it, reused from row to
@@ -237,9 +239,11 @@ object BroadcastIndexSpatialJoinExec {
 
   object Items {
     /** The rows whose `geom` is a non-empty geometry, each through
-      * `keep` (the identity, or a copy of a reused row). */
+      * `keep` (the identity, or a copy of a reused row); the others go to
+      * `skip`, when given. */
     def apply(rows: Iterator[InternalRow], geom: Expression,
-        keep: InternalRow => InternalRow = identity): Items = {
+        keep: InternalRow => InternalRow = identity,
+        skip: InternalRow => Unit = null): Items = {
       val kept = Array.newBuilder[InternalRow]
       val wkb = Array.newBuilder[Array[Byte]]
       val shapes = Array.newBuilder[Byte]
@@ -247,17 +251,16 @@ object BroadcastIndexSpatialJoinExec {
       var n = 0
       rows.foreach { row =>
         val v = geom.eval(row)
-        if (v != null) {
-          val bytes = v.asInstanceOf[Array[Byte]]
+        val shape = if (v == null) GeomIO.EmptyShape else {
           if (4 * n + 4 > bounds.length) bounds = java.util.Arrays.copyOf(bounds, 2 * bounds.length)
-          val shape = GeomIO.bounds(bytes, bounds, 4 * n)
-          if (shape != GeomIO.EmptyShape) {
-            kept += keep(row)
-            wkb += bytes
-            shapes += shape.toByte
-            n += 1
-          }
+          GeomIO.bounds(v.asInstanceOf[Array[Byte]], bounds, 4 * n)
         }
+        if (shape != GeomIO.EmptyShape) {
+          kept += keep(row)
+          wkb += v.asInstanceOf[Array[Byte]]
+          shapes += shape.toByte
+          n += 1
+        } else if (skip != null) skip(row)
       }
       new Items(kept.result(), wkb.result(), java.util.Arrays.copyOf(bounds, 4 * n),
         shapes.result())
@@ -274,17 +277,25 @@ object BroadcastIndexSpatialJoinExec {
     if (spherical && !g.isPoint) putEnvelope(Spherical.latLngBound(g.geom), out, 0)
     else System.arraycopy(g.bound, 0, out, 0, 4)
 
+  /** Degrees a sphere probe bound is widened by: the sphere kernels count
+    * shapes 1e-9 rad (5.7e-8°) apart as touching, so such pairs must reach
+    * the refine. */
+  private val SphereSlack = 1e-7
+
   /** A stream geometry's probe bound, into `out`: its envelope widened by
     * the distance `d` (`Envelope.expandBy`), or on the sphere its
     * `Spherical.latLngBound` widened by the radius
-    * (`Spherical.radiusBound`). False when the bound is null. */
+    * (`Spherical.radiusBound`) and by [[SphereSlack]]. False when the
+    * bound is null, and for a NaN (null) distance, which no pair is
+    * within. */
   def probeBound(g: Shape, d: Option[Double], spherical: Boolean, out: Array[Double]): Boolean =
-    if (spherical) {
+    if (d.exists(_.isNaN)) false
+    else if (spherical) {
       val b = g.bound
       val e = Spherical.radiusBound(
         if (g.isPoint) new Envelope(b(0), b(2), b(1), b(3)) else Spherical.latLngBound(g.geom),
         d.getOrElse(0.0))
-      if (e.isNull) false else { putEnvelope(e, out, 0); true }
+      if (e.isNull) false else { e.expandBy(SphereSlack); putEnvelope(e, out, 0); true }
     } else {
       System.arraycopy(g.bound, 0, out, 0, 4)
       d match {
@@ -355,8 +366,12 @@ object BroadcastIndexSpatialJoinExec {
     private val mode = refineMode(pred)
     private val joined = new JoinedRow()
     private val shape = new Shape
-    /** The current stream row's probe bound. */
+    /** The current stream row's probe bound, when `bounded`. */
     val bound = new Array[Double](4)
+    /** Whether the current stream row has a probe bound: false for a null
+      * or empty geometry, a null distance or a null bound, which match
+      * nothing. */
+    var bounded = false
     private var dist = 0.0
     private var cands = new Array[Int](16)
     private var nCand = 0
@@ -374,10 +389,12 @@ object BroadcastIndexSpatialJoinExec {
       * all. */
     def apply(index: BuildIndex, streamRow: InternalRow,
         owned: Int => Boolean = null): Iterator[InternalRow] = {
+      bounded = false
       if (!shape.set(streamGeom.eval(streamRow))) return Iterator.empty
       val d = distance.map(distanceOf(_, streamRow))
       dist = d.getOrElse(0.0)
       if (!probeBound(shape, d, spherical, bound)) return Iterator.empty
+      bounded = true
       this.owned = owned
       nCand = 0
       if (spherical) index.querySphere(bound, collect)
@@ -410,6 +427,9 @@ object BroadcastIndexSpatialJoinExec {
       }
     }
 
+    /** The build item of the row the result iterator returned last. */
+    def item: Int = matches.item
+
     /** The joined rows of the current candidates that refine and pass the
       * extra condition. */
     private final class Matches extends Iterator[InternalRow] {
@@ -417,6 +437,7 @@ object BroadcastIndexSpatialJoinExec {
       private var streamRow: InternalRow = _
       private var j = 0
       private var ready: InternalRow = null
+      var item = -1
 
       def reset(items: Items, streamRow: InternalRow): Unit = {
         this.items = items; this.streamRow = streamRow; j = 0; ready = null
@@ -429,7 +450,7 @@ object BroadcastIndexSpatialJoinExec {
           if (refine(items, i)) {
             val b = items.rows(i)
             val r = if (buildIsLeft) joined(b, streamRow) else joined(streamRow, b)
-            if (extra.forall(c => java.lang.Boolean.TRUE == c.eval(r))) ready = r
+            if (extra.forall(c => java.lang.Boolean.TRUE == c.eval(r))) { ready = r; item = i }
           }
         }
         ready != null
@@ -482,11 +503,13 @@ object BroadcastIndexSpatialJoinExec {
 
   private[joins] val Shifts = Array(0.0, 360.0, -360.0)
 
-  /** The index over `rows`, skipping null and empty geometries; `keep`
-    * maps each kept row (a copy of a reused row). */
+  /** The index over `rows`, skipping null and empty geometries (to
+    * `skip`, when given); `keep` maps each kept row (a copy of a reused
+    * row). */
   def buildIndex(rows: Iterator[InternalRow], geomExpr: Expression, spherical: Boolean,
-      keep: InternalRow => InternalRow = identity): BuildIndex = {
-    val items = Items(rows, geomExpr, keep)
+      keep: InternalRow => InternalRow = identity,
+      skip: InternalRow => Unit = null): BuildIndex = {
+    val items = Items(rows, geomExpr, keep, skip)
     val bounds = items.indexBounds(spherical)
     val inTree = Array.newBuilder[Int]
     val fullRing = Array.newBuilder[Int]

@@ -4,16 +4,19 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, UnsafeRowSerializer}
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType}
+import scala.jdk.CollectionConverters._
 
-/** Partitioned index spatial join: the INNER / CROSS spatial join whose
-  * sides have no broadcast build side — both too large, or hinted
-  * SHUFFLE_HASH / SHUFFLE_MERGE. It is the reference's out-of-core
-  * partitioned join (rust/sedona-spatial-join/src/partitioning/
-  * kdb.rs:20-46: sampled KDB tree, multi-assignment, reference-point
-  * dedup) on the broadcast index join's build, probe and refine code:
+/** Partitioned index spatial join: the batch spatial join of any type
+  * with no broadcast build side — no non-preserved side fits or each is
+  * hinted SHUFFLE_HASH / SHUFFLE_MERGE; FULL OUTER always. It is the
+  * reference's out-of-core partitioned join (rust/sedona-spatial-join/src/
+  * partitioning/kdb.rs:20-46: sampled KDB tree, multi-assignment,
+  * reference-point dedup) on the broadcast index join's build, probe and
+  * refine code:
   *
   *   1. Sample the bounds of both sides and build a [[KdbTree]] over their
   *      min corners. Its leaves tile the whole plane; there are
@@ -28,8 +31,20 @@ import org.apache.spark.sql.types.DataType
   *      the max of the two bounds' min corners, so each pair is refined
   *      and emitted once.
   *
+  * A join type with a preserved side (outer, semi, anti, existence; the
+  * reference runs them all in one operator, exec.rs:88) numbers that
+  * side's rows as read ([[numbered]]). Each leaf notes which preserved
+  * rows had an owned pair that passed refine and the extra condition (a
+  * preserved build side by one bit per index item). One merge shuffle by
+  * row id then gets each preserved row once, with its columns, from the
+  * leaf that owns it ([[KdbTree.owner]]), a marker from every other leaf
+  * where it matched, and the pairs; there each row emits its null pad, its
+  * semi or anti row or its existence flag
+  * (`BroadcastIndexSpatialJoinExec.RowEmit`). A merge partition holds its
+  * preserved rows in memory.
+  *
   * All of it runs at execution time: planning starts no job. Null and
-  * empty geometries match nothing and are dropped.
+  * empty geometries match nothing.
   */
 case class PartitionedIndexSpatialJoinExec(
     left: SparkPlan,
@@ -41,6 +56,8 @@ case class PartitionedIndexSpatialJoinExec(
     /** bound to the stream side; st_dwithin, or st_dwithinsphere's radius */
     distance: Option[Expression],
     buildIsLeft: Boolean,
+    joinType: JoinType,
+    /** over left.output ++ right.output */
     extraCondition: Option[Expression])
   extends BinaryExecNode {
 
@@ -50,7 +67,7 @@ case class PartitionedIndexSpatialJoinExec(
   private def buildPlan = if (buildIsLeft) left else right
   private def streamPlan = if (buildIsLeft) right else left
 
-  override def output: Seq[Attribute] = left.output ++ right.output
+  override def output: Seq[Attribute] = joinOutput(joinType, left.output, right.output)
 
   override lazy val metrics = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
@@ -62,38 +79,126 @@ case class PartitionedIndexSpatialJoinExec(
     val pred = predName
     val spherical = isSpherical(pred)
     val bIsLeft = buildIsLeft
-    val boundBuildGeom = BindReferences.bindReference(buildGeom, buildPlan.output)
-    val boundStreamGeom = BindReferences.bindReference(streamGeom, streamPlan.output)
-    val boundDistance = distance.map(BindReferences.bindReference(_, streamPlan.output))
-    val boundExtra = extraCondition.map(BindReferences.bindReference(_, output))
-    val outTypes = output.map(_.dataType).toArray
-    val streamRows = streamPlan.execute()
-    val buildRows = buildPlan.execute()
+    val jt = joinType
+    val (leftKept, rightKept) = preserved(jt)
+    val streamKept = if (bIsLeft) rightKept else leftKept
+    val buildKept = if (bIsLeft) leftKept else rightKept
+    // a preserved side travels as [row id, columns]
+    def side(plan: SparkPlan, kept: Boolean): (RDD[InternalRow], Seq[Attribute]) =
+      if (!kept) (plan.execute(), plan.output)
+      else (numbered(plan.execute()),
+        AttributeReference("id", LongType, nullable = false)() +: plan.output)
+    val (streamRows, streamAttrs) = side(streamPlan, streamKept)
+    val (buildRows, buildAttrs) = side(buildPlan, buildKept)
+    val pairAttrs = if (bIsLeft) buildAttrs ++ streamAttrs else streamAttrs ++ buildAttrs
+    val pairColumns = left.output ++ right.output
+    val boundBuildGeom = BindReferences.bindReference(buildGeom, buildAttrs)
+    val boundStreamGeom = BindReferences.bindReference(streamGeom, streamAttrs)
+    val boundDistance = distance.map(BindReferences.bindReference(_, streamAttrs))
+    val boundExtra = extraCondition.map(BindReferences.bindReference(_, pairAttrs))
     val streamBounds = Bounds(boundStreamGeom, boundDistance, stream = true, spherical)
     val buildBounds = Bounds(boundBuildGeom, None, stream = false, spherical)
 
     val kdb = kdbTree(Seq(streamRows -> streamBounds, buildRows -> buildBounds),
       math.max(1, conf.numShufflePartitions))
 
-    def byLeaf(rows: RDD[InternalRow], attrs: Seq[Attribute], bounds: Bounds) =
-      exchange(rows, attrs.map(_.dataType).toArray, kdb.numLeaves)(meeting(kdb, bounds))
-    // zipPartitions hands its function no partition index, and a task's
-    // partition id is its consuming RDD's (a coalesce above differs), so
-    // the leaf id comes from mapPartitionsWithIndex over the zipped pair
-    byLeaf(streamRows, streamPlan.output, streamBounds)
-      .zipPartitions(byLeaf(buildRows, buildPlan.output, buildBounds))(
-        (s, b) => Iterator.single((s, b)))
-      .mapPartitionsWithIndex { (leaf, its) =>
-        val (streamIter, buildIter) = its.next()
-        // the shuffle reader reuses its row buffer: the index keeps copies
-        val index = buildIndex(buildIter, boundBuildGeom, spherical, _.copy())
-        val probe = new Probe(boundStreamGeom, boundDistance, boundExtra, pred, bIsLeft,
-          candidatePairs)
-        val owned = (i: Int) =>
-          kdb.leafOfPair(probe.bound, index.bounds, 4 * i, spherical) == leaf
-        val toUnsafe = UnsafeProjection.create(outTypes)
-        streamIter.flatMap(probe(index, _, owned)).map { r => numOutputRows += 1; toUnsafe(r) }
+    def byLeaf(rows: RDD[InternalRow], attrs: Seq[Attribute], bounds: Bounds, kept: Boolean) =
+      exchange(rows, attrs.map(_.dataType).toArray, kdb.numLeaves)(
+        meeting(kdb, bounds, kept))
+
+    // an inner join emits its pairs from the leaves; a join with a
+    // preserved side sends them to the merge as records [key, kind, bytes],
+    // with its preserved rows keyed by id (a right side's complemented)
+    val inner = !streamKept && !buildKept
+    val pairsOut = !(jt == LeftSemi || jt == LeftAnti || jt.isInstanceOf[ExistenceJoin])
+    val (streamColumns, buildColumns) = (streamPlan.output, buildPlan.output)
+    val fromLeaves = perLeaf(byLeaf(streamRows, streamAttrs, streamBounds, streamKept),
+        byLeaf(buildRows, buildAttrs, buildBounds, buildKept)) { (leaf, streamIter, buildIter) =>
+      val unbound = scala.collection.mutable.ArrayBuffer[InternalRow]()
+      // the shuffle reader reuses its row buffer: the index keeps copies
+      val index = buildIndex(buildIter, boundBuildGeom, spherical, _.copy(),
+        if (buildKept) r => unbound += r.copy() else null)
+      val probe = new Probe(boundStreamGeom, boundDistance, boundExtra, pred, bIsLeft,
+        candidatePairs)
+      val owned = (i: Int) =>
+        kdb.leafOfPair(probe.bound, index.bounds, 4 * i, spherical) == leaf
+      val hit = new java.util.BitSet()
+      // rows leave as UnsafeRows, like every Spark join's
+      val pairOf = UnsafeProjection.create(pairColumns, pairAttrs)
+      lazy val streamRowOf = UnsafeProjection.create(streamColumns, streamAttrs)
+      lazy val buildRowOf = UnsafeProjection.create(buildColumns, buildAttrs)
+      val record = new SpecificInternalRow(RecordTypes)
+      def rec(key: Long, kind: Int, bytes: Array[Byte]) = {
+        record.setLong(0, key); record.setInt(1, kind); record.update(2, bytes); record
       }
+      // a preserved row's record: with its columns in the leaf that owns
+      // it, as a marker in another leaf where it matched
+      def keep(id: Long, isLeft: Boolean, matched: Boolean, owner: Int,
+          columns: => UnsafeRow): Iterator[InternalRow] = {
+        val key = if (isLeft) id else ~id
+        if (owner == leaf)
+          Iterator.single(rec(key, WithRow | (if (matched) Matched else 0), columns.getBytes))
+        else if (matched) Iterator.single(rec(key, Matched, null))
+        else Iterator.empty
+      }
+      val fromStream = streamIter.flatMap { row =>
+        val matches = probe(index, row, owned)
+        if (inner) matches.map { r => numOutputRows += 1; pairOf(r) }
+        else {
+          var any = false
+          val pairs =
+            if (!pairsOut && !buildKept) { any = matches.hasNext; Iterator.empty }
+            else matches.flatMap { r =>
+              any = true
+              if (buildKept) hit.set(probe.item)
+              if (pairsOut) Iterator.single(rec(leaf, PairRecord, pairOf(r).getBytes))
+              else Iterator.empty
+            }
+          if (!streamKept) pairs
+          else {
+            val id = row.getLong(0)
+            val owner = kdb.owner(if (probe.bounded) probe.bound else null, 0, spherical, id)
+            pairs ++ keep(id, !bIsLeft, any, owner, streamRowOf(row))
+          }
+        }
+      }
+      def fromBuild = Iterator.range(0, index.items.size).flatMap { i =>
+        val row = index.items.rows(i)
+        val id = row.getLong(0)
+        keep(id, bIsLeft, hit.get(i), kdb.owner(index.bounds, 4 * i, spherical, id),
+          buildRowOf(row))
+      } ++ unbound.iterator.flatMap(row =>
+        keep(row.getLong(0), bIsLeft, matched = false, leaf, buildRowOf(row)))
+      if (buildKept) fromStream ++ fromBuild else fromStream
+    }
+    if (inner) return fromLeaves
+
+    val merges = math.max(1, conf.numShufflePartitions)
+    val outTypes = output.map(_.dataType).toArray
+    val (nLeft, nRight) = (left.output.size, right.output.size)
+    exchange(fromLeaves, RecordTypes.toArray, merges)(byKey(merges)).mapPartitions { recs =>
+      // the preserved rows' columns by key, and the keys that matched
+      val rows = new java.util.HashMap[Long, Array[Byte]]()
+      val matched = new java.util.HashSet[Long]()
+      val pair = new UnsafeRow(nLeft + nRight)
+      val pairs = recs.flatMap { r =>
+        val (key, kind, bytes) = (r.getLong(0), r.getInt(1), r.getBinary(2))
+        if ((kind & Matched) != 0) matched.add(key)
+        if ((kind & WithRow) != 0) rows.put(key, bytes)
+        if (kind != PairRecord) Iterator.empty
+        else { pair.pointTo(bytes, bytes.length); Iterator.single(pair) }
+      }
+      val toUnsafe = UnsafeProjection.create(outTypes)
+      val (leftRow, rightRow) = (new UnsafeRow(nLeft), new UnsafeRow(nRight))
+      val (leftEmit, rightEmit) = (new RowEmit(jt, true, nRight), new RowEmit(jt, false, nLeft))
+      def pads = rows.entrySet.iterator.asScala.flatMap { e =>
+        val isLeft = e.getKey >= 0
+        val row = if (isLeft) leftRow else rightRow
+        row.pointTo(e.getValue, e.getValue.length)
+        (if (isLeft) leftEmit else rightEmit).alone(row, matched.contains(e.getKey))
+      }
+      (pairs ++ pads).map { r => numOutputRows += 1; toUnsafe(r) }
+    }
   }
 
   override protected def withNewChildrenInternal(
@@ -116,6 +221,46 @@ object PartitionedIndexSpatialJoinExec {
       .reduce(_ union _).collect()
     KdbTree(sample, math.min(maxLeaves, math.max(1, sample.length / MinSamplePerLeaf)))
   }
+
+  /** Whether a join of type `jt` preserves its left and its right side:
+    * emits a row of that side whether or not it matched. */
+  def preserved(jt: JoinType): (Boolean, Boolean) = jt match {
+    case LeftOuter | LeftSemi | LeftAnti | ExistenceJoin(_) => (true, false)
+    case RightOuter => (false, true)
+    case FullOuter => (true, true)
+    case _ => (false, false)
+  }
+
+  /** `rows` with a row id first: `partition << 33 | n` for the n-th row of
+    * its partition, as read. */
+  def numbered(rows: RDD[InternalRow]): RDD[InternalRow] =
+    rows.mapPartitionsWithIndex { (part, it) =>
+      val idRow = new SpecificInternalRow(Seq(LongType))
+      val joined = new JoinedRow()
+      var i = -1L
+      it.map { row => i += 1; idRow.setLong(0, (part.toLong << 33) | i); joined(idRow, row) }
+    }
+
+  /** A merge record's kind: a preserved row that matched, with or
+    * without its columns, or a pair. */
+  private val Matched = 1
+  private val WithRow = 2
+  private val PairRecord = 4
+  private val RecordTypes = Seq(LongType, IntegerType, BinaryType)
+
+  /** `f(leaf, a, b)` over the leaves of `a` and `b`, two RDDs shuffled by
+    * leaf. zipPartitions hands its function no partition index, and a
+    * task's partition id is its consuming RDD's (a coalesce above
+    * differs), so the leaf comes from mapPartitionsWithIndex. */
+  def perLeaf(a: RDD[InternalRow], b: RDD[InternalRow])(
+      f: (Int, Iterator[InternalRow], Iterator[InternalRow]) => Iterator[InternalRow]) =
+    a.zipPartitions(b)((x, y) => Iterator.single((x, y)))
+      .mapPartitionsWithIndex { (leaf, its) => val (x, y) = its.next(); f(leaf, x, y) }
+
+  /** Routes a row to one of `n` partitions by the hash of its first
+    * column, a long key. */
+  def byKey(n: Int): () => InternalRow => Iterator[Int] = () => row =>
+    Iterator.single(java.lang.Math.floorMod(java.lang.Long.hashCode(row.getLong(0)), n))
 
   /** `rows` as UnsafeRows of `types`, shuffled into `n` partitions: each
     * row to every partition the task's `targets` names for it, none to
@@ -140,12 +285,17 @@ object PartitionedIndexSpatialJoinExec {
   }
 
   /** The leaves of `kdb` a row's bound meets: none for a null or empty
-    * geometry. */
-  def meeting(kdb: KdbTree, bounds: Bounds): () => InternalRow => Iterator[Int] = () => {
+    * geometry. A row of a `preserved` side ([[numbered]]) also goes to the
+    * leaf that owns it ([[KdbTree.owner]]), bound or not. */
+  def meeting(kdb: KdbTree, bounds: Bounds,
+      preserved: Boolean = false): () => InternalRow => Iterator[Int] = () => {
     val read = bounds.reader()
     row => {
       val b = read(row)
-      if (b == null) Iterator.empty else kdb.leavesOf(b, bounds.spherical).iterator
+      val leaves =
+        if (b == null) new scala.collection.mutable.BitSet() else kdb.leavesOf(b, bounds.spherical)
+      if (preserved) leaves += kdb.owner(b, 0, bounds.spherical, row.getLong(0))
+      leaves.iterator
     }
   }
 
@@ -235,7 +385,7 @@ object PartitionedIndexSpatialJoinExec {
     * ±∞. Leaves are numbered 0 until `numLeaves`. */
   sealed trait KdbTree extends Serializable {
 
-    def numLeaves: Int = this match {
+    lazy val numLeaves: Int = this match {
       case KdbLeaf(_) => 1
       case KdbSplit(_, _, lo, hi) => lo.numLeaves + hi.numLeaves
     }
@@ -244,6 +394,21 @@ object PartitionedIndexSpatialJoinExec {
       case KdbLeaf(id) => id
       case KdbSplit(onX, at, lo, hi) => (if ((if (onX) x else y) < at) lo else hi).leafOf(x, y)
     }
+
+    /** The leaf of the min corner of bound `b` (minX, minY, maxX, maxY at
+      * `at`): on the sphere of its wrapped longitude, and of -180 for a
+      * full-ring bound. It is one of the bound's [[leavesOf]]. */
+    def leafOfCorner(b: Array[Double], at: Int, spherical: Boolean): Int =
+      leafOf(if (!spherical) b(at) else if (b(at + 2) - b(at) >= 180.0) -180.0
+        else wrapLon(b(at)), b(at + 1))
+
+    /** The leaf that owns preserved row `id` of bound `b` (at `at`): the
+      * leaf of its min corner, or for no bound (null, or max < min) a
+      * leaf by its id. */
+    def owner(b: Array[Double], at: Int, spherical: Boolean, id: Long): Int =
+      if (b == null || b(at + 2) < b(at) || b(at + 3) < b(at + 1))
+        java.lang.Math.floorMod(java.lang.Long.hashCode(id), numLeaves)
+      else leafOfCorner(b, at, spherical)
 
     /** The leaf holding the reference point of the pair of probe bound
       * `q` and build bound `e` (minX, minY, maxX, maxY at `eAt`). */

@@ -88,33 +88,21 @@ case class PartitionedKnnJoinExec(
     val secondBounds = Bounds(secondGeom,
       Some(BindReferences.bindReference(radius: Expression, withRadius)), stream = true, sph)
     def types(attrs: Seq[Attribute]) = attrs.map(_.dataType).toArray
-    // zipPartitions hands its function no partition index (see the
-    // partitioned index join), so the leaf comes from the zipped pair
-    def perLeaf(queries: RDD[InternalRow])(
+    def leaves(queries: RDD[InternalRow])(
         f: (Int, Iterator[InternalRow], Search) => Iterator[InternalRow]) =
-      queries.zipPartitions(objectsByLeaf)((q, o) => Iterator.single((q, o)))
-        .mapPartitionsWithIndex { (leaf, its) =>
-          val (queryIter, objectIter) = its.next()
-          // the shuffle reader reuses its row buffer: the index keeps copies
-          f(leaf, queryIter, new Search(objects.index(objectIter, copy = true)))
-        }
+      perLeaf(queries, objectsByLeaf) { (leaf, queryIter, objectIter) =>
+        // the shuffle reader reuses its row buffer: the index keeps copies
+        f(leaf, queryIter, new Search(objects.index(objectIter, copy = true)))
+      }
 
-    val numbered = queryPlan.execute().mapPartitionsWithIndex[InternalRow] { (part, it) =>
-      val idRow = new SpecificInternalRow(Seq(LongType))
-      val joined = new JoinedRow()
-      var i = -1L
-      it.map { row => i += 1; idRow.setLong(0, (part.toLong << 33) | i); joined(idRow, row) }
-    }
-    val atCorner = exchange(numbered, types(withId), kdb.numLeaves) { () =>
+    val atCorner = exchange(numbered(queryPlan.execute()), types(withId), kdb.numLeaves) { () =>
       val read = firstBounds.reader()
       row => {
         val b = read(row)
-        if (b == null) Iterator.empty
-        else Iterator.single(kdb.leafOf(
-          if (!sph) b(0) else if (b(2) - b(0) >= 180.0) -180.0 else wrapLon(b(0)), b(1)))
+        if (b == null) Iterator.empty else Iterator.single(kdb.leafOfCorner(b, 0, sph))
       }
     }
-    val radii = perLeaf(atCorner) { (_, queries, search) =>
+    val radii = leaves(atCorner) { (_, queries, search) =>
       val r = new SpecificInternalRow(Seq(DoubleType))
       val joined = new JoinedRow()
       val q = new Shape
@@ -124,7 +112,7 @@ case class PartitionedKnnJoinExec(
         joined(row, r)
       }
     }
-    val lists = perLeaf(exchange(radii, types(withRadius), kdb.numLeaves)(
+    val lists = leaves(exchange(radii, types(withRadius), kdb.numLeaves)(
         meeting(kdb, secondBounds))) { (leaf, queries, search) =>
       val cand = new SpecificInternalRow(Seq(DoubleType, BinaryType, BinaryType))
       val joined = new JoinedRow()
@@ -147,8 +135,7 @@ case class PartitionedKnnJoinExec(
     val queryColumns = queryPlan.output.zipWithIndex.map { case (a, i) =>
       BoundReference(i + 1, a.dataType, a.nullable): Expression
     }
-    exchange(lists, types(withCandidate), merges)(() => row =>
-      Iterator.single(java.lang.Math.floorMod(java.lang.Long.hashCode(row.getLong(0)), merges)))
+    exchange(lists, types(withCandidate), merges)(byKey(merges))
       .mapPartitions { rows =>
         val queryOf = UnsafeProjection.create(queryColumns)
         val best = new java.util.HashMap[Long, (UnsafeRow, TopK)]()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, JoinHint, LogicalPlan, SHUFFLE_HASH, SHUFFLE_MERGE}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
-import graft.plans.{KnnJoinPlan, RangeJoinShapes, SpatialJoinRule}
+import graft.plans.{KnnJoinPlan, RangeJoinShapes}
 
 /** Plans joins whose condition carries a spatial predicate onto the two
   * index joins. Mirrors the reference's SpatialJoinLogicalRewrite +
@@ -24,20 +24,18 @@ import graft.plans.{KnnJoinPlan, RangeJoinShapes, SpatialJoinRule}
   * joins through the same build/probe/refine operator
   * (rust/sedona/src/context.rs:163-172).
   *
-  * One decision per join:
+  * One decision per join, of every type the reference's one operator runs
+  * (exec.rs:88), the mark join of EXISTS inside OR included:
   *   - a build side ([[SpatialJoinStrategy.buildSide]], by plan
   *     statistics — the reference's spatial_join_reordering,
-  *     option.rs:105-108): BroadcastIndexSpatialJoinExec, for every join
-  *     type it runs ([[SpatialJoinStrategy.indexJoin]]);
-  *   - none, INNER / CROSS and not streaming:
-  *     PartitionedIndexSpatialJoinExec
+  *     option.rs:105-108): BroadcastIndexSpatialJoinExec
+  *     ([[SpatialJoinStrategy.indexJoin]]);
+  *   - none, and not streaming: PartitionedIndexSpatialJoinExec
   *     ([[SpatialJoinStrategy.partitionedJoin]]). A side hinted
   *     SHUFFLE_HASH / SHUFFLE_MERGE is no build side, so the hint asks
   *     for this operator;
-  *   - otherwise Nil. `SpatialJoinRule` composes the other join types
-  *     around an inner join before planning, so a spatial join reaches
-  *     here unplanned only when it is streaming, is a mark join, has a
-  *     distance no one side can evaluate, or its switch is off.
+  *   - otherwise Nil: a streaming join with no broadcast side, a distance
+  *     no one side can evaluate, or a switch that is off.
   *
   * KNN joins (`KnnJoinPlan`, or a raw `st_knn` join) plan the broadcast
   * or the partitioned KNN join by the same build-side decision.
@@ -78,29 +76,37 @@ case class SpatialJoinStrategy(spark: SparkSession) extends SparkStrategy {
       SpatialJoinStrategy.indexJoin(spark, joinType, left, right, cond, hint).map {
         case (ex, buildLeft) =>
           val (streamGeom, buildGeom, streamPred) = oriented(ex, buildLeft)
-          BroadcastIndexSpatialJoinExec(
-            buildPlan = planLater(if (buildLeft) left else right),
-            streamPlan = planLater(if (buildLeft) right else left),
-            buildGeom = buildGeom,
-            streamGeom = streamGeom,
-            predName = streamPred,
-            distance = ex.distance,
-            buildIsLeft = buildLeft,
-            joinType = joinType,
-            extraCondition = ex.remainder)
+          BroadcastIndexSpatialJoinExec(planLater(if (buildLeft) left else right),
+            planLater(if (buildLeft) right else left), buildGeom, streamGeom, streamPred,
+            ex.distance, buildLeft, joinType, ex.remainder)
       }.orElse(
         if (j.isStreaming) None
         else SpatialJoinStrategy.partitionedJoin(spark, joinType, left, right, cond).map {
           case (ex, buildLeft) =>
             val (streamGeom, buildGeom, streamPred) = oriented(ex, buildLeft)
             PartitionedIndexSpatialJoinExec(planLater(left), planLater(right),
-              buildGeom, streamGeom, streamPred, ex.distance, buildLeft, ex.remainder)
+              buildGeom, streamGeom, streamPred, ex.distance, buildLeft, joinType, ex.remainder)
         }).toList
     case _ => Nil
   }
 }
 
 object SpatialJoinStrategy {
+
+  /** The join types both index joins run. */
+  def supported(joinType: JoinType): Boolean = joinType match {
+    case Inner | Cross | LeftOuter | RightOuter | FullOuter | LeftSemi | LeftAnti |
+        _: ExistenceJoin => true
+    case _ => false
+  }
+
+  /** `spark.graft.join.grid.enabled`: the partitioned join, planar. */
+  def planarEnabled(session: SparkSession): Boolean =
+    session.conf.getOption("spark.graft.join.grid.enabled").forall(_ == "true")
+
+  /** `spark.graft.join.sphere.enabled`: both index joins, spherical. */
+  def sphereEnabled(session: SparkSession): Boolean =
+    session.conf.getOption("spark.graft.join.sphere.enabled").forall(_ == "true")
 
   /** How the broadcast index join takes `Join(left, right, joinType,
     * cond, hint)`: the recognized predicate and the side it builds
@@ -111,11 +117,7 @@ object SpatialJoinStrategy {
   def indexJoin(spark: SparkSession, joinType: JoinType, left: LogicalPlan,
       right: LogicalPlan, cond: Expression,
       hint: JoinHint): Option[(SpatialPredicate.Extracted, Boolean)] = {
-    val supported = joinType match {
-      case Inner | Cross | LeftOuter | RightOuter | LeftSemi | LeftAnti | _: ExistenceJoin => true
-      case _ => false
-    }
-    if (!supported || RangeJoinShapes.hasEquiConjunct(cond, left, right)) None
+    if (!supported(joinType) || RangeJoinShapes.hasEquiConjunct(cond, left, right)) None
     else for {
       ex <- extract(spark, planar = true, cond, left, right)
       buildLeft <- buildSide(spark.sessionState.conf, joinType, left, right, hint)
@@ -123,18 +125,17 @@ object SpatialJoinStrategy {
     } yield (ex, buildLeft)
   }
 
-  /** How the partitioned index join takes an INNER / CROSS join: the
-    * recognized predicate — planar while `spark.graft.join.grid.enabled`,
-    * spherical while `spark.graft.join.sphere.enabled` — and the side it
-    * builds (`true`: left), the smaller by plan statistics of the sides
-    * the distance leaves free to build. None for another join type, an
-    * equi-conjunct, no recognized predicate, or a distance that
-    * references both sides. */
+  /** How the partitioned index join takes a join: the recognized
+    * predicate — planar while `spark.graft.join.grid.enabled`, spherical
+    * while `spark.graft.join.sphere.enabled` — and the side it builds
+    * (`true`: left), the smaller by plan statistics of the sides the
+    * distance leaves free to build. None for a type not [[supported]], an
+    * equi-conjunct, no recognized predicate, or a distance that references
+    * both sides. */
   def partitionedJoin(spark: SparkSession, joinType: JoinType, left: LogicalPlan,
       right: LogicalPlan, cond: Expression): Option[(SpatialPredicate.Extracted, Boolean)] =
-    if ((joinType != Inner && joinType != Cross) ||
-        RangeJoinShapes.hasEquiConjunct(cond, left, right)) None
-    else extract(spark, SpatialJoinRule.planarEnabled(spark), cond, left, right).flatMap { ex =>
+    if (!supported(joinType) || RangeJoinShapes.hasEquiConjunct(cond, left, right)) None
+    else extract(spark, planarEnabled(spark), cond, left, right).flatMap { ex =>
       def streams(side: LogicalPlan) = ex.distance.forall(_.references.subsetOf(side.outputSet))
       val buildLeft =
         if (streams(left) && streams(right))
@@ -150,7 +151,7 @@ object SpatialJoinStrategy {
   private def extract(spark: SparkSession, planar: Boolean, cond: Expression,
       left: LogicalPlan, right: LogicalPlan): Option[SpatialPredicate.Extracted] =
     (if (planar) SpatialPredicate.extract(cond, left, right) else None).orElse(
-      if (SpatialJoinRule.sphereEnabled(spark)) SpatialPredicate.extractSphere(cond, left, right)
+      if (sphereEnabled(spark)) SpatialPredicate.extractSphere(cond, left, right)
       else None)
 
   /** The side the broadcast index join builds (`Some(true)`: left), or
@@ -159,19 +160,14 @@ object SpatialJoinStrategy {
     * disabled), is not hinted SHUFFLE_HASH / SHUFFLE_MERGE and is not
     * preserved by the join type: the preserved side always streams, since
     * broadcasting it would need cross-partition match bookkeeping to
-    * pad/emit/suppress. Of two such sides the smaller builds.
-    * `SpatialJoinRule` composes a non-inner join exactly when this is
-    * None, so the two never disagree. */
+    * pad/emit/suppress (the partitioned index join keeps that
+    * bookkeeping). Of two such sides the smaller builds. */
   def buildSide(conf: SQLConf, joinType: JoinType, left: LogicalPlan,
       right: LogicalPlan, hint: JoinHint): Option[Boolean] = {
     val threshold = conf.autoBroadcastJoinThreshold
     val leftSize = left.stats.sizeInBytes
     val rightSize = right.stats.sizeInBytes
-    val leftPreserved = joinType match {
-      case LeftOuter | LeftSemi | LeftAnti | _: ExistenceJoin | FullOuter => true
-      case _ => false
-    }
-    val rightPreserved = joinType == RightOuter || joinType == FullOuter
+    val (leftPreserved, rightPreserved) = PartitionedIndexSpatialJoinExec.preserved(joinType)
     def shuffleHinted(h: Option[HintInfo]) =
       h.flatMap(_.strategy).exists(s => s == SHUFFLE_HASH || s == SHUFFLE_MERGE)
     val canBroadcastLeft = leftSize >= 0 && leftSize <= threshold && !leftPreserved &&

@@ -52,11 +52,13 @@ object IntervalJoin {
       case None => col("__lc") === col("__rc")
     }
     val joinCond = extraCond.map(equi && _).getOrElse(equi)
+    // the closed overlap, and the reference cell: a pair counts only where
+    // the later start falls, so multi-cell overlaps emit once. One conjunct
+    // (NULL and false both reject): in a stream-stream join's condition
+    // each comparison conjunct would log a WARN as a non-watermark bound.
     lc.join(rc, joinCond)
-      .filter(col(lStart) <= col(rEnd) && col(rStart) <= col(lEnd))
-      // reference cell: the pair is counted only where the later of the
-      // two starts falls, so multi-cell overlaps emit exactly once
-      .filter(col("__lc") === cellOf(greatest(col(lStart), col(rStart))))
+      .filter(coalesce(col(lStart) <= col(rEnd) && col(rStart) <= col(lEnd) &&
+        col("__lc") === cellOf(greatest(col(lStart), col(rStart))), lit(false)))
       .drop("__lc", "__rc")
   }
 }

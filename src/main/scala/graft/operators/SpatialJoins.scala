@@ -120,8 +120,10 @@ object SpatialJoins {
       }
     val rank = Seq(AttributeReference("knn_distance", DoubleType, nullable = false)(),
       AttributeReference("knn_rank", IntegerType, nullable = false)())
-    val joined = DatasetBridge.ofRows(spark, KnnJoinPlan(q, o, resolve(q, queryGeom),
-      resolve(o, objGeom), k, objectIsLeft = false, spheroid,
+    // the object side's hint moves into the node: left on the child, no
+    // join would take it and the optimizer would warn that it is unused
+    val joined = DatasetBridge.ofRows(spark, KnnJoinPlan(q, DatasetBridge.withoutHints(o),
+      resolve(q, queryGeom), resolve(o, objGeom), k, objectIsLeft = false, spheroid,
       Some(resolve(o, tieBreak.cast("double"))), rank, KnnJoinPlan.hintOf(o)))
     // the rank columns re-aliased in a Project, whose attributes Spark
     // renews when the result meets itself in a join

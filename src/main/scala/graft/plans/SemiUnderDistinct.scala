@@ -24,9 +24,9 @@ import graft.joins.SpatialJoinStrategy
   *
   * Fired only when every aggregate output is aggregation-free (pure
   * DISTINCT — a count/sum DOES observe multiplicities) and every
-  * referenced column comes from one join side, and not when an index
-  * join takes the inner join but the broadcast index join not its semi
-  * form. Mirrored for the right side by swapping the children.
+  * referenced column comes from one join side, and not when the broadcast
+  * index join takes the inner join but not its semi form. Mirrored for
+  * the right side by swapping the children.
   * `spark.graft.semidistinct.enabled=false` disables.
   */
 case class SemiUnderDistinctRule(session: SparkSession)
@@ -68,16 +68,13 @@ case class SemiUnderDistinctRule(session: SparkSession)
     descend(child, agg.references).map(nc => agg.copy(child = nc))
   }
 
-  /** The index joins run a semi join only where the broadcast index join
-    * builds its non-preserved side. An inner spatial join an index join
-    * takes stays inner when its semi form has no such build side: the
-    * semi join would plan a BroadcastNestedLoopJoin, or `SpatialJoinRule`
-    * would compose it back around the same inner join. */
+  /** A semi join broadcasts only its non-preserved side, so an inner
+    * spatial join the broadcast index join takes by building the side the
+    * semi form keeps stays inner: broadcast, not shuffled into the
+    * partitioned index join. */
   private def keepsInner(inner: Join, semi: Join): Boolean = inner.condition.exists { c =>
     def broadcast(j: Join) =
       SpatialJoinStrategy.indexJoin(session, j.joinType, j.left, j.right, c, j.hint).isDefined
-    val indexed = broadcast(inner) ||
-      SpatialJoinStrategy.partitionedJoin(session, Inner, inner.left, inner.right, c).isDefined
-    indexed && !broadcast(semi)
+    broadcast(inner) && !broadcast(semi)
   }
 }

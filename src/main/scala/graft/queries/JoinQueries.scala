@@ -209,11 +209,10 @@ object JoinQueries {
     }),
 
     // FULL OUTER spatial join (reference exec.rs:88, test_sjoin.py:34-36):
-    // SpatialJoinRule composes it through TaggedJoin, inner join plus
-    // both-side anti-pads over row-id-tagged sides; the inner join takes
-    // the broadcast index path at gate scale (the large-large partitioned
-    // path is pinned in SpatialJoinSpec with set+collect inside one conf
-    // window)
+    // both sides are preserved, so neither can broadcast, and the
+    // partitioned index join runs it at every size: pairs from the KDB
+    // leaves, the unmatched rows of both sides padded in its merge by row
+    // id
     "sj17_full_outer_join" -> ((s, dir) => {
       val pts = orderPoints(s, dir).select(col("o_orderkey"), col("pt"))
       val boxes = partBoxes(s, dir).select(col("p_partkey"), col("box"))

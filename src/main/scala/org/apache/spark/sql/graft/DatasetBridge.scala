@@ -29,6 +29,10 @@ object DatasetBridge {
   def hints(plan: LogicalPlan): Seq[org.apache.spark.sql.catalyst.plans.logical.HintInfo] =
     org.apache.spark.sql.catalyst.optimizer.EliminateResolvedHint.extractHintsFromPlan(plan)._2
 
+  /** `plan` without the hints on its top chain of unary nodes. */
+  def withoutHints(plan: LogicalPlan): LogicalPlan =
+    org.apache.spark.sql.catalyst.optimizer.EliminateResolvedHint.extractHintsFromPlan(plan)._1
+
   def expr(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** DataFrame over an RDD of UnsafeRows matching `schema` (the

@@ -291,18 +291,30 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.addSparkListener(listener)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      for (kind <- Seq("inner", "left_outer")) {
-        val plan = p.join(b, st.intersects(col("pgeom"), col("bgeom")), kind)
-          .queryExecution.executedPlan.toString
-        assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
-      }
-      // KNN: SQL st_knn with no broadcast side, and building knnJoin(...)
-      // with objects hinted shuffle_hash
       p.createOrReplaceTempView("nojob_p")
       b.createOrReplaceTempView("nojob_b")
+      // every join type, and an EXISTS inside OR (a mark join), plans the
+      // partitioned index join and pins no cache
+      CacheRegistry.releaseAll() // count from zero
+      val spatial = Seq("inner", "cross", "left_outer", "right_outer", "full_outer",
+        "left_semi", "left_anti").map(p.join(b, st.intersects(col("pgeom"), col("bgeom")), _)) :+
+        spark.sql("""SELECT pid FROM nojob_p WHERE pid < 3 OR EXISTS (
+          SELECT 1 FROM nojob_b WHERE st_intersects(pgeom, bgeom))""")
+      for (plan <- spatial.map(_.queryExecution.executedPlan.toString)) {
+        assert(plan.contains("PartitionedIndexSpatialJoin") &&
+          !plan.contains("BroadcastNestedLoopJoin") && !plan.contains("InMemory"), plan.take(2000))
+        assert(CacheRegistry.pinnedCount == 0, plan.take(2000))
+      }
+      // KNN: SQL st_knn with no broadcast side, and building knnJoin(...)
+      // with objects hinted shuffle_hash: the hint moves into the node, so
+      // no ResolvedHint is left for the optimizer to report as unused
+      val hinted =
+        SpatialJoins.knnJoin(p, b.hint("shuffle_hash"), col("pgeom"), col("bgeom"), 3, col("bid"))
+      assert(hinted.queryExecution.optimizedPlan.collectFirst {
+        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
+      }.isEmpty)
       val knnPlans = Seq(
-        spark.sql("SELECT pid, bid FROM nojob_p JOIN nojob_b ON st_knn(pgeom, bgeom, 3)"),
-        SpatialJoins.knnJoin(p, b.hint("shuffle_hash"), col("pgeom"), col("bgeom"), 3, col("bid")))
+        spark.sql("SELECT pid, bid FROM nojob_p JOIN nojob_b ON st_knn(pgeom, bgeom, 3)"), hinted)
         .map(_.queryExecution.executedPlan.toString)
       for (plan <- knnPlans) assert(plan.contains("PartitionedKnnJoin"), plan.take(2000))
       // listener events arrive in order: once the sentinel job is seen,
@@ -394,13 +406,13 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       def q4(): DataFrame = p.join(shared, st.intersects(p("pgeom"), shared("bgeom")),
         "left_outer").select(p("pid"), shared("pid"))
       assert(gridRewriteRows(q4()) == gridRuleOffRows(q4()))
-      // RIGHT OUTER: the LEFT OUTER composition with the sides swapped
+      // RIGHT OUTER: the right side preserved
       def q6(): DataFrame = b.join(p, st.intersects(col("pgeom"), col("bgeom")),
         "right_outer").select(col("pid"), col("bid"))
       assert(gridRewriteRows(q6()) == gridRuleOffRows(q6()))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     // the preserved side alone fits the threshold: no broadcast side for
-    // the LEFT OUTER, so the rewrite's inner join broadcasts the left
+    // the LEFT OUTER, so it runs partitioned
     val big = boxes(2000, 97)
     def size(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
     assert(size(big) > 4 * size(p))
@@ -434,18 +446,13 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     sortedRows(q)
   }
 
-  /** Sorted rows of `q`, which must plan no BNLJ; the caches its rewrite
-    * pinned must be released once it has been collected. */
+  /** [[partitionedRows]] of a join type with a preserved side: planning it
+    * persists no cache. */
   private def gridRewriteRows(q: DataFrame): Seq[String] = {
     CacheRegistry.releaseAll() // count from zero
-    val phys = q.queryExecution.executedPlan.toString
-    assert(!phys.contains("BroadcastNestedLoopJoin"), phys.take(2000))
-    val rows = sortedRows(q)
-    // the release runs on the listener bus, after collect() returns
-    val deadline = System.nanoTime() + 10000000000L
-    while (CacheRegistry.pinnedCount > 0 && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(CacheRegistry.pinnedCount == 0, "rewrite caches not released")
-    rows
+    q.queryExecution.executedPlan
+    assert(CacheRegistry.pinnedCount == 0, "planning pinned a cache")
+    partitionedRows(q)
   }
 
   test("FULL OUTER spatial join: broadcast and grid paths, no BNLJ") {
@@ -458,20 +465,12 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.graft.join.grid.enabled", "false")
     val expected = try sortedRows(q())
       finally spark.conf.set("spark.graft.join.grid.enabled", "true")
-    // broadcast-sized: the rewrite's inner join takes the index path
-    val jb = q()
-    val physB = jb.queryExecution.executedPlan.toString
-    assert(!physB.contains("BroadcastNestedLoopJoin"), physB.take(2000))
-    assert(physB.contains("BroadcastIndexSpatialJoin"), physB.take(2000))
-    assert(sortedRows(jb) == expected)
-    // large-large: broadcast off, the inner join takes the grid path
+    // both sides are preserved, so neither broadcasts: the partitioned
+    // index join at every size, broadcast-sized or with broadcast off
+    assert(gridRewriteRows(q()) == expected)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val jg = q()
-      val physG = jg.queryExecution.executedPlan.toString
-      assert(!physG.contains("BroadcastNestedLoopJoin"), physG.take(2000))
-      assert(sortedRows(jg) == expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    try assert(gridRewriteRows(q()) == expected)
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     // SQL surface + dwithin form, shared column names across sides
     p.createOrReplaceTempView("fo_p")
     b.createOrReplaceTempView("fo_b")
@@ -485,8 +484,7 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     val js = spark.sql(
       """SELECT p.pid, b.bid FROM fo_p p FULL OUTER JOIN fo_b b
         |ON st_dwithin(p.pgeom, b.bgeom, 2.0)""".stripMargin)
-    assert(!js.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
-    assert(sortedRows(js) == sqlExpected)
+    assert(gridRewriteRows(js) == sqlExpected)
   }
 
   test("grid rewrite: empty sides degrade gracefully") {

@@ -191,8 +191,8 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(got.nonEmpty && got == expect)
     assert(got.exists(_._2 == Long.MinValue), "some left rows must be unmatched")
-    // FULL OUTER has no broadcast side: rewritten at every size, its inner
-    // join broadcast-sized on the index join, with broadcast off on the grid
+    // FULL OUTER has no broadcast side: the partitioned index join at
+    // every size, and planning it pins no cache
     val full = "SELECT laid, rbid FROM spho_a FULL OUTER JOIN spho_b " +
       "ON st_dwithinsphere(lag, rbg, 200000.0)"
     def fkey(x: org.apache.spark.sql.Row) =
@@ -201,21 +201,16 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fullExpect = ruleOff { spark.sql(full).collect().map(fkey).sorted.toSeq }
     assert(fullExpect.exists(_._1 == Long.MinValue) && fullExpect.exists(_._2 == Long.MinValue),
       "both sides must have unmatched rows")
-    def fullRows(assertPlan: String => Unit): Seq[(Long, Long)] = {
+    def fullRows(): Seq[(Long, Long)] = {
       CacheRegistry.releaseAll() // count from zero
       val df = spark.sql(full)
-      assertPlan(planString(df))
-      val rows = df.collect().map(fkey).sorted.toSeq
-      // the release runs on the listener bus, after collect() returns
-      val deadline = System.nanoTime() + 10000000000L
-      while (CacheRegistry.pinnedCount > 0 && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(CacheRegistry.pinnedCount == 0, "rewrite caches not released")
-      rows
+      assertPartitioned(planString(df))
+      assert(CacheRegistry.pinnedCount == 0, "planning pinned a cache")
+      df.collect().map(fkey).sorted.toSeq
     }
-    assert(fullRows(assertIndex) == fullExpect)
-    assert(withBroadcastOff(fullRows(assertPartitioned)) == fullExpect)
-    // RIGHT OUTER with no broadcast side: the LEFT OUTER composition with
-    // the sides swapped
+    assert(fullRows() == fullExpect)
+    assert(withBroadcastOff(fullRows()) == fullExpect)
+    // RIGHT OUTER with no broadcast side: the right side preserved
     val rightSql = "SELECT laid, rbid FROM spho_b RIGHT JOIN spho_a " +
       "ON st_dwithinsphere(lag, rbg, 200000.0)"
     val (rp, rightGot) = withBroadcastOff {
@@ -411,20 +406,21 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.nonEmpty && got == expect)
   }
 
-  test("LEFT OUTER declines rewrite when a side already has a __tj_ tag column") {
-    // the rewrite tags the left with __tj_lid and joins the matched-id set
-    // as __tj_mid; a user column named with that prefix would be silently
-    // replaced (__tj_lid) or make that join ambiguous (__tj_mid), so the
-    // rule must keep the default plan and still return correct results
+  test("LEFT OUTER with a user __tj_ column plans the partitioned index join") {
+    // a user column named with TaggedJoin's tag prefix is a column like
+    // any other to a spatial join, which runs on the partitioned index join
     pts(150, 301, "aid", "ag")
       .withColumn("__tj_mid", col("aid") * 1000)
       .createOrReplaceTempView("sphr_a")
     pts(150, 303, "bid", "bg").createOrReplaceTempView("sphr_b")
     val sql = "SELECT aid, __tj_mid, bid FROM sphr_a LEFT JOIN sphr_b " +
       "ON st_dwithinsphere(ag, bg, 400000.0)"
-    // broadcast off: the index join cannot take it, so the rule sees it
-    val got = withBroadcastOff { spark.sql(sql).collect() }
-      .map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
+    // broadcast off: no broadcast side, so the partitioned index join
+    val got = withBroadcastOff {
+      val df = spark.sql(sql)
+      assertPartitioned(planString(df))
+      df.collect()
+    }.map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
       .sorted.toSeq
     val expect = ruleOff {
       spark.sql(sql).collect()
