@@ -1,6 +1,18 @@
 package graft
 object Bench {
+
+  /** (steal, total) jiffies of the aggregate cpu line of /proc/stat, or
+    * zeros where it cannot be read. */
+  private def cpuTimes(): (Long, Long) =
+    try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      val v = try src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
+        finally src.close()
+      (if (v.length > 7) v(7) else 0L, v.take(8).sum)
+    } catch { case _: Exception => (0L, 0L) }
+
   def main(args: Array[String]): Unit = {
+    val cpu0 = cpuTimes()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftExtensions.localSession(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "WARN")
@@ -62,8 +74,15 @@ object Bench {
     def jsonMap(m: Iterable[(String, Any)]): String =
       m.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     val total = times.values.map(_._1).sum
+    // the regime the run saw: cores, heap, Spark, and the share of CPU
+    // time the host stole over the run
+    val cpu1 = cpuTimes()
+    val steal = 100.0 * (cpu1._1 - cpu0._1) / math.max(1L, cpu1._2 - cpu0._2)
+    val regime = jsonMap(Seq("nproc" -> Runtime.getRuntime.availableProcessors,
+      "max_heap_mb" -> Runtime.getRuntime.maxMemory / (1024 * 1024),
+      "spark" -> s"\"${spark.version}\"", "cpu_steal_pct" -> "%.3f".formatLocal(java.util.Locale.ROOT, steal)))
     val head = s""""metric":"total","value":$total,"unit":"sec","failed":${
-      jsonMap(failed.map { case (k, cls) => k -> s"\"$cls\"" })}"""
+      jsonMap(failed.map { case (k, cls) => k -> s"\"$cls\"" })},"regime":$regime"""
     val fullPart =
       if (full) s""","full_total":${times.values.map(_._2).sum},"queries_full":${
         jsonMap(times.map { case (k, v) => k -> v._2 })}"""

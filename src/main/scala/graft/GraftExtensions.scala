@@ -31,7 +31,6 @@ object GraftExtensions {
     * they run once, in this order, in the "User Provided Optimizers"
     * batch after operator optimization has settled the plan. */
   val postHocRules: Seq[RuleBuilder] = Seq(
-    graft.plans.BandedRangeJoinRule(_),
     graft.plans.SemiUnderDistinctRule(_),
     // the rotation must precede AsOfAggregateRule: it creates the
     // Join(probe, agg) shape the probe rewrite matches, and the

@@ -188,10 +188,10 @@ object MicroBench {
           side(81, "lid", "lts"), side(83, "rid", "rts"),
           "k", "lts", "rts", "rid"))
       }),
-      // round-9: the banded range-join rewrite fires even when one side
-      // fits broadcast (worthBanding) — paired rows time the SAME SQL
-      // with the rule on vs off; the off row is the quadratic BNLJ plan
-      // Spark would otherwise pick for a 10k-row "small" side
+      // the range join on the index joins, broadcast when a side fits —
+      // paired rows time the SAME SQL with range joins on vs off; the off
+      // row is the quadratic BNLJ plan Spark would otherwise pick for a
+      // 10k-row "small" side
       time("range_sql_banded")({
         spark.range(0, 100000L).select(col("id").as("lid"),
           pmod(hash(col("id"), lit(87)), lit(100000000)).cast("long").as("ls"))
@@ -277,11 +277,11 @@ object MicroBench {
     val knnBuild = median((0 until 5).map(_ => ms(side.index(sites.iterator, copy = false))))
     val search = new KnnJoinExec.Search(side.index(sites.iterator, copy = false))
     val queries = points.indices.by(20).map(points(_))
-    val q = new BroadcastIndexSpatialJoinExec.Shape
+    val q = new BroadcastIndexSpatialJoinExec.Shape(geom)
     var found = 0L
     val knnMs = (0 until 3).map { _ =>
       found = 0L
-      ms(queries.foreach { r => q.set(r.getBinary(0)); found += search.nearest(q, 4).length })
+      ms(queries.foreach { r => q.set(r); found += search.nearest(q, 4).length })
     }.last
     f"""{"intersects_build_ms":$build%.2f,"intersects_probe_ns_per_row":${probeMs * 1e6 / points.length}%.1f,""" +
       f""""intersects_matches":$matches,"knn_build_ms":$knnBuild%.2f,""" +

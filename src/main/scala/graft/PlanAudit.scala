@@ -17,9 +17,8 @@ object PlanAudit {
   /** A BNLJ is acceptable exactly when every NON-EQUI logical join in the
     * query has a small pair product and no spherical predicate, so gates
     * carry NO conf windows and still can't hide a scale-hostile fallback:
-    * a rewrite rule that silently stops firing on large sides (the
-    * banded-range tiny test) pushes the product past the cutoff and flags
-    * here. Cutoff: 65536² · 4 bytes² (~a couple million pairs at
+    * a rewrite rule that silently stops firing on large sides pushes the
+    * product past the cutoff and flags here. Cutoff: 65536² · 4 bytes² (~a couple million pairs at
     * 100 B/row). A join condition with an `st_*sphere` call never
     * justifies a BNLJ: broadcast-sized sphere joins plan the broadcast
     * index join and all others the partitioned index join. */

@@ -34,6 +34,12 @@ import graft.geom.GeomIO
   * across the antimeridian at longitude shifts 0/±360, and candidates
   * refine with the kernels of the SQL sphere functions.
   *
+  * A range join (`SpatialPredicate.extractBand`) runs here too: each
+  * side's bound is a [[Span]], the box [min(lo, hi), max(lo, hi)] × [0, 0]
+  * tagged a point or a rectangle, the predicate is `st_intersects`, which
+  * refines such boxes from coordinates, and the whole original condition
+  * is the extra condition, the exact refine. JTS is never called.
+  *
   * Join types (reference SpatialJoinExec covers the same set,
   * test_sjoin.py): Inner/Cross either orientation; LeftOuter, LeftSemi,
   * LeftAnti, ExistenceJoin (mark join, the EXISTS-in-OR rewrite) with the
@@ -47,6 +53,7 @@ import graft.geom.GeomIO
 case class BroadcastIndexSpatialJoinExec(
     buildPlan: SparkPlan,
     streamPlan: SparkPlan,
+    /** a geometry, or a [[Span]]: see [[RowBound]] */
     buildGeom: Expression,
     streamGeom: Expression,
     /** predicate oriented as pred(streamG, buildG) */
@@ -173,36 +180,35 @@ object BroadcastIndexSpatialJoinExec {
     case null => Double.NaN
   }
 
-  /** One stream or query geometry as a probe sees it, reused from row to
-    * row: its WKB, its planar bound and shape tag (`GeomIO.bounds`), and
-    * its JTS geometry, parsed at most once, on first use. */
-  final class Shape {
+  /** One stream or query row's bound as a probe sees it, reused from row
+    * to row: its planar bound and shape tag, read by the side's
+    * [[RowBound]] (a WKB geometry's by `GeomIO.bounds`, or a [[Span]]'s
+    * box), and its JTS geometry, parsed at most once, on first use. */
+  final class Shape(boundExpr: Expression) {
+    private val read = RowBound(boundExpr)
     val bound = new Array[Double](4)
     var tag: Int = GeomIO.EmptyShape
-    private var bytes: Array[Byte] = _
     private var parsed: Geometry = _
 
-    /** Takes the WKB value `v`; false for a null or empty geometry. */
-    def set(v: Any): Boolean = {
+    /** Takes `row`'s bound; false when it has none: a null or empty
+      * geometry, or a null span endpoint. */
+    def set(row: InternalRow): Boolean = {
       parsed = null
-      if (v == null) { tag = GeomIO.EmptyShape; false }
-      else {
-        bytes = v.asInstanceOf[Array[Byte]]
-        tag = GeomIO.bounds(bytes, bound, 0)
-        tag != GeomIO.EmptyShape
-      }
+      tag = read(row, bound, 0)
+      tag != GeomIO.EmptyShape
     }
 
     def isPoint: Boolean = tag == GeomIO.PointShape
 
     def geom: Geometry = {
-      if (parsed == null) parsed = GeomIO.read(bytes)
+      if (parsed == null) parsed = GeomIO.read(read.wkb)
       parsed
     }
   }
 
-  /** The rows of one build or object side with a non-empty geometry: each
-    * with its WKB, planar bound (4 doubles) and shape tag, and its JTS
+  /** The rows of one build or object side with a bound (a non-empty
+    * geometry, or a span with both endpoints): each with its WKB (null for
+    * a span), planar bound (4 doubles) and shape tag, and its JTS
     * geometry, parsed on first use and then kept. Tasks share it. */
   final class Items(val rows: Array[InternalRow], wkb: Array[Array[Byte]],
       val bounds: Array[Double], val shapes: Array[Byte]) {
@@ -238,26 +244,24 @@ object BroadcastIndexSpatialJoinExec {
   }
 
   object Items {
-    /** The rows whose `geom` is a non-empty geometry, each through
-      * `keep` (the identity, or a copy of a reused row); the others go to
-      * `skip`, when given. */
+    /** The rows whose bound expression `geom` (a geometry or a [[Span]])
+      * gives a bound, each through `keep` (the identity, or a copy of a
+      * reused row); the others go to `skip`, when given. */
     def apply(rows: Iterator[InternalRow], geom: Expression,
         keep: InternalRow => InternalRow = identity,
         skip: InternalRow => Unit = null): Items = {
+      val read = RowBound(geom)
       val kept = Array.newBuilder[InternalRow]
       val wkb = Array.newBuilder[Array[Byte]]
       val shapes = Array.newBuilder[Byte]
       var bounds = new Array[Double](64)
       var n = 0
       rows.foreach { row =>
-        val v = geom.eval(row)
-        val shape = if (v == null) GeomIO.EmptyShape else {
-          if (4 * n + 4 > bounds.length) bounds = java.util.Arrays.copyOf(bounds, 2 * bounds.length)
-          GeomIO.bounds(v.asInstanceOf[Array[Byte]], bounds, 4 * n)
-        }
+        if (4 * n + 4 > bounds.length) bounds = java.util.Arrays.copyOf(bounds, 2 * bounds.length)
+        val shape = read(row, bounds, 4 * n)
         if (shape != GeomIO.EmptyShape) {
           kept += keep(row)
-          wkb += v.asInstanceOf[Array[Byte]]
+          wkb += read.wkb
           shapes += shape.toByte
           n += 1
         } else if (skip != null) skip(row)
@@ -365,7 +369,7 @@ object BroadcastIndexSpatialJoinExec {
     private val spherical = isSpherical(pred)
     private val mode = refineMode(pred)
     private val joined = new JoinedRow()
-    private val shape = new Shape
+    private val shape = new Shape(streamGeom)
     /** The current stream row's probe bound, when `bounded`. */
     val bound = new Array[Double](4)
     /** Whether the current stream row has a probe bound: false for a null
@@ -390,7 +394,7 @@ object BroadcastIndexSpatialJoinExec {
     def apply(index: BuildIndex, streamRow: InternalRow,
         owned: Int => Boolean = null): Iterator[InternalRow] = {
       bounded = false
-      if (!shape.set(streamGeom.eval(streamRow))) return Iterator.empty
+      if (!shape.set(streamRow)) return Iterator.empty
       val d = distance.map(distanceOf(_, streamRow))
       dist = d.getOrElse(0.0)
       if (!probeBound(shape, d, spherical, bound)) return Iterator.empty

@@ -75,9 +75,9 @@ case class KnnJoinExec(
         objects.index(rows.iterator, copy = false))
       val emit = new Emit(objLeft, ranked, outTypes)
       val search = new Search(index)
-      val q = new Shape
+      val q = new Shape(boundQueryGeom)
       queryIter.flatMap { qRow =>
-        if (!q.set(boundQueryGeom.eval(qRow))) Iterator.empty
+        if (!q.set(qRow)) Iterator.empty
         else {
           val cands = search.nearest(q, kk, candidatePairs)
           numOutputRows += cands.length

@@ -43,12 +43,17 @@ import scala.jdk.CollectionConverters._
   * (`BroadcastIndexSpatialJoinExec.RowEmit`). A merge partition holds its
   * preserved rows in memory.
   *
+  * A range join's sides are bound by [[Span]]s, as on the broadcast
+  * index join: a span's box has zero height, so the KDB tree splits only
+  * on x.
+  *
   * All of it runs at execution time: planning starts no job. Null and
-  * empty geometries match nothing.
+  * empty geometries, and spans with a null endpoint, match nothing.
   */
 case class PartitionedIndexSpatialJoinExec(
     left: SparkPlan,
     right: SparkPlan,
+    /** a geometry, or a [[Span]]: see [[RowBound]] */
     buildGeom: Expression,
     streamGeom: Expression,
     /** predicate oriented as pred(streamG, buildG) */
@@ -304,19 +309,20 @@ object PartitionedIndexSpatialJoinExec {
   private val WrapSlack = 1e-9
 
   /** One side's row bound, as the index sees it: `probeBound` with the
-    * distance on the stream side, `buildBound` on the build side. Planar
-    * bounds and points read from the WKB; other geometries parse once. */
+    * distance on the stream side, `buildBound` on the build side. `geom`
+    * is a geometry or a [[Span]] ([[RowBound]]); planar bounds, points and
+    * spans read without a parse, other geometries on the sphere parse once. */
   final case class Bounds(geom: Expression, distance: Option[Expression],
       stream: Boolean, spherical: Boolean) {
 
     /** A reader for one task: a row's bound as minX, minY, maxX, maxY, in
-      * an array it reuses, or null for a null or empty geometry or a null
-      * bound. */
+      * an array it reuses, or null for a null or empty geometry, a null
+      * span endpoint or a null bound. */
     def reader(): InternalRow => Array[Double] = {
-      val shape = new BroadcastIndexSpatialJoinExec.Shape
+      val shape = new BroadcastIndexSpatialJoinExec.Shape(geom)
       val out = new Array[Double](4)
       row =>
-        if (!shape.set(geom.eval(row))) null
+        if (!shape.set(row)) null
         else if (stream) {
           val d = distance.map(BroadcastIndexSpatialJoinExec.distanceOf(_, row))
           if (BroadcastIndexSpatialJoinExec.probeBound(shape, d, spherical, out)) out else null

@@ -105,9 +105,9 @@ case class PartitionedKnnJoinExec(
     val radii = leaves(atCorner) { (_, queries, search) =>
       val r = new SpecificInternalRow(Seq(DoubleType))
       val joined = new JoinedRow()
-      val q = new Shape
+      val q = new Shape(firstGeom)
       queries.map { row =>
-        q.set(firstGeom.eval(row))
+        q.set(row)
         r.setDouble(0, padded(q, search.kthDistance(q, kk), sph))
         joined(row, r)
       }
@@ -116,11 +116,11 @@ case class PartitionedKnnJoinExec(
         meeting(kdb, secondBounds))) { (leaf, queries, search) =>
       val cand = new SpecificInternalRow(Seq(DoubleType, BinaryType, BinaryType))
       val joined = new JoinedRow()
-      val q = new Shape
+      val q = new Shape(secondGeom)
       val probe = new Array[Double](4)
       val owned = (i: Int) => kdb.leafOfPair(probe, search.index.bounds, 4 * i, sph) == leaf
       queries.flatMap { row =>
-        q.set(secondGeom.eval(row))
+        q.set(row)
         val r = row.getDouble(nQuery + 1)
         probeBound(q, Some(r), sph, probe)
         search.rankWithin(q, r, kk, owned, candidatePairs).iterator.map { c =>

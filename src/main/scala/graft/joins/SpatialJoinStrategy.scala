@@ -8,10 +8,11 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
 import graft.plans.{KnnJoinPlan, RangeJoinShapes}
 
-/** Plans joins whose condition carries a spatial predicate onto the two
-  * index joins. Mirrors the reference's SpatialJoinLogicalRewrite +
-  * physical planner chain (rust/sedona-query-planner/src/
-  * optimizer.rs:197-260, spatial_join_physical_planner.rs:45-97),
+/** Plans joins whose condition carries a spatial predicate or a range
+  * band onto the two index joins. Mirrors the reference's
+  * SpatialJoinLogicalRewrite + physical planner chain
+  * (rust/sedona-query-planner/src/optimizer.rs:197-260,
+  * spatial_join_physical_planner.rs:45-97),
   * collapsed into one Catalyst Strategy: Catalyst's
   * PushPredicateThroughJoin already folds Filter-over-cross-join into the
   * join condition (the reference needed MergeSpatialFilterIntoJoin for
@@ -23,6 +24,14 @@ import graft.plans.{KnnJoinPlan, RangeJoinShapes}
   * < / <= d and the sphere relations) — the reference runs geography
   * joins through the same build/probe/refine operator
   * (rust/sedona/src/context.rs:163-172).
+  *
+  * A third family, the 1-D range join of no equi-conjunct
+  * (`SpatialPredicate.extractBand`: `l.ts BETWEEN r.lo AND r.hi`, interval
+  * overlap), plans on the same two execs unless
+  * `spark.graft.join.band.enabled=false` or the join is streaming: each
+  * side's bound is a [[Span]] rather than a geometry, and the whole
+  * condition refines, as the reference's one build/probe/refine operator
+  * takes a pluggable refiner.
   *
   * One decision per join, of every type the reference's one operator runs
   * (exec.rs:88), the mark join of EXISTS inside OR included:
@@ -108,6 +117,10 @@ object SpatialJoinStrategy {
   def sphereEnabled(session: SparkSession): Boolean =
     session.conf.getOption("spark.graft.join.sphere.enabled").forall(_ == "true")
 
+  /** `spark.graft.join.band.enabled`: both index joins, range joins. */
+  def bandEnabled(session: SparkSession): Boolean =
+    session.conf.getOption("spark.graft.join.band.enabled").forall(_ == "true")
+
   /** How the broadcast index join takes `Join(left, right, joinType,
     * cond, hint)`: the recognized predicate and the side it builds
     * (`true`: left), or None when it cannot take the join — an
@@ -127,7 +140,8 @@ object SpatialJoinStrategy {
 
   /** How the partitioned index join takes a join: the recognized
     * predicate — planar while `spark.graft.join.grid.enabled`, spherical
-    * while `spark.graft.join.sphere.enabled` — and the side it builds
+    * while `spark.graft.join.sphere.enabled`, a range join while
+    * `spark.graft.join.band.enabled` — and the side it builds
     * (`true`: left), the smaller by plan statistics of the sides the
     * distance leaves free to build. None for a type not [[supported]], an
     * equi-conjunct, no recognized predicate, or a distance that references
@@ -147,11 +161,16 @@ object SpatialJoinStrategy {
     }
 
   /** The first recognized spatial conjunct of `cond`: planar when
-    * `planar`, else spherical while `spark.graft.join.sphere.enabled`. */
+    * `planar`, else spherical while `spark.graft.join.sphere.enabled`;
+    * failing both, the band of a batch range join while
+    * `spark.graft.join.band.enabled`. */
   private def extract(spark: SparkSession, planar: Boolean, cond: Expression,
       left: LogicalPlan, right: LogicalPlan): Option[SpatialPredicate.Extracted] =
     (if (planar) SpatialPredicate.extract(cond, left, right) else None).orElse(
       if (sphereEnabled(spark)) SpatialPredicate.extractSphere(cond, left, right)
+      else None).orElse(
+      if (bandEnabled(spark) && !left.isStreaming && !right.isStreaming)
+        SpatialPredicate.extractBand(cond, left, right)
       else None)
 
   /** The side the broadcast index join builds (`Some(true)`: left), or

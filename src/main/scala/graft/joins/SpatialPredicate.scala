@@ -2,14 +2,15 @@ package graft.joins
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.types.{DoubleType, NumericType}
+import org.apache.spark.sql.types._
 import graft.functions.GeomScalar
 
 /** Recognition of spatial predicates inside join conditions — the analog of
   * the reference's SpatialPredicate / SpatialRelationType::from_name
   * (rust/sedona-query-planner/src/spatial_predicate.rs:201-221) and its
   * DistancePredicate (spatial_predicate.rs:62-86). Two families: planar
-  * ([[extract]]) and spherical ([[extractSphere]]).
+  * ([[extract]]) and spherical ([[extractSphere]]); a third, the 1-D range
+  * join ([[extractBand]]), runs on the same index joins.
   */
 object SpatialPredicate {
 
@@ -151,4 +152,45 @@ object SpatialPredicate {
         case _ => None
       }
     }
+
+  /** Types whose values [[RowBound.value]] maps into doubles by one
+    * monotone non-decreasing map (integral, float, double, TIMESTAMP in
+    * micros, decimals of at most 18 digits), so two values that pass a
+    * band conjunct have boxes that meet. Other orderable types (DATE,
+    * TIMESTAMP_NTZ, wider decimals, strings) keep Spark's plan. */
+  def bandable(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
+        TimestampType => true
+    case d: DecimalType => d.precision <= 18
+    case _ => false
+  }
+
+  /** A conjunct normalized to `lo <= hi` (strictness folded away: the
+    * original conjunct stays in the refine). */
+  private def asBound(e: Expression): Option[(Expression, Expression)] = e match {
+    case LessThanOrEqual(a, b) => Some((a, b))
+    case LessThan(a, b) => Some((a, b))
+    case GreaterThanOrEqual(a, b) => Some((b, a))
+    case GreaterThan(a, b) => Some((b, a))
+    case _ => None
+  }
+
+  /** The band of `cond`, a range join: two opposing cross-side bounds
+    * `lLow <= rHigh` and `rLow <= lHigh` (either may be strict, as
+    * `l.ts BETWEEN r.lo AND r.hi` or an interval overlap), all four values
+    * deterministic and [[bandable]]. It extracts as `st_intersects` of the
+    * [[Span]]s (lLow, lHigh) and (rLow, rHigh), with the whole condition as
+    * the remainder, the exact refine. Rows whose span is inverted (lo > hi)
+    * keep the condition's own semantics: a pair that passes both bounds
+    * has spans whose boxes meet. */
+  def extractBand(cond: Expression, left: LogicalPlan, right: LogicalPlan): Option[Extracted] = {
+    def ok(e: Expression, side: LogicalPlan): Boolean =
+      e.deterministic && e.references.nonEmpty &&
+        e.references.subsetOf(side.outputSet) && bandable(e.dataType)
+    val bounds = split(cond).flatMap(asBound)
+    for {
+      (lLow, rHigh) <- bounds.find { case (lo, hi) => ok(lo, left) && ok(hi, right) }
+      (rLow, lHigh) <- bounds.find { case (lo, hi) => ok(lo, right) && ok(hi, left) }
+    } yield Extracted("st_intersects", Span(lLow, lHigh), Span(rLow, rHigh), None, Some(cond))
+  }
 }

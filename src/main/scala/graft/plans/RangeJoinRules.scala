@@ -3,16 +3,17 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Max, Min}
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftOuter}
+import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Shared shape recognition for the 1-D range-join rewrites: splitting a
-  * join condition into conjuncts, spotting the equi-conjunct that makes
-  * Catalyst's hash machinery applicable, and normalizing inequality
-  * conjuncts into cross-side `lo <= hi` bounds. */
+/** Shared shape recognition for the as-of rewrites and the join planners:
+  * splitting a join condition into conjuncts, and spotting the
+  * equi-conjunct that makes Catalyst's hash machinery applicable. (Range
+  * joins with no equi-conjunct plan on the index joins:
+  * `graft.joins.SpatialPredicate.extractBand`.) */
 object RangeJoinShapes {
 
   def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -34,46 +35,6 @@ object RangeJoinShapes {
     (a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet)) ||
       (a.references.subsetOf(right.outputSet) && b.references.subsetOf(left.outputSet))
 
-  /** Orderable types whose cast-to-long is monotone non-decreasing AND
-    * total, so banding in long space generates a candidate superset and
-    * the exact predicate can refine. (Timestamps truncate to seconds,
-    * doubles truncate toward zero — both monotone.) TIMESTAMP_NTZ is
-    * deliberately absent: Spark 4.1 has no TIMESTAMP_NTZ -> BIGINT cast,
-    * so the rewrite would emit an unresolvable plan (mirrors
-    * AsOfAggregateRule.exactLongImage). Decimals are capped at precision
-    * 18: wider decimals can exceed the long range and non-ANSI
-    * Cast(decimal, long) returns null on overflow, which would make the
-    * generated Sequence null and silently DROP matching rows. */
-  def bandable(t: DataType): Boolean = t match {
-    case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
-        TimestampType => true
-    case d: DecimalType => d.precision <= 18
-    case _ => false
-  }
-
-  /** A conjunct normalized to `lo <= hi` (strictness folded away — the
-    * original conjunct stays in the refine filter). */
-  def asBound(e: Expression): Option[(Expression, Expression)] = e match {
-    case LessThanOrEqual(a, b) => Some((a, b))
-    case LessThan(a, b) => Some((a, b))
-    case GreaterThanOrEqual(a, b) => Some((b, a))
-    case GreaterThan(a, b) => Some((b, a))
-    case _ => None
-  }
-
-  /** Monotone embedding into long space for cell arithmetic. */
-  def toLong(e: Expression): Expression =
-    if (e.dataType == LongType) e else Cast(e, LongType)
-
-  /** floorDiv(v, w) in exact long arithmetic: (v - pmod(v, w)) div w. */
-  def cellOf(v: Expression, w: Long): Expression =
-    IntegralDivide(Subtract(v, Pmod(v, Literal(w))), Literal(w))
-
-  /** The two opposing cross-side bounds of a banded join: (lLow <= rHigh)
-    * and (rLow <= lHigh), all four deterministic and bandable. */
-  final case class Band(lLow: Expression, rHigh: Expression,
-      rLow: Expression, lHigh: Expression)
-
   /** The extreme-value-over-inequality-join aggregate: v (in B) bounded
     * by d (in A), plus the grouping split across the two sides. `strict`
     * marks a </> bound (rewritten to <=/>= on d∓1 with a boundary
@@ -84,147 +45,6 @@ object RangeJoinShapes {
       strict: Boolean, tolerance: Option[Long],
       gbA: Seq[Attribute], gbB: Seq[Attribute])
 }
-
-/** Planner-level banded 1-D range join — the time/interval analog of
-  * the partitioned spatial join, giving SQL users writing
-  * `l.ts BETWEEN r.lo AND r.hi` or
-  * `l.lo <= r.hi AND r.lo <= l.hi` the banded equi-join plan instead of
-  * Spark's quadratic BroadcastNestedLoopJoin.
-  *
-  * Recognition: an inner join whose condition carries two OPPOSING
-  * cross-side inequality conjuncts (one bounding a left expression above
-  * by a right expression, one the reverse) and no equi-conjunct. Rewrite:
-  *
-  *   Join(L, R, lA <= rB AND rC <= lD [AND rest])
-  *     =>
-  *   Project(L.out ++ R.out,
-  *     Join(Generate(explode(cells(lA..lD)), L)  as L + __lband,
-  *          Generate(explode(cells(rC..rB)), R)  as R + __rband,
-  *          Inner, __lband = __rband
-  *                 AND cell(greatest(lA, rC)) = __lband   -- ref-cell dedup
-  *                 AND <original condition>))             -- exact refine
-  *
-  * Cell ranges use least/greatest of the two endpoints' cells, so rows
-  * whose "interval" is inverted (lA > lD) keep raw theta-join semantics:
-  * the pair is still caught in the cell of the reference point
-  * max(lA, rC), which both spans provably cover whenever the two
-  * conjuncts hold. The cell width comes from a one-pass max-interval-
-  * length pre-pass over both (already pruned) children: the smallest
-  * width that caps per-row fanout at 2 cells. The rewritten join has an
-  * equi-conjunct on the cell id, so Catalyst plans a shuffled
-  * hash/sort-merge join and AQE handles sizing and skew — the machinery
-  * a dedicated IEJoin/interval-join operator would otherwise
-  * reimplement.
-  *
-  * `spark.graft.join.band.enabled=false` disables the rewrite. Inner,
-  * cross, and left-outer joins (the outer form composed by `TaggedJoin`
-  * around this inner rewrite). The rewrite fires unless the
-  * smaller side is under 64 KB (~1k rows) — a broadcast BNLJ is
-  * quadratic in the pair count even when one side "fits broadcast", so
-  * broadcastability alone is not a reason to skip banding.
-  */
-case class BandedRangeJoinRule(session: SparkSession) extends Rule[LogicalPlan] {
-  import RangeJoinShapes._
-
-  private def conf(key: String, default: String): String =
-    session.conf.getOption(key).getOrElse(default)
-
-  /** Smaller-side cutoff of `worthBanding`, ~1k rows. */
-  private val MinSideBytes = 65536L
-
-  /** Band unless the SMALLER side is genuinely tiny. A broadcast BNLJ
-    * evaluates the condition for every (left, right) pair — with the
-    * default 10 MB broadcast threshold the "small" side can be ~100k
-    * rows, i.e. 100k condition evals per probe row, which dwarfs the
-    * banded plan's one shuffle at any real scale. Below the cutoff
-    * (~1k rows) the per-probe scan is cheaper than exploding and
-    * shuffling both sides, so Spark's broadcast plan stands. */
-  private def worthBanding(left: LogicalPlan, right: LogicalPlan): Boolean = {
-    if (session.sessionState.conf.autoBroadcastJoinThreshold < 0) return true
-    left.stats.sizeInBytes.min(right.stats.sizeInBytes) > MinSideBytes
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf("spark.graft.join.band.enabled", "true") != "true") return plan
-    plan.transformUp {
-      case j @ Join(left, right, jt, Some(cond), _)
-          if (jt == Inner || jt == Cross) && !j.isStreaming &&
-            !hasEquiConjunct(cond, left, right) && worthBanding(left, right) =>
-        extract(cond, left, right).map(rewrite(j, _)).getOrElse(j)
-      case j @ Join(left, right, LeftOuter, Some(cond), _)
-          if !j.isStreaming && !hasEquiConjunct(cond, left, right) &&
-            worthBanding(left, right) =>
-        extract(cond, left, right).flatMap { b =>
-          TaggedJoin(session, j) { (l, r) =>
-            org.apache.spark.sql.graft.DatasetBridge.ofRows(session,
-              rewrite(Join(l, r, Inner, Some(cond), JoinHint.NONE), b))
-          }
-        }.getOrElse(j)
-    }
-  }
-
-  private def extract(cond: Expression, left: LogicalPlan,
-      right: LogicalPlan): Option[Band] = {
-    def ok(e: Expression, side: LogicalPlan): Boolean =
-      e.deterministic && e.references.nonEmpty &&
-        e.references.subsetOf(side.outputSet) && bandable(e.dataType)
-    val bounds = conjuncts(cond).flatMap(asBound)
-    val lr = bounds.find { case (lo, hi) => ok(lo, left) && ok(hi, right) }
-    val rl = bounds.find { case (lo, hi) => ok(lo, right) && ok(hi, left) }
-    for ((lLow, rHigh) <- lr; (rLow, lHigh) <- rl)
-      yield Band(lLow, rHigh, rLow, lHigh)
-  }
-
-  private def rewrite(j: Join, b: Band): LogicalPlan = {
-    val w = cellWidth(j.left, j.right, b)
-    def cellsOf(a: Expression, bb: Expression): Expression = {
-      val ca = cellOf(toLong(a), w)
-      val cb = cellOf(toLong(bb), w)
-      // Sequence is TimeZoneAware: optimizer-built instances must carry
-      // the session zone or the plan flips back to unresolved
-      Sequence(Least(Seq(ca, cb)), Greatest(Seq(ca, cb)), None,
-        Some(session.sessionState.conf.sessionLocalTimeZone))
-    }
-    val lcell = AttributeReference("__lband", LongType, nullable = false)()
-    val rcell = AttributeReference("__rband", LongType, nullable = false)()
-    val lgen = Generate(Explode(cellsOf(b.lLow, b.lHigh)),
-      unrequiredChildIndex = Nil, outer = false, qualifier = None,
-      generatorOutput = Seq(lcell), child = j.left)
-    val rgen = Generate(Explode(cellsOf(b.rLow, b.rHigh)),
-      unrequiredChildIndex = Nil, outer = false, qualifier = None,
-      generatorOutput = Seq(rcell), child = j.right)
-    // the pair is counted only in the cell holding the later of the two
-    // lower bounds — provably within both spans when the conjuncts hold
-    val refCell = EqualTo(
-      cellOf(Greatest(Seq(toLong(b.lLow), toLong(b.rLow))), w), lcell)
-    val newCond = Seq[Expression](EqualTo(lcell, rcell), refCell,
-      j.condition.get).reduce(And)
-    Project(j.left.output ++ j.right.output,
-      Join(lgen, rgen, Inner, Some(newCond), JoinHint.NONE))
-  }
-
-  /** Smallest width that caps per-row fanout at 2 cells: the max ABSOLUTE
-    * interval length across both sides (one partial-aggregated pre-pass
-    * per side, the 1-D analog of an extent pre-pass),
-    * floored at 1. abs() matters: the rewrite preserves inverted-row
-    * (lo > hi) theta semantics by exploding least..greatest of the
-    * endpoint cells, so a strongly inverted row sized against only the
-    * positive lengths would fan out |span|/width cells — abs keeps
-    * per-row fanout <= 2 for inverted rows too. */
-  private def cellWidth(left: LogicalPlan, right: LogicalPlan, b: Band): Long = {
-    def maxLen(plan: LogicalPlan, lo: Expression, hi: Expression): Long = {
-      val m = Alias(Max(Abs(Subtract(toLong(hi), toLong(lo))))
-        .toAggregateExpression(), "m")()
-      val rows = session.sessionState
-        .executePlan(Aggregate(Nil, Seq(m), plan))
-        .executedPlan.executeCollect()
-      if (rows.isEmpty || rows(0).isNullAt(0)) 0L else rows(0).getLong(0)
-    }
-    math.max(1L, math.max(maxLen(left, b.lLow, b.lHigh),
-      maxLen(right, b.rLow, b.rHigh)))
-  }
-}
-
 
 /** Shape matching + long-embedding helpers shared by the as-of family
   * of rules (AsOfAggregateRule, AsOfProbeJoinRule). */

@@ -234,11 +234,11 @@ object RelationalQueries {
     }),
 
     // PLAIN SQL interval-overlap (no key, no equi-conjunct): Spark alone
-    // would plan a quadratic BroadcastNestedLoopJoin; BandedRangeJoinRule
-    // recognizes the opposing inequality pair and rewrites to the banded
-    // cell equi-join (explode to cells sized by a max-interval pre-pass,
-    // shuffle on the cell id, exact refine + reference-cell dedup) —
-    // the SQL front door to the q22 operator.
+    // would plan a quadratic BroadcastNestedLoopJoin; SpatialJoinStrategy
+    // recognizes the opposing inequality pair as a range join and plans an
+    // index join over the two sides' spans (broadcast while a side fits,
+    // else partitioned), the whole condition as the exact refine — the
+    // SQL front door to the q22 operator.
     "q23_band_range_join" -> ((s, dir) => {
       import graft.Tables
       val ev = Tables.events(s, dir)
@@ -251,10 +251,9 @@ object RelationalQueries {
         .select(col("event_id").as("r_event"), unix_micros(col("ts")).as("rs"))
         .withColumn("re", col("rs") + (col("r_event") % 5 + 1) * hourUs)
         .createOrReplaceTempView("q23_r")
-      // NO conf window: the banded rewrite carries its own not-tiny
-      // policy (RangeJoinRuleSpec pins it firing under broadcast); a
-      // tiny-side BNLJ at gate scale is the optimal default-conf plan,
-      // and gates must execute what a later .count() would replan
+      // NO conf window: the range join plans an index join at every size
+      // (PlanAuditSpec pins it), and gates must execute what a later
+      // .count() would replan
       s.sql(
         "SELECT l_event, r_event FROM q23_l JOIN q23_r ON ls <= re AND rs <= le")
     }),
@@ -307,9 +306,9 @@ object RelationalQueries {
     }),
 
     // PLAIN SQL LEFT OUTER range join (point BETWEEN interval, no equi
-    // conjunct): BandedRangeJoinRule's outer form — banded inner join over
-    // a row-id-tagged left side, anti-join null pad unioned back — instead
-    // of Spark's quadratic BNLJ. Unmatched left rows must survive.
+    // conjunct): the range join on the index joins, left rows streamed and
+    // padded where unmatched, instead of Spark's quadratic BNLJ. Unmatched
+    // left rows must survive.
     // PLAIN SQL as-of over DATE columns with a day-count staleness bound
     // (`datediff(l.ld, r2.rd) <= 30`) — the DATE analog of q24. The
     // AsOfAggregateRule matcher maps the DateDiff conjunct onto the

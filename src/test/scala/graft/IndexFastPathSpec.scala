@@ -184,7 +184,11 @@ class IndexFastPathSpec extends AnyFunSuite {
     }
   }
 
-  private def shapeOf(g: Geometry): Shape = { val s = new Shape; s.set(GeomIO.write(g)); s }
+  private def shapeOf(g: Geometry): Shape = {
+    val s = new Shape(BoundReference(0, BinaryType, nullable = true))
+    s.set(new GenericInternalRow(Array[Any](GeomIO.write(g))))
+    s
+  }
 
   test("coordinate refine is JTS's for points and rectangles on edges, corners and distance ties") {
     val rnd = new java.util.Random(11L)

@@ -53,11 +53,11 @@ class InstallSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(injected(s).intersect(classes(s.experimental.extraOptimizations)).isEmpty)
   }
 
-  test("stock session: all 8 rules and the strategy in experimental") {
+  test("stock session: all 7 rules and the strategy in experimental") {
     val s = freshSession(withExtension = false)
     assert(strategies(s).size == 1)
     val all = operatorClasses(s) ++ postHocClasses(s)
-    assert(all.size == 8)
+    assert(all.size == 7)
     assert(classes(s.experimental.extraOptimizations) == all)
     assert(injected(s).intersect(all).isEmpty)
   }

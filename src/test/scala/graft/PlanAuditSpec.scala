@@ -165,14 +165,15 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(q22.contains("SortMergeJoin") || q22.contains("ShuffledHashJoin") ||
       q22.contains("BroadcastHashJoin"), "q22 lost the cell equi-join")
     assert(q22.contains("greatest"), "q22 lost the reference-cell dedup")
-    // q23 carries no conf window: at audit scale its sides are under the
-    // banded rule's not-tiny policy, so the justified tiny-side BNLJ is
-    // the right default-conf plan (the rewrite's firing-at-scale plan and
-    // execution are pinned in RangeJoinRuleSpec, incl. "fires under
-    // broadcast when no side is tiny"); the blanket sweep flags q23 the
-    // moment its pair product outgrows the justification cutoff
-    assert(!entries("q23_band_range_join").flagged,
-      "q23 BNLJ must stay pair-product-justified at audit scale")
+    // q23 and q26 carry no conf window: their range joins plan an index
+    // join at every size (the broadcast one while a non-preserved side
+    // fits), never a BNLJ
+    def rangeIndexed(name: String): Unit = {
+      val p = entries(name).plan
+      assert(p.contains("IndexSpatialJoin") && !p.contains("BroadcastNestedLoopJoin") &&
+        !p.contains("CartesianProduct"), s"$name must plan an index join:\n$p")
+    }
+    rangeIndexed("q23_band_range_join")
     // q24: the SQL max-subquery as-of idiom must route its decorrelated
     // inequality aggregate through the AsOfJoin sweep
     val q24 = entries("q24_asof_sql").plan
@@ -185,11 +186,8 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // onto the sweep's unix_date day space — same RDD-scan signature
     val q27 = entries("q27_asof_date").plan
     assert(q27.contains("ExistingRDD"), "q27 DATE as-of rewrite did not fire")
-    // q26 carries no conf window (see q23): justified tiny-side BNLJ at
-    // audit scale; the LEFT OUTER banded rewrite (cell explode + anti
-    // null pad) is pinned in RangeJoinRuleSpec at firing scale
-    assert(!entries("q26_range_left_outer").flagged,
-      "q26 BNLJ must stay pair-product-justified at audit scale")
+    // q26: the LEFT OUTER range join, on the same index joins (see q23)
+    rangeIndexed("q26_range_left_outer")
     // gp02 geoarrow roundtrip: a hash equi-join over the two geoparquet
     // reads — never a nested loop
     val gp02 = entries("gp02_geoarrow_roundtrip").plan

@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Planner-level range-join rewrites: the banded 1-D join
-  * (BandedRangeJoinRule) and the decorrelated as-of aggregate
-  * (AsOfAggregateRule) must fire on plain SQL, keep exact theta-join
-  * semantics, and purge BNLJ/cartesian from the executed plan. */
+/** Range joins and the range-join rewrites on plain SQL: the 1-D range
+  * join planned on the index joins (a band, `SpatialPredicate.extractBand`)
+  * and the decorrelated as-of aggregate (AsOfAggregateRule) keep exact
+  * theta-join semantics and purge BNLJ/cartesian from the executed plan.
+  * The range joins' oracle is the same query with
+  * `spark.graft.join.band.enabled=false`, a BNLJ. */
 class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -32,6 +34,18 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  /** `body` with range joins left to Spark's plan. */
+  private def bandOff[T](body: => T): T = {
+    spark.conf.set("spark.graft.join.band.enabled", "false")
+    try body finally spark.conf.set("spark.graft.join.band.enabled", "true")
+  }
+
+  /** The plan runs the range join on the partitioned index join: no BNLJ,
+    * no cartesian product, no cell explode. */
+  private def assertPartitioned(p: String): Unit =
+    assert(p.contains("PartitionedIndexSpatialJoin") && !p.contains("BroadcastNestedLoopJoin") &&
+      !p.contains("CartesianProduct") && !p.contains("Generate"), p)
+
   private def events(n: Int) = spark.range(n).select(
     col("id").as("eid"),
     (pmod(hash(col("id"), lit(7)), lit(100000)).cast("long")).as("ts"))
@@ -53,13 +67,10 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       val df = spark.sql(sql)
       (df, df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
     }
-    val p = planString(gotDf)
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-      s"banded rewrite must purge BNLJ/cartesian:\n$p")
-    assert(p.contains("Generate explode"), s"cell explode missing:\n$p")
-    // reference: same SQL with the rewrite disabled (broadcast BNLJ is fine
-    // at test scale)
-    val expect = spark.sql(sql).collect()
+    assertPartitioned(planString(gotDf))
+    // reference: same SQL with range joins left to Spark (broadcast BNLJ
+    // is fine at test scale)
+    val expect = bandOff(spark.sql(sql).collect())
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(got.nonEmpty && got == expect)
   }
@@ -73,20 +84,19 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("re", col("rs") + pmod(hash(col("rid"), lit(4)), lit(300)) - lit(20))
     l.createOrReplaceTempView("brj_l")
     r.createOrReplaceTempView("brj_r")
-    // one strict bound: stays in the refine filter, banding still applies
+    // one strict bound: stays in the refine, the span boxes still meet
     val sql = "SELECT lid, rid FROM brj_l JOIN brj_r " +
       "ON ls <= re AND rs < le"
     val (gotDf, got) = withBroadcastOff {
       val df = spark.sql(sql)
       (df, df.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq)
     }
-    val p = planString(gotDf)
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
-    val expect = l.join(r, col("ls") <= col("re") && col("rs") < col("le"))
-      .select("lid", "rid").collect()
+    assertPartitioned(planString(gotDf))
+    val expect = bandOff(l.join(r, col("ls") <= col("re") && col("rs") < col("le"))
+      .select("lid", "rid").collect())
       .map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
     assert(got.nonEmpty && got == expect)
-    assert(got.distinct.size == got.size, "reference-cell dedup emits pairs once")
+    assert(got.distinct.size == got.size, "reference-point dedup emits pairs once")
   }
 
   test("banded rewrite: LEFT OUTER range join keeps unmatched rows, no BNLJ") {
@@ -99,10 +109,8 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       (df, df.collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) -1L else r.getLong(1))).sorted.toSeq)
     }
-    val p = planString(gotDf)
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-      s"left-outer banded rewrite must purge BNLJ:\n$p")
-    val expect = spark.sql(sql).collect().map(r => (r.getLong(0),
+    assertPartitioned(planString(gotDf))
+    val expect = bandOff(spark.sql(sql).collect()).map(r => (r.getLong(0),
       if (r.isNullAt(1)) -1L else r.getLong(1))).sorted.toSeq
     assert(got == expect)
     assert(got.exists(_._2 == -1L) && got.exists(_._2 >= 0L),
@@ -116,49 +124,41 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     CacheRegistry.releaseAll() // count from zero
     val gotShared = withBroadcastOff {
       val df = spark.sql(shared)
-      val ps = planString(df)
-      assert(!ps.contains("BroadcastNestedLoopJoin") && !ps.contains("CartesianProduct"),
-        s"shared-name left-outer banded rewrite must purge BNLJ:\n$ps")
+      assertPartitioned(planString(df))
       df.collect().map(key).sorted.toSeq
     }
     // the release runs on the listener bus, after collect() returns
     val deadline = System.nanoTime() + 10000000000L
     while (CacheRegistry.pinnedCount > 0 && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(CacheRegistry.pinnedCount == 0, "rewrite caches not released")
-    spark.conf.set("spark.graft.join.band.enabled", "false")
-    val expectShared = try spark.sql(shared).collect().map(key).sorted.toSeq
-      finally spark.conf.set("spark.graft.join.band.enabled", "true")
+    assert(CacheRegistry.pinnedCount == 0, "a range join pins no cache")
+    val expectShared = bandOff(spark.sql(shared).collect()).map(key).sorted.toSeq
     assert(gotShared == expectShared && gotShared == got)
   }
 
   test("banded rewrite fires under broadcast when no side is tiny") {
     // a broadcast BNLJ is quadratic in the pair count even when one side
-    // "fits broadcast" — the rule bands unless the SMALLER side's stats
-    // are under the fixed 64 KB cutoff
-    val big1 = events(20000)   // range stats ≈ 160 KB > 64 KB cutoff
+    // "fits broadcast": with broadcast on, the side that fits builds the
+    // broadcast index join, large or tiny
+    val big1 = events(20000)
     val big2 = windows(12000)
     val joined = big1.join(big2,
       col("ts") >= col("ws") && col("ts") <= col("we"))
     val p = planString(joined)
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-      s"large-stat sides must band even though one fits broadcast:\n$p")
-    assert(p.contains("Generate explode"), s"cell explode missing:\n$p")
-    // a genuinely tiny side stays on Spark's broadcast plan: the per-probe
-    // scan of ~500 rows beats exploding and shuffling both sides
+    assert(p.contains("BroadcastIndexSpatialJoin") && !p.contains("BroadcastNestedLoopJoin") &&
+      !p.contains("CartesianProduct") && !p.contains("Generate"),
+      s"sides that fit broadcast plan the broadcast index join:\n$p")
     val tiny = windows(500)
     val pt = planString(big1.join(tiny,
       col("ts") >= col("ws") && col("ts") <= col("we")))
-    assert(pt.contains("BroadcastNestedLoopJoin"),
-      s"tiny side must keep the broadcast plan:\n$pt")
-    // correctness of the banded-under-broadcast plan vs the BNLJ reference
+    assert(pt.contains("BroadcastIndexSpatialJoin") && !pt.contains("BroadcastNestedLoopJoin"),
+      s"a tiny side builds the broadcast index join:\n$pt")
+    // correctness under broadcast vs the BNLJ reference
     val got = joined.select("eid", "wid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    spark.conf.set("spark.graft.join.band.enabled", "false")
-    val expect = try big1.join(big2,
+    val expect = bandOff(big1.join(big2,
         col("ts") >= col("ws") && col("ts") <= col("we"))
-      .select("eid", "wid").collect()
+      .select("eid", "wid").collect())
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    finally spark.conf.set("spark.graft.join.band.enabled", "true")
     assert(got.nonEmpty && got == expect)
   }
 
@@ -301,8 +301,8 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       r.createOrReplaceTempView("brj_fz_r")
       val opA = if (strictA) "<" else "<="
       val opB = if (strictB) "<" else "<="
-      // every third iteration also fuzzes the LEFT OUTER form (row-id
-      // tag + anti-join null pad) against Spark's own outer BNLJ
+      // every third iteration also fuzzes the LEFT OUTER form against
+      // Spark's own outer BNLJ
       val joinKind = if (it % 3 == 2) "LEFT JOIN" else "JOIN"
       val sql = s"SELECT lid, rid FROM brj_fz_l $joinKind brj_fz_r " +
         s"ON ls $opA re AND rs $opB le"
@@ -310,16 +310,10 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
         (x.getLong(0), if (x.isNullAt(1)) Long.MinValue else x.getLong(1))
       val got = withBroadcastOff {
         val df = spark.sql(sql)
-        val p = planString(df)
-        assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-          s"iter $it must band")
+        assertPartitioned(planString(df))
         df.collect().map(key).sorted.toSeq
       }
-      val expect = {
-        spark.conf.set("spark.graft.join.band.enabled", "false")
-        try spark.sql(sql).collect().map(key).sorted.toSeq
-        finally spark.conf.set("spark.graft.join.band.enabled", "true")
-      }
+      val expect = bandOff(spark.sql(sql).collect()).map(key).sorted.toSeq
       assert(got == expect, s"iter $it ($joinKind): ${got.size} vs ${expect.size} pairs")
     }
   }
@@ -492,9 +486,8 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("banded rewrite declines TIMESTAMP_NTZ (no BIGINT cast exists) but SQL still runs") {
-    // Spark 4.1 has no TIMESTAMP_NTZ -> BIGINT cast: a rewrite that
-    // banded NTZ columns would emit an unresolvable plan and fail a
-    // query stock Spark runs fine. bandable() must exclude NTZ.
+    // TIMESTAMP_NTZ is not a bandable type: the span reader does not read
+    // it, so the join keeps Spark's plan and must still run.
     val l = spark.range(40).select(col("id").as("lid"),
       timestamp_seconds(col("id") * 60).cast("timestamp_ntz").as("lts"))
     val r = spark.range(20).select(col("id").as("rid"),
@@ -514,9 +507,8 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("banded rewrite declines DECIMAL(precision > 18): overflow-to-null would drop rows") {
-    // non-ANSI Cast(decimal(38), long) nulls on overflow -> Sequence null
-    // -> Generate drops the row: the banded plan would silently LOSE
-    // matching pairs. Precision <= 18 is the guaranteed-exact domain.
+    // bandable() keeps decimals of at most 18 digits: a wider decimal keeps
+    // Spark's plan, and its rows must all survive.
     val big = BigDecimal("92233720368547758080000") // > Long.MaxValue
     val l = spark.range(30).select(col("id").as("lid"),
       (col("id").cast("decimal(38,0)") * lit(1000) + lit(big)).as("lv"))
@@ -533,13 +525,13 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val expect = spark.sql(sql).collect()
       .map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
     assert(got.nonEmpty && got == expect)
-    // and the exact-long decimal domain still bands
+    // and a decimal of 18 digits plans the range join
     val l18 = spark.range(200).select(col("id").as("lid"),
       (pmod(hash(col("id"), lit(5)), lit(9000)).cast("decimal(18,0)")).as("lv"))
     val r18 = spark.range(100).select(col("id").as("rid"),
       (pmod(hash(col("id"), lit(6)), lit(9000)).cast("decimal(18,0)")).as("rs"))
       // decimal + literal widens to precision 19 — cast back so the
-      // bound expression itself stays in the exact-long domain
+      // bound expression itself stays bandable
       .withColumn("re", (col("rs") + lit(BigDecimal(40))).cast("decimal(18,0)"))
     l18.createOrReplaceTempView("brj_d18_l")
     r18.createOrReplaceTempView("brj_d18_r")
@@ -547,9 +539,7 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       "ON lv >= rs AND lv <= re"
     withBroadcastOff {
       val df = spark.sql(sql18)
-      val p = planString(df)
-      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-        s"decimal(18,0) must still band:\n$p")
+      assertPartitioned(planString(df))
       assert(df.collect().nonEmpty)
     }
   }
@@ -678,11 +668,10 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!bp.contains("LeftSemi"), s"two-sided distinct keeps the join:\n$bp")
   }
 
-  test("auto cell width sizes from |hi - lo|: one strongly inverted row stays O(1) fanout") {
-    // normal rows have length <= 50; one row is inverted by ~1e9. With
-    // signed max-length sizing the width would be ~50 and the inverted
-    // row would explode ~2e7 cells (or die in Sequence's length cap);
-    // abs() sizing makes the width ~1e9 and per-row fanout <= 2.
+  test("a strongly inverted row is one box: no fanout, rows exact") {
+    // normal rows have length <= 50; one row is inverted by ~1e9. Its span
+    // is one box, [min(lo, hi), max(lo, hi)], routed to the KDB leaves it
+    // meets, and the condition refines its candidates.
     val l = spark.range(300).select(col("id").as("lid"),
       (pmod(hash(col("id"), lit(11)), lit(5000)).cast("long")).as("ls"))
       .withColumn("le",
@@ -702,13 +691,43 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
         df.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq)
     }
     val secs = (System.nanoTime() - t0) / 1e9
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
+    assertPartitioned(p)
     assert(secs < 60, s"inverted-row fanout blew up: $secs s")
-    val expect = {
-      spark.conf.set("spark.graft.join.band.enabled", "false")
-      try spark.sql(sql).collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
-      finally spark.conf.set("spark.graft.join.band.enabled", "true")
-    }
+    val expect = bandOff(spark.sql(sql).collect())
+      .map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
     assert(got.nonEmpty && got == expect)
+  }
+
+  test("DOUBLE spans with NaN, ±∞ and values past the long range ≡ rule-off run") {
+    // Spark orders NaN above every value: NaN maps to +∞ on the index's
+    // double line. Planning casts no value (a NaN cast to BIGINT fails
+    // under ANSI mode), and the rows equal Spark's BNLJ
+    val specials = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      9.4e18, -9.4e18, 1e300, -1e300)
+    def side(n: Int, seed: Int, id: String, s: String, e: String) = {
+      val start = pmod(hash(col("id"), lit(seed)), lit(20000)).cast("double") - 10000.0
+      // every 11th row planted: a special start, or a special end
+      val special = element_at(typedLit(specials), (col("id") % 7 + 1).cast("int"))
+      spark.range(n).select(col("id").as(id),
+        when(col("id") % 22 === 0, special).otherwise(start).as(s),
+        when(col("id") % 22 === 11, special)
+          .otherwise(start + pmod(hash(col("id"), lit(seed + 1)), lit(300)) - 20.0).as(e))
+    }
+    side(600, 41, "lid", "ls", "le").createOrReplaceTempView("brj_nan_l")
+    side(500, 43, "rid", "rs", "re").createOrReplaceTempView("brj_nan_r")
+    def key(x: org.apache.spark.sql.Row) =
+      (x.getLong(0), if (x.isNullAt(1)) Long.MinValue else x.getLong(1))
+    for (kind <- Seq("JOIN", "LEFT JOIN")) {
+      val sql = s"SELECT lid, rid FROM brj_nan_l $kind brj_nan_r ON ls <= re AND rs <= le"
+      val got = withBroadcastOff {
+        val df = spark.sql(sql)
+        assertPartitioned(planString(df))
+        df.collect().map(key).sorted.toSeq
+      }
+      val expect = withBroadcastOff(bandOff(spark.sql(sql).collect())).map(key).sorted.toSeq
+      assert(got == expect, s"$kind: ${got.diff(expect).take(5)} vs ${expect.diff(got).take(5)}")
+      assert(got.exists { case (l, _) => l % 22 == 0 } && got.exists { case (l, _) => l % 22 == 11 },
+        "the planted rows match")
+    }
   }
 }

@@ -300,8 +300,18 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
         "left_semi", "left_anti").map(p.join(b, st.intersects(col("pgeom"), col("bgeom")), _)) :+
         spark.sql("""SELECT pid FROM nojob_p WHERE pid < 3 OR EXISTS (
           SELECT 1 FROM nojob_b WHERE st_intersects(pgeom, bgeom))""")
-      for (plan <- spatial.map(_.queryExecution.executedPlan.toString)) {
-        assert(plan.contains("PartitionedIndexSpatialJoin") &&
+      // large-large range joins (an interval overlap, no equi-conjunct)
+      // plan the same exec: no cell explode, no cached side
+      val lo = spark.range(20000).select(col("id").as("lid"),
+        pmod(hash(col("id"), lit(1)), lit(50000)).as("ls"))
+        .withColumn("le", col("ls") + pmod(hash(col("lid"), lit(2)), lit(300)))
+      val ro = spark.range(20000).select(col("id").as("rid"),
+        pmod(hash(col("id"), lit(3)), lit(50000)).as("rs"))
+        .withColumn("re", col("rs") + pmod(hash(col("rid"), lit(4)), lit(300)))
+      val range = Seq("inner", "left_outer", "full_outer").map(
+        lo.join(ro, col("ls") <= col("re") && col("rs") <= col("le"), _))
+      for (plan <- (spatial ++ range).map(_.queryExecution.executedPlan.toString)) {
+        assert(plan.contains("PartitionedIndexSpatialJoin") && !plan.contains("Generate") &&
           !plan.contains("BroadcastNestedLoopJoin") && !plan.contains("InMemory"), plan.take(2000))
         assert(CacheRegistry.pinnedCount == 0, plan.take(2000))
       }

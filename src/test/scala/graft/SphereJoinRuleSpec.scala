@@ -407,7 +407,7 @@ class SphereJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("LEFT OUTER with a user __tj_ column plans the partitioned index join") {
-    // a user column named with TaggedJoin's tag prefix is a column like
+    // a user column named like an internal tag (`__tj_`) is a column like
     // any other to a spatial join, which runs on the partitioned index join
     pts(150, 301, "aid", "ag")
       .withColumn("__tj_mid", col("aid") * 1000)
