@@ -14,11 +14,21 @@ import graft.sources.RandomGeometry
   *
   * `MicroBench index` runs only the index-join layer ([[indexJoins]]),
   * without a Spark session; a full run includes it as `index_join`.
+  * `MicroBench gpread [N]` runs only the GeoParquet window-read layer
+  * ([[geoParquetReads]], N windows, default 48).
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("index")) {
       println(s"""{"metric":"index_join","layer":${indexJoins()}}""")
+      return
+    }
+    if (args.headOption.contains("gpread")) {
+      val spark = GraftExtensions.localSession(
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "ERROR")
+      val n = args.lift(1).map(_.toInt).getOrElse(48)
+      println(s"""{"metric":"geoparquet_read","layer":${geoParquetReads(spark, n)}}""")
+      spark.stop()
       return
     }
     val n = sys.env.getOrElse("SPARK_GRAFT_MICRO_N", "200000").toLong
@@ -223,6 +233,58 @@ object MicroBench {
     println(s"""{"metric":"micro_total","value":$total,"unit":"sec","n":$n,"queries":$qs,""" +
       s""""index_join":${indexJoins()}}""")
     spark.stop()
+  }
+
+  /** GeoParquet window reads' own layer: 150k uniform points written as
+    * a 16-file GeoParquet dataset, then `n` distinct square windows
+    * (0.1 %, 1 % and 10 % of the extent in turn) each opened with
+    * `GeoParquet.read` and collected through an `st_intersects` filter,
+    * after 8 untimed windows. Reports the median open and read ms (the
+    * read from open to collected ids) and the codegen compiles and Spark
+    * jobs per timed read. */
+  def geoParquetReads(spark: org.apache.spark.sql.SparkSession, n: Int): String = {
+    import graft.sources.GeoParquet
+    val dir = "/tmp/graft_micro_gpread"
+    def coord(salt: Int) = pmod(hash(col("id"), lit(salt)), lit(1000000)).cast("double") / 1000.0
+    GeoParquet.write(spark.range(150000).select(col("id"), st.point(coord(1), coord(2)).as("geom")),
+      dir, "geom", clusterPartitions = 16)
+    val rnd = new java.util.Random(7)
+    val selectivities = Seq(0.001, 0.01, 0.1)
+    def read(i: Int): (Double, Double) = {
+      val side = 1000.0 * math.sqrt(selectivities(i % selectivities.size))
+      val x0 = rnd.nextDouble() * (1000.0 - side)
+      val y0 = rnd.nextDouble() * (1000.0 - side)
+      val t0 = System.nanoTime()
+      val df = GeoParquet.read(spark, dir)
+      val opened = System.nanoTime()
+      df.where(st.intersects(col("geom"),
+        st.makeEnvelope(lit(x0), lit(y0), lit(x0 + side), lit(y0 + side)))).select("id").collect()
+      ((opened - t0) / 1e6, (System.nanoTime() - t0) / 1e6)
+    }
+    (0 until 8).foreach(read)
+    // listener events arrive in order: once the sentinel job is seen,
+    // every job of the timed reads has been counted
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == "gpread_sentinel") sentinel.countDown()
+        else jobs.incrementAndGet()
+    }
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    spark.sparkContext.addSparkListener(listener)
+    val compiles0 = compiles.getCount
+    val times = (0 until n).map(i => read(8 + i))
+    val compiled = compiles.getCount - compiles0
+    spark.sparkContext.setJobGroup("gpread_sentinel", "gpread_sentinel")
+    spark.sparkContext.parallelize(Seq(1), 1).count()
+    spark.sparkContext.clearJobGroup()
+    sentinel.await(10, java.util.concurrent.TimeUnit.SECONDS)
+    spark.sparkContext.removeSparkListener(listener)
+    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+    f"""{"reads":$n,"open_ms":${median(times.map(_._1))}%.1f,""" +
+      f""""read_ms":${median(times.map(_._2))}%.1f,""" +
+      f""""compiles_per_read":${compiled.toDouble / n}%.2f,"jobs_per_read":${jobs.get.toDouble / n}%.2f}"""
   }
 
   /** The index joins' own layer, on one thread over rows in memory:

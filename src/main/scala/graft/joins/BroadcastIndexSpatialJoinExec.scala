@@ -78,12 +78,16 @@ case class BroadcastIndexSpatialJoinExec(
 
   override lazy val metrics = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
-    "candidatePairs" -> SQLMetrics.createMetric(sparkContext, "index candidate pairs"))
+    "candidatePairs" -> SQLMetrics.createMetric(sparkContext, "index candidate pairs"),
+    "indexBuildTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "index build time"),
+    "indexWaitTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "index wait time"))
 
   protected override def doExecute(): RDD[InternalRow] = {
     import BroadcastIndexSpatialJoinExec._
     val numOutputRows = longMetric("numOutputRows")
     val candidatePairs = longMetric("candidatePairs")
+    val buildTime = longMetric("indexBuildTime")
+    val waitTime = longMetric("indexWaitTime")
     val broadcastRows = buildPlan.executeBroadcast[Array[InternalRow]]()
     val boundBuildGeom = BindReferences.bindReference(buildGeom, buildPlan.output)
     val boundStreamGeom = BindReferences.bindReference(streamGeom, streamPlan.output)
@@ -104,7 +108,7 @@ case class BroadcastIndexSpatialJoinExec(
       // shuffle directly above reads them as such
       val toUnsafe = UnsafeProjection.create(outTypes)
       val rows = broadcastRows.value
-      val index = indexFor(rows, (boundBuildGeom, spherical))(
+      val index = indexFor(rows, (boundBuildGeom, spherical), buildTime, waitTime)(
         buildIndex(rows.iterator, boundBuildGeom, spherical))
       val probe = new Probe(boundStreamGeom, boundDistance, boundExtra, pred, bIsLeft,
         candidatePairs)
@@ -543,18 +547,28 @@ object BroadcastIndexSpatialJoinExec {
     java.util.HashMap[AnyRef, java.lang.ref.WeakReference[AnyRef]]]()
 
   /** The index `build` makes over broadcast `rows`, built once per
-    * broadcast value and `key`. */
-  def indexFor[I <: AnyRef](rows: Array[InternalRow], key: AnyRef)(build: => I): I = {
+    * broadcast value and `key`. The task that builds adds the build's
+    * time to `buildTime`; a task that finds the index built adds the time
+    * it waited for the lock, mostly another task's build, to `waitTime`. */
+  def indexFor[I <: AnyRef](rows: Array[InternalRow], key: AnyRef,
+      buildTime: SQLMetric, waitTime: SQLMetric)(build: => I): I = {
+    val start = System.nanoTime()
     val perBroadcast = indexes.synchronized {
       indexes.computeIfAbsent(rows, _ => new java.util.HashMap())
     }
     perBroadcast.synchronized {
+      val locked = System.nanoTime()
       val cached = perBroadcast.get(key)
-      Option(if (cached == null) null else cached.get).getOrElse {
-        val index = build
-        perBroadcast.put(key, new java.lang.ref.WeakReference[AnyRef](index))
-        index
-      }.asInstanceOf[I]
+      Option(if (cached == null) null else cached.get) match {
+        case Some(index) =>
+          waitTime += locked - start
+          index.asInstanceOf[I]
+        case None =>
+          val index = build
+          buildTime += System.nanoTime() - locked
+          perBroadcast.put(key, new java.lang.ref.WeakReference[AnyRef](index))
+          index
+      }
     }
   }
 

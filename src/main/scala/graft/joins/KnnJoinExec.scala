@@ -56,11 +56,15 @@ case class KnnJoinExec(
 
   override lazy val metrics = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
-    "candidatePairs" -> SQLMetrics.createMetric(sparkContext, "knn candidate pairs"))
+    "candidatePairs" -> SQLMetrics.createMetric(sparkContext, "knn candidate pairs"),
+    "indexBuildTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "index build time"),
+    "indexWaitTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "index wait time"))
 
   protected override def doExecute(): RDD[InternalRow] = {
     val numOutputRows = longMetric("numOutputRows")
     val candidatePairs = longMetric("candidatePairs")
+    val buildTime = longMetric("indexBuildTime")
+    val waitTime = longMetric("indexWaitTime")
     val broadcastRows = objectPlan.executeBroadcast[Array[InternalRow]]()
     val objects = ObjectSide.bound(objectPlan.output, objectGeom, tieBreak, spheroid)
     val boundQueryGeom = BindReferences.bindReference(queryGeom, queryPlan.output)
@@ -71,7 +75,7 @@ case class KnnJoinExec(
 
     queryPlan.execute().mapPartitions { queryIter =>
       val rows = broadcastRows.value
-      val index = BroadcastIndexSpatialJoinExec.indexFor(rows, objects)(
+      val index = BroadcastIndexSpatialJoinExec.indexFor(rows, objects, buildTime, waitTime)(
         objects.index(rows.iterator, copy = false))
       val emit = new Emit(objLeft, ranked, outTypes)
       val search = new Search(index)

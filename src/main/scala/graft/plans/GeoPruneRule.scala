@@ -2,10 +2,12 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DoubleType, StructType}
 import org.locationtech.jts.geom.Envelope
 import graft.functions.GeomScalar
 import graft.geom.GeomIO
@@ -19,18 +21,34 @@ class GeoPrunedFileIndex(
   extends InMemoryFileIndex(spark, files, Map.empty[String, String], schema,
     FileStatusCache.getOrCreate(spark), None, None)
 
+/** A DOUBLE literal whose generated code reads its value from the
+  * references array, as Spark's `Literal` already does for NaN and ±∞,
+  * instead of inlining it. Filters that differ only in such bounds then
+  * generate the same Java, so a new query window hits the codegen cache
+  * rather than compiling a new class. Still a `Literal`: filter pushdown
+  * and the plan text see the plain value. */
+class ReferencedLiteral(v: Double) extends Literal(v, DoubleType) {
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("bound", java.lang.Double.valueOf(v))
+    ev.copy(code = code"final double ${ev.value} = (double) $ref;", isNull = FalseLiteral)
+  }
+}
+
 /** Rewrites spatial filters against a geometry column that has a sibling
   * `<name>_bbox` covering column into additional bbox range conjuncts:
   *
   *   st_intersects(geom, <const>) ∧ ...
-  *     ⇒ st_intersects(geom, <const>) ∧ geom_bbox.xmin <= env.xmax ∧ ...
+  *     ⇒ geom_bbox.xmin <= env.xmax ∧ ... ∧ st_intersects(geom, <const>) ∧ ...
   *
   * The range predicates are plain comparisons on struct fields, which
   * Spark's parquet source pushes down to row-group min/max pruning — this
   * one rewrite buys the reference's covering-column skip
   * (rust/sedona-geoparquet/src/file_opener.rs:315-340 and the ST-predicate
   * → bbox extraction of rust/sedona-expr/src/spatial_filter.rs:50-199).
-  * The original ST predicate stays for exact refinement.
+  * The original ST predicate stays for exact refinement, after the
+  * ranges: a scanned row outside the window fails on four comparisons
+  * before any WKB is parsed. The bounds are [[ReferencedLiteral]]s, so
+  * every window compiles to the same filter code.
   */
 object GeoPruneRule extends Rule[LogicalPlan] {
 
@@ -58,11 +76,11 @@ object GeoPruneRule extends Rule[LogicalPlan] {
       bbox.dataType.asInstanceOf[org.apache.spark.sql.types.StructType].fieldIndex(name),
       Some(name))
     And(And(
-      LessThanOrEqual(f("xmin"), Literal(env.getMaxX)),
-      GreaterThanOrEqual(f("xmax"), Literal(env.getMinX))),
+      LessThanOrEqual(f("xmin"), new ReferencedLiteral(env.getMaxX)),
+      GreaterThanOrEqual(f("xmax"), new ReferencedLiteral(env.getMinX))),
       And(
-        LessThanOrEqual(f("ymin"), Literal(env.getMaxY)),
-        GreaterThanOrEqual(f("ymax"), Literal(env.getMinY))))
+        LessThanOrEqual(f("ymin"), new ReferencedLiteral(env.getMaxY)),
+        GreaterThanOrEqual(f("ymax"), new ReferencedLiteral(env.getMinY))))
   }
 
   /** Filter envelopes per geometry-attribute name: prunable-predicate
@@ -179,6 +197,6 @@ object GeoPruneRule extends Rule[LogicalPlan] {
         case _ => Nil
       }
       if (added.isEmpty && (newChild eq child)) fl
-      else Filter(added.foldLeft(cond)(And), newChild)
+      else Filter((added :+ cond).reduceLeft(And), newChild)
   }
 }

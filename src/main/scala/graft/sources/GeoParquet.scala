@@ -381,29 +381,62 @@ object GeoParquet {
   }
 
   /** The `geo` footer key-value metadata of a parquet file/dataset (first
-    * part file), if present. */
+    * data file), if present. */
   def footerGeoJson(spark: SparkSession, path: String): Option[String] =
-    footerMeta(spark, path).flatMap(_._1)
+    footerMeta(spark, path).flatMap(f => geoKey(f._1))
 
-  /** First part file's footer: (`geo` key JSON if present, parquet
-    * schema). One footer read covers both the GeoParquet metadata and the
-    * native-logical-type probe. */
+  private def geoKey(f: org.apache.parquet.hadoop.Footer): Option[String] =
+    Option(f.getParquetMetadata.getFileMetaData.getKeyValueMetaData.get("geo"))
+
+  /** The footer of the data file Spark's schema inference reads under
+    * `path`: the path itself, or the first file of the directory by name
+    * among those Spark's listing keeps (not hidden by a leading `_` or
+    * `.`, not a summary file). With it, whether that footer is all the
+    * inference would read: false for a directory with subdirectories (a
+    * partitioned layout) or a `_metadata`/`_common_metadata` summary,
+    * which Spark consults first. One footer read covers the read schema,
+    * the GeoParquet metadata and the native-logical-type probe. */
   private def footerMeta(spark: SparkSession, path: String)
-    : Option[(Option[String], org.apache.parquet.schema.MessageType)] = {
+    : Option[(org.apache.parquet.hadoop.Footer, Boolean)] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
-    val file =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).headOption
-      else Some(root)
+    val (file, sole) =
+      if (fs.getFileStatus(root).isDirectory) {
+        val listed = fs.listStatus(root)
+          .filterNot(s => org.apache.spark.sql.graft.DatasetBridge.hiddenFromListing(s.getPath.getName))
+        def summary(n: String) = n.startsWith("_metadata") || n.startsWith("_common_metadata")
+        val data = listed.filter(s => s.isFile && !summary(s.getPath.getName))
+        (data.map(_.getPath).sortBy(_.getName).headOption, data.length == listed.length)
+      } else (Some(root), true)
     file.map { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      try (Option(r.getFileMetaData.getKeyValueMetaData.get("geo")),
-        r.getFileMetaData.getSchema)
+      try (new org.apache.parquet.hadoop.Footer(f, r.getFooter), sole)
       finally r.close()
+    }
+  }
+
+  /** The read schema from the footer `footerMeta` found, or None where
+    * Spark's inference would read more than that footer (or merge every
+    * file's, under `spark.sql.parquet.mergeSchema`). Spark's own
+    * `readSchemaFromFooter` builds it as the inference does: the Spark
+    * row-metadata JSON when present, else the converted parquet schema.
+    * Native GEOMETRY/GEOGRAPHY columns convert with the annotations
+    * stripped and without the row metadata, so their tags come from the
+    * `geo` key or the annotation's CRS. */
+  private def footerSchema(spark: SparkSession,
+      footer: Option[(org.apache.parquet.hadoop.Footer, Boolean)],
+      native: Seq[(String, String)]): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    footer.collect {
+      case (f, _) if native.nonEmpty =>
+        new ParquetToSparkSchemaConverter(conf).convert(
+          stripGeoAnnotations(f.getParquetMetadata.getFileMetaData.getSchema))
+      case (f, true) if !conf.isParquetSchemaMergingEnabled =>
+        ParquetFileFormat.readSchemaFromFooter(f, new ParquetToSparkSchemaConverter(conf))
     }
   }
 
@@ -537,12 +570,15 @@ object GeoParquet {
   /** Read a (Geo)Parquet dataset; when a `geo` footer key is present
     * (ours or an external writer's — GeoPandas, sedona-db), its geometry
     * columns are tagged with field metadata so `geometryColumns` and the
-    * CRS plumbing see them. Files carrying the native parquet GEOMETRY /
-    * GEOGRAPHY logical types (no `geo` key; GeoPandas with
+    * CRS plumbing see them. The read schema comes from the one footer
+    * opened here (`footerSchema`), so opening a dataset starts no Spark
+    * job; only a partitioned layout, a summary file or schema merging
+    * falls back to Spark's inference. Files carrying the native parquet
+    * GEOMETRY / GEOGRAPHY logical types (no `geo` key; GeoPandas with
     * `store_schema=False`, sedona-db native writes — reference
-    * io/test_parquet.py "Parquet Geometry" cases) read through an
-    * explicitly-converted schema, since Spark's own inference rejects
-    * the annotation. */
+    * io/test_parquet.py "Parquet Geometry" cases) read through the
+    * annotation-stripped schema, since Spark's own inference rejects the
+    * annotation. */
   def read(spark: SparkSession, path: String): DataFrame =
     read(spark, path, Map.empty[String, String])
 
@@ -564,15 +600,10 @@ object GeoParquet {
   def read(spark: SparkSession, path: String,
       geometryColumns: Map[String, String], validate: Boolean): DataFrame = {
     val fm = footerMeta(spark, path)
-    val native = fm.map(f => nativeGeoColumns(f._2)).getOrElse(Nil)
-    val df =
-      if (native.isEmpty) spark.read.parquet(path)
-      else {
-        val st = new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(spark.sessionState.conf)
-          .convert(stripGeoAnnotations(fm.get._2))
-        spark.read.schema(st).parquet(path)
-      }
+    val native = fm.map(f =>
+      nativeGeoColumns(f._1.getParquetMetadata.getFileMetaData.getSchema)).getOrElse(Nil)
+    val df = footerSchema(spark, fm, native)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
     val missing = geometryColumns.keys.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"Geometry columns not found in schema: ${missing.mkString(", ")}")
@@ -582,7 +613,7 @@ object GeoParquet {
     // 1.1 nested coordinate layouts) decode through sd_fromgeoarrow_<enc>
     // so downstream operators always see WKB geometry.
     val tagged = (geometryColumns.toSeq.map { case (n, c) => (n, c, "WKB") } ++
-      (fm.flatMap(_._1).toSeq.flatMap(parseGeoColumns) ++
+      (fm.flatMap(f => geoKey(f._1)).toSeq.flatMap(parseGeoColumns) ++
         native.map { case (n, c) => (n, c, "WKB") })
         .filter { case (name, _, _) =>
           df.columns.contains(name) &&

@@ -35,6 +35,12 @@ object DatasetBridge {
 
   def expr(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** True for a file or directory name Spark's file listing skips (the
+    * private[spark] HadoopFSUtils.shouldFilterOutPathName): a leading `_`
+    * or `.`, but not the `_metadata`/`_common_metadata` summaries. */
+  def hiddenFromListing(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** DataFrame over an RDD of UnsafeRows matching `schema` (the
     * private[sql] internalCreateDataFrame — used by ScalableRank to
     * re-enter DataFrame land after a per-partition index pass). */

@@ -379,6 +379,149 @@ class GeoParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** `body`'s result and the number of Spark jobs it started: listener
+    * events arrive in order, so once a sentinel job run after `body` is
+    * seen, every job `body` started has been counted. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var sentinel = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == "sentinel") sentinel = true
+        else jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      spark.sparkContext.setJobGroup("sentinel", "sentinel")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!sentinel && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sentinel)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def withMergeSchema[T](body: => T): T = {
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try body finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  test("read takes its schema from the footer: no job, the schema Spark's inference gives") {
+    val base = Files.createTempDirectory("gp_open").toString
+    val wkb = s"$base/wkb11"
+    GeoParquet.write(sample, wkb, "geom", crs = "EPSG:3857")
+    val v10 = s"$base/v10"
+    GeoParquet.write(sample, v10, "geom", geoparquetVersion = "1.0")
+    val v20 = s"$base/v20"
+    GeoParquet.write(sample.limit(100), v20, "geom", geoparquetVersion = "2.0")
+    val arrow = Seq("point" -> "POINT (3 4)", "linestring" -> "LINESTRING (0 0, 1 1)",
+      "polygon" -> "POLYGON ((0 0, 1 0, 1 1, 0 0))", "multipoint" -> "MULTIPOINT ((1 1), (2 3))",
+      "multilinestring" -> "MULTILINESTRING ((0 0, 1 1), (5 5, 6 7))",
+      "multipolygon" -> "MULTIPOLYGON (((0 0, 2 0, 2 2, 0 0)), ((5 5, 7 5, 7 7, 5 5)))")
+      .map { case (enc, wkt) =>
+        val d = s"$base/ga_$enc"
+        GeoParquet.write(spark.range(30).select(col("id"),
+          st.f("st_translate", st.geomFromWkt(lit(wkt)), col("id").cast("double"),
+            lit(0.0)).as("geom")), d, "geom", crs = "EPSG:3857", encoding = enc)
+        d -> Map.empty[String, String]
+      }
+    val plain = s"$base/plain"
+    spark.range(20).select(col("id"),
+      st.f("st_asbinary", st.point(col("id").cast("double"), lit(1.0))).as("geom"))
+      .write.parquet(plain)
+    val empty = s"$base/empty"
+    GeoParquet.write(sample.limit(0), empty, "geom")
+    val single = new java.io.File(wkb).listFiles()
+      .filter(f => f.getName.startsWith("part-")).minBy(_.getName).getPath
+    val shapes = Seq(wkb -> Map.empty[String, String], v10 -> Map.empty[String, String],
+      v20 -> Map.empty[String, String]) ++ arrow ++
+      Seq(plain -> Map("geom" -> "EPSG:4326"), empty -> Map.empty[String, String],
+        single -> Map.empty[String, String])
+    for ((path, cols) <- shapes) {
+      val (df, jobs) = withJobCount(GeoParquet.read(spark, path, cols))
+      assert(jobs == 0, s"$path: $jobs jobs started by the read")
+      // schema merging makes the read infer, so `inferred` carries Spark's
+      // own schema; the native GEOMETRY dataset always converts its footer
+      val (inferred, inferJobs) = withJobCount(withMergeSchema(GeoParquet.read(spark, path, cols)))
+      assert(inferJobs >= 1 || path == v20, s"$path: mergeSchema did not infer")
+      // StructField equality includes the field metadata (the geometry tags)
+      assert(df.schema == inferred.schema, s"$path:\n${df.schema.json}\n${inferred.schema.json}")
+      assert(df.count() == inferred.count(), path)
+    }
+    // a partitioned layout still infers, with the partition column
+    val parted = s"$base/parted"
+    sample.withColumn("k", col("id") % 3).write.partitionBy("k").parquet(parted)
+    val (p, pJobs) = withJobCount(GeoParquet.read(spark, parted))
+    assert(pJobs >= 1)
+    assert(p.schema == spark.read.parquet(parted).schema && p.columns.contains("k"))
+    assert(p.count() == 2000)
+  }
+
+  test("read skips the hidden _x and .x parquet files Spark's listing skips") {
+    val base = Files.createTempDirectory("gp_hidden").toString
+    val dir = s"$base/real"
+    GeoParquet.write(sample, dir, "geom", crs = "EPSG:3857")
+    // a stray GeoParquet file with another schema, whose `geo` key names
+    // `id` a geometry column; both names sort before the part files
+    val stray = s"$base/stray"
+    GeoParquet.write(spark.range(3).select(st.point(col("id").cast("double"), lit(0.0)).as("id")),
+      stray, "id", clusterPartitions = 1)
+    val strayFile = new java.io.File(stray).listFiles()
+      .filter(_.getName.startsWith("part-")).head.toPath
+    for (name <- Seq("_x.parquet", ".x.parquet"))
+      Files.copy(strayFile, java.nio.file.Paths.get(dir, name))
+    val back = GeoParquet.read(spark, dir)
+    assert(back.columns.toSeq == Seq("id", "geom", "geom_bbox"))
+    assert(back.schema("id").dataType == org.apache.spark.sql.types.LongType)
+    assert(GeoParquet.geometryColumns(back) == Seq("geom" -> "EPSG:3857"))
+    assert(back.select("id").collect().map(_.getLong(0)).sorted
+      .sameElements(0L until 2000L))
+  }
+
+  test("window reads compile one filter: bounds referenced, ranges before st_intersects") {
+    import org.apache.spark.sql.catalyst.expressions.{And, BinaryComparison, Expression}
+    val dir = Files.createTempDirectory("gp").toString + "/win"
+    GeoParquet.write(sample, dir, "geom")
+    def window(x0: Double, y0: Double, x1: Double, y1: Double): DataFrame = {
+      def env = st.makeEnvelope(lit(x0), lit(y0), lit(x1), lit(y1))
+      GeoParquet.read(spark, dir).filter(st.intersects(col("geom"), env)).select("id")
+    }
+    def ids(df: DataFrame): Seq[Long] = df.collect().map(_.getLong(0)).sorted.toSeq
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    assert(ids(window(100.0, 100.0, 300.0, 300.0)).nonEmpty)
+    val before = compiles.getCount
+    val second = window(412.5, 237.25, 651.75, 498.5)
+    // the scan keeps its metadata strings whole (PushedFilters below)
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
+    val got = try ids(second) finally spark.conf.unset("spark.sql.maxMetadataStringLength")
+    assert(compiles.getCount == before, "the second window compiled new code")
+    val expected = ids(sample.filter(st.intersects(col("geom"),
+      st.makeEnvelope(lit(412.5), lit(237.25), lit(651.75), lit(498.5)))).select("id"))
+    assert(got.nonEmpty && got == expected)
+    val plan = second.queryExecution.executedPlan
+    val pushed = plan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metadata("PushedFilters")
+    }.get
+    for (f <- Seq("LessThanOrEqual(geom_bbox.xmin,651.75)",
+        "GreaterThanOrEqual(geom_bbox.xmax,412.5)", "LessThanOrEqual(geom_bbox.ymin,498.5)",
+        "GreaterThanOrEqual(geom_bbox.ymax,237.25)"))
+      assert(pushed.contains(f), s"$f not pushed: $pushed")
+    def split(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => split(l) ++ split(r)
+      case o => Seq(o)
+    }
+    val conjuncts = plan.collectFirst {
+      case f: org.apache.spark.sql.execution.FilterExec => split(f.condition)
+    }.get
+    val exact = conjuncts.indexWhere(_.prettyName == "st_intersects")
+    val ranges = conjuncts.zipWithIndex.collect {
+      case (c: BinaryComparison, i) if c.references.exists(_.name == "geom_bbox") => i
+    }
+    assert(exact >= 0 && ranges.size == 4 && ranges.forall(_ < exact), conjuncts.mkString("\n"))
+  }
+
   test("FlatGeobuf roundtrip: all geometry types, nulls, property types") {
     import graft.sources.FlatGeobuf
     val wkts = Seq(

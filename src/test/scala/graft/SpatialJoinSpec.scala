@@ -369,6 +369,27 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("broadcast index joins report index build and wait time") {
+    // four stream tasks share one broadcast: one builds the index, the
+    // others find it built (after waiting on the build if they came early)
+    val j = points(400, 151).repartition(4)
+      .join(broadcast(boxes(250, 153)), st.intersects(col("pgeom"), col("bgeom")))
+    val q = points(80, 155).repartition(4).select(col("pid").as("qid"), col("pgeom").as("qg"))
+    val knn = SpatialJoins.knnJoin(q, broadcast(points(200, 157)), col("qg"), col("pgeom"), 3,
+      col("pid"))
+    for (df <- Seq(j, knn)) {
+      assert(df.collect().nonEmpty)
+      val execs = aqe.collect(df.queryExecution.executedPlan) {
+        case e: joins.BroadcastIndexSpatialJoinExec => e
+        case e: joins.KnnJoinExec => e
+      }
+      assert(execs.size == 1, df.queryExecution.executedPlan.toString)
+      val m = execs.head.metrics
+      assert(m("indexBuildTime").value > 0, execs.head.nodeName)
+      assert(m("indexWaitTime").value >= 0, execs.head.nodeName)
+    }
+  }
+
   test("planner grid rewrite handles dwithin and distance< with constant radius") {
     val p = points(200, 51)
     val q = points(180, 53).toDF("qid", "qgeom")
