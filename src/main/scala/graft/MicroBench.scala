@@ -185,9 +185,8 @@ object MicroBench {
               lit(40.0), lit(-40.0), lit(true), lit("nearestneighbor")),
             st.f("st_setsrid", st.point(pmod(col("id"), lit(256)) * 40.0 + 20.0,
               -(pmod(col("id") * 7, lit(192)) * 40.0 + 20.0)), lit(32610)), lit(1))))),
-      // round-9: the as-of sweep runs on InternalRow (no external-Row
-      // decode per row) — this row times the full union+shuffle+sort+
-      // sweep pipeline over 1M rows per side
+      // AsOfJoinExec over 1M rows per side: one hash shuffle and one sort
+      // per side, then the merge
       time("asof_sweep_1m")({
         def side(salt: Int, idName: String, tName: String) =
           spark.range(0, 1000000L).toDF(idName)

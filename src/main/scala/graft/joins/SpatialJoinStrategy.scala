@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, JoinHint, LogicalPlan, SHUFFLE_HASH, SHUFFLE_MERGE}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
-import graft.plans.{KnnJoinPlan, RangeJoinShapes}
+import graft.plans.{AsOfJoinPlan, KnnJoinPlan, RangeJoinShapes}
 
 /** Plans joins whose condition carries a spatial predicate or a range
   * band onto the two index joins. Mirrors the reference's
@@ -47,7 +47,8 @@ import graft.plans.{KnnJoinPlan, RangeJoinShapes}
   *     no one side can evaluate, or a switch that is off.
   *
   * KNN joins (`KnnJoinPlan`, or a raw `st_knn` join) plan the broadcast
-  * or the partitioned KNN join by the same build-side decision.
+  * or the partitioned KNN join by the same build-side decision, and as-of
+  * joins (`AsOfJoinPlan`) plan `AsOfJoinExec`.
   *
   * Joins with an equi-conjunct are left to Spark's hash joins, matching
   * the reference (optimizer.rs:253-257): a hash join on the equi key
@@ -76,6 +77,9 @@ case class SpatialJoinStrategy(spark: SparkSession) extends SparkStrategy {
     // st_knn join in a session without the analyzer capture
     case p: KnnJoinPlan => planKnn(p)
     case j: Join if KnnJoinPlan.from(j).isDefined => planKnn(KnnJoinPlan.from(j).get)
+    case p: AsOfJoinPlan =>
+      AsOfJoinExec(p.leftKeys, p.rightKeys, p.leftTime, p.rightTime, p.rightId, p.tolerance,
+        p.strict, p.forward, planLater(p.left), planLater(p.right)) :: Nil
 
     case j @ Join(left, right, joinType, Some(cond), hint) =>
       // predicate oriented as pred(streamG, buildG)

@@ -1,32 +1,30 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.analysis.TypeCoercion
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, IsNotNull}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
+import org.apache.spark.sql.graft.DatasetBridge
+import org.apache.spark.sql.types.LongType
+import graft.plans.AsOfJoinPlan
 
 /** Time-series as-of join — the operator Spark's relational algebra
   * cannot express without a quadratic range join: for every left row,
   * the LATEST right row of the same key with `rightTime <= leftTime`
   * (backward as-of, optionally bounded by a tolerance), left-outer.
   *
-  * Scale shape: ONE hash shuffle per side (repartition on the key), a
-  * per-partition sort, and a linear merge sweep — the plan a dedicated
-  * time-series engine (kdb aj, QuestDB/DuckDB ASOF) runs, here built
-  * from Spark primitives so it inherits AQE sizing and columnar scans
-  * upstream. No per-key windowing, no cross product, no state beyond
-  * one held right row per key during the sweep. The sweep itself runs
-  * on `queryExecution.toRdd` (Tungsten `InternalRow` + one
-  * `UnsafeProjection` per output row), so no external-Row
-  * deserialization or re-encoding is paid per row.
+  * Scale shape: ONE hash shuffle per side on the key, a per-partition
+  * sort, and a linear merge — the plan a dedicated time-series engine
+  * (kdb aj, QuestDB/DuckDB ASOF) runs. Both functions return a DataFrame
+  * over an [[AsOfJoinPlan]], which plans `graft.joins.AsOfJoinExec`: the
+  * shuffles and sorts are ordinary exchanges AQE sizes, and building the
+  * DataFrame runs nothing. No per-key windowing, no cross product, no
+  * state beyond one held right row per key during the merge.
   *
   * Null semantics (merge_asof-compatible): right rows with a null key,
-  * time, or id can never be "the latest match" and are dropped up
-  * front; left rows with a null key or null time emit unmatched (null
-  * right side) — a null key never equals anything, per SQL.
+  * time, or id can never be "the latest match"; left rows with a null
+  * key or null time emit unmatched (null right side) — a null key never
+  * equals anything, per SQL.
   *
   * Determinism: right rows sharing (key, time) are ordered by the
   * caller-named `rightIdCol` and the LARGEST id wins — a total order the
@@ -37,10 +35,25 @@ object AsOfJoin {
   /** `leftTimeCol`/`rightTimeCol` must be integral (cast timestamps to
     * epoch micros first); `keyCol` must exist on both sides; payload
     * column names must not collide across sides (except the key, which
-    * is emitted once from the left). */
+    * is emitted once from the left). A match is at most `toleranceUs`
+    * stale; the default, `Long.MaxValue`, bounds nothing. */
   def asofBackward(left: DataFrame, right: DataFrame, keyCol: String,
       leftTimeCol: String, rightTimeCol: String, rightIdCol: String,
-      toleranceUs: Long = Long.MaxValue): DataFrame = {
+      toleranceUs: Long = Long.MaxValue): DataFrame =
+    build(left, right, keyCol, leftTimeCol, rightTimeCol, rightIdCol, toleranceUs,
+      forward = false)
+
+  /** Forward as-of: the EARLIEST right row at-or-after each left row per
+    * key (ties -> smallest right id), same tolerance/outer semantics. */
+  def asofForward(left: DataFrame, right: DataFrame, keyCol: String,
+      leftTimeCol: String, rightTimeCol: String, rightIdCol: String,
+      toleranceUs: Long = Long.MaxValue): DataFrame =
+    build(left, right, keyCol, leftTimeCol, rightTimeCol, rightIdCol, toleranceUs,
+      forward = true)
+
+  private def build(left: DataFrame, right: DataFrame, keyCol: String,
+      leftTimeCol: String, rightTimeCol: String, rightIdCol: String,
+      toleranceUs: Long, forward: Boolean): DataFrame = {
     require(toleranceUs >= 0, "asof: tolerance must be non-negative")
     val dup = right.columns.toSet.intersect(left.columns.toSet) - keyCol
     require(dup.isEmpty, s"asof: colliding payload columns: ${dup.mkString(", ")}")
@@ -50,107 +63,25 @@ object AsOfJoin {
     require(rightTimeCol != keyCol && rightIdCol != keyCol,
       "asof: right time/id columns must be payload, not the key")
     val spark = left.sparkSession
-    // the key is emitted once, from the left side
-    val rCols = right.columns.filterNot(_ == keyCol).toIndexedSeq
-    val lType = StructType(left.schema.fields)
-    val rType = StructType(rCols.map(right.schema(_)).toArray)
-    val lPay = struct(left.columns.map(col).toIndexedSeq: _*)
-    val rPay = struct(rCols.map(col): _*)
-    // tag 0 = right, 1 = left: at equal times the right row is seen
-    // first, so `rightTime <= leftTime` is inclusive
-    val lTagged = left.select(col(keyCol).as("__k"),
-      col(leftTimeCol).cast(LongType).as("__t"), lit(1).as("__tag"),
-      lit(0L).as("__tb"), lPay.as("__l"), lit(null).cast(rType).as("__r"))
-    val rTagged = right
-      // a null key/time/id right row can never win the sweep; dropping it
-      // here also keeps the sweep free of null-unboxing on the held row
-      .filter(col(keyCol).isNotNull && col(rightTimeCol).isNotNull &&
-        col(rightIdCol).isNotNull)
-      .select(col(keyCol).as("__k"),
-        col(rightTimeCol).cast(LongType).as("__t"), lit(0).as("__tag"),
-        col(rightIdCol).cast(LongType).as("__tb"),
-        lit(null).cast(lType).as("__l"), rPay.as("__r"))
-    val merged = lTagged.unionAll(rTagged)
-      .repartition(col("__k"))
-      .sortWithinPartitions(col("__k"), col("__t"), col("__tag"), col("__tb"))
-    val rTimeIdx = rType.fieldIndex(rightTimeCol)
-    val outSchema = StructType(lType.fields ++
-      rType.fields.map(_.copy(nullable = true)))
-    val swept = sweep(merged, lType, rType, rTimeIdx, toleranceUs)
-    org.apache.spark.sql.graft.DatasetBridge.internalDf(spark, swept, outSchema)
-  }
-
-  /** Forward as-of: the EARLIEST right row at-or-after each left row per
-    * key (ties -> smallest right id), same tolerance/outer semantics.
-    * Implemented as the backward sweep over negated times and ids — one
-    * reflection, identical plan shape. */
-  def asofForward(left: DataFrame, right: DataFrame, keyCol: String,
-      leftTimeCol: String, rightTimeCol: String, rightIdCol: String,
-      toleranceUs: Long = Long.MaxValue): DataFrame = {
-    val negL = left.withColumn(leftTimeCol, -col(leftTimeCol))
-    val negR = right.withColumn(rightTimeCol, -col(rightTimeCol))
-      .withColumn(rightIdCol, -col(rightIdCol))
-    val out = asofBackward(negL, negR, keyCol, leftTimeCol, rightTimeCol,
-      rightIdCol, toleranceUs)
-    out.withColumn(leftTimeCol, -col(leftTimeCol))
-      .withColumn(rightTimeCol, -col(rightTimeCol))
-      .withColumn(rightIdCol, -col(rightIdCol))
-  }
-
-  /** Value equality for sweep keys: binary keys compare by content
-    * (Array[Byte].equals is reference equality); struct keys arrive as
-    * same-schema UnsafeRows whose equals is bytewise. */
-  private def keysEqual(a: Any, b: Any): Boolean = (a, b) match {
-    case (null, null) => true
-    case (null, _) | (_, null) => false
-    case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
-    case (x, y) => x == y
-  }
-
-  /** Linear merge sweep over the Tungsten rows of the sorted exchange.
-    * The held right struct is copied out of the (task-reused) UnsafeRow
-    * buffer once per right row; left rows pay one `UnsafeProjection`
-    * each — the same InternalRow discipline as
-    * `ScalableRank.globalPrefixSum`. */
-  private def sweep(merged: DataFrame, lType: StructType, rType: StructType,
-      rTimeIdx: Int, toleranceUs: Long): RDD[InternalRow] = {
-    val keyType = merged.schema("__k").dataType
-    val lWidth = lType.length
-    val rWidth = rType.length
-    val outTypes = (lType.fields ++ rType.fields).map(_.dataType)
-    merged.queryExecution.toRdd.mapPartitions { it =>
-      val proj = UnsafeProjection.create(outTypes)
-      val joined = new JoinedRow
-      val nullR = new GenericInternalRow(rWidth) // all-null right side
-      var curKey: Any = null
-      var haveKey = false
-      var lastR: InternalRow = null
-      it.flatMap { row =>
-        val k = if (row.isNullAt(0)) null else row.get(0, keyType)
-        val changed = !haveKey || !keysEqual(k, curKey)
-        if (changed) {
-          // buffer-backed key values (strings/structs/arrays) must
-          // outlive this row — copy out of the task-reused buffer
-          curKey = k match {
-            case u: UTF8String => u.copy()
-            case r: InternalRow => r.copy()
-            case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
-            case b: Array[Byte] => b.clone()
-            case v => v
-          }
-          haveKey = true
-          lastR = null
-        }
-        if (row.getInt(2) == 0) { // right: becomes the held candidate
-          lastR = row.getStruct(5, rWidth).copy()
-          None
-        } else {
-          val l = row.getStruct(4, lWidth)
-          val matched = lastR != null && !row.isNullAt(1) &&
-            row.getLong(1) - lastR.getLong(rTimeIdx) <= toleranceUs
-          Some(proj(joined(l, if (matched) lastR else nullR)): InternalRow)
-        }
-      }
+    // the analyzed cross join tells the two sides' attributes apart, also
+    // in a self-join
+    val (l, r) = left.crossJoin(right).queryExecution.analyzed match {
+      case Join(l, r, _, _, _) => (l, r)
     }
+    val resolver = spark.sessionState.conf.resolver
+    def attr(side: LogicalPlan, name: String): Attribute =
+      side.output.find(a => resolver(a.name, name))
+        .getOrElse(throw new IllegalArgumentException(s"asof: no column $name"))
+    val (lk, rk) = (attr(l, keyCol), attr(r, keyCol))
+    // both sides hash and compare the key as one type
+    val keyType = TypeCoercion.findWiderTypeForTwo(lk.dataType, rk.dataType)
+    require(keyType.isDefined, s"asof: key types ${lk.dataType} and ${rk.dataType} differ")
+    def key(a: Attribute) = if (a.dataType == keyType.get) a else Cast(a, keyType.get)
+    // the node's keys compare null-safe: a null right key must match nothing
+    val node = AsOfJoinPlan(l, Filter(IsNotNull(rk), r), Seq(key(lk)), Seq(key(rk)),
+      attr(l, leftTimeCol), attr(r, rightTimeCol), attr(r, rightIdCol),
+      Some(toleranceUs).filter(_ != Long.MaxValue), strict = false, forward)
+    // the key is emitted once, from the left side
+    DatasetBridge.ofRows(spark, Project(node.output.filterNot(_.exprId == rk.exprId), node))
   }
 }

@@ -198,7 +198,7 @@ object RelationalQueries {
     // picks the latest right event of the same user at-or-before its
     // time within a 48h tolerance, left-outer, ties on (user, time)
     // resolved to the largest right id. operators.AsOfJoin = one hash
-    // shuffle per side + per-key time-sorted sweep — no quadratic range
+    // shuffle per side + per-key time-sorted merge — no quadratic range
     // join; the oracle restates it as a ranked candidate window.
     "q21_asof_join" -> ((s, dir) => {
       import graft.Tables
@@ -261,8 +261,8 @@ object RelationalQueries {
     // PLAIN SQL backward as-of (the classic max-timestamp-<= correlated
     // subquery idiom): Catalyst decorrelates it into an extreme-value
     // aggregate over an inequality join — the quadratic part —
-    // which AsOfAggregateRule rewrites into the AsOfJoin merge sweep
-    // (hash shuffle + per-key sort + linear pass). The SQL front door to
+    // which the as-of rules rewrite into the q21 operator's as-of join
+    // (hash shuffle + per-key sort + linear merge). The SQL front door to
     // the q21 operator.
     "q24_asof_sql" -> ((s, dir) => {
       import graft.Tables
@@ -284,10 +284,10 @@ object RelationalQueries {
     }),
 
     // PLAIN SQL as-of over raw TIMESTAMP columns with a STRICT bound —
-    // the production event-time shape. AsOfAggregateRule sweeps in long
-    // space (unix_micros embedding, strict < shifted to <= on d-1 micros)
-    // and converts the extremum back losslessly; no caller-side
-    // pre-projection to epoch integers is needed.
+    // the production event-time shape. The as-of join compares the
+    // TIMESTAMPs' micros (strict < as a strict comparison) and returns
+    // the matched row's own TIMESTAMP; no caller-side pre-projection to
+    // epoch integers is needed.
     "q25_asof_timestamp" -> ((s, dir) => {
       import graft.Tables
       val ev = Tables.events(s, dir)
@@ -312,8 +312,8 @@ object RelationalQueries {
     // PLAIN SQL as-of over DATE columns with a day-count staleness bound
     // (`datediff(l.ld, r2.rd) <= 30`) — the DATE analog of q24. The
     // AsOfAggregateRule matcher maps the DateDiff conjunct onto the
-    // sweep's unix_date day space; without it the decorrelated plan is a
-    // quadratic inequality join.
+    // as-of join's tolerance in DATE days; without it the decorrelated
+    // plan is a quadratic inequality join.
     "q27_asof_date" -> ((s, dir) => {
       t(s, dir, "orders")
         .filter(col("o_orderkey") % 2 === 0 && col("o_custkey") % 5 === 2)

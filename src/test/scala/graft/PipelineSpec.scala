@@ -1023,26 +1023,82 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       pmod(hash(col("id"), lit(13)), lit(40)).as("k"),
       (pmod(hash(col("id"), lit(14)), lit(300)).cast("long") * 10L).as("rts"))
     val tol = 500L
-    val got = graft.operators.AsOfJoin
-      .asofBackward(l, r, "k", "lts", "rts", "rid", tol)
-      .select("lid", "rid").collect()
-      .map(row => row.getLong(0) -> (if (row.isNullAt(1)) -1L else row.getLong(1)))
-      .toMap
-    val matched = l.join(r, "k")
-      .filter(col("rts") <= col("lts") && col("lts") - col("rts") <= tol)
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("lid")
-          .orderBy(col("rts").desc, col("rid").desc)))
-      .filter(col("rn") === 1)
-      .select("lid", "rid").collect()
-      .map(row => row.getLong(0) -> row.getLong(1)).toMap
-    val lids = l.select("lid").collect().map(_.getLong(0))
-    assert(got.keySet == lids.toSet, "exactly one output row per left row")
-    lids.foreach { lid =>
-      assert(got(lid) == matched.getOrElse(lid, -1L), s"lid=$lid")
+    // forward is the mirror: the earliest rts at or after lts, ties to
+    // the smallest rid
+    for (forward <- Seq(false, true)) {
+      val asof = if (forward) graft.operators.AsOfJoin.asofForward _
+        else graft.operators.AsOfJoin.asofBackward _
+      val got = asof(l, r, "k", "lts", "rts", "rid", tol)
+        .select("lid", "rid").collect()
+        .map(row => row.getLong(0) -> (if (row.isNullAt(1)) -1L else row.getLong(1)))
+        .toMap
+      val order = if (forward) Seq(col("rts").asc, col("rid").asc)
+        else Seq(col("rts").desc, col("rid").desc)
+      val matched = l.join(r, "k")
+        .filter(if (forward) col("rts") >= col("lts") && col("rts") - col("lts") <= tol
+          else col("rts") <= col("lts") && col("lts") - col("rts") <= tol)
+        .withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("lid").orderBy(order: _*)))
+        .filter(col("rn") === 1)
+        .select("lid", "rid").collect()
+        .map(row => row.getLong(0) -> row.getLong(1)).toMap
+      val lids = l.select("lid").collect().map(_.getLong(0))
+      assert(got.keySet == lids.toSet, s"exactly one output row per left row (forward=$forward)")
+      lids.foreach { lid =>
+        assert(got(lid) == matched.getOrElse(lid, -1L), s"lid=$lid forward=$forward")
+      }
+      assert(matched.nonEmpty && matched.size < lids.length,
+        "fuzz must exercise both matched and unmatched rows")
     }
-    assert(matched.nonEmpty && matched.size < lids.length,
-      "fuzz must exercise both matched and unmatched rows")
+  }
+
+  test("AsOfJoin tolerance: the gap is exact across the whole long range") {
+    import spark.implicits._
+    // lts - rts is 2^63, past Long.MaxValue: long arithmetic wraps it
+    // to a negative gap that any tolerance admits
+    val left = Seq((1L, Long.MaxValue, "far"), (1L, 5L, "near")).toDF("k", "lts", "ltag")
+    val right = Seq((1L, -1L, 10L)).toDF("k", "rts", "rid")
+    val res = graft.operators.AsOfJoin
+      .asofBackward(left, right, "k", "lts", "rts", "rid", 10L)
+      .collect().map(r => (r.getString(2), if (r.isNullAt(4)) -1L else r.getLong(4))).toMap
+    assert(res == Map("far" -> -1L, "near" -> 10L))
+    // forward: rts - lts is 2^64 - 2
+    val fwd = graft.operators.AsOfJoin
+      .asofForward(Seq((1L, Long.MinValue + 1, "far")).toDF("k", "lts", "ltag"),
+        Seq((1L, Long.MaxValue, 10L)).toDF("k", "rts", "rid"), "k", "lts", "rts", "rid", 10L)
+      .collect().map(r => if (r.isNullAt(4)) -1L else r.getLong(4))
+    assert(fwd.toSeq == Seq(-1L))
+  }
+
+  test("AsOfJoin.asofForward: times and ids at Long.MinValue") {
+    import spark.implicits._
+    val left = Seq((1L, Long.MinValue, "min"), (1L, 7L, "seven")).toDF("k", "lts", "ltag")
+    val right = Seq((1L, Long.MinValue, Long.MinValue), (1L, Long.MinValue, 3L),
+      (1L, 7L, 4L)).toDF("k", "rts", "rid")
+    val res = graft.operators.AsOfJoin
+      .asofForward(left, right, "k", "lts", "rts", "rid")
+      .collect().map(r => (r.getString(2), (r.getLong(3), r.getLong(4)))).toMap
+    assert(res == Map("min" -> (Long.MinValue, Long.MinValue), "seven" -> (7L, 4L)),
+      "the earliest right at or after, ties to the smallest id")
+  }
+
+  test("AsOfJoinExec reports numOutputRows and numMatchedRows") {
+    val l = spark.range(500).select(col("id").as("lid"),
+      pmod(hash(col("id"), lit(21)), lit(20)).as("k"),
+      (pmod(hash(col("id"), lit(22)), lit(100)).cast("long") * 10L).as("lts"))
+    val r = spark.range(300).select(col("id").as("rid"),
+      pmod(hash(col("id"), lit(23)), lit(20)).as("k"),
+      (pmod(hash(col("id"), lit(24)), lit(100)).cast("long") * 10L).as("rts"))
+    val df = graft.operators.AsOfJoin.asofBackward(l, r, "k", "lts", "rts", "rid", 200L)
+    val rows = df.collect()
+    val execs = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case e: graft.joins.AsOfJoinExec => e }
+    assert(execs.size == 1, df.queryExecution.executedPlan.toString)
+    val m = execs.head.metrics
+    val matched = rows.count(!_.isNullAt(3))
+    assert(m("numOutputRows").value == rows.length)
+    assert(m("numMatchedRows").value == matched)
+    assert(matched > 0 && matched < rows.length, "the fixture matches some rows, not all")
   }
 
   test("IntervalJoin.overlapJoin ≡ cross-filter reference; multi-cell pairs emit once") {

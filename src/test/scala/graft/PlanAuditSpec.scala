@@ -153,11 +153,13 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-8/9 gates keep their intended plan shapes") {
-    // q21 as-of operator: the merge sweep materializes as an RDD scan
-    // (union + hash exchange + per-partition sort live inside its
-    // lineage); no quadratic join may appear
-    val q21 = entries("q21_asof_join").plan
-    assert(q21.contains("ExistingRDD"), "q21 lost the as-of sweep")
+    // q21 as-of operator: the as-of join exec, its exchanges and sorts in
+    // the plan (no RDD scan hiding them); no quadratic join may appear
+    def asof(name: String, msg: String): Unit = {
+      val p = entries(name).plan
+      assert(p.contains("AsOfJoin") && !p.contains("ExistingRDD"), s"$msg:\n$p")
+    }
+    asof("q21_asof_join", "q21 lost the as-of join")
     // q22 banded interval join: explode-to-cells + cell equi-join +
     // reference-cell dedup (the greatest(...) filter)
     val q22 = entries("q22_interval_join").plan
@@ -175,17 +177,14 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     rangeIndexed("q23_band_range_join")
     // q24: the SQL max-subquery as-of idiom must route its decorrelated
-    // inequality aggregate through the AsOfJoin sweep
-    val q24 = entries("q24_asof_sql").plan
-    assert(q24.contains("ExistingRDD"), "q24 as-of aggregate rewrite did not fire")
-    // q25: the raw-TIMESTAMP strict as-of must route through the typed
-    // sweep (unix_micros embedding) — same RDD-scan signature as q24
-    val q25 = entries("q25_asof_timestamp").plan
-    assert(q25.contains("ExistingRDD"), "q25 typed as-of rewrite did not fire")
+    // inequality aggregate through the as-of join
+    asof("q24_asof_sql", "q24 as-of aggregate rewrite did not fire")
+    // q25: the raw-TIMESTAMP strict as-of must route through the as-of
+    // join, comparing TIMESTAMP micros — same signature as q24
+    asof("q25_asof_timestamp", "q25 typed as-of rewrite did not fire")
     // q27: the DATE-bounded as-of (datediff staleness conjunct) must map
-    // onto the sweep's unix_date day space — same RDD-scan signature
-    val q27 = entries("q27_asof_date").plan
-    assert(q27.contains("ExistingRDD"), "q27 DATE as-of rewrite did not fire")
+    // onto the DATE's day space — same signature
+    asof("q27_asof_date", "q27 DATE as-of rewrite did not fire")
     // q26: the LEFT OUTER range join, on the same index joins (see q23)
     rangeIndexed("q26_range_left_outer")
     // gp02 geoarrow roundtrip: a hash equi-join over the two geoparquet
@@ -208,10 +207,11 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("round-10 gates keep their intended plan shapes") {
     // q27: the DATE as-of now routes through rotation + the PROBE-side
-    // sweep — the sweep RDD scan is the signature, with the domain
-    // reduced to a left-semi guard (no |d|x|keys| product anywhere)
+    // as-of join — the exec is the signature, with the domain reduced to
+    // a left-semi guard (no |d|x|keys| product anywhere)
     val q27 = entries("q27_asof_date").plan
-    assert(q27.contains("ExistingRDD"), "q27 probe-side sweep missing")
+    assert(q27.contains("AsOfJoin") && !q27.contains("ExistingRDD"),
+      "q27 probe-side as-of join missing")
     // sj14: conf-window-free — plans the broadcast index join at audit
     // scale; the grid rewrite for large-large sides is pinned in
     // SphereJoinRuleSpec

@@ -177,8 +177,8 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       WHERE r.rts = (SELECT max(r2.rts) FROM asr_sr r2
                      WHERE r2.k = l.k AND r2.rts < l.lts)"""
     val df = spark.sql(sql)
-    assert(planString(df).contains("ExistingRDD"),
-      "strict as-of shape must route through the sweep")
+    assert(planString(df).contains("AsOfJoin"),
+      "strict as-of shape must route through the as-of join")
     val got = df.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
     spark.conf.set("spark.graft.join.asof.enabled", "false")
     val expect = try spark.sql(sql).collect()
@@ -203,8 +203,8 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
                      WHERE r2.k = l.k AND r2.rts <= l.lts)"""
     val df = spark.sql(sql)
     val p = planString(df)
-    assert(p.contains("ExistingRDD"),
-      s"as-of sweep (RDD scan) must replace the inequality join:\n$p")
+    assert(p.contains("AsOfJoin"),
+      s"the as-of join must replace the inequality join:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"no quadratic join may remain in the outer plan:\n$p")
     val got = df.collect()
@@ -238,8 +238,8 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
         WHERE r.rts = (SELECT max(r2.rts) FROM asr_tr r2
                        WHERE r2.k = l.k AND r2.rts <= l.lts AND $tolPred)"""
       val df = spark.sql(sql)
-      assert(planString(df).contains("ExistingRDD"),
-        s"tolerance shape '$tolPred' must route through the sweep")
+      assert(planString(df).contains("AsOfJoin"),
+        s"tolerance shape '$tolPred' must route through the as-of join")
       val got = df.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
       spark.conf.set("spark.graft.join.asof.enabled", "false")
       val expect = try spark.sql(sql).collect()
@@ -267,7 +267,7 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       FROM (SELECT DISTINCT lts FROM asr_nl) d JOIN asr_nr r
       ON r.rts <= d.lts GROUP BY d.lts, r.k"""
     val df = spark.sql(sql)
-    assert(planString(df).contains("ExistingRDD"), "shape must route through the sweep")
+    assert(planString(df).contains("AsOfJoin"), "shape must route through the as-of join")
     def key(x: org.apache.spark.sql.Row) =
       (x.getLong(0), if (x.isNullAt(1)) -1L else x.getLong(1), x.getLong(2))
     val got = df.collect().map(key).sorted.toSeq
@@ -338,8 +338,8 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       WHERE r.rts = (SELECT max(r2.rts) FROM asr_ts_r r2
                      WHERE r2.k = l.k AND r2.rts <= l.lts)"""
     val df = spark.sql(sql)
-    assert(planString(df).contains("ExistingRDD"),
-      "timestamp as-of shape must route through the sweep")
+    assert(planString(df).contains("AsOfJoin"),
+      "timestamp as-of shape must route through the as-of join")
     def row3(x: org.apache.spark.sql.Row) = (x.getLong(0), x.getLong(1), x.getLong(2))
     val got = df.collect().map(row3).sorted.toSeq
     spark.conf.set("spark.graft.join.asof.enabled", "false")
@@ -361,8 +361,8 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       FROM (SELECT DISTINCT ld FROM asr_dt_l) d JOIN asr_dt_r r
       ON r.rd > d.ld GROUP BY d.ld"""
     val ddf = spark.sql(dsql)
-    assert(planString(ddf).contains("ExistingRDD"),
-      "date as-of shape must route through the sweep")
+    assert(planString(ddf).contains("AsOfJoin"),
+      "date as-of shape must route through the as-of join")
     def row2(x: org.apache.spark.sql.Row) =
       (x.getDate(0).toString, x.getDate(1).toString)
     val dgot = ddf.collect().map(row2).sorted.toSeq
@@ -393,8 +393,8 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
         WHERE r.rts = (SELECT max(r2.rts) FROM asr_it_r r2
                        WHERE r2.k = l.k AND r2.rts <= l.lts AND $tolPred)"""
       val df = spark.sql(sql)
-      assert(planString(df).contains("ExistingRDD"),
-        s"interval tolerance '$tolPred' must route through the sweep")
+      assert(planString(df).contains("AsOfJoin"),
+        s"interval tolerance '$tolPred' must route through the as-of join")
       val got = df.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
       spark.conf.set("spark.graft.join.asof.enabled", "false")
       val expect = try spark.sql(sql).collect()
@@ -442,8 +442,8 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
         WHERE r.rd = (SELECT max(r2.rd) FROM asr_dd_r r2
                       WHERE r2.k = l.k AND r2.rd <= l.ld AND $tolPred)"""
       val df = spark.sql(sql)
-      assert(planString(df).contains("ExistingRDD"),
-        s"DATE tolerance '$tolPred' must route through the sweep")
+      assert(planString(df).contains("AsOfJoin"),
+        s"DATE tolerance '$tolPred' must route through the as-of join")
       val got = df.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
       spark.conf.set("spark.graft.join.asof.enabled", "false")
       val expect = try spark.sql(sql).collect()
@@ -475,8 +475,8 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       FROM (SELECT DISTINCT lts FROM asr_fl) d JOIN asr_fr
       ON rts >= lts GROUP BY lts"""
     val df = spark.sql(sql)
-    assert(planString(df).contains("ExistingRDD"),
-      "forward shape must route through the sweep")
+    assert(planString(df).contains("AsOfJoin"),
+      "forward shape must route through the as-of join")
     val got = df.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
     spark.conf.set("spark.graft.join.asof.enabled", "false")
     val expect = try spark.sql(sql).collect()
@@ -568,7 +568,7 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
         WHERE r.rts = (SELECT max(r2.rts) FROM asr_pr_r r2
                        WHERE r2.k = l.k AND $bound)"""
       val df = spark.sql(sql)
-      assert(planString(df).contains("ExistingRDD"),
+      assert(planString(df).contains("AsOfJoin"),
         s"rewrite must still fire with domain pruning ($bound)")
       val got = df.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
       spark.conf.set("spark.graft.join.asof.enabled", "false")
@@ -592,13 +592,96 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       WHERE r.rts = (SELECT min(r2.rts) FROM asr_pr_rf r2
                      WHERE r2.k = l.k AND r2.rts >= l.lts)"""
     val dfF = spark.sql(sqlF)
-    assert(planString(dfF).contains("ExistingRDD"))
+    assert(planString(dfF).contains("AsOfJoin"))
     val gotF = dfF.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
     spark.conf.set("spark.graft.join.asof.enabled", "false")
     val expectF = try spark.sql(sqlF).collect()
       .map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
     finally spark.conf.set("spark.graft.join.asof.enabled", "true")
     assert(gotF.nonEmpty && gotF == expectF)
+  }
+
+  /** `sql`'s rows as (lid, rid) pairs, with the as-of rewrites on and off. */
+  private def asofOnOff(sql: String): (Seq[(Long, Long)], Seq[(Long, Long)]) = {
+    def run() = spark.sql(sql).collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
+    val on = run()
+    spark.conf.set("spark.graft.join.asof.enabled", "false")
+    try (on, run()) finally spark.conf.set("spark.graft.join.asof.enabled", "true")
+  }
+
+  test("as-of SQL tolerance: the gap is exact across the whole long range") {
+    import spark.implicits._
+    // l.lts - r2.rts is 2^63, past Long.MaxValue: long arithmetic wraps
+    // it to a negative gap that the tolerance 10 admits
+    Seq((1L, 1L, Long.MaxValue), (2L, 1L, 5L)).toDF("lid", "k", "lts")
+      .createOrReplaceTempView("asr_ov_l")
+    Seq((10L, 1L, -1L)).toDF("rid", "k", "rts").createOrReplaceTempView("asr_ov_r")
+    val sql = """
+      SELECT l.lid, r.rid FROM asr_ov_l l JOIN asr_ov_r r ON l.k = r.k
+      WHERE r.rts = (SELECT max(r2.rts) FROM asr_ov_r r2
+                     WHERE r2.k = l.k AND r2.rts <= l.lts AND r2.rts >= l.lts - 10)"""
+    assert(planString(spark.sql(sql)).contains("AsOfJoin"))
+    val (got, expect) = asofOnOff(sql)
+    assert(got == expect && got == Seq((2L, 10L)))
+  }
+
+  test("forward as-of SQL over a right time of Long.MinValue") {
+    import spark.implicits._
+    Seq((1L, 1L, 10L), (2L, 1L, 20L)).toDF("lid", "k", "lts").createOrReplaceTempView("asr_mn_l")
+    Seq((11L, 1L, 15L), (12L, 1L, 25L), (13L, 1L, Long.MinValue)).toDF("rid", "k", "rts")
+      .createOrReplaceTempView("asr_mn_r")
+    val sql = """
+      SELECT l.lid, r.rid FROM asr_mn_l l JOIN asr_mn_r r ON l.k = r.k
+      WHERE r.rts = (SELECT min(r2.rts) FROM asr_mn_r r2
+                     WHERE r2.k = l.k AND r2.rts >= l.lts)"""
+    assert(planString(spark.sql(sql)).contains("AsOfJoin"))
+    val (got, expect) = asofOnOff(sql)
+    assert(got == expect && got == Seq((1L, 11L), (2L, 12L)))
+  }
+
+  test("planning an as-of join starts no Spark job") {
+    val l = spark.range(2000).select(col("id").as("lid"),
+      pmod(hash(col("id"), lit(91)), lit(30)).cast("long").as("k"),
+      (pmod(hash(col("id"), lit(92)), lit(500)).cast("long") * 10L).as("lts"))
+    val r = spark.range(2000).select(col("id").as("rid"),
+      pmod(hash(col("id"), lit(93)), lit(30)).cast("long").as("k"),
+      (pmod(hash(col("id"), lit(94)), lit(500)).cast("long") * 10L).as("rts"))
+    l.createOrReplaceTempView("asr_nj_l")
+    r.createOrReplaceTempView("asr_nj_r")
+    val planning = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var sentinel = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == "sentinel") sentinel = true
+        else planning.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // the probe-shape idiom (q24), the bare max-over-<= aggregate, and
+      // the Scala API
+      val probe = spark.sql("""
+        SELECT l.lid, r.rid FROM asr_nj_l l JOIN asr_nj_r r ON l.k = r.k
+        WHERE r.rts = (SELECT max(r2.rts) FROM asr_nj_r r2
+                       WHERE r2.k = l.k AND r2.rts <= l.lts AND l.lts - r2.rts <= 400)""")
+      val bare = spark.sql("""
+        SELECT d.lts, r.k, max(r.rts) AS m
+        FROM (SELECT DISTINCT lts FROM asr_nj_l) d JOIN asr_nj_r r
+        ON r.rts <= d.lts GROUP BY d.lts, r.k""")
+      val api = graft.operators.AsOfJoin.asofBackward(l, r, "k", "lts", "rts", "rid", 400L)
+      for (df <- Seq(probe, bare, api)) {
+        val p = df.queryExecution.executedPlan.toString
+        assert(p.contains("AsOfJoin") && !p.contains("ExistingRDD"), p)
+      }
+      // listener events arrive in order: once the sentinel job is seen,
+      // any job the planning started has been counted
+      spark.sparkContext.setJobGroup("sentinel", "sentinel")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!sentinel && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sentinel)
+      assert(planning.get == 0, s"${planning.get} jobs started while planning")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("aggregate join reorder: key-unique sweep joins the probe side before the wide sibling") {
@@ -617,12 +700,18 @@ class RangeJoinRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       WHERE r.rts = (SELECT max(r2.rts) FROM ajr_r r2
                      WHERE r2.k = l.k AND r2.rts <= l.lts)"""
     val df = spark.sql(sql)
-    // after rotation, AsOfProbeJoinRule absorbs the probe INTO the sweep:
-    // the LogicalRDD carries the probe's columns directly (no domain
-    // product), guarded by a left-semi on the original domain's d values
-    val p = df.queryExecution.optimizedPlan.toString
-    assert(p.contains("LogicalRDD [lid") && p.contains("LeftSemi"),
-      s"probe columns must ride the sweep lhs under a domain semi guard:\n$p")
+    // after rotation, AsOfProbeJoinRule absorbs the probe INTO the as-of
+    // join: its left child carries the probe's columns directly (no
+    // domain product), under a left-semi on the original domain's d values
+    val opt = df.queryExecution.optimizedPlan
+    val p = opt.toString
+    val guard = opt.collectFirst {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j
+    }
+    val asof = guard.toSeq.flatMap(_.left.collect { case a: graft.plans.AsOfJoinPlan => a })
+    assert(asof.size == 1 && asof.head.left.output.exists(_.name == "lid"),
+      s"probe columns must ride the as-of join's left side under a domain semi guard:\n$p")
     val got = df.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
     spark.conf.set("spark.graft.join.aggreorder.enabled", "false")
     spark.conf.set("spark.graft.join.asof.enabled", "false")
